@@ -12,8 +12,8 @@ required ones).
 Scaling evidence (N vs 4N): run twice —
   SPARK_GRAFT_CPUS=8 python bench.py
   SPARK_GRAFT_CPUS=32 python bench.py
-and compare "rollup.points_per_sec"; tools/scaling_bench.py automates this
-and writes BENCH/BASELINE.md.
+and compare "rollup.points_per_sec"; BENCH/BASELINE.md records the last such
+measurement.
 """
 
 from __future__ import annotations
@@ -84,8 +84,7 @@ def main() -> None:
     # classes the timed run reuses — the timed numbers measure steady-state
     # throughput, the operating point of an hours-long cluster job, instead
     # of billing multi-second Janino compiles of the 60-aggregate plans to
-    # whichever query runs first (same rationale as rollup_job
-    # --bench-warmup).
+    # whichever query runs first.
     warm_sf = "/root/testdata/sf0.001"
     if os.path.isdir(warm_sf):
         for name in headline:
@@ -318,8 +317,8 @@ def main() -> None:
         },
         "incremental_refresh": incremental_stats,
     }
-    # N-vs-4N scaling evidence from the latest tools/scaling_bench.py run
-    # (full protocol + per-tier table in BENCH/BASELINE.md)
+    # N-vs-4N scaling evidence recorded in BENCH/ (full protocol + per-tier
+    # table in BENCH/BASELINE.md)
     scaling_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH", "scaling.json"
     )
@@ -365,7 +364,7 @@ def main() -> None:
                 note += ". Whole-job efficiency: " + ", ".join(whole)
             out["scaling_evidence"]["efficiency_total_note"] = note
     # literal two-cluster-sizes evidence (standalone executor JVMs), when
-    # measured — tools/scaling_bench.py --cluster standalone
+    # recorded
     standalone_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         "BENCH",

@@ -176,9 +176,20 @@ def _legacy_operator(args: argparse.Namespace, cfg: dict):
         if cfg["normalization_method"] == "none":
             # 'none' means DON'T normalize — mapping it to zscore (the old
             # behavior) silently transformed data the user asked to leave
-            # untouched
+            # untouched. It still "fits" a passthrough params record, so
+            # the run writes normalizer_params.json like every other method
+            # and chained legacy workflows find their params artifact.
+            from preprocessor_spark.params import StageParams
+
             class _Identity:
-                def transform(self, df):
+                def fit(self, df):
+                    return StageParams(
+                        stage="normalizer",
+                        method="none",
+                        params={"columns": [], "per_column": {}},
+                    )
+
+                def transform(self, df, params=None):
                     return df
 
             return _Identity()

@@ -176,6 +176,10 @@ def describe_stats(df: DataFrame, columns: list[str] | None = None) -> DataFrame
 def iqr_outlier_counts(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """A8: rows outside [Q1 − 1.5·IQR, Q3 + 1.5·IQR] per column."""
     cols = columns or numeric_columns(df)
+    if not cols:
+        # no numeric columns: df.agg() with zero expressions raises; one
+        # row with no outlier columns
+        return df.sparkSession.range(1).select()
     q = df.agg(
         *[F.expr(f"percentile({c}, 0.25)").alias(f"{c}__q1") for c in cols],
         *[F.expr(f"percentile({c}, 0.75)").alias(f"{c}__q3") for c in cols],
@@ -184,6 +188,9 @@ def iqr_outlier_counts(df: DataFrame, columns: list[str] | None = None) -> DataF
     for c in cols:
         q1, q3 = q[f"{c}__q1"], q[f"{c}__q3"]
         if q1 is None:
+            # empty table / all-null column: no quantiles, so no outliers —
+            # the column keeps its outliers_<col> slot in the result
+            aggs.append(F.lit(0).cast("bigint").alias(f"outliers_{c}"))
             continue
         iqr = q3 - q1
         lo, hi = q1 - 1.5 * iqr, q3 + 1.5 * iqr
@@ -191,13 +198,6 @@ def iqr_outlier_counts(df: DataFrame, columns: list[str] | None = None) -> DataF
             F.sum(
                 ((F.col(c) < F.lit(lo)) | (F.col(c) > F.lit(hi))).cast("bigint")
             ).alias(f"outliers_{c}")
-        )
-    if not aggs:
-        # empty table / all-null columns: every quantile is null, so no
-        # per-column aggregate survives — df.agg() with zero expressions
-        # raises; a one-row zero-count result keeps the contract
-        return df.sparkSession.range(1).select(
-            F.lit(0).cast("bigint").alias("outliers_none")
         )
     return df.agg(*aggs)
 

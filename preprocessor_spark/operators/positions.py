@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from preprocessor_spark.session import local_frame
+
 
 # dtypes whose values _encode_lead can turn into a bucketable double —
 # the gate callers (Trimmer positional drops, the ACF lag screen) use to
@@ -139,7 +141,7 @@ def grouped_positions_and_totals(
         df.select(*group_cols, bucket.alias("__bkt"))
         .schema.add("__off", "long")
     )
-    offsets_df = spark.createDataFrame(rows, off_schema)
+    offsets_df = local_frame(spark, rows, off_schema)
     w = Window.partitionBy(*group_cols, "__bkt").orderBy(*order_cols)
     # null-safe equality on the group columns: a null group is a legitimate
     # stratum — a name-based equi-join would silently drop its rows
@@ -267,7 +269,7 @@ def chunked_assignment(
             T.StructField("__tail", T.BooleanType()),
         ]
     )
-    adf = spark.createDataFrame(assign_rows, aschema)
+    adf = local_frame(spark, assign_rows, aschema)
     with_b = df.withColumn("__bkt", bucket)
     cond = [with_b["__bkt"] == adf["__bkt"]] + [
         with_b[c].eqNullSafe(adf[c]) for c in series_cols

@@ -9,21 +9,36 @@ original run's persisted decisions (the production contract: params are
 fitted once and versioned — a param re-fit is a rebuild event, not a
 refresh):
 
+  0. ONE profile aggregate over delta ∪ carry tail gives, per source, the
+     delta's row count and exact min/max ts and the tail's max ts. Every
+     driver-side decision below comes from it: the double-apply
+     fingerprint, the late-data and stale-tail refusals, the bounds the
+     tier refresh extends and derives its touched partitions from, and the
+     blocks to re-encode;
   1. split labels from the persisted time boundaries (pure predicates);
   2. z-score from the persisted params (no re-fit);
   3. MA-unbias CONTINUATION: the first delta rows' trailing windows span
      the seam, so the job prepends each source's last w−1 historical rows
      (the "carry tail"), runs the identical window, and drops the carried
      rows — residuals equal a full-corpus recompute exactly. The tail is
-     persisted per refresh (sources × (w−1) rows — tiny); the FIRST
-     refresh bootstraps it from the original corpus (--input) with a
-     max-ts + widening-margin scan, the only O(corpus) touch, paid once.
+     persisted per refresh (sources × (w−1) rows — tiny), rebuilt with one
+     top-(w−1) window over tail ∪ delta; the FIRST refresh bootstraps it
+     from the original corpus (--input) with a max-ts + widening-margin
+     scan, the only O(corpus) touch, paid once.
   4. delta prepared rows appended to the prepared store;
-  5. every tier refreshed in place via rollup/incremental.py — algebraic
-     merge + dynamic partition overwrite of touched partitions only, with
-     dense-tier extension seeds from the persisted series bounds;
-  6. Gorilla/delta-of-delta blocks re-encoded for touched sources;
+  5. every tier refreshed in place via rollup/incremental.py from the
+     profile's bounds — algebraic merge of the touched partitions in one
+     write action, with dense-tier extension seeds from the persisted
+     series bounds;
+  6. Gorilla/delta-of-delta blocks re-encoded only for the (source, block)
+     pairs between each source's delta min and max ts, replaced by a
+     dynamic partition overwrite at that grain;
   7. lineage rows appended to the same manifest.
+
+The job reads its own datasets (carry tail, tier partitions) with their
+schema pinned, and runs with AQE off and shuffles sized from the profile:
+a refresh moves O(delta) rows, so schema-inference jobs and AQE's
+per-exchange re-planning jobs would be most of its Spark jobs.
 
 Append-only seam contract: the MA continuation is only exact when every
 delta row lands at-or-after its source's previous max event time (order-
@@ -37,8 +52,11 @@ exercised with late data in tests/test_incremental.py.
 from __future__ import annotations
 
 import argparse
+import glob
+import hashlib
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -46,6 +64,27 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 TAIL_NAME = "unbias_tail.parquet"
+TAIL_COLS = ["source", "ts", "doc_id", "n_tok"]
+W_SIZE = 5  # rollup_job's MA-unbias window
+BLOCK_BUCKETS, BUCKET_SECONDS = 4096, 300  # rollup_job's 5m-tier blocks
+
+
+def top_rows(
+    df: DataFrame,
+    series_cols: list[str],
+    time_col: str,
+    tiebreak_cols: list[str],
+    k: int,
+) -> DataFrame:
+    """Last ``k`` rows per series by (time, tiebreaks): one window."""
+    w = Window.partitionBy(*series_cols).orderBy(
+        *[F.col(c).desc() for c in (time_col, *tiebreak_cols)]
+    )
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
+    )
 
 
 def source_tails(
@@ -56,9 +95,9 @@ def source_tails(
     k: int,
     margin_s: int = 3600,
 ) -> DataFrame:
-    """Last ``k`` rows per series by (time, tiebreaks) without a global
-    sort: one partial-agg pass learns each series' max time and row count,
-    then a widening time-margin predicate bounds the candidate set (a
+    """Last ``k`` rows per series of a whole corpus without a global sort:
+    one partial-agg pass learns each series' max time and row count, then
+    a widening time-margin predicate bounds the candidate set (a
     pushed-down parquet filter) before the small top-k window. Widens ×16
     until every series has min(k, its total) candidates."""
     stats = corpus.groupBy(*series_cols).agg(
@@ -82,13 +121,33 @@ def source_tails(
         if all(n >= min(k, tot) for n, tot in counts.values()):
             break
         margin_s *= 16
-    w = Window.partitionBy(*series_cols).orderBy(
-        *[F.col(c).desc() for c in (time_col, *tiebreak_cols)]
+    return top_rows(cand, series_cols, time_col, tiebreak_cols, k).drop(
+        "__mx", "__tot"
     )
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn", "__mx", "__tot")
+
+
+def delta_profile(delta: DataFrame, tail: DataFrame | None) -> list[tuple]:
+    """Per source, sorted by source (nulls first): (source, delta rows,
+    delta min ts, delta max ts, tail max ts), times in epoch seconds — one
+    aggregate over delta ∪ tail. A source only in the tail has 0 rows and
+    null delta times; one only in the delta has a null tail time."""
+    carry = F.col("__carry")
+    rows = delta.select("source", "ts", F.lit(False).alias("__carry"))
+    if tail is not None:
+        rows = rows.unionByName(tail.select("source", "ts", F.lit(True).alias("__carry")))
+
+    def epoch(c):
+        return F.unix_timestamp(c).cast("long")
+
+    prof = rows.groupBy("source").agg(
+        F.count(F.when(~carry, F.lit(1))).alias("n"),
+        epoch(F.min(F.when(~carry, F.col("ts")))).alias("t0"),
+        epoch(F.max(F.when(~carry, F.col("ts")))).alias("t1"),
+        epoch(F.max(F.when(carry, F.col("ts")))).alias("tail_t1"),
+    )
+    return sorted(
+        (tuple(r) for r in prof.collect()),
+        key=lambda r: (r[0] is not None, r[0]),
     )
 
 
@@ -107,15 +166,8 @@ def main(argv: list[str] | None = None) -> dict:
     args = p.parse_args(argv)
 
     from preprocessor_spark import get_spark
-    from preprocessor_spark.operators import Normalizer, TemporalSplitter, Unbiaser
-    from preprocessor_spark.params import load_params
-    from preprocessor_spark.rollup.checkpoint import Manifest
-    from preprocessor_spark.rollup.compression import encode_tier_blocks
-    from preprocessor_spark.rollup.incremental import (
-        IncrementalRollup,
-        load_bounds,
-    )
-    from preprocessor_spark.rollup.tiers import DEFAULT_TIERS, RollupTree
+    from preprocessor_spark.rollup.incremental import load_bounds
+    from preprocessor_spark.session import scoped_conf
 
     spark = get_spark("refresh_job", master=args.master, batch_committer_v2=True)
     spark.sparkContext.setLogLevel("ERROR")
@@ -135,13 +187,57 @@ def main(argv: list[str] | None = None) -> dict:
                 f"refresh requires the original run's {what} at {path} — "
                 "run plans/rollup_job.py first"
             )
+    # a refresh moves O(delta) rows: AQE's re-planning would add a job per
+    # exchange to an op whose cost is fixed cost. Shuffles are sized by
+    # hand instead — one partition for the profile (one row per source),
+    # then from what it reports (see _refresh)
+    with scoped_conf(
+        spark,
+        {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": 1},
+    ):
+        return _refresh(spark, args, out, load_bounds(bounds_path), t_start)
+
+
+def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> dict:
+    from preprocessor_spark.operators import Normalizer, TemporalSplitter, Unbiaser
+    from preprocessor_spark.params import load_params
+    from preprocessor_spark.rollup.checkpoint import ROWS_PER_WRITE_TASK, Manifest
+    from preprocessor_spark.rollup.compression import (
+        BLOCK_COL,
+        encode_partitioned_blocks,
+    )
+    from preprocessor_spark.rollup.incremental import IncrementalRollup, _balanced_or
+    from preprocessor_spark.rollup.tiers import (
+        DEFAULT_TIERS,
+        RollupTree,
+        stored_tier_schema,
+    )
+    from preprocessor_spark.session import scoped_conf
+
     manifest = Manifest(os.path.join(out, "manifest.jsonl"))
-    boundaries = load_params(split_params_path).params["boundaries"]
-    nparams = load_params(norm_params_path)
-    old_bounds = load_bounds(bounds_path)
+    boundaries = load_params(os.path.join(out, "split_params.json")).params["boundaries"]
+    nparams = load_params(os.path.join(out, "norm_params.json"))
 
     delta = spark.read.parquet(args.delta_input)
-    delta_rows = delta.count()
+    tail_path = os.path.join(out, TAIL_NAME)
+    tail_bootstrap = not os.path.exists(tail_path)
+    if not tail_bootstrap:
+        # the tail holds earlier deltas' rows: the delta's schema is its own
+        tail_raw = spark.read.schema(delta.select(*TAIL_COLS).schema).parquet(tail_path)
+    elif args.input:
+        tail_raw = source_tails(
+            spark.read.parquet(args.input).select(*TAIL_COLS),
+            ["source"],
+            "ts",
+            ["doc_id"],
+            k=W_SIZE - 1,
+        )
+    else:
+        tail_raw = None
+
+    profile = delta_profile(delta, tail_raw)
+    extent = [r[:4] for r in profile if r[1] > 0]
+    delta_rows = sum(r[1] for r in extent)
     if delta_rows == 0:
         result = {"job": "refresh_job", "delta_rows": 0, "total_seconds": 0.0}
         print(json.dumps(result))
@@ -160,18 +256,6 @@ def main(argv: list[str] | None = None) -> dict:
     # Iceberg transaction and this guard becomes the commit's snapshot
     # check. The streaming path (stream_refresh_tiers) carries the same
     # guard keyed on micro-batch epoch ids.
-    extent = (
-        delta.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.unix_timestamp(F.min("ts")).cast("long").alias("t0"),
-            F.unix_timestamp(F.max("ts")).cast("long").alias("t1"),
-        )
-        .orderBy("source")
-        .collect()
-    )
-    import hashlib
-
     fingerprint = hashlib.sha256(
         json.dumps([[r[0], int(r[1]), int(r[2]), int(r[3])] for r in extent]).encode()
     ).hexdigest()[:16]
@@ -191,13 +275,11 @@ def main(argv: list[str] | None = None) -> dict:
         )
 
     # -- append-only seam validation (see module docstring) ---------------
-    # the fingerprint extent already carries per-source min ts — reuse it
-    delta_mins = {(r[0],): int(r[2]) for r in extent}
     old_max = {tuple(r[:-2]): int(r[-1]) for r in old_bounds}
     stale = {
-        k: (m, old_max[k])
-        for k, m in delta_mins.items()
-        if k in old_max and m < old_max[k]
+        (s,): (t0, old_max[(s,)])
+        for s, _n, t0, _t1 in extent
+        if (s,) in old_max and t0 < old_max[(s,)]
     }
     if stale:
         raise ValueError(
@@ -208,51 +290,22 @@ def main(argv: list[str] | None = None) -> dict:
             "instead (the tier merge itself would be fine; the prepared "
             "series would not)"
         )
-
-    # -- split + normalize under persisted decisions -----------------------
-    labeled = TemporalSplitter.split_by_time_boundaries(delta, "ts", boundaries)
-    with_z = labeled.withColumn("n_tok_z", F.col("n_tok").cast("double"))
-    norm = Normalizer(method="zscore", columns=["n_tok_z"])
-    normed = norm.transform(with_z, nparams)
-
-    # -- MA-unbias continuation across the seam ----------------------------
-    w_size = 5
-    tail_path = os.path.join(out, TAIL_NAME)
-    t0 = time.perf_counter()
-    if os.path.exists(tail_path):
-        tail_raw = spark.read.parquet(tail_path)
-        tail_bootstrap = False
-    else:
-        if not args.input:
-            raise FileNotFoundError(
-                "first refresh: pass --input (original corpus) to bootstrap "
-                f"the unbias carry tail (persisted afterwards at {tail_path})"
-            )
-        tail_raw = source_tails(
-            spark.read.parquet(args.input).select("source", "ts", "doc_id", "n_tok"),
-            ["source"],
-            "ts",
-            ["doc_id"],
-            k=w_size - 1,
+    if tail_raw is None:
+        raise FileNotFoundError(
+            "first refresh: pass --input (original corpus) to bootstrap "
+            f"the unbias carry tail (persisted afterwards at {tail_path})"
         )
-        tail_bootstrap = True
     # Tail-at-edge validation: the carry rows MUST be the last rows of the
     # absorbed series, i.e. per-source max(ts) == the stored bounds edge.
     # Catches a tail left stale by a fresh rollup_job rebuild into the same
     # output dir, and a bootstrap from an --input that predates already
     # absorbed deltas (e.g. after a crashed swap destroyed the tail) —
     # either would silently seed the MA seam with wrong predecessors.
-    tail_edge = {
-        r[0]: int(r[1])
-        for r in tail_raw.groupBy("source")
-        .agg(F.unix_timestamp(F.max("ts")).cast("long").alias("t1"))
-        .collect()
-    }
-    bounds_edge = {r[0]: int(r[-1]) for r in old_bounds}
+    tail_edge = {r[0]: r[4] for r in profile if r[4] is not None}
     edge_mismatch = {
-        s: (tail_edge.get(s), e)
-        for s, e in bounds_edge.items()
-        if tail_edge.get(s) != e
+        r[0]: (tail_edge.get(r[0]), int(r[-1]))
+        for r in old_bounds
+        if tail_edge.get(r[0]) != int(r[-1])
     }
     if edge_mismatch:
         raise ValueError(
@@ -264,6 +317,30 @@ def main(argv: list[str] | None = None) -> dict:
             "rollup_job, or restore the matching unbias tail, before "
             "refreshing"
         )
+
+    # every later shuffle is keyed by source (the tier merge sizes its own):
+    # no wider than the delta's sources, and one task per ROWS_PER_WRITE_TASK
+    # rows — a daily delta is one task, and writes one file per dataset
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        max(
+            1,
+            min(
+                spark.sparkContext.defaultParallelism,
+                len(extent),
+                -(-delta_rows // ROWS_PER_WRITE_TASK),
+            ),
+        ),
+    )
+
+    # -- split + normalize under persisted decisions -----------------------
+    labeled = TemporalSplitter.split_by_time_boundaries(delta, "ts", boundaries)
+    with_z = labeled.withColumn("n_tok_z", F.col("n_tok").cast("double"))
+    norm = Normalizer(method="zscore", columns=["n_tok_z"])
+    normed = norm.transform(with_z, nparams)
+
+    # -- MA-unbias continuation across the seam ----------------------------
+    t0 = time.perf_counter()
     # tails are raw rows: renormalizing them with the SAME params yields
     # exactly the values the original prepared store holds for them
     tail_z = norm.transform(
@@ -274,7 +351,7 @@ def main(argv: list[str] | None = None) -> dict:
     )
     unb = Unbiaser(
         method="ma",
-        window_size=w_size,
+        window_size=W_SIZE,
         series_cols=["source"],
         value_cols=["n_tok_z"],
         tiebreak_cols=["doc_id"],
@@ -299,16 +376,13 @@ def main(argv: list[str] | None = None) -> dict:
     prepare_seconds = round(time.perf_counter() - t0, 3)
 
     # next refresh's carry tail: last w−1 raw rows per source across
-    # (old tail ∪ delta) — tiny, computed driver-cheap with the same top-k
-    new_tail = source_tails(
-        tail_raw.select("source", "ts", "doc_id", "n_tok").unionByName(
-            delta.select("source", "ts", "doc_id", "n_tok")
-        ),
+    # (old tail ∪ delta)
+    new_tail = top_rows(
+        tail_raw.select(*TAIL_COLS).unionByName(delta.select(*TAIL_COLS)),
         ["source"],
         "ts",
         ["doc_id"],
-        k=w_size - 1,
-        margin_s=1 << 62,  # tail ∪ delta is small; skip the margin dance
+        k=W_SIZE - 1,
     )
     # NOTE: only MATERIALIZE the new tail here (the .tmp write) — the swap
     # of tail_path itself must wait until after the tier refresh below:
@@ -333,38 +407,48 @@ def main(argv: list[str] | None = None) -> dict:
     delta_facts = prepared_delta.select(
         F.timestamp_seconds("tss").alias("ts"), "source", "n_tok_z"
     )
+    bounds = [(s, t0_, t1_) for s, _n, t0_, t1_ in extent]
     inc = IncrementalRollup(tree, out, dense=True)
-    tier_metrics = inc.refresh(spark, delta_facts, manifest=manifest)
+    tier_metrics = inc.refresh(spark, delta_facts, manifest=manifest, bounds=bounds)
     refresh_seconds = round(time.perf_counter() - t0, 3)
 
-    # -- re-encode compression blocks for touched sources ------------------
+    # -- re-encode the compression blocks the delta lands in ---------------
     compress_seconds = None
     if not args.no_blocks:
         t0 = time.perf_counter()
-        touched_sources = sorted(
-            {k[0] if isinstance(k, tuple) else k for k in delta_mins}
-        )
         tier0_name = DEFAULT_TIERS[0].name
-        tier0 = spark.read.parquet(os.path.join(out, f"tier_{tier0_name}"))
-        blocks = encode_tier_blocks(
-            tier0.filter(
-                (F.col("n_points") > 0)
-                & F.col("source").isin(touched_sources)
-            ),
-            ["source"],
-            block_buckets=4096,
-            bucket_seconds=300,
+        blocks_path = os.path.join(out, "blocks_" + tier0_name)
+        tier0 = spark.read.schema(stored_tier_schema([delta.schema["source"]])).parquet(
+            os.path.join(out, f"tier_{tier0_name}")
         )
-        before = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            blocks.write.mode("overwrite").partitionBy("source").parquet(
-                os.path.join(out, "blocks_" + tier0_name)
+        span = BLOCK_BUCKETS * BUCKET_SECONDS
+        if glob.glob(os.path.join(blocks_path, "source=*", "*.parquet")):
+            # blocks of an output built before the (source, block) layout:
+            # re-encode them all into it, once
+            touched_rows = tier0
+            overwrite_mode = "static"
+        else:
+            touched_rows = tier0.filter(
+                F.col("source").isin([s for s, _, _ in bounds])
+                & _balanced_or(
+                    [
+                        (F.col("source") == s)
+                        & (F.col("bucket_start") >= F.timestamp_seconds(F.lit(a - a % span)))
+                        & (
+                            F.col("bucket_start")
+                            < F.timestamp_seconds(F.lit(b - b % span + span))
+                        )
+                        for s, a, b in bounds
+                    ]
+                )
             )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", before)
+            overwrite_mode = "dynamic"
+        with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": overwrite_mode}):
+            encode_partitioned_blocks(
+                touched_rows, ["source"], BLOCK_BUCKETS, BUCKET_SECONDS
+            ).write.mode("overwrite").partitionBy("source", BLOCK_COL).parquet(
+                blocks_path
+            )
         compress_seconds = round(time.perf_counter() - t0, 3)
 
     prepared_delta.unpersist()
@@ -372,8 +456,6 @@ def main(argv: list[str] | None = None) -> dict:
     # one: two atomic renames, never an unlink of the only copy — a crash
     # in the window between them leaves the old tail intact at .bak (the
     # previous rmtree-then-replace destroyed it before the new one landed)
-    import shutil
-
     shutil.rmtree(bak_tail, ignore_errors=True)
     if os.path.exists(tail_path):
         os.replace(tail_path, bak_tail)

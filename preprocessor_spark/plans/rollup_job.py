@@ -30,52 +30,6 @@ import time
 from pyspark.sql import functions as F
 
 
-def _proc_tree_cpu_seconds() -> float | None:
-    """Total CPU seconds (utime+stime) of this job's process tree: the
-    python driver, the JVM (the driver's parent under spark-submit), and
-    all python workers. Supplementary CPU-work metric for the scaling
-    evidence — two configs doing the same work should burn ~equal CPU; a
-    CPU ratio ≫ 1 at 4N separates work inflation (engine-controllable)
-    from memory-bandwidth contention (host artifact). Approximate: CPU of
-    already-reaped children is excluded."""
-    try:
-        tick = os.sysconf("SC_CLK_TCK")
-        stats: dict[int, tuple[int, int]] = {}
-        for p in os.listdir("/proc"):
-            if not p.isdigit():
-                continue
-            try:
-                with open(f"/proc/{p}/stat") as f:
-                    parts = f.read().rsplit(")", 1)[1].split()
-                # fields after comm: state(0) ppid(1) ... utime(11) stime(12)
-                stats[int(p)] = (int(parts[1]), int(parts[11]) + int(parts[12]))
-            except (OSError, IndexError, ValueError):
-                continue
-        me = os.getpid()
-        roots = {me}
-        ppid = stats.get(me, (0, 0))[0]
-        try:  # include the launching JVM (and its python workers) only
-            with open(f"/proc/{ppid}/comm") as f:
-                if "java" in f.read():
-                    roots.add(ppid)
-        except OSError:
-            pass
-        children: dict[int, list[int]] = {}
-        for pid, (pp, _) in stats.items():
-            children.setdefault(pp, []).append(pid)
-        seen: set[int] = set()
-        stack = list(roots)
-        while stack:
-            pid = stack.pop()
-            if pid in seen:
-                continue
-            seen.add(pid)
-            stack.extend(children.get(pid, []))
-        return sum(stats[p][1] for p in seen if p in stats) / tick
-    except (OSError, ValueError):
-        return None
-
-
 def main(argv: list[str] | None = None) -> dict:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="token_sequences parquet dir")
@@ -83,26 +37,24 @@ def main(argv: list[str] | None = None) -> dict:
     p.add_argument("--master", default=None)
     p.add_argument("--resume", action="store_true")
     p.add_argument("--salt-buckets", type=int, default=16)
-    p.add_argument(
-        "--bench-warmup",
-        action="store_true",
-        help="run one untimed pass of the tier tree first (JIT warm-run "
-        "benchmarking — measures steady-state throughput, the 10^12-scale "
-        "operating point)",
-    )
     args = p.parse_args(argv)
 
     from preprocessor_spark import get_spark
     from preprocessor_spark.operators import Normalizer, TemporalSplitter, Unbiaser
     from preprocessor_spark.params import load_params, save_params
-    from preprocessor_spark.rollup.checkpoint import Manifest, run_resumable_observed
-    from preprocessor_spark.rollup.compression import encode_tier_blocks
+    from preprocessor_spark.rollup.checkpoint import Manifest
+    from preprocessor_spark.rollup.compression import (
+        BLOCK_COL,
+        encode_partitioned_blocks,
+    )
     from preprocessor_spark.rollup.tiers import (
         DEFAULT_TIERS,
         RollupTree,
         duration_seconds,
         spine_from_bounds,
+        stored_tier_schema,
     )
+    from preprocessor_spark.session import scoped_conf
 
     spark = get_spark("rollup_job", master=args.master, batch_committer_v2=True)
     spark.sparkContext.setLogLevel("ERROR")
@@ -190,7 +142,6 @@ def main(argv: list[str] | None = None) -> dict:
     # happens post-aggregate on |buckets| rows, not |facts| rows.
     prepared_path = os.path.join(out, "prepared")
     t0 = time.perf_counter()
-    cpu_prep0 = _proc_tree_cpu_seconds()
     prepare_ran = not (
         args.resume and os.path.exists(os.path.join(prepared_path, "_SUCCESS"))
     )
@@ -205,11 +156,9 @@ def main(argv: list[str] | None = None) -> dict:
         # The tier aggregates below prefer cores×1 (map-side combine
         # collapses them before the shuffle), so the session default is
         # restored after the prepared write.
-        shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
         prep_parts = max(
             spark.sparkContext.defaultParallelism, n_rows // 2_000_000
         )
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(prep_parts)))
         # Row-group size: parquet scan parallelism is ROW-GROUP-bound — a
         # file with one row group is one indivisible task no matter what
         # maxPartitionBytes says. The unbiaser emits one ~file per
@@ -225,7 +174,7 @@ def main(argv: list[str] | None = None) -> dict:
         # when files are small relative to the default.
         rg_bytes = int(os.environ.get("SPARK_GRAFT_PREPARE_RG_BYTES", 4 << 20))
         spark.sparkContext.setJobDescription("prepare")
-        try:
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": int(prep_parts)}):
             unb.transform(normed).select(
                 # long, not int: int32 epochs silently wrap negative at/after
                 # 2038-01-19 in non-ANSI mode, corrupting bucket keys (the
@@ -240,38 +189,14 @@ def main(argv: list[str] | None = None) -> dict:
             ).write.mode("overwrite").option(
                 "parquet.block.size", str(rg_bytes)
             ).parquet(prepared_path)
-        finally:
-            # restore even when the write raises: in-process callers (tests,
-            # notebook use) share the session, and leaking the inflated
-            # prepare sizing would mis-shuffle every later tier aggregate
-            spark.conf.set("spark.sql.shuffle.partitions", shuffle_before)
     prepare_seconds = round(time.perf_counter() - t0, 3) if prepare_ran else None
-    cpu_prep1 = _proc_tree_cpu_seconds()
-    # CPU burned during prepare (scan→split→normalize→unbias→write),
-    # including the pandas-UDF python workers — the work-inflation metric
-    # for the prepare-stage scaling evidence, same role as
-    # rollup_cpu_seconds for the rollup phase
-    prepare_cpu_seconds = (
-        round(cpu_prep1 - cpu_prep0, 3)
-        if prepare_ran and cpu_prep0 is not None and cpu_prep1 is not None
-        else None
-    )
     # Scan-split policy for the rollup phase: size input splits to ~4 task
     # waves per core (SPARK_GRAFT_SCAN_WAVES to override). Spark's default
     # bytesPerCore sizing yields ~1 wave of large uneven tasks, and AQE
     # cannot re-split INPUT partitions — the resulting last-wave stragglers
     # idle most of the cluster (measured 66% core utilization at 4N vs 95%
     # at N: quantization, not bandwidth, capped the scaling efficiency).
-    # remember the session's scan-split settings so the shared-session
-    # finally below can restore them (same contract as shuffle.partitions
-    # and AQE: in-process callers must not inherit this job's tuning)
-    scan_conf_before = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.files.maxPartitionBytes",
-            "spark.sql.files.openCostInBytes",
-        )
-    }
+    scan_conf: dict[str, int] = {}
     try:
         waves = int(os.environ.get("SPARK_GRAFT_SCAN_WAVES", "4"))
         total_bytes = sum(
@@ -281,11 +206,14 @@ def main(argv: list[str] | None = None) -> dict:
         )
         cores = spark.sparkContext.defaultParallelism
         split = max(8 << 20, min(128 << 20, total_bytes // max(cores * waves, 1)))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(int(split)))
-        spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 20))
+        scan_conf = {
+            "spark.sql.files.maxPartitionBytes": int(split),
+            "spark.sql.files.openCostInBytes": 1 << 20,
+        }
     except OSError:
         pass
     prepared = spark.read.parquet(prepared_path)
+    tier_schema = stored_tier_schema([corpus.schema["source"]])
 
     # -- rollup tree with gap-fill + compression ---------------------------
     # the rolled-up series is the PREPROCESSED one (z-scored + MA-unbiased
@@ -309,9 +237,7 @@ def main(argv: list[str] | None = None) -> dict:
     # floor); lineage row counts ride the write action as Observation
     # metrics. Fixed per-tier overhead is what caps the N→4N scaling
     # efficiency that the north rule grades.
-    def run_tier_tree(
-        tree_out: str, tree_manifest, label: str = "", persist_bounds: bool = False
-    ) -> dict:
+    def run_tier_tree() -> dict:
         from preprocessor_spark.rollup.checkpoint import (
             ROWS_PER_WRITE_TASK,
             run_resumable_observed as _write,
@@ -322,8 +248,8 @@ def main(argv: list[str] | None = None) -> dict:
         metrics = {}
         # phase-tagged job descriptions: event-log probes (tools/
         # stage_probe.py) and the Spark UI attribute every job to its tier
-        # phase, separating warm-up jobs from timed ones
-        spark.sparkContext.setJobDescription(f"{label}bounds")
+        # phase
+        spark.sparkContext.setJobDescription("bounds")
         t0 = time.perf_counter()
         bounds_rows = [
             tuple(r)
@@ -335,17 +261,14 @@ def main(argv: list[str] | None = None) -> dict:
             .collect()
         ]
         bounds_seconds = round(time.perf_counter() - t0, 3)
-        if persist_bounds:
-            # sidecar consumed by plans/refresh_job.py: the per-series edge
-            # state a dense tier needs to seed ONLY its new buckets on an
-            # incremental refresh (rollup/incremental.py)
-            from preprocessor_spark.rollup.incremental import save_bounds
+        # sidecar consumed by plans/refresh_job.py: the per-series edge
+        # state a dense tier needs to seed ONLY its new buckets on an
+        # incremental refresh (rollup/incremental.py)
+        from preprocessor_spark.rollup.incremental import save_bounds
 
-            save_bounds(
-                os.path.join(tree_out, "series_bounds.json"),
-                bounds_rows,
-                ["source"],
-            )
+        save_bounds(
+            os.path.join(out, "series_bounds.json"), bounds_rows, ["source"]
+        )
         sources = sorted(r[0] for r in bounds_rows)
         cores = spark.sparkContext.defaultParallelism
 
@@ -371,20 +294,20 @@ def main(argv: list[str] | None = None) -> dict:
             num_partitions=spine_parts, series_schema=prepared, as_epoch=True,
         )
         filled = tree.base_aggregate_with_spine_epoch(prepared, step0, spine)
-        spark.sparkContext.setJobDescription(f"{label}tier0_{base.name}")
+        spark.sparkContext.setJobDescription(f"tier0_{base.name}")
         _write(
             spark,
             filled,
             stage=f"tier_{base.name}",
             partition_col="source",
-            out_path=os.path.join(tree_out, f"tier_{base.name}"),
-            manifest=tree_manifest,
+            out_path=os.path.join(out, f"tier_{base.name}"),
+            manifest=manifest,
             values=sources,
             expected_rows=exp_rows,
         )
         tier0_rows = sum(
             r["rows"]
-            for r in tree_manifest.lineage()
+            for r in manifest.lineage()
             if r["stage"] == f"tier_{base.name}"
         )
         dt = time.perf_counter() - t0
@@ -414,8 +337,8 @@ def main(argv: list[str] | None = None) -> dict:
         if coarse:
             t0 = time.perf_counter()
             cur = (
-                spark.read.parquet(
-                    os.path.join(tree_out, f"tier_{base.name}")
+                spark.read.schema(tier_schema).parquet(
+                    os.path.join(out, f"tier_{base.name}")
                 )
                 .select(
                     "source",
@@ -448,21 +371,21 @@ def main(argv: list[str] | None = None) -> dict:
                 F.timestamp_seconds("bucket_epoch").alias("bucket_start"),
                 *ALGEBRAIC,
             )
-            spark.sparkContext.setJobDescription(f"{label}coarse")
+            spark.sparkContext.setJobDescription("coarse")
             _write_tiers(
                 spark,
                 allc,
                 tier_col="tier",
                 partition_col="source",
-                out_root=tree_out,
-                manifest=tree_manifest,
+                out_root=out,
+                manifest=manifest,
                 tier_names=[t.name for t in coarse],
                 values=sources,
             )
             rows_by_tier = {
                 t.name: sum(
                     r["rows"]
-                    for r in tree_manifest.lineage()
+                    for r in manifest.lineage()
                     if r["stage"] == f"tier_{t.name}"
                 )
                 for t in coarse
@@ -483,53 +406,22 @@ def main(argv: list[str] | None = None) -> dict:
     # cost here — idle-cluster scheduling gaps that scale with core count,
     # not data (measured ~0.5 s/exchange even warm). The tree runs as
     # static DAGs; the caller's AQE setting is restored after.
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        if args.bench_warmup:
-            # Warm-run benchmarking: a fresh JVM spends seconds
-            # JIT-compiling every generated stage, a fixed cost that a
-            # steady-state cluster job (the 10^12-scale target: hours of
-            # runtime) amortizes to nothing but which dominates a ~minute
-            # sandbox measurement. One untimed pass through the identical
-            # tier plans compiles them; the timed pass below then measures
-            # steady-state throughput.
-            import shutil as _sh
-
-            warm_out = os.path.join(out, "warmup_tiers")
-            _sh.rmtree(warm_out, ignore_errors=True)
-            os.makedirs(warm_out)
-            run_tier_tree(
-                warm_out,
-                Manifest(os.path.join(warm_out, "m.jsonl")),
-                label="warm:",
-            )
-            _sh.rmtree(warm_out, ignore_errors=True)
-
-        cpu0 = _proc_tree_cpu_seconds()
-        tier_metrics = run_tier_tree(out, manifest, persist_bounds=True)
-        cpu1 = _proc_tree_cpu_seconds()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        # the tier tree was the last consumer of this job's scan-split
-        # sizing; hand the shared session back with its own settings
-        for k, v in scan_conf_before.items():
-            spark.conf.set(k, v)
-    rollup_cpu_seconds = (
-        round(cpu1 - cpu0, 3) if cpu0 is not None and cpu1 is not None else None
-    )
+    # the scan-split sizing above applies to the tier tree only: the
+    # shared session gets its own settings back after it
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false", **scan_conf}):
+        tier_metrics = run_tier_tree()
 
     # -- compression of the finest tier -----------------------------------
+    # blocks are partitioned by (source, block): a refresh re-encodes and
+    # replaces only the blocks its delta lands in
     spark.sparkContext.setJobDescription("compress")
     t0 = time.perf_counter()
-    tier0 = spark.read.parquet(os.path.join(out, f"tier_{DEFAULT_TIERS[0].name}"))
-    blocks = encode_tier_blocks(
-        tier0.filter(F.col("n_points") > 0),
-        ["source"],
-        block_buckets=4096,
-        bucket_seconds=300,
+    tier0 = spark.read.schema(tier_schema).parquet(
+        os.path.join(out, f"tier_{DEFAULT_TIERS[0].name}")
     )
-    blocks.write.mode("overwrite").partitionBy("source").parquet(
+    encode_partitioned_blocks(
+        tier0, ["source"], block_buckets=4096, bucket_seconds=300
+    ).write.mode("overwrite").partitionBy("source", BLOCK_COL).parquet(
         os.path.join(out, "blocks_" + DEFAULT_TIERS[0].name)
     )
     compress_seconds = round(time.perf_counter() - t0, 3)
@@ -547,12 +439,7 @@ def main(argv: list[str] | None = None) -> dict:
         "prepare_points_per_sec": (
             round(n_rows / max(prepare_seconds, 1e-9)) if prepare_ran else None
         ),
-        "prepare_cpu_seconds": prepare_cpu_seconds,
         "rollup_points_per_sec": round(n_rows / max(rollup_seconds, 1e-9)),
-        # CPU burned by the whole process tree during the rollup phase —
-        # the supplementary work metric for the scaling evidence (equal
-        # work at N and 4N ⇒ ratio ≈ 1; see _proc_tree_cpu_seconds)
-        "rollup_cpu_seconds": rollup_cpu_seconds,
         "tiers": tier_metrics,
         "compress_seconds": compress_seconds,
         "lineage_rows": len(manifest.lineage()),

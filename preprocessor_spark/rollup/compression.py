@@ -13,6 +13,15 @@ The encode/decode runs per (series, block) group inside Arrow
 ``applyInPandas`` — numpy-vectorized, no per-row Python. Blocks are rows of
 a normal DataFrame (binary columns), so they write to any partitioned sink
 and are pruned by (series, block_start) predicates at read time.
+
+On disk (``blocks_<tier>`` of the rollup jobs) the blocks are partitioned
+by ``(source, block)``, where ``block`` = floor(epoch(block_start) / span)
+and span = block_buckets × bucket_seconds (4096 × 300 s ≈ 14.2 days for
+the 5m tier): one directory per block, holding that block's one row. A
+refresh re-encodes only the blocks its delta lands in and replaces them
+with a dynamic partition overwrite at that grain; every other block's
+files stay as they are. ``encode_partitioned_blocks`` adds the ``block``
+key; the encoder's own output schema does not carry it.
 """
 
 from __future__ import annotations
@@ -45,6 +54,35 @@ def _block_schema(series_cols: list[str], df: DataFrame) -> T.StructType:
     return T.StructType(fields)
 
 
+BLOCK_COL = "block"
+
+
+def block_index(ts, span_seconds: int):
+    """Block of a timestamp: floor(epoch / span). Floor, not
+    cast('long'): the cast truncates toward zero, so pre-1970
+    (negative-epoch) buckets would straddle epoch in one double-width block
+    and every historical block would sit off the floor-based grid."""
+    return F.floor(F.unix_timestamp(ts) / F.lit(int(span_seconds))).cast("long")
+
+
+def encode_partitioned_blocks(
+    tier_df: DataFrame,
+    series_cols: list[str],
+    block_buckets: int,
+    bucket_seconds: int,
+) -> DataFrame:
+    """Blocks of the tier's non-empty rows, keyed for the on-disk
+    ``(*series_cols, block)`` layout: write them with
+    ``partitionBy(*series_cols, BLOCK_COL)``. ``block`` is computed from
+    each bucket, which gives the block of its ``block_start``."""
+    keyed = tier_df.filter(F.col("n_points") > 0).withColumn(
+        BLOCK_COL, block_index("bucket_start", block_buckets * bucket_seconds)
+    )
+    return encode_tier_blocks(
+        keyed, [*series_cols, BLOCK_COL], block_buckets, bucket_seconds
+    )
+
+
 def encode_tier_blocks(
     tier_df: DataFrame,
     series_cols: list[str] | None = None,
@@ -56,14 +94,8 @@ def encode_tier_blocks(
     bucket_seconds)) so block membership is a pure expression (no global
     sort) and any block re-encodes independently (checkpoint/resume unit)."""
     series_cols = series_cols if series_cols is not None else ["source"]
-    span = block_buckets * bucket_seconds
     df = tier_df.withColumn(
-        # floor, not cast('long'): the cast truncates toward zero, so
-        # pre-1970 (negative-epoch) buckets would straddle epoch in one
-        # double-width block and every historical block would sit off the
-        # floor-based grid
-        "__block",
-        F.floor(F.unix_timestamp("bucket_start") / F.lit(span)).cast("long"),
+        "__block", block_index("bucket_start", block_buckets * bucket_seconds)
     )
     schema = _block_schema(series_cols, tier_df)
     scols = list(series_cols)

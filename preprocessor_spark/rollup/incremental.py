@@ -10,9 +10,9 @@ statistic of (old ∪ delta) is a fold of the old row's statistics with the
 delta partial's, per (series, bucket). So a refresh is
 
     delta facts ──base_aggregate──▶ delta partials        (O(|delta|))
-    affected buckets = delta partials' keys               (tiny)
-    existing tier ⋈ affected partitions ──union+reagg──▶ merged rows
-    dynamic partition overwrite of ONLY those partitions  (O(affected))
+    touched partitions = f(delta's per-series extent)     (driver-side)
+    existing tier ⋈ touched partitions ──union+reagg──▶ merged rows
+    one write, then ONLY those partition dirs replaced    (O(touched))
 
 and never reads or rewrites the untouched 99.9% of the tier. The same
 delta partial re-aggregates up the tree (5m partial → 1h partial → 1d
@@ -46,6 +46,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from preprocessor_spark.rollup.tiers import (
     ALGEBRAIC,
@@ -55,6 +56,7 @@ from preprocessor_spark.rollup.tiers import (
     duration_seconds,
     spine_from_bounds,
 )
+from preprocessor_spark.session import scoped_conf
 
 
 def merge_partials(
@@ -62,6 +64,7 @@ def merge_partials(
     delta_partial: DataFrame,
     key_cols: list[str],
     hist: tuple[str, int] | None = None,
+    cluster_cols: list[str] | None = None,
 ) -> DataFrame:
     """Fold delta partials into existing tier rows per key: union + one
     hash re-aggregation (sums of sums, min of mins, max of maxes — the
@@ -72,17 +75,20 @@ def merge_partials(
     seed merged with a delta partial yields the delta's stats; a seed with
     no delta survives unchanged. Both inputs must carry exactly
     key_cols + ALGEBRAIC (+ the histogram column when ``hist`` names one:
-    ``(column_name, nbins)`` — element-wise mergeable, tiers.py)."""
+    ``(column_name, nbins)`` — element-wise mergeable, tiers.py).
+
+    ``cluster_cols`` ⊆ ``key_cols`` hash-partitions the fold by those
+    columns only (the fold reuses that exchange): pass the tier's partition
+    columns, and each output partition directory is written by one task,
+    as one file, instead of by every task."""
     from preprocessor_spark.rollup.tiers import histogram_reagg
 
     cols = [*key_cols, *ALGEBRAIC, *([hist[0]] if hist else [])]
     aggs = [*algebraic_reaggs(), *([histogram_reagg(hist[1], hist[0])] if hist else [])]
-    return (
-        existing.select(*cols)
-        .unionByName(delta_partial.select(*cols))
-        .groupBy(*key_cols)
-        .agg(*aggs)
-    )
+    rows = existing.select(*cols).unionByName(delta_partial.select(*cols))
+    if cluster_cols:
+        rows = rows.repartition(*cluster_cols)
+    return rows.groupBy(*key_cols).agg(*aggs)
 
 
 def with_bucket_day(tier_df: DataFrame) -> DataFrame:
@@ -173,6 +179,7 @@ def read_touched_partitions(
     tier_path: str,
     partition_cols: list[str],
     tuples: list[tuple],
+    schema: T.StructType,
 ) -> DataFrame:
     """Read ONLY the touched partition directories, by explicit path +
     basePath (partition columns recovered from the paths). A plain
@@ -184,12 +191,17 @@ def read_touched_partitions(
     metadata. Dirs that don't exist yet (new day / new series) are
     skipped; if every dir is new, or any partition value needs Hive
     path-escaping beyond plain str(), fall back to the pruned full read
-    (correct, just slower)."""
+    (correct, just slower).
+
+    ``schema`` (the tier's columns, partition columns included) pins the
+    read: an unpinned read runs a Spark job to infer the schema from a
+    parquet footer."""
     import re
 
     global _SAFE_DIR_VALUE_RE
     if _SAFE_DIR_VALUE_RE is None:
         _SAFE_DIR_VALUE_RE = re.compile(r"^[A-Za-z0-9._-]+$")
+    reader = spark.read.schema(schema)
     # the explicit-path fast path probes directories with os.path.isdir,
     # which is only meaningful on a LOCAL filesystem: on s3a://hdfs://...
     # every probe would fail and the 'existing' slice would come back
@@ -209,93 +221,11 @@ def read_touched_partitions(
         if not existing_paths:
             # brand-new partitions only: an empty slice keeps the union
             # schema aligned; nothing merges
-            return (
-                spark.read.option("basePath", tier_path)
-                .parquet(tier_path)
-                .limit(0)
-            )
-        return spark.read.option("basePath", tier_path).parquet(*existing_paths)
-    return spark.read.parquet(tier_path).filter(
+            return reader.option("basePath", tier_path).parquet(tier_path).limit(0)
+        return reader.option("basePath", tier_path).parquet(*existing_paths)
+    return reader.parquet(tier_path).filter(
         _partition_predicate(partition_cols, tuples)
     )
-
-
-def refresh_tier_path(
-    spark: SparkSession,
-    tier_path: str,
-    delta_partial: DataFrame,
-    key_cols: list[str],
-    partition_cols: list[str],
-    manifest=None,
-    stage: str | None = None,
-) -> dict:
-    """Merge ``delta_partial`` (key_cols + ALGEBRAIC rows for the delta
-    only) into the Hive-partitioned tier at ``tier_path``, rewriting only
-    the partitions the delta touches (dynamic partition overwrite).
-
-    ``partition_cols`` ⊆ ``key_cols`` names the tier's directory layout.
-    The delta partial is collected to its distinct partition tuples first
-    — that's |touched partitions| rows, driver-tiny by the same argument
-    that makes the refresh cheap at all. Returns refresh metrics; marks
-    one manifest lineage row per rewritten partition when given one."""
-    t0 = time.perf_counter()
-    delta_partial = delta_partial.cache()
-    try:
-        return _refresh_tier_path_cached(
-            spark, t0, tier_path, delta_partial, key_cols, partition_cols,
-            manifest, stage,
-        )
-    finally:
-        # unpersist on EVERY exit: a failed write must not leak the cached
-        # partial into executor memory for the session lifetime
-        delta_partial.unpersist()
-
-
-def _refresh_tier_path_cached(
-    spark, t0, tier_path, delta_partial, key_cols, partition_cols,
-    manifest, stage,
-) -> dict:
-    touched = [
-        tuple(r) for r in delta_partial.select(*partition_cols).distinct().collect()
-    ]
-    if not touched:
-        return {"partitions_rewritten": 0, "rows_written": 0, "seconds": 0.0}
-    existing = read_touched_partitions(spark, tier_path, partition_cols, touched)
-    # partition columns outside the bucket key (e.g. bucket_day, derived
-    # from bucket_start) ride the merge as extra group keys — functionally
-    # dependent on the key, so the fold is unchanged and the write below
-    # still sees its layout columns
-    merge_keys = [*key_cols, *[c for c in partition_cols if c not in key_cols]]
-    merged = merge_partials(existing, delta_partial, merge_keys)
-
-    before = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    from pyspark.sql import Observation
-
-    obs = Observation("refresh_rows")
-    merged = merged.observe(obs, F.count(F.lit(1)).alias("rows"))
-    try:
-        merged.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-            tier_path
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", before)
-    rows = int(obs.get["rows"] or 0)
-    dt = round(time.perf_counter() - t0, 3)
-    if manifest is not None and stage is not None:
-        for t in touched:
-            manifest.mark(
-                stage,
-                "/".join(str(v) for v in t),
-                rows=rows,
-                seconds=dt,
-                kind="refresh",
-            )
-    return {
-        "partitions_rewritten": len(touched),
-        "rows_written": rows,
-        "seconds": dt,
-    }
 
 
 # -- per-series bounds sidecar (dense-tier extension bookkeeping) ---------
@@ -377,12 +307,18 @@ def seeds_from_intervals(
 ) -> DataFrame:
     """Empty-bucket (n_points=0, null stats) seed rows covering the given
     lattice intervals — the rows that keep a gap-filled tier dense across
-    a bounds extension."""
+    a bounds extension. The spine is partitioned by its exact row count: a
+    daily extension is a few hundred buckets, one task's worth."""
+    from preprocessor_spark.rollup.checkpoint import ROWS_PER_WRITE_TASK
+
+    step = int(step_s)
+    n_rows = sum((int(iv[-1]) - int(iv[-2])) // step + 1 for iv in intervals)
     spine = spine_from_bounds(
         spark,
         intervals,
         series_cols,
-        int(step_s),
+        step,
+        num_partitions=max(1, -(-n_rows // ROWS_PER_WRITE_TASK)),
         series_schema=series_schema,
         as_epoch=True,
     )
@@ -411,15 +347,6 @@ def extension_seeds(
     return seeds_from_intervals(
         spark, intervals, series_cols, step_s, series_schema=series_schema
     )
-
-
-def _day_epoch(d) -> int:
-    """UTC epoch seconds of a datetime.date — valid because the engine pins
-    spark.sql.session.timeZone to UTC (session.py), so partition values
-    from to_date(bucket_start) are UTC dates."""
-    import calendar
-
-    return calendar.timegm(d.timetuple())
 
 
 def _epoch_day(e: int):
@@ -467,141 +394,110 @@ class IncrementalRollup:
             out[t.name] = cur
         return out
 
+    def delta_bounds(self, delta_df: DataFrame) -> list[tuple]:
+        """Per-series (*series, t0, t1) extent of the delta facts in exact
+        epoch seconds, from one aggregate. Exact, not floored to a tier
+        lattice: the dense bounds sidecar it extends is also what
+        plans/refresh_job's tail-at-edge validation compares against
+        per-series max(ts)."""
+        tree = self.tree
+        return [
+            tuple(r)
+            for r in delta_df.groupBy(*tree.series_cols)
+            .agg(
+                F.unix_timestamp(F.min(tree.time_col)).cast("long"),
+                F.unix_timestamp(F.max(tree.time_col)).cast("long"),
+            )
+            .collect()
+        ]
+
     def refresh(
         self,
         spark: SparkSession,
         delta_df: DataFrame,
         manifest=None,
-        fused: bool = True,
+        bounds: list[tuple] | None = None,
     ) -> dict:
         """Refresh every tier from one delta of NEW facts. With
         ``dense=True`` the per-series bounds sidecar is consulted and
         extended, and boundary-growth seed buckets are folded in so each
         tier stays gap-filled dense.
 
-        ``fused`` (default) lands every tier's merged partitions in ONE
-        tier-tagged write action (same fixed-cost fusion as the batch
-        tree's coarse chain, checkpoint.run_resumable_observed_tiers): a
-        small daily refresh is otherwise dominated by per-tier job
-        scheduling/commit overhead, not by data. ``fused=False`` keeps the
-        one-dynamic-overwrite-per-tier path (useful for refreshing a
-        single tier in isolation)."""
+        ``bounds`` is the delta's :meth:`delta_bounds`, when the caller
+        already has it (plans/refresh_job gets it from its delta profile);
+        without it, the refresh computes it with one aggregate. Every
+        tier's touched partitions derive from it on the driver, so the
+        only other Spark job is the one tier-tagged write action that lands
+        every tier's merged partitions (see :meth:`_refresh_fused`)."""
         tree = self.tree
         t_all = time.perf_counter()
+        if bounds is None:
+            bounds = self.delta_bounds(delta_df)
         partials = self.delta_partials(delta_df)
-        # every coarser partial chains from the finest — cache it so the
-        # per-tier touched-partition collects and the merge job reuse one
-        # delta aggregation instead of re-scanning the delta facts
-        finest = partials[tree.tiers[0].name].cache()
-        partials[tree.tiers[0].name] = finest
 
-        seeds_by_tier: dict[str, DataFrame] = {}
         seed_intervals: dict[str, list[tuple]] = {}
         if self.dense:
-            # EXACT ts bounds require this second (column-pruned, min/max
-            # only) pass over the delta facts. Deriving bounds from the
-            # cached finest partial's bucket_start would be equivalent for
-            # the seed computation (every consumer there floors to a tier
-            # lattice that nests on the finest step) but NOT for
-            # plans/refresh_job's tail-at-edge validation, which compares
-            # the stored bounds edge against per-series max(ts) exactly —
-            # quantized bounds would refuse every legitimate tail.
-            delta_bounds = [
-                tuple(r)
-                for r in delta_df.groupBy(*tree.series_cols)
-                .agg(
-                    F.unix_timestamp(F.min(tree.time_col))
-                    .cast("long")
-                    .alias("__t0s"),
-                    F.unix_timestamp(F.max(tree.time_col))
-                    .cast("long")
-                    .alias("__t1s"),
-                )
-                .collect()
-            ]
             old_bounds = (
                 load_bounds(self.bounds_path)
                 if os.path.exists(self.bounds_path)
                 else []
             )
-            new_bounds = merge_bounds(old_bounds, delta_bounds)
+            new_bounds = merge_bounds(old_bounds, bounds)
             for tier in tree.tiers:
                 step = duration_seconds(tier.duration)
                 ivs = extension_intervals(old_bounds, new_bounds, step)
                 if ivs:
                     seed_intervals[tier.name] = ivs
-                    seeds_by_tier[tier.name] = seeds_from_intervals(
-                        spark, ivs, tree.series_cols, step, series_schema=delta_df
-                    )
 
         key_cols = [*tree.series_cols, "bucket_start"]
+        merge_keys = [
+            *key_cols,
+            *[c for c in self.partition_cols if c not in key_cols],
+        ]
         parts: dict[str, DataFrame] = {}
+        schemas: dict[str, T.StructType] = {}
+        touched: dict[str, list[tuple]] = {}
         for tier in tree.tiers:
+            step = duration_seconds(tier.duration)
             part = partials[tier.name]
-            if tier.name in seeds_by_tier:
+            # the stored tier holds what this aggregate writes: its schema
+            # is the read schema of the touched partitions (no inference)
+            schemas[tier.name] = self._with_layout(part).select(
+                *merge_keys, *ALGEBRAIC
+            ).schema
+            ivs = seed_intervals.get(tier.name, [])
+            if ivs:
                 # seed rows are (n_points=0, null) — merging them into a
                 # bucket that also has delta facts is a no-op fold; a
                 # bucket with only a seed lands dense-empty, as required
+                seeds = seeds_from_intervals(
+                    spark, ivs, tree.series_cols, step, series_schema=delta_df
+                )
                 part = part.select(*key_cols, *ALGEBRAIC).unionByName(
-                    seeds_by_tier[tier.name].select(*key_cols, *ALGEBRAIC)
+                    seeds.select(*key_cols, *ALGEBRAIC)
                 )
-            if "bucket_day" in self.partition_cols:
-                part = with_bucket_day(part)
-            parts[tier.name] = part
-
-        try:
-            if fused:
-                metrics = self._refresh_fused(
-                    spark, parts, key_cols, manifest, seed_intervals
-                )
-            else:
-                metrics = {
-                    tier.name: refresh_tier_path(
-                        spark,
-                        self.tier_path(tier),
-                        parts[tier.name],
-                        key_cols=key_cols,
-                        partition_cols=self.partition_cols,
-                        manifest=manifest,
-                        stage=f"refresh_{tier.name}",
-                    )
-                    for tier in tree.tiers
-                }
-        finally:
-            # a failed merge/move must not leak the cached finest partial
-            finest.unpersist()
+            parts[tier.name] = self._with_layout(part)
+            touched[tier.name] = sorted(
+                self._touched_partitions([*bounds, *ivs], step)
+            )
+        metrics = self._refresh_fused(
+            spark, parts, merge_keys, touched, schemas, manifest
+        )
         if self.dense:
             save_bounds(self.bounds_path, new_bounds, tree.series_cols)
         metrics["total_seconds"] = round(time.perf_counter() - t_all, 3)
         return metrics
 
-    def _derived_touched(
-        self, finest_touched: list[tuple], step_s: int
-    ) -> list[tuple] | None:
-        """Coarser tier's touched partition tuples, derived driver-side
-        from the finest tier's (no extra Spark job): without a day column
-        the sets are identical (floor preserves the series key); with one,
-        a tier whose period divides a day keeps each bucket inside its
-        finest bucket's day, and a whole-day-multiple tier floors the day
-        to its own lattice. Returns None for a period that neither divides
-        nor is a multiple of a day (caller collects that tier directly)."""
-        if "bucket_day" not in self.partition_cols:
-            return finest_touched
-        step = int(step_s)
-        if 86400 % step == 0:
-            return finest_touched
-        if step % 86400 == 0:
-            di = self.partition_cols.index("bucket_day")
-            out = set()
-            for t in finest_touched:
-                e = _day_epoch(t[di])
-                out.add((*t[:di], _epoch_day(e - e % step), *t[di + 1 :]))
-            return sorted(out)
-        return None
+    def _with_layout(self, df: DataFrame) -> DataFrame:
+        return with_bucket_day(df) if "bucket_day" in self.partition_cols else df
 
-    def _seed_touched(self, intervals: list[tuple], step_s: int) -> set[tuple]:
-        """Partition tuples the extension seeds land in — exact, from the
-        driver-known lattice intervals (no Spark job)."""
+    def _touched_partitions(self, intervals: list[tuple], step_s: int) -> set[tuple]:
+        """Partition tuples that a tier's buckets inside the given
+        (*series, t0, t1) epoch intervals land in — from driver-known
+        intervals, no Spark job. Exact for the series-only layout; with a
+        day column it is every day a bucket of [t0, t1] falls on, a
+        superset when the delta skips days (the extra partitions are read
+        and rewritten unchanged)."""
         step = int(step_s)
         out: set[tuple] = set()
         for iv in intervals:
@@ -610,10 +506,11 @@ class IncrementalRollup:
                 out.add(tuple(series[c] for c in self.partition_cols))
                 continue
             a, b = int(iv[-2]), int(iv[-1])
+            a, b = a - a % step, b - b % step
             if 86400 % step == 0:
                 days = range(a - a % 86400, b - b % 86400 + 1, 86400)
-            else:  # step % 86400 == 0 (guarded by the caller's fallback)
-                days = range(a, b + 1, step)
+            else:
+                days = sorted({e - e % 86400 for e in range(a, b + 1, step)})
             for e in days:
                 vals = {**series, "bucket_day": _epoch_day(e)}
                 out.add(tuple(vals[c] for c in self.partition_cols))
@@ -623,9 +520,10 @@ class IncrementalRollup:
         self,
         spark: SparkSession,
         parts: dict[str, DataFrame],
-        key_cols: list[str],
+        merge_keys: list[str],
+        touched: dict[str, list[tuple]],
+        schemas: dict[str, T.StructType],
         manifest=None,
-        seed_intervals: dict[str, list[tuple]] | None = None,
     ) -> dict:
         """One write action for the whole tree: each tier's merged rows are
         tier-tagged and Hive-partitioned into a temp dir, then each touched
@@ -642,69 +540,25 @@ class IncrementalRollup:
         from pyspark.sql import Observation
 
         t0 = time.perf_counter()
-        seed_intervals = seed_intervals or {}
-        merge_keys = [
-            *key_cols,
-            *[c for c in self.partition_cols if c not in key_cols],
-        ]
-        # ONE collect (which also materializes the shared finest-partial
-        # cache) learns the finest tier's touched partitions; every coarser
-        # tier's set derives on the driver — three sequential collects were
-        # most of a small refresh's fixed cost. A derived set can be a
-        # slight SUPERSET of a coarse tier's actual keys only via seed
-        # intervals already counted exactly, so reads stay pruned and the
-        # rewrite stays bounded by what the delta touched.
         tiers = self.tree.tiers
-        finest_touched = [
-            tuple(r)
-            for r in parts[tiers[0].name]
-            .select(*self.partition_cols)
-            .distinct()
-            .collect()
-        ]
-        touched: dict[str, list[tuple]] = {}
-        for tier in tiers:
-            step = duration_seconds(tier.duration)
-            d = self._derived_touched(finest_touched, step)
-            if d is None:
-                # exotic period (e.g. 90 minutes): collect its keys directly
-                d = [
-                    tuple(r)
-                    for r in parts[tier.name]
-                    .select(*self.partition_cols)
-                    .distinct()
-                    .collect()
-                ]
-                touched[tier.name] = sorted(set(d))
-            else:
-                touched[tier.name] = sorted(
-                    set(d) | self._seed_touched(seed_intervals.get(tier.name, []), step)
-                )
         tagged: DataFrame | None = None
         for tier in tiers:
-            part = parts[tier.name]
             tup = touched[tier.name]
             if not tup:
                 continue
             existing = read_touched_partitions(
-                spark, self.tier_path(tier), self.partition_cols, tup
+                spark, self.tier_path(tier), self.partition_cols, tup,
+                schema=schemas[tier.name],
             )
-            merged = merge_partials(existing, part, merge_keys).withColumn(
-                "__tier", F.lit(tier.name)
-            )
+            merged = merge_partials(
+                existing, parts[tier.name], merge_keys,
+                cluster_cols=self.partition_cols,
+            ).withColumn("__tier", F.lit(tier.name))
             tagged = merged if tagged is None else tagged.unionByName(merged)
         if tagged is None:
-            # same metrics shape as the non-empty path (incl. the fused
-            # flag) so consumers written against it don't KeyError on a
-            # no-op refresh
             return {
-                t.name: {
-                    "partitions_rewritten": 0,
-                    "rows_written": 0,
-                    "seconds": 0.0,
-                    "fused": True,
-                }
-                for t in self.tree.tiers
+                t.name: {"partitions_rewritten": 0, "rows_written": 0, "seconds": 0.0}
+                for t in tiers
             }
         tmp = os.path.join(self.root, "__refresh_tmp")
         shutil.rmtree(tmp, ignore_errors=True)
@@ -720,44 +574,29 @@ class IncrementalRollup:
                         F.lit(0)
                     )
                 ).alias(t.name)
-                for t in self.tree.tiers
+                for t in tiers
             ],
         )
-        # scoped static sizing for the one merge+write action: the shuffled
-        # data is bounded by the touched partitions (driver-known), so AQE's
+        # static sizing for the one merge+write action: the shuffled data
+        # is bounded by the touched partitions (driver-known), so AQE's
         # per-exchange materialize barriers are pure fixed cost here, and
         # the shuffle width should follow |touched|, not the session default
         # (measured warm at 2M-row/1%-delta: 3.2 s → 2.1 s)
-        conf_before = {
-            k: spark.conf.get(k)
-            for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-        }
-        try:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(
-                    max(
-                        1,
-                        min(
-                            spark.sparkContext.defaultParallelism,
-                            len(finest_touched),
-                        ),
-                    )
-                ),
-            )
+        width = min(spark.sparkContext.defaultParallelism, len(touched[tiers[0].name]))
+        with scoped_conf(
+            spark,
+            {
+                "spark.sql.adaptive.enabled": "false",
+                "spark.sql.shuffle.partitions": max(1, width),
+            },
+        ):
             tagged.write.partitionBy("__tier", *self.partition_cols).parquet(tmp)
-        finally:
-            for k, v in conf_before.items():
-                spark.conf.set(k, v)
-        tier_rows = {
-            t.name: int(obs.get[t.name] or 0) for t in self.tree.tiers
-        }
+        tier_rows = {t.name: int(obs.get[t.name] or 0) for t in tiers}
         depth = len(self.partition_cols)
-        for tier in self.tree.tiers:
+        for tier in tiers:
             src_root = os.path.join(tmp, f"__tier={tier.name}")
             # tmp contents drive the moves: a touched partition with no
-            # merged rows (derived-superset edge) simply has no dir here
+            # merged rows (superset edge) simply has no dir here
             if not touched[tier.name] or not os.path.isdir(src_root):
                 continue
             dest_root = self.tier_path(tier)
@@ -782,13 +621,12 @@ class IncrementalRollup:
         shutil.rmtree(tmp, ignore_errors=True)
         dt = round(time.perf_counter() - t0, 3)
         metrics: dict[str, dict] = {}
-        for tier in self.tree.tiers:
+        for tier in tiers:
             tup = touched[tier.name]
             if manifest is not None:
                 for t in tup:
-                    # rows = the TIER's written rows (the unfused path's
-                    # convention: per-partition marks carry tier totals);
-                    # seconds = the fused action's shared wall
+                    # rows = the TIER's written rows; seconds = the one
+                    # write action's shared wall
                     manifest.mark(
                         f"refresh_{tier.name}",
                         "/".join(str(v) for v in t),
@@ -799,9 +637,8 @@ class IncrementalRollup:
             metrics[tier.name] = {
                 "partitions_rewritten": len(tup),
                 "rows_written": tier_rows[tier.name],
-                # the whole tree is one write action: this is the fused
-                # job's wall, shared across tiers, not a per-tier cost
+                # the whole tree is one write action: this is its wall,
+                # shared across tiers, not a per-tier cost
                 "seconds": dt,
-                "fused": True,
             }
         return metrics

@@ -30,6 +30,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from preprocessor_spark.session import local_frame
 
 ALGEBRAIC = ("n_points", "sum_v", "sum_sq", "min_v", "max_v")
 
@@ -52,6 +55,21 @@ def algebraic_aggs(value_col):
         F.min(v).alias("min_v"),
         F.max(v).alias("max_v"),
     ]
+
+
+def stored_tier_schema(series_fields: list) -> T.StructType:
+    """Schema of a tier the rollup jobs store for a double-valued series:
+    the series fields, then bucket_start and the algebraic statistics.
+    Reads of the jobs' own tiers pin it: an unpinned parquet read runs a
+    Spark job to infer the schema from a footer."""
+    return T.StructType(
+        [
+            *series_fields,
+            T.StructField("bucket_start", T.TimestampType()),
+            T.StructField("n_points", T.LongType()),
+            *[T.StructField(c, T.DoubleType()) for c in ALGEBRAIC[1:]],
+        ]
+    )
 
 
 def algebraic_reaggs():
@@ -463,7 +481,7 @@ def spine_from_bounds(
             T.StructField("__t1s", T.LongType()),
         ]
     )
-    sdf = spark.createDataFrame([tuple(r) for r in bounds_rows], schema)
+    sdf = local_frame(spark, bounds_rows, schema)
     t0k = (F.col("__t0s") - F.col("__t0s") % step).alias("__t0k")
     t1k = (F.col("__t1s") - F.col("__t1s") % step).alias("__t1k")
     chunk = step * max_chunk

@@ -8,8 +8,10 @@ test harness but overridable for cluster runs.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # Defaults tuned for the local[32] sandbox; on a real cluster these are
 # overridden via spark-submit --conf. shuffle.partitions is intentionally
@@ -124,3 +126,45 @@ def get_spark(
             "mapreduce.fileoutputcommitter.algorithm.version", "2"
         )
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, object]):
+    """Set session confs for the body of a ``with`` block and restore the
+    previous values on every exit, including a raise: in-process callers
+    (tests, notebooks, a driver running several jobs) share the session,
+    and a job's tuning must not leak into the next one. A conf that was
+    unset before is unset again."""
+    before = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, str(v))
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """A DataFrame of driver-side rows, shipped to the JVM as Arrow
+    batches. ``createDataFrame`` of a list of tuples goes through a Python
+    RDD instead, so the first action over it starts a Python worker (about
+    a second the first time, a few hundred ms after) — a fixed cost paid by
+    every spine and offset frame a job builds on the driver."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    rows = [tuple(r) for r in rows]
+    arrays = []
+    for i, f in enumerate(arrow):
+        vals = [r[i] for r in rows]
+        if pa.types.is_timestamp(f.type):
+            # collected timestamps are naive local times (pyspark's Row
+            # convention); Arrow would read naive values as UTC
+            vals = [v if v is None or v.tzinfo else v.astimezone() for v in vals]
+        arrays.append(pa.array(vals, type=f.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)

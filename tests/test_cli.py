@@ -102,6 +102,37 @@ def test_legacy_plugin_mode_unbiaser(capsys, csv_input, tmp_path, spark):
     assert abs(vals[-1] - 0.01) < 1e-9
 
 
+def test_legacy_normalizer_none_writes_passthrough_params(
+    capsys, csv_input, tmp_path, spark
+):
+    """--normalization-method none leaves the data untouched AND still
+    writes the per-plugin params artifact: a passthrough record (method
+    'none', no stats) that chained legacy workflows can load."""
+    from preprocessor_spark.params import load_params
+
+    outdir = str(tmp_path / "none")
+    rc = cli.main(
+        [
+            csv_input,
+            "--plugin",
+            "normalizer",
+            "--normalization-method",
+            "none",
+            "--output-dir",
+            outdir,
+            "--output-format",
+            "parquet",
+        ]
+    )
+    assert rc == 0
+    assert json.loads(capsys.readouterr().out)["plugin"] == "normalizer"
+    params = load_params(os.path.join(outdir, "normalizer_params.json"))
+    assert params.method == "none"
+    assert params.params["per_column"] == {}
+    out = spark.read.parquet(os.path.join(outdir, "output")).toPandas()
+    assert abs(out.sort_values("ts")["close"].iloc[-1] - 5.99) < 1e-9
+
+
 def test_save_config_writes_merged(tmp_path, csv_input):
     cfg_path = str(tmp_path / "cfg.json")
     cli.main(

@@ -15,7 +15,7 @@ from preprocessor_spark.rollup.incremental import (
     extension_seeds,
     merge_bounds,
     merge_partials,
-    refresh_tier_path,
+    read_touched_partitions,
     save_bounds,
     with_bucket_day,
 )
@@ -228,27 +228,6 @@ def test_dense_refresh_stays_dense_and_matches(spark, tree, corpus, tmp_path):
         _assert_tier_equal(got, exp)
 
 
-def test_unfused_refresh_matches_fused(spark, tree, corpus, tmp_path):
-    """fused=False (per-tier dynamic overwrite) must land the same tiers as
-    the fused single-write path."""
-    base = corpus.filter(F.col("ts") < CUT)
-    delta = corpus.filter(F.col("ts") >= CUT)
-    roots = {}
-    for mode in ("fused", "plain"):
-        root = str(tmp_path / mode)
-        _write_base_tiers(spark, tree, base, root)
-        IncrementalRollup(tree, root).refresh(spark, delta, fused=mode == "fused")
-        roots[mode] = root
-    for tier in TIERS:
-        got = _tiers_pdf(
-            spark.read.parquet(os.path.join(roots["plain"], f"tier_{tier.name}"))
-        )
-        exp = _tiers_pdf(
-            spark.read.parquet(os.path.join(roots["fused"], f"tier_{tier.name}"))
-        )
-        _assert_tier_equal(got, exp)
-
-
 def test_refresh_empty_delta_is_noop(spark, tree, corpus, tmp_path):
     root = str(tmp_path / "tree")
     base = corpus.filter(F.col("ts") < CUT)
@@ -353,27 +332,45 @@ def test_merge_partials_is_reaggregation(spark, tree, corpus):
 
 def test_fused_refresh_reports_per_tier_rows(spark, tree, corpus, tmp_path):
     """Each tier's rows_written must be THAT tier's merged row count (the
-    unfused path's convention) — not the whole fused tree's total stamped
-    into every tier."""
+    rows of its touched partitions after the refresh) — not the whole
+    one-write tree's total stamped into every tier."""
     root = str(tmp_path / "tree")
     base = corpus.filter(F.col("ts") < CUT)
     delta = corpus.filter(F.col("ts") >= CUT)
     _write_base_tiers(spark, tree, base, root)
-    m = IncrementalRollup(tree, root).refresh(spark, delta, fused=True)
-    plain_root = str(tmp_path / "plain")
-    _write_base_tiers(spark, tree, base, plain_root)
-    mp = IncrementalRollup(tree, plain_root).refresh(spark, delta, fused=False)
+    touched = [r[0] for r in delta.select("source").distinct().collect()]
+    m = IncrementalRollup(tree, root).refresh(spark, delta)
     for tier in TIERS:
-        assert m[tier.name]["rows_written"] == mp[tier.name]["rows_written"], (
-            tier.name,
-            m[tier.name],
-            mp[tier.name],
+        want = (
+            spark.read.parquet(os.path.join(root, f"tier_{tier.name}"))
+            .filter(F.col("source").isin(touched))
+            .count()
         )
-        assert m[tier.name]["fused"] is True
+        assert m[tier.name]["rows_written"] == want, (tier.name, m[tier.name])
+        assert m[tier.name]["partitions_rewritten"] == len(touched)
     # 5-minute buckets strictly outnumber hourly ones on this corpus
     assert m["5m"]["rows_written"] > m["1h"]["rows_written"] > 0
-    total = sum(m[t.name]["rows_written"] for t in TIERS)
-    assert m["5m"]["rows_written"] < total
+
+
+def test_refresh_with_precomputed_bounds_matches(spark, tree, corpus, tmp_path):
+    """A caller that passes the delta's bounds (refresh_job's profile) gets
+    the same tiers as one that lets the refresh compute them."""
+    base = corpus.filter(F.col("ts") < CUT)
+    delta = corpus.filter(F.col("ts") >= CUT)
+    roots = {}
+    for mode in ("computed", "given"):
+        roots[mode] = root = str(tmp_path / mode)
+        _write_base_tiers(spark, tree, base, root)
+        inc = IncrementalRollup(tree, root)
+        bounds = inc.delta_bounds(delta) if mode == "given" else None
+        inc.refresh(spark, delta, bounds=bounds)
+    for tier in TIERS:
+        _assert_tier_equal(
+            *[
+                _tiers_pdf(spark.read.parquet(os.path.join(roots[m], f"tier_{tier.name}")))
+                for m in ("given", "computed")
+            ]
+        )
 
 
 def test_partition_predicate_exact_past_inline_cap(spark):
@@ -415,43 +412,22 @@ def test_balanced_or_handles_thousands_of_terms(spark):
     assert spark.range(1).filter(pred_false).count() == 0
 
 
-def test_refresh_tier_path_uri_store_reads_existing_partitions(
+def test_read_touched_partitions_uri_store_reads_existing_partitions(
     spark, tree, corpus, tmp_path
 ):
     """On a URI store os.path.isdir is meaningless, so the explicit-path
     discovery must fall back to the pruned full read: with a file:// tier
-    path the pre-fix code saw every partition as 'new' and replaced
-    accumulated statistics with delta-only rows."""
-    from preprocessor_spark.rollup.incremental import refresh_tier_path
-    from preprocessor_spark.rollup.tiers import ALGEBRAIC
-
+    path an isdir probe sees every partition as 'new', and the merge would
+    replace accumulated statistics with delta-only rows."""
     tier = tree.tiers[0]
-    cut = "2020-01-01 00:30:00"
-    base = corpus.filter(F.col("ts") < cut)
-    delta = corpus.filter(F.col("ts") >= cut)
     local = str(tmp_path / "tier_5m")
-    tree.base_aggregate(base, tier).write.partitionBy("source").parquet(local)
-    uri = "file://" + local
-    refresh_tier_path(
-        spark,
-        uri,
-        tree.base_aggregate(delta, tier),
-        key_cols=["source", "bucket_start"],
-        partition_cols=["source"],
+    stored = tree.base_aggregate(corpus, tier)
+    stored.write.partitionBy("source").parquet(local)
+    touched = [("s0",), ("s3",), ("s_new",)]
+    got = read_touched_partitions(
+        spark, "file://" + local, ["source"], touched,
+        schema=stored.select("source", "bucket_start", *ALGEBRAIC).schema,
     )
-    got = (
-        spark.read.parquet(local)
-        .select("source", "bucket_start", *ALGEBRAIC)
-        .toPandas()
-        .sort_values(["source", "bucket_start"])
-        .reset_index(drop=True)
-    )
-    exp = (
-        tree.base_aggregate(corpus, tier)
-        .select("source", "bucket_start", *ALGEBRAIC)
-        .toPandas()
-        .sort_values(["source", "bucket_start"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(exp)
-    assert (got["n_points"].values == exp["n_points"].values).all()
+    want = stored.filter(F.col("source").isin("s0", "s3"))
+    assert got.count() == want.count() > 0
+    _assert_tier_equal(_tiers_pdf(got), _tiers_pdf(want))

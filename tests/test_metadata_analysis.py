@@ -208,3 +208,23 @@ def test_validation_and_stats_on_empty_or_all_null_input(spark):
     out = describe_stats(strings_only)
     assert out.count() == 0
     assert out.columns == ["column", "stat", "value"]
+
+
+def test_iqr_outliers_without_quantiles_keeps_per_column_schema(spark):
+    """Columns with no quantiles (empty table, all-null column) report
+    outliers_<col> = 0 in the same per-column schema as the normal path,
+    next to the columns that do have outliers."""
+    from preprocessor_spark.operators.metadata import iqr_outlier_counts
+
+    empty = spark.createDataFrame([], "v double, w double")
+    out = iqr_outlier_counts(empty)
+    assert out.columns == ["outliers_v", "outliers_w"]
+    assert out.collect()[0].asDict() == {"outliers_v": 0, "outliers_w": 0}
+    mixed = spark.range(20).select(
+        F.when(F.col("id") == 19, F.lit(1000.0))
+        .otherwise(F.col("id").cast("double"))
+        .alias("v"),
+        F.lit(None).cast("double").alias("w"),
+    )
+    row = iqr_outlier_counts(mixed, ["v", "w"]).collect()[0]
+    assert row.asDict() == {"outliers_v": 1, "outliers_w": 0}

@@ -187,3 +187,116 @@ def test_tail_off_series_edge_is_refused(spark, setup, tmp_path):
     ).write.parquet(delta3)
     with pytest.raises(ValueError, match="series edge"):
         refresh_job.main(["--output", broken, "--delta-input", delta3])
+
+
+# A refresh of the setup's output costs exactly this many Spark jobs: the
+# delta's schema inference, the delta profile, the prepared append, the
+# carry-tail write, the one tier merge write and the block re-encode.
+REFRESH_SPARK_JOBS = 6
+
+
+def _block_files(root):
+    """{path relative to the blocks dir: (bytes, mtime)} of every file."""
+    out = {}
+    for dp, _, fs in os.walk(root):
+        for f in fs:
+            p = os.path.join(dp, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = (fh.read(), os.path.getmtime(p))
+    return out
+
+
+def _assert_blocks_decode_to_tier(spark, tree):
+    from preprocessor_spark.rollup.compression import decode_tier_blocks
+
+    blocks = spark.read.parquet(os.path.join(tree, "blocks_5m"))
+    decoded = (
+        decode_tier_blocks(blocks, ["source"])
+        .toPandas()[TIER_COLS]
+        .sort_values(["source", "bucket_start"])
+        .reset_index(drop=True)
+    )
+    tier = _tier_pdf(spark, tree, "5m")
+    tier = tier[tier["n_points"] > 0].reset_index(drop=True)
+    assert len(decoded) == len(tier)
+    for c in TIER_COLS:
+        assert (decoded[c].to_numpy() == tier[c].to_numpy()).all(), c
+
+
+def _shifted_delta(spark, src, dest, interval):
+    spark.read.parquet(src).withColumn(
+        "ts", F.col("ts") + F.expr(f"INTERVAL {interval}")
+    ).write.parquet(dest)
+    return dest
+
+
+@pytest.fixture(scope="module")
+def far_refresh(spark, setup, tmp_path_factory):
+    """A copy of the setup's output refreshed by a delta 20 days past the
+    series edge: its rows land in the next 14.2-day block of every source,
+    so each (source, block) dir the setup wrote is untouched. The refresh
+    runs under its own job group so its Spark jobs can be counted."""
+    paths, out, _, _ = setup
+    work = tmp_path_factory.mktemp("far_refresh")
+    tree = str(work / "tree")
+    shutil.copytree(out, tree)
+    delta = _shifted_delta(spark, paths["delta2"], str(work / "delta"), "20 DAYS")
+    blocks = os.path.join(tree, "blocks_5m")
+    before = _block_files(blocks)
+    sc = spark.sparkContext
+    sc.setJobGroup("far_refresh", "refresh_job.main")
+    try:
+        refresh_job.main(["--output", tree, "--delta-input", delta])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("far_refresh")
+    return tree, before, _block_files(blocks), jobs
+
+
+def test_refreshed_blocks_decode_to_the_tier_and_spare_untouched_blocks(
+    spark, far_refresh
+):
+    """Decoding every block gives back the non-empty refreshed 5m rows bit
+    for bit, and the files of every (source, block) dir the delta did not
+    land in are unchanged (perfbench's refresh check reads only tiers)."""
+    tree, before, after, _ = far_refresh
+    _assert_blocks_decode_to_tier(spark, tree)
+    old_dirs = {os.path.dirname(p) for p in before}
+    new_dirs = {os.path.dirname(p) for p in after} - old_dirs
+    assert old_dirs and all("block=" in d for d in old_dirs)
+    assert {d.split(os.sep)[0] for d in new_dirs} == {
+        d.split(os.sep)[0] for d in old_dirs
+    }
+    for path, content in before.items():
+        assert after.get(path) == content, f"untouched block file rewritten: {path}"
+
+
+def test_refresh_spark_job_count_is_pinned(far_refresh):
+    """A fixed-cost regression (an extra collect, an unpinned read, AQE
+    re-planning) fails here instead of in a benchmark pass."""
+    assert len(far_refresh[3]) == REFRESH_SPARK_JOBS
+
+
+def test_refresh_moves_source_only_blocks_into_the_block_layout(spark, setup, tmp_path):
+    """Blocks written before the (source, block) layout (files directly
+    under source=<s>/) are all re-encoded into it by the next refresh: the
+    two layouts side by side in one directory would not read back."""
+    import glob
+
+    from preprocessor_spark.rollup.compression import encode_tier_blocks
+
+    paths, out, _, _ = setup
+    tree = str(tmp_path / "tree")
+    shutil.copytree(out, tree)
+    blocks = os.path.join(tree, "blocks_5m")
+    shutil.rmtree(blocks)
+    tier0 = spark.read.parquet(os.path.join(tree, "tier_5m"))
+    encode_tier_blocks(
+        tier0.filter(F.col("n_points") > 0), ["source"], 4096, 300
+    ).write.partitionBy("source").parquet(blocks)
+    delta = _shifted_delta(spark, paths["delta2"], str(tmp_path / "delta"), "1 DAY")
+    refresh_job.main(["--output", tree, "--delta-input", delta])
+    assert not glob.glob(os.path.join(blocks, "source=*", "*.parquet"))
+    assert glob.glob(os.path.join(blocks, "source=*", "block=*", "*.parquet"))
+    _assert_blocks_decode_to_tier(spark, tree)
