@@ -1,23 +1,35 @@
-"""Deterministic distributed row positions.
+"""Deterministic distributed row positions, and the time profile they
+start from.
 
-``grouped_positions`` assigns exact, dense, 0-based positions per group
-under ``ORDER BY order_cols`` without any single-partition window:
+:func:`time_profile` is the one fact-finding pass behind every
+value-bucketed operator here: two small aggregates over the leading order
+key give, per series, the row count and the min/max of the key's encoding,
+and per (series, value bucket) the row count. Buckets are cut from the
+key's VALUE (never from physical partitioning — range-partitioner sampling
+is not guaranteed stable across plan executions), so its consumers are pure
+functions of the data ⇒ identical results at any parallelism (the engine's
+determinism invariant):
 
-  1. derive a deterministic range bucket from the leading order column's
-     VALUE (never from physical partitioning — range-partitioner sampling
-     is not guaranteed stable across plan executions);
-  2. one small aggregate → per-(group, bucket) counts → driver-side offsets
-     (|groups| × |buckets| rows — tiny);
-  3. ``row_number`` windowed by (group, bucket) + broadcast offset.
+  * ``grouped_positions`` — exact, dense, 0-based positions per group under
+    ``ORDER BY order_cols`` without any single-partition window: running
+    offsets per (group, bucket) on the driver, then ``row_number`` windowed
+    by (group, bucket) + the broadcast offset;
+  * ``chunked_assignment`` — contiguous buckets packed into ~chunk_rows-row
+    chunks for the sequential-window operators (chunked MA unbias W1, the
+    ACF lag screen W14);
+  * ``TemporalSplitter.fit_time_boundaries`` — the exact-count splitter's
+    quantile lookup (W6).
 
-Both passes are pure functions of the data ⇒ identical results at any
-parallelism (the engine's determinism invariant). This machinery backs the
-exact-count splitter (W6) and the chunked window unbiaser (W1 at scale).
+A job that needs several of these (``plans/rollup_job.py``) builds one
+profile and passes it to each; called without one, a consumer builds its
+own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -54,6 +66,87 @@ def _encode_lead(df: DataFrame, lead: str):
     return F.col(lead).cast("double")
 
 
+@dataclass(frozen=True)
+class TimeProfile:
+    """What :func:`time_profile` learned about one table.
+
+    ``bounds``: one row per series, ``(*series, rows, lo, hi)``, where lo
+    and hi are the min and max of the order key's encoding (null when the
+    series has no non-null key). ``counts``: one row per non-empty
+    (series, bucket), ``(*series, bucket, rows)``. Both are sorted by series
+    (nulls first), ``counts`` then by bucket. ``bucket`` is the integer
+    bucket-id column over any frame with the profiled order column: -1 for a
+    null key (ORDER BY ASC is NULLS FIRST), else 0 … n_buckets−1 in value
+    order, equal keys always in one bucket."""
+
+    series_cols: list[str]
+    bounds: list[tuple]
+    counts: list[tuple]
+    bucket: Column
+    n_buckets: int
+
+    @property
+    def rows(self) -> int:
+        return sum(b[-3] for b in self.bounds)
+
+    def totals(self) -> dict[tuple, int]:
+        """Exact row count per series key tuple (``()`` for no series)."""
+        return {tuple(b[:-3]): b[-3] for b in self.bounds}
+
+
+def _collect_sorted(df: DataFrame, n_keys: int) -> list[tuple]:
+    """Collect a small aggregate as Arrow batches (no per-row ``Row``
+    objects) and sort it on the driver by its first ``n_keys`` columns,
+    nulls first — an ``orderBy`` in the query would cost a range-partitioner
+    sampling job of its own."""
+    table = df.toArrow()
+    rows = list(zip(*(c.to_pylist() for c in table.columns)))
+    return sorted(rows, key=lambda r: [(v is not None, v) for v in r[:n_keys]])
+
+
+def time_profile(
+    df: DataFrame,
+    order_col: str,
+    series_cols: list[str] | None = None,
+    n_buckets: int = 4096,
+) -> TimeProfile:
+    """Profile ``df`` along ``order_col`` (any bucketable dtype, see
+    :func:`is_bucketable_dtype`) per ``series_cols``: two small aggregates,
+    the per-series one first because the bucket cuts need the global key
+    range. Each collects |series| resp. |series| × |buckets| rows."""
+    series_cols = list(series_cols or [])
+    enc = _encode_lead(df, order_col)
+    bounds = _collect_sorted(
+        df.groupBy(*series_cols).agg(
+            F.count(F.lit(1)).alias("__n"),
+            F.min(enc).alias("__lo"),
+            F.max(enc).alias("__hi"),
+        ),
+        len(series_cols),
+    )
+    los = [b[-2] for b in bounds if b[-2] is not None]
+    his = [b[-1] for b in bounds if b[-1] is not None]
+    # no non-null keys: empty table, or every key null — a degenerate [0,1)
+    # range sends ALL rows down the null branch of the bucket expression
+    lo, hi = (min(los), max(his)) if los else (0.0, 1.0)
+    span = max(float(hi) - float(lo), 1.0)
+    # null keys bucket BEFORE every value bucket (-1): ORDER BY ... ASC is
+    # NULLS FIRST in Spark, and every consumer's window orders by the same
+    # key (F.least would otherwise skip the null operand and send null keys
+    # to the LAST bucket — the opposite end)
+    bucket = F.when(enc.isNull(), F.lit(-1)).otherwise(
+        F.least(
+            F.floor((enc - F.lit(float(lo))) / F.lit(span / n_buckets)),
+            F.lit(n_buckets - 1),
+        )
+    ).cast("int")
+    counts = _collect_sorted(
+        df.groupBy(*series_cols, bucket.alias("__bkt")).count(),
+        len(series_cols) + 1,
+    )
+    return TimeProfile(series_cols, bounds, counts, bucket, n_buckets)
+
+
 def grouped_positions(
     df: DataFrame,
     order_cols: list[str],
@@ -76,9 +169,9 @@ def grouped_positions_and_totals(
 ) -> tuple[DataFrame, dict[tuple, int]]:
     """Like :func:`grouped_positions` but also returns the exact per-group
     row totals (key = tuple of group values; global grouping → key ``()``).
-    The totals fall out of the bucket-count aggregate this machinery already
-    runs — callers that need counts (the exact-count splitter) get them
-    WITHOUT a second full pass over the positioned plan."""
+    The totals fall out of the time profile this machinery already runs —
+    callers that need counts (the exact-count splitter) get them WITHOUT a
+    second full pass over the positioned plan."""
     group_cols = group_cols or []
     lead = order_cols[0]
     if not is_bucketable_dtype(dict(df.dtypes)[lead]):
@@ -96,52 +189,28 @@ def grouped_positions_and_totals(
             for r in df.groupBy(*group_cols).count().collect()
         }
         return positioned, totals
-    enc = _encode_lead(df, lead)
-    lo, hi = df.agg(F.min(enc), F.max(enc)).collect()[0]
-    if lo is None:
-        # no non-null keys: empty table (harmless), or every key null —
-        # fall through with a degenerate [0,1) range so ALL rows take the
-        # null branch below and still receive DENSE, DISTINCT positions
-        # (an early "every position = 0" return made a positional filter
-        # like rows=[0] silently drop the whole table)
-        lo, hi = 0.0, 1.0
     n_buckets = max(
         df.sparkSession.sparkContext.defaultParallelism * buckets_per_core, 8
     )
-    span = max(float(hi) - float(lo), 1.0)
-    # null keys bucket BEFORE every value bucket (-1): ORDER BY ... ASC is
-    # NULLS FIRST in Spark, and these positions must match that total order
-    # (F.least would otherwise skip the null operand and send null keys to
-    # the LAST bucket — the opposite end)
-    bucket = F.when(enc.isNull(), F.lit(-1)).otherwise(
-        F.least(
-            F.floor((enc - F.lit(float(lo))) / F.lit(span / n_buckets)),
-            F.lit(n_buckets - 1),
-        )
-    ).cast("int")
-    with_b = df.withColumn("__bkt", bucket)
-    counts = (
-        with_b.groupBy(*group_cols, "__bkt")
-        .count()
-        .orderBy(*group_cols, "__bkt")
-        .collect()
-    )
+    prof = time_profile(df, lead, group_cols, n_buckets)
+    bucket = prof.bucket
     # running offsets per group, in bucket order — shipped back as a tiny
     # broadcast-joined DataFrame (a giant literal create_map would be
     # re-evaluated per row and its size grows with parallelism)
     acc: dict[tuple, int] = {}
     rows = []
-    for r in counts:
-        g = tuple(r[c] for c in group_cols)
-        rows.append((*g, r["__bkt"], acc.get(g, 0)))
-        acc[g] = acc.get(g, 0) + r["count"]
-    totals = dict(acc) if acc else {(): 0}
+    for *g, bkt, cnt in prof.counts:
+        g = tuple(g)
+        rows.append((*g, bkt, acc.get(g, 0)))
+        acc[g] = acc.get(g, 0) + cnt
+    totals = prof.totals() or {(): 0}
     spark = df.sparkSession
     off_schema = (
         df.select(*group_cols, bucket.alias("__bkt"))
         .schema.add("__off", "long")
     )
     offsets_df = local_frame(spark, rows, off_schema)
+    with_b = df.withColumn("__bkt", bucket)
     w = Window.partitionBy(*group_cols, "__bkt").orderBy(*order_cols)
     # null-safe equality on the group columns: a null group is a legitimate
     # stratum — a name-based equi-join would silently drop its rows
@@ -165,6 +234,7 @@ def chunked_assignment(
     series_cols: list[str] | None = None,
     chunk_rows: int | None = 1_000_000,
     carry_rows: int = 0,
+    profile: TimeProfile | None = None,
 ) -> DataFrame:
     """Assign each row of a (series, time)-ordered table to a ~chunk_rows-row
     chunk (``chunk_rows=None`` auto-sizes from the collected bucket counts:
@@ -176,14 +246,17 @@ def chunked_assignment(
     series × chunks instead of being capped at |series|, while carried tails
     give every chunk head its true trailing context.
 
-    ONE light aggregate (per-(series, value-bucket) counts — |series| ×
-    |buckets| rows, collected driver-side) packs contiguous value-range
-    buckets of the ``order_col`` ENCODING into ≥chunk_rows chunks; rows get
-    their chunk id via a broadcast join, so no full-width positions shuffle
-    is spent deriving chunk ids. Bucket boundaries are pure value cuts on the
-    order key, so cross-chunk order matches ``ORDER BY order_col`` exactly,
+    The per-(series, value-bucket) counts of a :func:`time_profile`
+    (``profile``, or one built here) pack contiguous value-range buckets of
+    the ``order_col`` ENCODING into ≥chunk_rows chunks; rows get their chunk
+    id via a broadcast join, so no full-width positions shuffle is spent
+    deriving chunk ids. Bucket boundaries are pure value cuts on the order
+    key, so cross-chunk order matches ``ORDER BY order_col`` exactly,
     including at gaps; equal key values always share a bucket (floor of the
-    same encoding), so ties never straddle chunks.
+    same encoding), so ties never straddle chunks. A passed profile must
+    describe ``df``'s rows along ``order_col`` per ``series_cols``; its
+    buckets are coarsened to ~16 per core by integer division of the bucket
+    id, so coarse buckets nest exactly in the profile's.
 
     Returns ``df`` plus two columns: ``__chunk`` (long) and ``__aug`` (bool —
     True on carried tail duplicates, which consumers must drop AFTER their
@@ -191,30 +264,30 @@ def chunked_assignment(
     """
     series_cols = list(series_cols or [])
     spark = df.sparkSession
-    enc = _encode_lead(df, order_col)
-    lo, hi = df.agg(F.min(enc), F.max(enc)).collect()[0]
-    if lo is None:
-        # empty table or all-null keys: degenerate range; the null branch
-        # of the bucket expression covers every row (see grouped_positions)
-        lo, hi = 0.0, 1.0
     cores = spark.sparkContext.defaultParallelism
     n_buckets = max(cores * 16, 64)
-    span = max(float(hi) - float(lo), 1.0)
-    # null keys bucket FIRST (-1), matching ORDER BY ASC NULLS FIRST — the
-    # consumers' chunk windows order by the same key, so carried tails and
-    # lag pairs stay exact when the key column contains nulls
-    bucket = F.when(enc.isNull(), F.lit(-1)).otherwise(
-        F.least(
-            F.floor((enc - F.lit(float(lo))) / F.lit(span / n_buckets)),
-            F.lit(n_buckets - 1),
+    if profile is None:
+        profile = time_profile(df, order_col, series_cols, n_buckets)
+    elif profile.series_cols != series_cols:
+        raise ValueError(
+            f"profile is per {profile.series_cols}, chunks per {series_cols}"
         )
-    ).cast("int")
-    counts = df.groupBy(*series_cols, bucket.alias("__bkt")).count().collect()
+    # the assignment frame has |series| × |buckets| rows: a fine profile is
+    # coarsened by integer division of its OWN bucket id (a float bucket
+    # recomputed at another width need not nest in the profile's); floor
+    # keeps the null bucket at -1
+    factor = max(1, profile.n_buckets // n_buckets)
+    bucket = profile.bucket
+    if factor > 1:
+        bucket = F.floor(bucket / F.lit(factor)).cast("int")
     by_series: dict[tuple, list] = {}
-    for r in counts:
-        by_series.setdefault(tuple(r[c] for c in series_cols), []).append(
-            (r["__bkt"], r["count"])
-        )
+    for *key, bkt, cnt in profile.counts:
+        bl = by_series.setdefault(tuple(key), [])
+        bkt //= factor
+        if bl and bl[-1][0] == bkt:
+            bl[-1] = (bkt, bl[-1][1] + cnt)
+        else:
+            bl.append((bkt, cnt))
     if chunk_rows is None:
         # auto: size chunks so the LARGEST series yields ~4 window tasks
         # per core (measured: a 5M-row single-series lag pass is ~2x faster
@@ -232,7 +305,6 @@ def chunked_assignment(
     chunk_rows = max(chunk_rows, carry_rows, 1)
     assign_rows = []  # (*series, bkt, chunk, feeds-next-chunk tail flag)
     for key, bl in by_series.items():
-        bl.sort()
         chunks: list[list] = []
         cur_ch: list = []
         acc = 0

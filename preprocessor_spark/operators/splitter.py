@@ -26,11 +26,15 @@ time-boundary splits this module also emits (``boundaries`` →
 from __future__ import annotations
 
 import bisect
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from preprocessor_spark.params import StageParams
+
+if TYPE_CHECKING:
+    from preprocessor_spark.operators.positions import TimeProfile
 
 SPLIT_KEYS = ["d1", "d2", "d3", "d4", "d5", "d6"]
 DEFAULT_RATIOS = {"d1": 0.5, "d2": 0.1, "d3": 0.1, "d4": 0.1, "d5": 0.1, "d6": 0.1}
@@ -147,7 +151,10 @@ class TemporalSplitter:
         return positioned.withColumn("split_id", expr).drop("__pos")
 
     def fit_time_boundaries(
-        self, df: DataFrame, n_buckets: int = 4096
+        self,
+        df: DataFrame,
+        n_buckets: int = 4096,
+        profile: TimeProfile | None = None,
     ) -> StageParams:
         """Exact per-split time boundaries WITHOUT positioning every row.
 
@@ -155,30 +162,34 @@ class TemporalSplitter:
         table through a row_number window just to read 12 timestamps back.
         This fit instead treats the problem as an exact quantile lookup:
 
-          1. min/max of the time key (one columnar pass);
-          2. value-range bucket counts (one pass, tiny collect) → the
-             global position offsets of every bucket + the exact total →
-             the reference's remainder rule gives the split edge positions;
-          3. the row AT each edge position lives in a known bucket at a
+          1. a :func:`~preprocessor_spark.operators.positions.time_profile`
+             of the time key (``profile``, per any series split — its
+             counts are summed over series — or one built here with
+             ``n_buckets`` buckets): value-range bucket counts → the global
+             position offsets of every bucket + the exact total → the
+             reference's remainder rule gives the split edge positions;
+          2. the row AT each edge position lives in a known bucket at a
              known within-bucket rank — ONE more pass sorts only the few
              edge buckets (≤ 2 per split, ~total/n_buckets rows each) and
              reads the edge timestamps.
 
-        Three passes over the time column, no full-width shuffle — the
-        10^12-scale fit path. Labels then come from
-        :meth:`split_by_time_boundaries` (pure predicates). Equivalent to
-        the positional path whenever edge timestamps are unique (the same
-        precondition split_by_time_boundaries already carries)."""
-        from preprocessor_spark.operators.positions import _encode_lead
+        Two small aggregates and one edge pass over the time column (the
+        aggregates are free when a job already holds a profile), no
+        full-width shuffle — the 10^12-scale fit path. Labels then come
+        from :meth:`split_by_time_boundaries` (pure predicates). Equivalent
+        to the positional path whenever edge timestamps are unique (the
+        same precondition split_by_time_boundaries already carries)."""
+        from preprocessor_spark.operators.positions import time_profile
 
-        enc = _encode_lead(df, self.time_col)
-        lo, hi = df.agg(F.min(enc), F.max(enc)).collect()[0]
-        if lo is None:
+        if profile is None:
+            profile = time_profile(df, self.time_col, [], n_buckets)
+        total = profile.rows
+        if all(b[-2] is None for b in profile.bounds):
             # all-null encodings: only legitimate for an EMPTY table — a
             # non-castable time column (e.g. string timestamps) would
             # otherwise silently fit empty boundaries and label every row
             # split_id=NULL downstream
-            if not df.isEmpty():
+            if total:
                 dtype = dict(df.dtypes)[self.time_col]
                 raise ValueError(
                     f"fit_time_boundaries: time column '{self.time_col}' "
@@ -189,33 +200,25 @@ class TemporalSplitter:
                 stage=self.name, method="temporal",
                 params={"ratios": self.ratios, "boundaries": {}},
             )
-        span = max(float(hi) - float(lo), 1.0)
-        # null keys are detectable here for free (F.least would silently
-        # bucket them LAST while the within-bucket window ranks them FIRST
-        # — corrupted edge positions) but they cannot be expressed in the
-        # time-range predicates this fit exists to produce: fail fast
-        bucket = F.when(enc.isNull(), F.lit(-1)).otherwise(
-            F.least(
-                F.floor((enc - F.lit(float(lo))) / F.lit(span / n_buckets)),
-                F.lit(n_buckets - 1),
-            )
-        ).cast("int")
-        counts = (
-            df.groupBy(bucket.alias("__bkt")).count().orderBy("__bkt").collect()
-        )
-        if counts and counts[0]["__bkt"] == -1:
+        bucket = profile.bucket
+        counts: dict[int, int] = {}
+        for *_series, bkt, n in profile.counts:
+            counts[bkt] = counts.get(bkt, 0) + n
+        # null keys are detectable here for free but they cannot be
+        # expressed in the time-range predicates this fit exists to
+        # produce: fail fast
+        if -1 in counts:
             raise ValueError(
                 f"time column '{self.time_col}' contains "
-                f"{counts[0]['count']} null values: time-boundary splits "
+                f"{counts[-1]} null values: time-boundary splits "
                 "are range predicates and cannot route null timestamps — "
                 "drop/fill them first, or use the positional transform() "
                 "path (which places nulls in the first split)"
             )
         off, acc = {}, 0
-        for r in counts:
-            off[r["__bkt"]] = acc
-            acc += r["count"]
-        total = acc
+        for bkt in sorted(counts):
+            off[bkt] = acc
+            acc += counts[bkt]
         bounds = split_boundaries(total, self.ratios)
         edges = sorted(
             {p for _, s, e in bounds if e > s for p in (s, e - 1)}

@@ -24,11 +24,15 @@ limitation, SURVEY §7 risk 3).
 from __future__ import annotations
 
 import math
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+if TYPE_CHECKING:
+    from preprocessor_spark.operators.positions import TimeProfile
 
 
 def ewm_carry_sums(x, mask, beta, cin_num, cin_den):
@@ -119,10 +123,16 @@ class Unbiaser:
                 df = df.withColumn(c, F.col(c).cast("double"))
         return df
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def transform(
+        self, df: DataFrame, profile: TimeProfile | None = None
+    ) -> DataFrame:
+        """``profile``: a :func:`~preprocessor_spark.operators.positions.time_profile`
+        of ``df`` along ``time_col`` per ``series_cols``, reused by the
+        chunked MA path for its chunk cuts instead of profiling ``df``
+        again; the other paths need none and ignore it."""
         if self.method == "ma":
             if self.chunk_rows:
-                return self._ma_chunked(df)
+                return self._ma_chunked(df, profile)
             return self._ma(df)
         return self._ema(df)
 
@@ -137,7 +147,9 @@ class Unbiaser:
             out = out.withColumn(c, F.col(c) - F.avg(c).over(w))
         return out
 
-    def _ma_chunked(self, df: DataFrame) -> DataFrame:
+    def _ma_chunked(
+        self, df: DataFrame, profile: TimeProfile | None = None
+    ) -> DataFrame:
         """Scale path for W1: identical output to :meth:`_ma`, but the window
         runs per (series, chunk) so parallelism = series × chunks instead of
         being capped at |series| (a per-source window serializes each source
@@ -161,6 +173,7 @@ class Unbiaser:
             series_cols=scols,
             chunk_rows=self.chunk_rows,
             carry_rows=w_size - 1,
+            profile=profile,
         )
         w = (
             Window.partitionBy(*scols, "__chunk")

@@ -211,55 +211,32 @@ class RollupTree:
             .agg(*algebraic_aggs(v))
         )
 
-    def base_aggregate_with_spine(
-        self, df: DataFrame, tier: TierSpec, spine: DataFrame
-    ) -> DataFrame:
-        """Tier-0 aggregate + gap fill fused into ONE aggregation: union the
-        facts with null-valued seed rows (one per spine bucket) and count
-        NON-NULL values — seed rows materialize their bucket with
-        n_points=0 and null stats, exactly what a spine LEFT JOIN yields,
-        without the join's exchange and sort. The seeds are ≤ |buckets|
-        rows riding a |facts|-row shuffle: free.
-
-        Semantic note vs :meth:`base_aggregate`: ``n_points`` counts
-        non-null values (facts with a null value column contribute to no
-        statistic, including the count)."""
-        v = F.col(self.value_col).cast("double")
-        seeds = spine.select(
-            *self.series_cols,
-            F.col("bucket_start").alias(self.time_col),
-            F.lit(None).cast("double").alias(self.value_col),
-        )
-        facts = df.select(*self.series_cols, self.time_col, self.value_col)
-        return (
-            facts.unionByName(seeds)
-            .groupBy(
-                *self.series_cols,
-                F.window(self.time_col, tier.duration)["start"].alias(
-                    "bucket_start"
-                ),
-            )
-            .agg(*algebraic_aggs(v))
-        )
-
     def base_aggregate_with_spine_epoch(
         self, df: DataFrame, step_s: int, spine: DataFrame, epoch_col: str = "tss"
     ) -> DataFrame:
-        """Epoch-integer twin of :meth:`base_aggregate_with_spine` — the
-        10^12-scale hot path. ``df`` carries the event time as epoch
-        SECONDS (``epoch_col``, int/long) instead of a timestamp, so the
-        per-row bucket key is two integer ops (``tss - tss % step``)
-        rather than the timestamp/window-struct arithmetic of
-        ``F.window`` — and the conversion back to a ``bucket_start``
-        timestamp happens AFTER the aggregate, on |buckets| rows instead
-        of |facts| rows. ``F.window(ts, d)["start"]`` epoch-aligns
-        tumbling windows to ``floor(epoch/step)*step`` for non-negative
-        epochs, which is exactly this integer floor — equivalence is
-        pinned by tests/test_rollup.py::test_epoch_aggregate_equivalence.
+        """Tier-0 aggregate + gap fill fused into ONE aggregation — the
+        10^12-scale hot path. Facts are unioned with null-valued seed rows
+        (one per spine bucket) and ``n_points`` counts NON-NULL values:
+        seed rows materialize their bucket with n_points=0 and null stats,
+        exactly what ``gap_fill(base_aggregate(...))``'s spine LEFT JOIN
+        yields, without the join's exchange and sort. The seeds are
+        ≤ |buckets| rows riding a |facts|-row shuffle: free. (Facts with a
+        null value contribute to no statistic, the count included — as on
+        every aggregate path.)
+
+        ``df`` carries the event time as epoch SECONDS (``epoch_col``,
+        int/long) instead of a timestamp, so the per-row bucket key is two
+        integer ops (``tss - tss % step``) rather than the
+        timestamp/window-struct arithmetic of ``F.window`` — and the
+        conversion back to a ``bucket_start`` timestamp happens AFTER the
+        aggregate, on |buckets| rows instead of |facts| rows.
+        ``F.window(ts, d)["start"]`` epoch-aligns tumbling windows to
+        ``floor(epoch/step)*step`` for non-negative epochs, which is exactly
+        this integer floor — equivalence with the gap-filled F.window chain
+        is pinned by tests/test_rollup.py::test_epoch_aggregate_equivalence.
 
         ``spine``: dense (series, bucket_epoch:long) seed rows (e.g. from
-        :func:`spine_from_bounds` with ``as_epoch=True``); gap fill fuses
-        into the aggregate exactly as in the timestamp variant."""
+        :func:`spine_from_bounds` with ``as_epoch=True``)."""
         v = F.col(self.value_col).cast("double")
         seeds = spine.select(
             *self.series_cols,

@@ -6,6 +6,8 @@ Covers the determinism invariant (identical positions at any parallelism)
 and the NULLS FIRST total-order contract, including null keys, duplicate
 keys, and the all-null degenerate case."""
 
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -16,6 +18,7 @@ from preprocessor_spark.operators.positions import (
     chunked_assignment,
     grouped_positions,
     grouped_positions_and_totals,
+    time_profile,
 )
 
 RNG = np.random.default_rng(11)
@@ -120,6 +123,64 @@ def test_chunked_assignment_empty_and_all_null(spark):
     )
     out2 = chunked_assignment(allnull, "k", chunk_rows=10, carry_rows=2)
     assert out2.filter(~F.col("__aug")).count() == 5
+
+
+def _chunk_lags(chunked, max_lag):
+    """{rid: (lag_1 .. lag_max_lag of v)} over the (g, chunk) windows."""
+    w = Window.partitionBy("g", "__chunk").orderBy("k", "rid")
+    rows = (
+        chunked.select(
+            "rid",
+            "__aug",
+            *[F.lag("v", i).over(w).alias(f"l{i}") for i in range(1, max_lag + 1)],
+        )
+        .filter(~F.col("__aug"))
+        .collect()
+    )
+    return {r["rid"]: tuple(r[f"l{i}"] for i in range(1, max_lag + 1)) for r in rows}
+
+
+def test_chunked_assignment_from_passed_profile_matches_self_built(spark):
+    """A passed profile with finer buckets than the chunker's own is
+    coarsened by integer division of its bucket ids: the chunked windows
+    must give the same lags as a self-built profile and as one window per
+    series — null keys, null series and ties included — and the chunks
+    must nest in the profile's buckets."""
+    pdf = _random_pdf(n=300, null_frac=0.05)
+    pdf["v"] = RNG.normal(0, 1, len(pdf))
+    df = spark.createDataFrame(pdf).repartition(8)
+    cores = spark.sparkContext.defaultParallelism
+    fine = max(cores * 16, 64) * 8
+    prof = time_profile(df, "k", ["g"], fine)
+    assert prof.n_buckets == fine and prof.rows == len(pdf)
+    assert prof.totals() == Counter(
+        (g if isinstance(g, str) else None,) for g in pdf["g"]
+    )
+    kw = dict(series_cols=["g"], chunk_rows=23, carry_rows=3)
+    got = chunked_assignment(df, "k", profile=prof, **kw)
+    own = chunked_assignment(df, "k", **kw)
+    w = Window.partitionBy("g").orderBy("k", "rid")
+    want = {
+        r["rid"]: tuple(r[f"l{i}"] for i in range(1, 4))
+        for r in df.select(
+            "rid", *[F.lag("v", i).over(w).alias(f"l{i}") for i in range(1, 4)]
+        ).collect()
+    }
+    assert _chunk_lags(got, 3) == _chunk_lags(own, 3) == want
+    assert got.select("g", "__chunk").distinct().count() >= 6
+    # every chunk is a union of whole profile buckets
+    per_bucket = got.filter(~F.col("__aug")).select(
+        "g", prof.bucket.alias("b"), "__chunk"
+    ).distinct()
+    assert per_bucket.count() == per_bucket.select("g", "b").distinct().count()
+
+    with pytest.raises(ValueError, match="profile is per"):
+        chunked_assignment(df, "k", series_cols=[], profile=prof)
+    empty = spark.createDataFrame([], "k double, g string, rid long, v double")
+    out = chunked_assignment(
+        empty, "k", profile=time_profile(empty, "k", ["g"], fine), **kw
+    )
+    assert out.count() == 0
 
 
 def test_is_bucketable_dtype_excludes_intervals(spark):

@@ -8,6 +8,8 @@ import pytest
 from preprocessor_spark.rollup.tiers import RollupTree, TierSpec
 from preprocessor_spark.synth import token_sequences
 
+TIER_COLS = ["source", "bucket_start", "n_points", "sum_v", "sum_sq", "min_v", "max_v"]
+
 
 @pytest.fixture(scope="module")
 def corpus(spark):
@@ -167,20 +169,13 @@ def test_two_parallelism_equivalence(spark, tree):
     assert a["fingerprint"] == b["fingerprint"] == c["fingerprint"]
 
 
-def test_base_aggregate_with_spine_equals_join_gapfill(spark):
-    """The fused aggregate+gap-fill (null-valued spine seeds, non-null
-    count) must equal gap_fill(base_aggregate) bucket-for-bucket."""
-    from preprocessor_spark.rollup.tiers import spine_from_bounds, duration_seconds
-    from preprocessor_spark.synth import token_sequences
-
-    corpus = token_sequences(spark, 20_000)
-    tree = RollupTree(time_col="ts", series_cols=["source"], value_col="n_tok")
+def _epoch_inputs(spark, corpus, step):
+    """(facts with epoch-second ``tss``, dense epoch spine) for the fused
+    epoch aggregate, the spine built from the corpus's per-source bounds."""
     from pyspark.sql import functions as F
 
-    from preprocessor_spark.rollup.tiers import DEFAULT_TIERS
+    from preprocessor_spark.rollup.tiers import spine_from_bounds
 
-    tier = DEFAULT_TIERS[0]
-    ref = tree.gap_fill(tree.base_aggregate(corpus, tier), tier)
     bounds = [
         tuple(r)
         for r in corpus.groupBy("source")
@@ -190,79 +185,74 @@ def test_base_aggregate_with_spine_equals_join_gapfill(spark):
         )
         .collect()
     ]
-    spine = spine_from_bounds(
-        spark, bounds, ["source"], duration_seconds(tier.duration)
+    facts = corpus.select(
+        F.unix_timestamp("ts").alias("tss"), "source", "n_tok"
     )
-    got = tree.base_aggregate_with_spine(corpus, tier, spine)
-    cols = ["source", "bucket_start", "n_points", "sum_v", "sum_sq", "min_v", "max_v"]
-    a, b = ref.select(cols), got.select(cols)
-    j = a.alias("a").join(b.alias("b"), ["source", "bucket_start"], "full")
-    bad = j.filter(
+    return facts, spine_from_bounds(spark, bounds, ["source"], step, as_epoch=True)
+
+
+def _mismatches(a, b):
+    """Buckets present on one side only, or whose count, sum or null-ness
+    of the stats differ."""
+    from pyspark.sql import functions as F
+
+    j = a.select(TIER_COLS).alias("a").join(
+        b.select(TIER_COLS).alias("b"), ["source", "bucket_start"], "full"
+    )
+    return j.filter(
         (F.col("a.n_points") != F.col("b.n_points"))
         | F.col("a.n_points").isNull()
         | F.col("b.n_points").isNull()
         | (F.abs(F.col("a.sum_v") - F.col("b.sum_v")) > 1e-9)
-        | (
-            F.col("a.sum_v").isNull() != F.col("b.sum_v").isNull()
-        )
+        | (F.abs(F.col("a.sum_sq") - F.col("b.sum_sq")) > 1e-9)
+        | (F.col("a.sum_v").isNull() != F.col("b.sum_v").isNull())
+        | (F.col("a.min_v").isNull() != F.col("b.min_v").isNull())
     ).count()
-    assert bad == 0
+
+
+def test_base_aggregate_with_spine_equals_join_gapfill(spark):
+    """The fused aggregate+gap-fill (null-valued spine seeds, non-null
+    count) must equal gap_fill(base_aggregate) bucket-for-bucket — here on
+    the 1h tier, so seeds and facts share buckets at another step than the
+    job's 5m."""
+    from preprocessor_spark.rollup.tiers import duration_seconds
+
+    corpus = token_sequences(spark, 20_000)
+    tree = RollupTree(time_col="ts", series_cols=["source"], value_col="n_tok")
+    tier = TierSpec("1h", "1 hour")
+    step = duration_seconds(tier.duration)
+    ref = tree.gap_fill(tree.base_aggregate(corpus, tier), tier)
+    facts, spine = _epoch_inputs(spark, corpus, step)
+    got = tree.base_aggregate_with_spine_epoch(facts, step, spine)
+    assert _mismatches(ref, got) == 0
 
 
 def test_epoch_aggregate_equivalence(spark):
     """The epoch-integer hot path (tss ints in, integer-floor buckets,
     post-agg timestamp conversion) must equal the timestamp/F.window
-    variant bucket-for-bucket, including fused gap-fill seeds — pins the
+    chain with a spine LEFT JOIN gap fill bucket-for-bucket, at tier 0 and
+    through the coarse re-aggregations — pins the
     floor(epoch/step)*step == F.window(ts, d)['start'] alignment the
     10^12-scale job relies on."""
     from pyspark.sql import functions as F
 
-    from preprocessor_spark.rollup.tiers import (
-        DEFAULT_TIERS,
-        duration_seconds,
-        spine_from_bounds,
-    )
-    from preprocessor_spark.synth import token_sequences
+    from preprocessor_spark.rollup.tiers import DEFAULT_TIERS, duration_seconds
 
     corpus = token_sequences(spark, 20_000)
     tree = RollupTree(time_col="ts", series_cols=["source"], value_col="n_tok")
     tier = DEFAULT_TIERS[0]
     step = duration_seconds(tier.duration)
-    bounds = [
-        tuple(r)
-        for r in corpus.groupBy("source")
-        .agg(
-            F.min(F.unix_timestamp("ts")).alias("t0"),
-            F.max(F.unix_timestamp("ts")).alias("t1"),
-        )
-        .collect()
-    ]
-    spine_ts = spine_from_bounds(spark, bounds, ["source"], step)
-    ref = tree.base_aggregate_with_spine(corpus, tier, spine_ts)
-
-    facts_epoch = corpus.select(
-        F.unix_timestamp("ts").cast("int").alias("tss"), "source", "n_tok"
-    )
-    spine_e = spine_from_bounds(spark, bounds, ["source"], step, as_epoch=True)
-    got = tree.base_aggregate_with_spine_epoch(facts_epoch, step, spine_e)
-
-    cols = ["source", "bucket_start", "n_points", "sum_v", "sum_sq", "min_v", "max_v"]
-    j = ref.select(cols).alias("a").join(
-        got.select(cols).alias("b"), ["source", "bucket_start"], "full"
-    )
-    bad = j.filter(
-        (F.col("a.n_points") != F.col("b.n_points"))
-        | F.col("a.n_points").isNull()
-        | F.col("b.n_points").isNull()
-        | (F.abs(F.col("a.sum_v") - F.col("b.sum_v")) > 1e-9)
-        | (F.col("a.sum_v").isNull() != F.col("b.sum_v").isNull())
-    ).count()
-    assert bad == 0
+    facts, spine = _epoch_inputs(spark, corpus, step)
+    # int, not long, epochs in: the aggregate widens them itself
+    facts = facts.withColumn("tss", F.col("tss").cast("int"))
+    got = tree.base_aggregate_with_spine_epoch(facts, step, spine)
+    ref = tree.gap_fill(tree.base_aggregate(corpus, tier), tier)
+    assert _mismatches(ref, got) == 0
 
     # the coarse chain: epoch re-agg of the epoch tier == window re-agg
     for coarse in DEFAULT_TIERS[1:]:
         cstep = duration_seconds(coarse.duration)
-        ref_c = tree.reaggregate(ref, coarse)
+        ref = tree.reaggregate(ref, coarse)
         got_c = tree.reaggregate_epoch(
             got.select(
                 "source",
@@ -275,16 +265,7 @@ def test_epoch_aggregate_equivalence(spark):
             F.timestamp_seconds("bucket_epoch").alias("bucket_start"),
             "n_points", "sum_v", "sum_sq", "min_v", "max_v",
         )
-        jj = ref_c.select(cols).alias("a").join(
-            got_c.select(cols).alias("b"), ["source", "bucket_start"], "full"
-        )
-        bad_c = jj.filter(
-            (F.col("a.n_points") != F.col("b.n_points"))
-            | F.col("a.n_points").isNull()
-            | F.col("b.n_points").isNull()
-            | (F.abs(F.col("a.sum_v") - F.col("b.sum_v")) > 1e-9)
-        ).count()
-        assert bad_c == 0, f"coarse tier {coarse.name} diverged"
+        assert _mismatches(ref, got_c) == 0, f"coarse tier {coarse.name} diverged"
 
 
 def test_retention_policy_enforce_and_expiry(spark):
@@ -337,7 +318,10 @@ def test_null_valued_facts_do_not_skew_counts_or_derived_stats(spark):
     from preprocessor_spark.rollup.tiers import spine_from_bounds
 
     spine = spine_from_bounds(
-        spark, [("s", 1577836800, 1577836800)], ["source"], 3600
+        spark, [("s", 1577836800, 1577836800)], ["source"], 3600, as_epoch=True
     )
-    fused = tree.base_aggregate_with_spine(df, tier, spine).collect()[0]
+    fused = tree.base_aggregate_with_spine_epoch(
+        df.withColumn("tss", F.unix_timestamp("ts")), 3600, spine
+    ).collect()[0]
     assert fused["n_points"] == base["n_points"] == 2
+    assert fused["sum_v"] == base["sum_v"] == 6.0

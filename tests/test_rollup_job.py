@@ -29,8 +29,23 @@ def job_out(spark, tmp_path_factory):
     corpus = str(work / "corpus")
     out = str(work / "out")
     write_corpus(spark, corpus, 30_000)
-    res = rollup_job.main(["--input", corpus, "--output", out])
-    return corpus, out, res
+    sc = spark.sparkContext
+    sc.setJobGroup("rollup_job", "rollup_job.main")
+    try:
+        res = rollup_job.main(["--input", corpus, "--output", out])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("rollup_job")
+    return corpus, out, res, jobs
+
+
+# A build of the fixture's corpus costs exactly this many Spark jobs: the
+# corpus's schema inference, the two profile aggregates, the split fit's
+# edge pass and its tie recount (the corpus has ties at split edges), the
+# normalizer fit, the unbias chunk broadcast, the prepared write, the
+# tier-0 write, the coarse-tier write and the block encode.
+BUILD_SPARK_JOBS = 11
 
 
 def _close(spark, a, b, tol=1e-9):
@@ -51,7 +66,7 @@ def test_job_tiers_match_library_chain(spark, job_out):
     """The job's epoch-integer tier path must equal the library's
     timestamp/F.window chain — prepared stores epoch seconds (tss), so
     decode it back to a timestamp and rebuild the reference tree."""
-    _, out, res = job_out
+    _, out, res, _ = job_out
     prepared = spark.read.parquet(os.path.join(out, "prepared")).withColumn(
         "ts", F.timestamp_seconds("tss")
     )
@@ -75,7 +90,7 @@ def test_job_tiers_match_library_chain(spark, job_out):
 
 
 def test_job_lineage_per_partition(spark, job_out):
-    _, out, res = job_out
+    _, out, res, _ = job_out
     lineage = [
         json.loads(line)
         for line in open(os.path.join(out, "manifest.jsonl"))
@@ -93,7 +108,7 @@ def test_job_lineage_per_partition(spark, job_out):
 
 
 def test_job_resume_skips_completed_and_is_identical(spark, job_out, tmp_path):
-    corpus, out, _ = job_out
+    corpus, out, _, _ = job_out
     # simulate a crash after tier_5m: drop manifest rows for 1h/1d and the
     # written 1h/1d outputs, then resume
     out2 = str(tmp_path / "out_resumed")
@@ -126,6 +141,45 @@ def test_job_resume_skips_completed_and_is_identical(spark, job_out, tmp_path):
         if r["stage"] == "tier_5m":
             per_src[r["partition"]] = per_src.get(r["partition"], 0) + 1
     assert all(v == 1 for v in per_src.values())
+
+
+def test_build_spark_job_count_is_pinned(job_out):
+    """A fixed-cost regression (an extra collect, an unpinned read, AQE
+    re-planning) fails here instead of in a benchmark pass."""
+    assert len(job_out[3]) == BUILD_SPARK_JOBS
+
+
+def test_series_bounds_and_input_rows_match_prepared_and_corpus(spark, tmp_path):
+    """The series bounds and the row count come from the corpus profile
+    (epoch micros turned into seconds on the driver), not from scans of the
+    prepared series and the corpus: they must equal what those scans give,
+    also for timestamps before 1970 with sub-second parts, where
+    unix_timestamp truncates toward zero and a floor would be one second
+    early."""
+    from preprocessor_spark.rollup.incremental import load_bounds
+
+    corpus = str(tmp_path / "corpus_1969")
+    shift_us = (1577836800 + 5 * 3600) * 1_000_000  # straddle the epoch
+    token_sequences(spark, 3_000).withColumn(
+        "ts",
+        F.timestamp_micros(
+            F.unix_micros("ts") - F.lit(shift_us) + F.abs(F.hash("doc_id")) % 1_000_000
+        ),
+    ).write.partitionBy("source").parquet(corpus)
+    out = str(tmp_path / "out_1969")
+    res = rollup_job.main(["--input", corpus, "--output", out])
+
+    facts = spark.read.parquet(corpus)
+    assert facts.filter("ts < timestamp'1970-01-01'").count() > 0
+    assert facts.filter("unix_micros(ts) % 1000000 != 0").count() > 0
+    assert res["input_rows"] == facts.count()
+    prepared = spark.read.parquet(os.path.join(out, "prepared"))
+    want = sorted(
+        tuple(r)
+        for r in prepared.groupBy("source").agg(F.min("tss"), F.max("tss")).collect()
+    )
+    assert sorted(load_bounds(os.path.join(out, "series_bounds.json"))) == want
+    assert want[0][1] < 0
 
 
 def test_spine_from_bounds_equals_dense_spine(spark):

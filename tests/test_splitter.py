@@ -121,6 +121,37 @@ def test_fit_time_boundaries_matches_positional_params(spark):
         assert str(ref[k]["end_time"]) == str(got[k]["end_time"]), k
 
 
+def test_fit_time_boundaries_from_passed_profile_matches_self_built(spark):
+    """A job passes the fit its own per-series time profile (counts summed
+    over series, another bucket width): the boundaries must equal the fit's
+    self-built profile — on irregular timestamps with ties across series,
+    and on an empty table."""
+    import numpy as np
+
+    from preprocessor_spark.operators.positions import time_profile
+
+    rng = np.random.default_rng(3)
+    ts = pd.Timestamp("2021-03-01") + pd.to_timedelta(
+        rng.integers(1, 900, size=1500).cumsum(), unit="s"
+    )
+    pdf = pd.DataFrame(
+        {
+            "ts": np.concatenate([ts, ts[::7]]),  # tied timestamps
+            "source": ["a"] * len(ts) + ["b"] * len(ts[::7]),
+            "doc": range(len(ts) + len(ts[::7])),
+        }
+    )
+    df = spark.createDataFrame(pdf).repartition(4)
+    sp = TemporalSplitter(tiebreak_cols=["doc"])
+    want = sp.fit_time_boundaries(df, n_buckets=64).params
+    prof = time_profile(df, "ts", ["source"], 4096)
+    assert sp.fit_time_boundaries(df, profile=prof).params == want
+
+    empty = spark.createDataFrame([], "ts timestamp, source string, doc long")
+    prof = time_profile(empty, "ts", ["source"], 4096)
+    assert sp.fit_time_boundaries(empty, profile=prof).params["boundaries"] == {}
+
+
 def test_fit_time_boundaries_small_and_empty(spark):
     sp = TemporalSplitter()
     empty = spark.createDataFrame([], "ts timestamp, v long")

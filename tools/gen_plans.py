@@ -88,21 +88,23 @@ def _tier_plans():
         )
         .collect()
     ]
-    spine = spine_from_bounds(
-        spark, bounds, ["source"], duration_seconds(DEFAULT_TIERS[0].duration)
-    )
-    fused = tree.base_aggregate_with_spine(corpus, DEFAULT_TIERS[0], spine)
+    step = duration_seconds(DEFAULT_TIERS[0].duration)
+    spine = spine_from_bounds(spark, bounds, ["source"], step, as_epoch=True)
+    facts = corpus.select(F.unix_timestamp("ts").alias("tss"), "source", "n_tok")
+    fused = tree.base_aggregate_with_spine_epoch(facts, step, spine)
     dense_reagg = tree.reaggregate(fused, DEFAULT_TIERS[1])
     return fused, dense_reagg
 
 
 _fused, _dense = _tier_plans()
 add(
-    "Fused tier-0 aggregate + gap fill (base_aggregate_with_spine)",
+    "Fused tier-0 aggregate + gap fill (base_aggregate_with_spine_epoch)",
     _fused,
     "Gap fill costs NO join: null-valued spine seed rows ride the facts'\n"
     "union into ONE partial+final aggregate (count of non-null values), so\n"
-    "the tier tree has a single exchange per tier and no join stages.",
+    "the tier tree has a single exchange per tier and no join stages. Event\n"
+    "times are epoch seconds: the bucket key is an integer floor, and the\n"
+    "bucket_start timestamp is computed after the aggregate.",
 )
 add(
     "Dense tier re-aggregation (1h from gap-filled 5m)",
@@ -134,9 +136,10 @@ add(
     "Chunked MA unbias — ONE full-width shuffle (Unbiaser(chunk_rows=...))",
     _chunked_ma_plan(),
     "Chunk ids come from driver-side packing of value-range time buckets\n"
-    "(one light count aggregate) and reach rows via a BroadcastHashJoin;\n"
-    "the only hash Exchange is the (series, chunk) window itself —\n"
-    "parallelism is series x chunks with exact trailing-window semantics.",
+    "(a time profile: two light aggregates) and reach rows via a\n"
+    "BroadcastHashJoin; the only hash Exchange is the (series, chunk)\n"
+    "window itself — parallelism is series x chunks with exact\n"
+    "trailing-window semantics.",
 )
 
 add(
