@@ -265,7 +265,7 @@ class Unbiaser:
             + [T.StructField("__n", T.LongType())]
         )
 
-        def chunk_totals(keys, pdf: pd.DataFrame) -> pd.DataFrame:
+        def chunk_totals(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("__pos")
             n = len(pdf)
             row = {c: [k] for c, k in zip([*scols, "__chunk"], keys)}

@@ -32,7 +32,14 @@ refresh):
      series bounds;
   6. Gorilla/delta-of-delta blocks re-encoded only for the (source, block)
      pairs between each source's delta min and max ts, replaced by a
-     dynamic partition overwrite at that grain;
+     dynamic partition overwrite at that grain. The encode runs on the
+     driver (``compression.encode_partitioned_blocks_local``): its input is
+     bounded by the delta (at most 4096 rows per touched block), and an
+     executor encode would start a Python worker, whose cold start costs
+     seconds where the encode costs milliseconds. So no step of a refresh
+     starts a Python worker. A tree whose blocks predate the (source,
+     block) layout is refused up front: migrating it would re-encode the
+     whole history;
   7. lineage rows appended to the same manifest.
 
 The job reads its own datasets (carry tail, tier partitions) with their
@@ -204,7 +211,7 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
     from preprocessor_spark.rollup.checkpoint import ROWS_PER_WRITE_TASK, Manifest
     from preprocessor_spark.rollup.compression import (
         BLOCK_COL,
-        encode_partitioned_blocks,
+        encode_partitioned_blocks_local,
     )
     from preprocessor_spark.rollup.incremental import IncrementalRollup, _balanced_or
     from preprocessor_spark.rollup.tiers import (
@@ -212,7 +219,6 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
         RollupTree,
         stored_tier_schema,
     )
-    from preprocessor_spark.session import scoped_conf
 
     manifest = Manifest(os.path.join(out, "manifest.jsonl"))
     boundaries = load_params(os.path.join(out, "split_params.json")).params["boundaries"]
@@ -318,6 +324,19 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
             "refreshing"
         )
 
+    # Block layout: blocks written before the (source, block) layout sit
+    # directly under source=<s>/. Re-encoding them into it would be the
+    # refresh's only O(history) step, and the two layouts side by side do
+    # not read back.
+    blocks_path = os.path.join(out, "blocks_" + DEFAULT_TIERS[0].name)
+    old_layout = sorted(glob.glob(os.path.join(blocks_path, "source=*", "*.parquet")))
+    if old_layout and not args.no_blocks:
+        raise ValueError(
+            f"{blocks_path} holds blocks in the layout before (source, block) "
+            f"partitions (e.g. {old_layout[0]}); a refresh re-encodes single "
+            "blocks and cannot migrate them — rebuild with rollup_job"
+        )
+
     # every later shuffle is keyed by source (the tier merge sizes its own):
     # no wider than the delta's sources, and one task per ROWS_PER_WRITE_TASK
     # rows — a daily delta is one task, and writes one file per dataset
@@ -413,42 +432,36 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
     refresh_seconds = round(time.perf_counter() - t0, 3)
 
     # -- re-encode the compression blocks the delta lands in ---------------
-    compress_seconds = None
+    # on the driver: at most BLOCK_BUCKETS rows per touched block, where a
+    # Python worker's cold start would cost seconds
+    compress_seconds = encode_rows = blocks_written = None
     if not args.no_blocks:
         t0 = time.perf_counter()
-        tier0_name = DEFAULT_TIERS[0].name
-        blocks_path = os.path.join(out, "blocks_" + tier0_name)
         tier0 = spark.read.schema(stored_tier_schema([delta.schema["source"]])).parquet(
-            os.path.join(out, f"tier_{tier0_name}")
+            os.path.join(out, f"tier_{DEFAULT_TIERS[0].name}")
         )
         span = BLOCK_BUCKETS * BUCKET_SECONDS
-        if glob.glob(os.path.join(blocks_path, "source=*", "*.parquet")):
-            # blocks of an output built before the (source, block) layout:
-            # re-encode them all into it, once
-            touched_rows = tier0
-            overwrite_mode = "static"
-        else:
-            touched_rows = tier0.filter(
-                F.col("source").isin([s for s, _, _ in bounds])
-                & _balanced_or(
-                    [
-                        (F.col("source") == s)
-                        & (F.col("bucket_start") >= F.timestamp_seconds(F.lit(a - a % span)))
-                        & (
-                            F.col("bucket_start")
-                            < F.timestamp_seconds(F.lit(b - b % span + span))
-                        )
-                        for s, a, b in bounds
-                    ]
-                )
+        touched_rows = tier0.filter(
+            F.col("source").isin([s for s, _, _ in bounds])
+            & _balanced_or(
+                [
+                    (F.col("source") == s)
+                    & (F.col("bucket_start") >= F.timestamp_seconds(F.lit(a - a % span)))
+                    & (
+                        F.col("bucket_start")
+                        < F.timestamp_seconds(F.lit(b - b % span + span))
+                    )
+                    for s, a, b in bounds
+                ]
             )
-            overwrite_mode = "dynamic"
-        with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": overwrite_mode}):
-            encode_partitioned_blocks(
-                touched_rows, ["source"], BLOCK_BUCKETS, BUCKET_SECONDS
-            ).write.mode("overwrite").partitionBy("source", BLOCK_COL).parquet(
-                blocks_path
-            )
+        )
+        blocks = encode_partitioned_blocks_local(
+            touched_rows, ["source"], BLOCK_BUCKETS, BUCKET_SECONDS
+        )
+        blocks.frame.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("source", BLOCK_COL).parquet(blocks_path)
+        encode_rows, blocks_written = blocks.rows, blocks.blocks
         compress_seconds = round(time.perf_counter() - t0, 3)
 
     prepared_delta.unpersist()
@@ -470,6 +483,8 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
         "prepare_seconds": prepare_seconds,
         "refresh_seconds": refresh_seconds,
         "compress_seconds": compress_seconds,
+        "encode_rows": encode_rows,
+        "blocks_written": blocks_written,
         "tiers": tier_metrics,
         "total_seconds": total,
         "delta_rows_per_sec": round(delta_rows / max(total, 1e-9)),

@@ -1,7 +1,11 @@
 """Gorilla-class block codecs — XOR float compression + delta-of-delta ints —
 implemented as fully numpy-vectorized bitstream transforms (both encode AND
-decode), so blocks compress inside Arrow ``applyInPandas`` stages with no
-per-element Python (north rule: "no per-row Python anywhere").
+decode), with no per-element Python (north rule: "no per-row Python
+anywhere"). The codecs are plain numpy, so they run wherever a block's rows
+are: inside Arrow ``applyInPandas`` stages on the executors when a build
+encodes a whole history, and on the driver when a refresh re-encodes the
+few blocks its delta touches. Both venues call them through
+``compression.encode_block``.
 
 Relation to the classic Gorilla paper (Pelkonen et al., VLDB'15):
   * delta-of-delta timestamps: same idea; selector classes here are a fixed

@@ -1,13 +1,18 @@
 """Tier block encode→decode round-trip through Spark (applyInPandas /
-mapInPandas) and checkpoint/resume idempotence (SURVEY §5 strategy c, d)."""
+mapInPandas), byte identity of the executor and driver encoders, and
+checkpoint/resume idempotence (SURVEY §5 strategy c, d)."""
 
+import datetime as dt
 import os
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from preprocessor_spark.rollup.compression import (
     decode_tier_blocks,
+    encode_partitioned_blocks,
+    encode_partitioned_blocks_local,
     encode_tier_blocks,
 )
 from preprocessor_spark.rollup.tiers import RollupTree, TierSpec
@@ -49,6 +54,98 @@ def test_block_roundtrip_identity(spark, tier_1h):
             a[c].to_numpy(np.float64).view(np.uint64),
             b[c].to_numpy(np.float64).view(np.uint64),
         )
+
+
+def _adversarial_tier(spark):
+    """A 5m tier built to break a second encoder: pre-1970 buckets on both
+    sides of a block edge (4-bucket blocks: span 1200 s) and of epoch, a
+    1-row and a 2-row block, -0.0 / subnormal / ±inf statistics, n_points
+    jumps whose delta-of-delta needs 32- and 64-bit payloads, gap rows,
+    and a null series key."""
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    inf, tiny = float("inf"), 5e-324
+    rows = []
+
+    def add(src, k, n, v):
+        ts = epoch + dt.timedelta(seconds=300 * k)
+        if n == 0:
+            rows.append((src, ts, 0, None, None, None, None))
+        else:
+            rows.append((src, ts, n, v, v * v, v, v))
+
+    # source a: blocks -2 (k=-8..-5), -1 (k=-4..-1) and 0 straddle two
+    # edges; block -2's n_points deltas 1, 69998, 2**45 - 70000 give
+    # delta-of-deltas that need a 32-bit and a 64-bit payload
+    for k, n, v in [
+        (-8, 1, -0.0), (-7, 2, tiny), (-6, 70_000, -inf), (-5, 2**45, 1.0),
+        (-4, 3, inf), (-3, 0, None), (-2, 2**40 + 7, 2.2250738585072014e-308),
+        (-1, 1, -tiny), (0, 5, 1.5), (1, 2**33, -0.0), (3, 6, 0.1),
+    ]:
+        add("a", k, n, v)
+    add("a", 9, 4, 2.0)  # block 2: one row
+    add("a", 10, 0, None)
+    for k, n, v in [(-400, 7, -1e308), (-399, 2**62, 1e-300)]:
+        add("b", k, n, v)  # a 2-row block far before epoch
+    add(None, -2, 3, 4.0)
+    return spark.createDataFrame(
+        rows,
+        "source string, bucket_start timestamp, n_points long, "
+        "sum_v double, sum_sq double, min_v double, max_v double",
+    )
+
+
+@pytest.mark.parametrize("which", ["tier_1h", "adversarial"])
+def test_driver_and_executor_encoders_write_identical_blocks(spark, tier_1h, which):
+    """The refresh encodes its touched blocks on the driver, the build on
+    the executors: both must write the same blocks, byte for byte, or a
+    refreshed tree would differ from a rebuilt one."""
+    tier, bucket_s = (tier_1h, 3600) if which == "tier_1h" else (
+        _adversarial_tier(spark), 300
+    )
+    executor = encode_partitioned_blocks(tier, ["source"], 4, bucket_s)
+    local = encode_partitioned_blocks_local(tier, ["source"], 4, bucket_s)
+    assert local.frame.schema == executor.schema
+    keys = ["source", "block"]
+    a = executor.toPandas().sort_values(keys, na_position="first").reset_index(drop=True)
+    b = local.frame.toPandas().sort_values(keys, na_position="first").reset_index(
+        drop=True
+    )
+    assert (local.blocks, local.rows) == (len(a), int(a["n"].sum()))
+    if which == "adversarial":
+        assert sorted(a["n"].tolist()) == [1, 1, 2, 3, 3, 4]
+    assert list(a.columns) == list(b.columns)
+    for c in a.columns:
+        assert a[c].tolist() == b[c].tolist(), c
+
+
+def test_blocks_keep_instants_in_a_non_utc_session(spark):
+    """Blocks store epoch seconds: under a session zone with DST, both
+    encoders write the same blocks and decoding gives back the tier's
+    instants, including the hours around the spring-forward gap (naive
+    wall-clock times there do not exist)."""
+    from preprocessor_spark.session import scoped_conf
+
+    start = dt.datetime(2020, 3, 8, tzinfo=dt.timezone.utc)
+    rows = [
+        ("s", start + dt.timedelta(hours=k), 1, float(k), 1.0, 1.0, 1.0)
+        for k in range(-3, 12)
+    ]
+    tier = spark.createDataFrame(
+        rows,
+        "source string, bucket_start timestamp, n_points long, "
+        "sum_v double, sum_sq double, min_v double, max_v double",
+    )
+
+    def epochs(df, col):
+        return sorted(r[0] for r in df.select(F.unix_timestamp(col)).collect())
+
+    with scoped_conf(spark, {"spark.sql.session.timeZone": "America/New_York"}):
+        executor = encode_partitioned_blocks(tier, ["source"], 4096, 3600)
+        local = encode_partitioned_blocks_local(tier, ["source"], 4096, 3600).frame
+        assert executor.collect() == local.collect()
+        assert epochs(executor, "block_start") == epochs(tier, "bucket_start")[:1]
+        back = decode_tier_blocks(executor, ["source", "block"])
+        assert epochs(back, "bucket_start") == epochs(tier, "bucket_start")
 
 
 def test_blocks_are_bounded_and_compressed(spark, tier_1h):

@@ -5,6 +5,7 @@ rollup_job run under the same persisted params — the MA seam continuation
 carries exactly, two chained refreshes work from the persisted tail, and
 interior late data is refused (order-dependent stage)."""
 
+import contextlib
 import json
 import os
 import shutil
@@ -191,8 +192,38 @@ def test_tail_off_series_edge_is_refused(spark, setup, tmp_path):
 
 # A refresh of the setup's output costs exactly this many Spark jobs: the
 # delta's schema inference, the delta profile, the prepared append, the
-# carry-tail write, the one tier merge write and the block re-encode.
-REFRESH_SPARK_JOBS = 6
+# carry-tail write, the one tier merge write, and for the blocks a collect
+# of the touched tier rows plus the write of the driver-encoded blocks
+# (one more than an executor encode, whose shuffle and Python stage ran as
+# one job: the cold Python worker cost seconds, a job costs milliseconds).
+REFRESH_SPARK_JOBS = 7
+
+
+@contextlib.contextmanager
+def _no_python_worker(spark):
+    """Make every API that runs Python on the executors raise: grouped and
+    mapped pandas/Arrow functions, Python RDDs and Python UDFs."""
+    from pyspark import SparkContext
+    from pyspark.sql import functions
+    from pyspark.sql.group import GroupedData
+
+    def refuse(name):
+        def raiser(*_a, **_k):
+            raise AssertionError(f"the refresh started a Python worker via {name}")
+
+        return raiser
+
+    frame_cls = type(spark.range(0))
+    with pytest.MonkeyPatch.context() as mp:
+        for owner, names in (
+            (GroupedData, ("applyInPandas", "applyInArrow")),
+            (frame_cls, ("mapInPandas", "mapInArrow")),
+            (SparkContext, ("parallelize",)),
+            (functions, ("udf", "pandas_udf")),
+        ):
+            for name in names:
+                mp.setattr(owner, name, refuse(f"{owner.__name__}.{name}"))
+        yield
 
 
 def _block_files(root):
@@ -235,7 +266,8 @@ def far_refresh(spark, setup, tmp_path_factory):
     """A copy of the setup's output refreshed by a delta 20 days past the
     series edge: its rows land in the next 14.2-day block of every source,
     so each (source, block) dir the setup wrote is untouched. The refresh
-    runs under its own job group so its Spark jobs can be counted."""
+    runs under its own job group so its Spark jobs can be counted, and
+    with every way of starting a Python worker made to raise."""
     paths, out, _, _ = setup
     work = tmp_path_factory.mktemp("far_refresh")
     tree = str(work / "tree")
@@ -246,12 +278,13 @@ def far_refresh(spark, setup, tmp_path_factory):
     sc = spark.sparkContext
     sc.setJobGroup("far_refresh", "refresh_job.main")
     try:
-        refresh_job.main(["--output", tree, "--delta-input", delta])
+        with _no_python_worker(spark):
+            result = refresh_job.main(["--output", tree, "--delta-input", delta])
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup("far_refresh")
-    return tree, before, _block_files(blocks), jobs
+    return tree, before, _block_files(blocks), jobs, result
 
 
 def test_refreshed_blocks_decode_to_the_tier_and_spare_untouched_blocks(
@@ -260,7 +293,7 @@ def test_refreshed_blocks_decode_to_the_tier_and_spare_untouched_blocks(
     """Decoding every block gives back the non-empty refreshed 5m rows bit
     for bit, and the files of every (source, block) dir the delta did not
     land in are unchanged (perfbench's refresh check reads only tiers)."""
-    tree, before, after, _ = far_refresh
+    tree, before, after, _, _ = far_refresh
     _assert_blocks_decode_to_tier(spark, tree)
     old_dirs = {os.path.dirname(p) for p in before}
     new_dirs = {os.path.dirname(p) for p in after} - old_dirs
@@ -278,12 +311,34 @@ def test_refresh_spark_job_count_is_pinned(far_refresh):
     assert len(far_refresh[3]) == REFRESH_SPARK_JOBS
 
 
-def test_refresh_moves_source_only_blocks_into_the_block_layout(spark, setup, tmp_path):
-    """Blocks written before the (source, block) layout (files directly
-    under source=<s>/) are all re-encoded into it by the next refresh: the
-    two layouts side by side in one directory would not read back."""
-    import glob
+def test_refresh_starts_no_python_worker(spark, far_refresh):
+    """The fixture's refresh ran with every Python-worker API refused: the
+    refusal must be live (a worker's cold start is seconds of a refresh)."""
+    assert far_refresh[4]["delta_rows"] > 0
+    with _no_python_worker(spark), pytest.raises(AssertionError, match="Python"):
+        spark.range(1).groupBy("id").applyInPandas(lambda pdf: pdf, "id long")
 
+
+def test_refresh_reports_its_block_encode(spark, far_refresh):
+    """The JSON line records the driver-side encode: the blocks written
+    (one per new (source, block) dir) and the tier rows they hold."""
+    tree, before, after, _, result = far_refresh
+    new_dirs = {os.path.dirname(p) for p in after} - {
+        os.path.dirname(p) for p in before
+    }
+    assert result["blocks_written"] == len(new_dirs) > 0
+    pairs = {tuple(part.split("=", 1)[1] for part in d.split(os.sep)) for d in new_dirs}
+    blocks = spark.read.parquet(os.path.join(tree, "blocks_5m")).toPandas()
+    assert result["encode_rows"] == sum(
+        r.n for r in blocks.itertuples() if (str(r.source), str(r.block)) in pairs
+    )
+
+
+def test_refresh_refuses_source_only_block_layout(spark, setup, tmp_path):
+    """Blocks written before the (source, block) layout (files directly
+    under source=<s>/) are refused before anything is written: migrating
+    them would re-encode the whole history, so the error asks for a
+    rebuild, and every file of the tree is left as it was."""
     from preprocessor_spark.rollup.compression import encode_tier_blocks
 
     paths, out, _, _ = setup
@@ -296,7 +351,7 @@ def test_refresh_moves_source_only_blocks_into_the_block_layout(spark, setup, tm
         tier0.filter(F.col("n_points") > 0), ["source"], 4096, 300
     ).write.partitionBy("source").parquet(blocks)
     delta = _shifted_delta(spark, paths["delta2"], str(tmp_path / "delta"), "1 DAY")
-    refresh_job.main(["--output", tree, "--delta-input", delta])
-    assert not glob.glob(os.path.join(blocks, "source=*", "*.parquet"))
-    assert glob.glob(os.path.join(blocks, "source=*", "block=*", "*.parquet"))
-    _assert_blocks_decode_to_tier(spark, tree)
+    before = _block_files(tree)
+    with pytest.raises(ValueError, match="rebuild with rollup_job"):
+        refresh_job.main(["--output", tree, "--delta-input", delta])
+    assert _block_files(tree) == before
