@@ -21,4 +21,13 @@ Design tenets (see SURVEY.md):
 
 __version__ = "0.1.0"
 
-from preprocessor_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name: str):
+    # lazy, so that importing a submodule does not import pyspark: the
+    # worker daemon (``_daemon``) must choose where pyspark comes from
+    # before anything imports it
+    if name == "get_spark":
+        from preprocessor_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

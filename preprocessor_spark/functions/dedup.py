@@ -171,7 +171,8 @@ def minhash_lsh_pairs(
     a MinHash trap — its perturbation is ~1 part in 8M of h1's range, so
     one shingle wins every permutation and banding degenerates to a single
     hash function: ~10% recall loss and linear band-bucket growth,
-    measured by tools/dedup_scale_bench.py before the fix.)
+    measured on a synthetic near-duplicate corpus before the fix,
+    BENCH/DEDUP_SCALE.md.)
 
     Scale: the self-join keys on (band_id, band_key) so only colliding docs
     meet; verification intersects the DISTINCT shingle-hash sets (60-bit
@@ -687,7 +688,7 @@ def embedding_near_dups(
     deduplicated) candidate overlap. At corpus scale, ``num_planes``
     must grow with log2(n) to keep expected random-collision bucket size
     n/2^p bounded; recall lost to wider signatures is bought back with
-    more tables (tools/dedup_scale_bench.py measures both axes).
+    more tables (BENCH/DEDUP_SCALE.md measures both axes).
 
     Pass ``dim`` (the embedding dimension — static for any one corpus) to
     run both the signature and the verification cosine on the unrolled

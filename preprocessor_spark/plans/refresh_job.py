@@ -219,6 +219,7 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
         RollupTree,
         stored_tier_schema,
     )
+    from preprocessor_spark.session import class_archive
 
     manifest = Manifest(os.path.join(out, "manifest.jsonl"))
     boundaries = load_params(os.path.join(out, "split_params.json")).params["boundaries"]
@@ -245,7 +246,12 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
     extent = [r[:4] for r in profile if r[1] > 0]
     delta_rows = sum(r[1] for r in extent)
     if delta_rows == 0:
-        result = {"job": "refresh_job", "delta_rows": 0, "total_seconds": 0.0}
+        result = {
+            "job": "refresh_job",
+            "delta_rows": 0,
+            "total_seconds": 0.0,
+            "class_archive": class_archive(spark),
+        }
         print(json.dumps(result))
         return result
 
@@ -488,6 +494,8 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
         "tiers": tier_metrics,
         "total_seconds": total,
         "delta_rows_per_sec": round(delta_rows / max(total, 1e-9)),
+        # whether this run paid the JVM's cold class loading (session.py)
+        "class_archive": class_archive(spark),
     }
     print(json.dumps(result))
     return result

@@ -66,7 +66,7 @@ def main(argv: list[str] | None = None) -> dict:
 
     from preprocessor_spark import get_spark
     from preprocessor_spark.rollup.checkpoint import Manifest
-    from preprocessor_spark.session import scoped_conf
+    from preprocessor_spark.session import class_archive, scoped_conf
 
     spark = get_spark("rollup_job", master=args.master, batch_committer_v2=True)
     spark.sparkContext.setLogLevel("ERROR")
@@ -102,6 +102,8 @@ def main(argv: list[str] | None = None) -> dict:
     # ~0.5 s/exchange even warm). The caller's settings come back after.
     with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         result = _build(spark, args, out, manifest)
+    # whether this run paid the JVM's cold class loading (session.py)
+    result["class_archive"] = class_archive(spark)
     print(json.dumps(result))
     return result
 
@@ -435,8 +437,10 @@ def _build(spark, args, out: str, manifest) -> dict:
 
     # -- compression of the finest tier -----------------------------------
     # blocks are partitioned by (source, block): a refresh re-encodes and
-    # replaces only the blocks its delta lands in. One encode task per
-    # ROWS_PER_WRITE_TASK tier rows: each task starts a Python worker.
+    # replaces only the blocks its delta lands in. A build replaces every
+    # block (a static overwrite: no block of an older history survives). One
+    # encode task per ROWS_PER_WRITE_TASK tier rows: each task starts a
+    # Python worker.
     sc.setJobDescription("compress")
     t0 = time.perf_counter()
     tier0 = spark.read.schema(tier_schema).parquet(
@@ -446,9 +450,9 @@ def _build(spark, args, out: str, manifest) -> dict:
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": encode_parts}):
         encode_partitioned_blocks(
             tier0, ["source"], block_buckets=4096, bucket_seconds=300
-        ).write.mode("overwrite").partitionBy("source", BLOCK_COL).parquet(
-            os.path.join(out, "blocks_" + base.name)
-        )
+        ).write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy(
+            "source", BLOCK_COL
+        ).parquet(os.path.join(out, "blocks_" + base.name))
     compress_seconds = round(time.perf_counter() - t0, 3)
 
     total = time.perf_counter() - t_start

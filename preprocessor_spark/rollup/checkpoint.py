@@ -136,7 +136,6 @@ def run_resumable_bulk(
     production path; the sequential variant remains for fine-grained
     backfills of individual partitions.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     done = manifest.completed(stage)
     if values is None:
         values = [
@@ -170,7 +169,9 @@ def run_resumable_bulk(
             for i, v in enumerate(pending)
         ],
     )
-    sub.write.mode("overwrite").partitionBy(partition_col).parquet(out_path)
+    sub.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        partition_col
+    ).parquet(out_path)
     got = obs.get
     dt = round(time.perf_counter() - t0, 3)
     for i, v in enumerate(pending):
@@ -200,7 +201,6 @@ def run_resumable_observed(
     """
     from pyspark.sql import Observation
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     done = manifest.completed(stage)
     pending = [v for v in sorted(values) if str(v) not in done]
     if not pending:
@@ -220,7 +220,9 @@ def run_resumable_observed(
         ],
     )
     t0 = time.perf_counter()
-    sub.write.mode("overwrite").partitionBy(partition_col).parquet(out_path)
+    sub.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        partition_col
+    ).parquet(out_path)
     got = obs.get
     dt = round(time.perf_counter() - t0, 3)
     counts = {}
@@ -262,7 +264,6 @@ def run_resumable_observed_tiers(
 
     from pyspark.sql import Observation
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # one manifest read per TIER: calling completed() inside the (t, v)
     # comprehension re-parses the whole JSONL once per pair — O(T·V)
     # full-file scans of prior runs' rows before any Spark work
@@ -304,6 +305,8 @@ def run_resumable_observed_tiers(
             for i, (t, v) in enumerate(pending)
         ],
     )
+    # a fresh directory: the units replace their dirs in the moves below,
+    # so the write needs no dynamic overwrite
     tmp = os.path.join(out_root, "__coarse_tmp")
     shutil.rmtree(tmp, ignore_errors=True)
     t0 = time.perf_counter()

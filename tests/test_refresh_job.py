@@ -16,11 +16,13 @@ from pyspark.sql import functions as F
 
 from preprocessor_spark.plans import refresh_job, rollup_job
 from preprocessor_spark.rollup.tiers import DEFAULT_TIERS
+from preprocessor_spark.session import scoped_conf
 from preprocessor_spark.synth import token_sequences
 
 TIER_COLS = ["source", "bucket_start", "n_points", "sum_v", "sum_sq", "min_v", "max_v"]
 CUT1 = "2020-01-01 03:00:00"
 CUT2 = "2020-01-01 03:40:00"
+OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
 
 
 @pytest.fixture(scope="module")
@@ -266,8 +268,10 @@ def far_refresh(spark, setup, tmp_path_factory):
     """A copy of the setup's output refreshed by a delta 20 days past the
     series edge: its rows land in the next 14.2-day block of every source,
     so each (source, block) dir the setup wrote is untouched. The refresh
-    runs under its own job group so its Spark jobs can be counted, and
-    with every way of starting a Python worker made to raise."""
+    runs under its own job group so its Spark jobs can be counted, with
+    every way of starting a Python worker made to raise, and with the
+    session's overwrite mode static, so only the block write's own dynamic
+    option can spare the untouched blocks."""
     paths, out, _, _ = setup
     work = tmp_path_factory.mktemp("far_refresh")
     tree = str(work / "tree")
@@ -278,7 +282,7 @@ def far_refresh(spark, setup, tmp_path_factory):
     sc = spark.sparkContext
     sc.setJobGroup("far_refresh", "refresh_job.main")
     try:
-        with _no_python_worker(spark):
+        with _no_python_worker(spark), scoped_conf(spark, {OVERWRITE_MODE: "static"}):
             result = refresh_job.main(["--output", tree, "--delta-input", delta])
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -295,8 +299,9 @@ def test_refreshed_blocks_decode_to_the_tier_and_spare_untouched_blocks(
     land in are unchanged (perfbench's refresh check reads only tiers)."""
     tree, before, after, _, _ = far_refresh
     _assert_blocks_decode_to_tier(spark, tree)
-    old_dirs = {os.path.dirname(p) for p in before}
-    new_dirs = {os.path.dirname(p) for p in after} - old_dirs
+    # files at the root (the build's _SUCCESS marker) belong to no block
+    old_dirs = {os.path.dirname(p) for p in before} - {""}
+    new_dirs = {os.path.dirname(p) for p in after} - old_dirs - {""}
     assert old_dirs and all("block=" in d for d in old_dirs)
     assert {d.split(os.sep)[0] for d in new_dirs} == {
         d.split(os.sep)[0] for d in old_dirs

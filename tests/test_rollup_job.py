@@ -149,6 +149,30 @@ def test_build_spark_job_count_is_pinned(job_out):
     assert len(job_out[3]) == BUILD_SPARK_JOBS
 
 
+@pytest.mark.parametrize("mode", ["static", "dynamic"])
+def test_build_keeps_the_sessions_overwrite_mode_and_replaces_every_block(
+    spark, tmp_path, mode
+):
+    """A build into an old output dir leaves the session's
+    partitionOverwriteMode as it found it, and its block write replaces
+    every block whatever that mode is: a block dir the new history does not
+    have is gone."""
+    from preprocessor_spark.session import scoped_conf
+
+    corpus, out = str(tmp_path / "corpus"), str(tmp_path / "out")
+    write_corpus(spark, corpus, 3_000)
+    stale = os.path.join(out, "blocks_5m", "source=stale", "block=0")
+    os.makedirs(stale)
+    with open(os.path.join(stale, "part-0.parquet"), "wb") as f:
+        f.write(b"not a block")
+    key = "spark.sql.sources.partitionOverwriteMode"
+    with scoped_conf(spark, {key: mode}):
+        rollup_job.main(["--input", corpus, "--output", out])
+        assert spark.conf.get(key) == mode
+    assert not os.path.exists(os.path.dirname(stale))
+    assert spark.read.parquet(os.path.join(out, "blocks_5m")).count() > 0
+
+
 def test_series_bounds_and_input_rows_match_prepared_and_corpus(spark, tmp_path):
     """The series bounds and the row count come from the corpus profile
     (epoch micros turned into seconds on the driver), not from scans of the
