@@ -4,16 +4,7 @@ JSON line:
 
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Also measures the engine's primary metric (BASELINE.json): rolled-up
-points/sec per retention tier on the deterministic synthetic token corpus,
-reported under "rollup" (informational keys are allowed alongside the
-required ones).
-
-Scaling evidence (N vs 4N): run twice —
-  SPARK_GRAFT_CPUS=8 python bench.py
-  SPARK_GRAFT_CPUS=32 python bench.py
-and compare "rollup.points_per_sec"; BENCH/BASELINE.md records the last such
-measurement.
+The rollup engine's jobs are measured by perfbench/, not here.
 """
 
 from __future__ import annotations
@@ -27,7 +18,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-CORPUS_ROWS = int(os.environ.get("SPARK_GRAFT_CORPUS_ROWS", "2000000"))
 
 # The full driver-contract surface is benched (every queries() entry, in
 # registration order) so per-round regressions are visible across all
@@ -55,8 +45,6 @@ def _consume(df) -> int:
 def main() -> None:
     import __spark_entry__ as entry_mod
     from preprocessor_spark import get_spark
-    from preprocessor_spark.rollup.tiers import RollupTree
-    from preprocessor_spark.synth import token_sequences
 
     spark = get_spark("bench", master=f"local[{CPUS}]", batch_committer_v2=True)
     spark.sparkContext.setLogLevel("ERROR")
@@ -169,114 +157,6 @@ def main() -> None:
     finally:
         _sh.rmtree(media_dir, ignore_errors=True)
 
-    # primary metric: rolled-up points/sec per retention tier on the
-    # synthetic pre-tokenized corpus (raw → 5m → 1h → 1d chain)
-    corpus = token_sequences(spark, CORPUS_ROWS).cache()
-    n_rows = corpus.count()  # materialize cache so tiers time pure rollup
-    tree = RollupTree(value_col="n_tok")
-    # untimed warm pass over the identical tier plans: JIT-compiles the
-    # generated aggregate stages so the timed chain below measures
-    # steady-state throughput (the operating point of an hours-long job),
-    # not Janino compile time billed to the first tier
-    _w = tree.base_aggregate(corpus, tree.tiers[0])
-    _w.count()
-    for _t in tree.tiers[1:]:
-        _w = tree.reaggregate(_w, _t)
-    _w.count()
-    tier_stats = {}
-    t_all0 = time.perf_counter()
-    prev_rows = n_rows
-    cur = None
-    prev_df = None
-    for i, tier in enumerate(tree.tiers):
-        # persist each tier so the next tier's timing measures ONLY its own
-        # re-aggregation, not a recompute of the whole chain from the facts.
-        # Coalesce the tier output to ~1 partition per 50k buckets before
-        # caching: a 46k-row tier cached as 128 near-empty partitions makes
-        # the NEXT tier's scan 128 tasks of pure scheduling overhead (the
-        # measured 5x coarse-tier efficiency collapse).
-        nparts = max(1, min(int(CPUS), prev_rows // 50_000))
-        cur = (
-            tree.base_aggregate(corpus, tier)
-            if i == 0
-            else tree.reaggregate(prev_df, tier).coalesce(nparts)
-        ).persist()
-        t0 = time.perf_counter()
-        out_rows = _consume(cur)
-        dt = time.perf_counter() - t0
-        tier_stats[tier.name] = {
-            "seconds": round(dt, 3),
-            "in_points": prev_rows,
-            "out_buckets": out_rows,
-            "points_per_sec": round(prev_rows / dt),
-        }
-        prev_rows = out_rows
-        if prev_df is not None:
-            prev_df.unpersist()
-        prev_df = cur
-    rollup_seconds = time.perf_counter() - t_all0
-    if prev_df is not None:
-        prev_df.unpersist()
-
-    # incremental continuous-aggregate refresh: absorb a 1%-of-range
-    # appended delta into the materialized tree (rollup/incremental.py) —
-    # the number that prices daily ingest at 10^12 scale, reported next to
-    # the full-rebuild cost it replaces (speedup_vs_rebuild)
-    from preprocessor_spark.rollup.incremental import IncrementalRollup, with_bucket_day
-
-    t0s, t1s = corpus.agg(
-        F.unix_timestamp(F.min("ts")), F.unix_timestamp(F.max("ts"))
-    ).collect()[0]
-    cut = F.timestamp_seconds(F.lit(int(t1s - (t1s - t0s) * 0.01)))
-    base_facts = corpus.filter(F.col("ts") < cut)
-    delta_facts = corpus.filter(F.col("ts") >= cut).cache()
-    delta_rows = delta_facts.count()
-    inc_root = _tf.mkdtemp(prefix="bench_inc_")
-    try:
-        for tier in tree.tiers:  # untimed setup: materialize the base tree
-            with_bucket_day(tree.base_aggregate(base_facts, tier)).write.mode(
-                "overwrite"
-            ).partitionBy("source", "bucket_day").parquet(
-                os.path.join(inc_root, f"tier_{tier.name}")
-            )
-        # untimed warm refresh on a throwaway copy (same steady-state
-        # convention as every other section: JIT + scan setup amortize to
-        # nothing in a long-lived ingest loop), then the timed refresh
-        # mutates the real tree
-        warm_root = inc_root + "_warm"
-        _sh.rmtree(warm_root, ignore_errors=True)
-        _sh.copytree(inc_root, warm_root)
-        IncrementalRollup(
-            tree, warm_root, partition_cols=["source", "bucket_day"]
-        ).refresh(spark, delta_facts)
-        _sh.rmtree(warm_root, ignore_errors=True)
-        inc = IncrementalRollup(
-            tree, inc_root, partition_cols=["source", "bucket_day"]
-        )
-        t0 = time.perf_counter()
-        inc_metrics = inc.refresh(spark, delta_facts)
-        inc_seconds = time.perf_counter() - t0
-        incremental_stats = {
-            "delta_rows": delta_rows,
-            "delta_fraction": round(delta_rows / max(n_rows, 1), 5),
-            "seconds": round(inc_seconds, 3),
-            "delta_rows_per_sec": round(delta_rows / max(inc_seconds, 1e-9)),
-            "partitions_rewritten": {
-                t.name: inc_metrics[t.name]["partitions_rewritten"]
-                for t in tree.tiers
-            },
-            # at bench corpus sizes the refresh's ~2-4 s fixed cost dominates
-            # and this ratio undersells it; the corpus-growth curve (refresh
-            # flat, rebuild linear) is in BENCH/INCREMENTAL.md
-            "speedup_vs_rebuild_at_bench_scale": round(
-                rollup_seconds / max(inc_seconds, 1e-9), 2
-            ),
-        }
-    finally:
-        _sh.rmtree(inc_root, ignore_errors=True)
-        delta_facts.unpersist()
-    corpus.unpersist()
-
     total = round(sum(timings.values()), 3)
     out = {
         "metric": "headline_queries_total",
@@ -309,81 +189,7 @@ def main() -> None:
             "seconds": mi_sketch_seconds,
             "exact_oracle_shape_seconds": timings.get("mutual_info"),
         },
-        "rollup": {
-            "corpus_rows": n_rows,
-            "total_seconds": round(rollup_seconds, 3),
-            "points_per_sec": round(n_rows / rollup_seconds),
-            "tiers": tier_stats,
-        },
-        "incremental_refresh": incremental_stats,
     }
-    # N-vs-4N scaling evidence recorded in BENCH/ (full protocol + per-tier
-    # table in BENCH/BASELINE.md)
-    scaling_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH", "scaling.json"
-    )
-    if os.path.exists(scaling_path):
-        with open(scaling_path) as f:
-            s = json.load(f)
-        out["scaling_evidence"] = {
-            k: s[k]
-            for k in (
-                "rows",
-                "n_cores",
-                "rollup_throughput_N",
-                "rollup_throughput_4N",
-                "efficiency_rollup",
-                "efficiency_prepare",
-                "efficiency_total",
-                "tier_efficiency",
-                "per_rep_efficiencies",
-                "cpu_work_ratio_4N_over_N",
-            )
-            if k in s
-        }
-        if s.get("phase") == "rollup":
-            # the rollup-phase harness wall is dominated by per-run fixed
-            # overhead (session, resume-read, counts); efficiency_total is
-            # a wall ratio, not whole-job efficiency — see BENCH/BASELINE.md
-            note = "harness wall ratio (rollup-phase mode; overhead-dominated)"
-            whole = []
-            for name, label in (
-                ("scaling_full.json", "full-phase"),
-                ("scaling_standalone.json", "standalone-balanced"),
-            ):
-                p = os.path.join(os.path.dirname(scaling_path), name)
-                if os.path.exists(p):
-                    try:
-                        with open(p) as f:
-                            tot = json.load(f).get("efficiency_total")
-                        if tot is not None:
-                            whole.append(f"{tot} {label}")
-                    except (ValueError, OSError):
-                        pass
-            if whole:
-                note += ". Whole-job efficiency: " + ", ".join(whole)
-            out["scaling_evidence"]["efficiency_total_note"] = note
-    # literal two-cluster-sizes evidence (standalone executor JVMs), when
-    # recorded
-    standalone_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "BENCH",
-        "scaling_standalone.json",
-    )
-    if os.path.exists(standalone_path):
-        with open(standalone_path) as f:
-            s = json.load(f)
-        out["scaling_evidence_standalone"] = {
-            k: s[k]
-            for k in (
-                "n_cores",
-                "rollup_throughput_N",
-                "rollup_throughput_4N",
-                "efficiency_rollup",
-                "per_rep_efficiencies",
-            )
-            if k in s
-        }
     # Full per-query record (round-4 VERDICT item 4): the driver's
     # BENCH_rNN.json captures only the TAIL of stdout, truncating the first
     # ~12 query timings — persist the complete result alongside it so every

@@ -34,8 +34,7 @@ SIMHASH_BITS = 60  # md5_h60 yields 60 usable bits — 4 pigeonhole chunks of 15
 # ------------------------------------------------------------------ exact
 def _content_keys(content: F.Column) -> list[F.Column]:
     """Two INDEPENDENT 64-bit content hashes (xxhash64 + the first 16 hex
-    chars of md5) — the same two-family key the streaming exact dedup uses
-    (streaming/rollup_stream.py): deleting a document on a single 64-bit
+    chars of md5): deleting a document on a single 64-bit
     match is not exact at corpus scale (birthday bound: collision odds
     ~50% at 4e9 docs), two families push it below ~1e-18 at 10^9 docs."""
     return [

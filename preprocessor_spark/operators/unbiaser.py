@@ -36,10 +36,9 @@ if TYPE_CHECKING:
 
 
 def ewm_carry_sums(x, mask, beta, cin_num, cin_den):
-    """Unnormalized EWM numerator/denominator with carry-in — THE shared
-    kernel for the chunked batch EMA (:meth:`Unbiaser._ema_chunked`) and the
-    stateful streaming EMA (streaming/stateful.py), so a numerics fix lands
-    in both at once.
+    """Unnormalized EWM numerator/denominator with carry-in: the kernel of
+    the chunked batch EMA (:meth:`Unbiaser._ema_chunked`), carried from one
+    chunk to the next.
 
     Computed in sub-blocks: the scaled-cumsum trick factors β^t out of the
     prefix sum, so β^-t must stay finite WITHIN a block. The block size is

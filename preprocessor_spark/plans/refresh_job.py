@@ -4,6 +4,9 @@ existing rollup_job output, touching O(|delta|) data.
     spark-submit --py-files engine.zip preprocessor_spark/plans/refresh_job.py \
         --output /path/out --delta-input /path/new_sequences [--input /path/corpus]
 
+``absorb`` runs the steps below on a delta DataFrame. ``main`` is its
+command line; streaming/rollup_stream.py calls it once per micro-batch.
+
 Continues every stage of plans/rollup_job.py on the delta ONLY, under the
 original run's persisted decisions (the production contract: params are
 fitted once and versioned — a param re-fit is a rebuild event, not a
@@ -173,14 +176,41 @@ def main(argv: list[str] | None = None) -> dict:
     args = p.parse_args(argv)
 
     from preprocessor_spark import get_spark
-    from preprocessor_spark.rollup.incremental import load_bounds
-    from preprocessor_spark.session import scoped_conf
 
     spark = get_spark("refresh_job", master=args.master, batch_committer_v2=True)
     spark.sparkContext.setLogLevel("ERROR")
-    out = args.output
-    t_start = time.perf_counter()
+    result = absorb(
+        spark,
+        args.output,
+        spark.read.parquet(args.delta_input),
+        corpus=args.input,
+        blocks=not args.no_blocks,
+    )
+    print(json.dumps(result))
+    return result
 
+
+def absorb(
+    spark,
+    out: str,
+    delta_df: DataFrame,
+    *,
+    corpus: str | None = None,
+    fingerprint: str | None = None,
+    blocks: bool = True,
+) -> dict:
+    """Absorb ``delta_df`` into the rollup_job output ``out``: steps 0–7 of
+    the module docstring. Returns the job's JSON record.
+
+    ``corpus`` is the original corpus's path, read only by the first
+    refresh of ``out`` to bootstrap the carry tail. ``fingerprint`` names
+    the delta in the manifest's double-apply guard; by default it is the
+    delta's content extent (rows and per-source time bounds). ``blocks``
+    re-encodes the touched compression blocks."""
+    from preprocessor_spark.rollup.incremental import load_bounds
+    from preprocessor_spark.session import scoped_conf
+
+    t_start = time.perf_counter()
     split_params_path = os.path.join(out, "split_params.json")
     norm_params_path = os.path.join(out, "norm_params.json")
     bounds_path = os.path.join(out, "series_bounds.json")
@@ -202,10 +232,28 @@ def main(argv: list[str] | None = None) -> dict:
         spark,
         {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": 1},
     ):
-        return _refresh(spark, args, out, load_bounds(bounds_path), t_start)
+        return _refresh(
+            spark,
+            out,
+            delta_df,
+            corpus,
+            fingerprint,
+            blocks,
+            load_bounds(bounds_path),
+            t_start,
+        )
 
 
-def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> dict:
+def _refresh(
+    spark,
+    out: str,
+    delta: DataFrame,
+    corpus: str | None,
+    fingerprint: str | None,
+    blocks: bool,
+    old_bounds: list[tuple],
+    t_start: float,
+) -> dict:
     from preprocessor_spark.operators import Normalizer, TemporalSplitter, Unbiaser
     from preprocessor_spark.params import load_params
     from preprocessor_spark.rollup.checkpoint import ROWS_PER_WRITE_TASK, Manifest
@@ -225,15 +273,14 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
     boundaries = load_params(os.path.join(out, "split_params.json")).params["boundaries"]
     nparams = load_params(os.path.join(out, "norm_params.json"))
 
-    delta = spark.read.parquet(args.delta_input)
     tail_path = os.path.join(out, TAIL_NAME)
     tail_bootstrap = not os.path.exists(tail_path)
     if not tail_bootstrap:
         # the tail holds earlier deltas' rows: the delta's schema is its own
         tail_raw = spark.read.schema(delta.select(*TAIL_COLS).schema).parquet(tail_path)
-    elif args.input:
+    elif corpus:
         tail_raw = source_tails(
-            spark.read.parquet(args.input).select(*TAIL_COLS),
+            spark.read.parquet(corpus).select(*TAIL_COLS),
             ["source"],
             "ts",
             ["doc_id"],
@@ -246,41 +293,43 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
     extent = [r[:4] for r in profile if r[1] > 0]
     delta_rows = sum(r[1] for r in extent)
     if delta_rows == 0:
-        result = {
+        return {
             "job": "refresh_job",
             "delta_rows": 0,
             "total_seconds": 0.0,
             "class_archive": class_archive(spark),
         }
-        print(json.dumps(result))
-        return result
 
     # Double-apply guard: the prepared append and the tier merge are both
     # non-idempotent, so applying the same delta twice would double-count
     # every touched bucket. The delta is fingerprinted by content-extent
-    # (rows + per-source time bounds); a `started` mark lands in the
-    # manifest before the first write and a `refresh_delta` completion mark
-    # after the last — so a rerun is refused BOTH after full success and
-    # after a mid-job crash (started-without-completed means partially
-    # applied, and unlike the tier jobs there is no per-partition unit to
-    # resume idempotently; recovery is restoring the output dir, or
-    # rebuilding via rollup_job). At deployment the whole refresh is one
-    # Iceberg transaction and this guard becomes the commit's snapshot
-    # check. The streaming path (stream_refresh_tiers) carries the same
-    # guard keyed on micro-batch epoch ids.
-    fingerprint = hashlib.sha256(
-        json.dumps([[r[0], int(r[1]), int(r[2]), int(r[3])] for r in extent]).encode()
-    ).hexdigest()[:16]
+    # (rows + per-source time bounds) unless the caller names it; a
+    # `started` mark lands in the manifest before the first write and a
+    # `refresh_delta` completion mark after the last — so a rerun is
+    # refused BOTH after full success and after a mid-job crash
+    # (started-without-completed means partially applied, and unlike the
+    # tier jobs there is no per-partition unit to resume idempotently;
+    # recovery is restoring the output dir, or rebuilding via rollup_job).
+    # At deployment the whole refresh is one Iceberg transaction and this
+    # guard becomes the commit's snapshot check. The streaming refresh
+    # names each micro-batch by (checkpoint, epoch id) and passes through
+    # this same guard.
+    if fingerprint is None:
+        fingerprint = hashlib.sha256(
+            json.dumps(
+                [[r[0], int(r[1]), int(r[2]), int(r[3])] for r in extent]
+            ).encode()
+        ).hexdigest()[:16]
     if fingerprint in manifest.completed("refresh_delta"):
         raise ValueError(
-            f"delta {args.delta_input} (fingerprint {fingerprint}) was "
-            "already absorbed by a previous refresh — re-applying would "
+            f"the delta (fingerprint {fingerprint}) was already absorbed "
+            "by a previous refresh — re-applying would "
             "double-count every touched bucket"
         )
     if fingerprint in manifest.completed("refresh_delta_started"):
         raise ValueError(
-            f"a previous refresh of delta {args.delta_input} (fingerprint "
-            f"{fingerprint}) started but did not complete — the output may "
+            f"a previous refresh of the delta (fingerprint {fingerprint}) "
+            "started but did not complete — the output may "
             "be partially refreshed and a blind rerun would double-apply "
             "the absorbed portion; restore the output dir from before that "
             "run (or rebuild with rollup_job) before retrying"
@@ -304,7 +353,8 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
         )
     if tail_raw is None:
         raise FileNotFoundError(
-            "first refresh: pass --input (original corpus) to bootstrap "
+            "first refresh: pass the original corpus (--input, or a "
+            "stream's corpus=) to bootstrap "
             f"the unbias carry tail (persisted afterwards at {tail_path})"
         )
     # Tail-at-edge validation: the carry rows MUST be the last rows of the
@@ -336,7 +386,7 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
     # not read back.
     blocks_path = os.path.join(out, "blocks_" + DEFAULT_TIERS[0].name)
     old_layout = sorted(glob.glob(os.path.join(blocks_path, "source=*", "*.parquet")))
-    if old_layout and not args.no_blocks:
+    if old_layout and blocks:
         raise ValueError(
             f"{blocks_path} holds blocks in the layout before (source, block) "
             f"partitions (e.g. {old_layout[0]}); a refresh re-encodes single "
@@ -441,7 +491,7 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
     # on the driver: at most BLOCK_BUCKETS rows per touched block, where a
     # Python worker's cold start would cost seconds
     compress_seconds = encode_rows = blocks_written = None
-    if not args.no_blocks:
+    if blocks:
         t0 = time.perf_counter()
         tier0 = spark.read.schema(stored_tier_schema([delta.schema["source"]])).parquet(
             os.path.join(out, f"tier_{DEFAULT_TIERS[0].name}")
@@ -482,7 +532,7 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
     shutil.rmtree(bak_tail, ignore_errors=True)
     manifest.mark("refresh_delta", fingerprint, rows=delta_rows)
     total = round(time.perf_counter() - t_start, 3)
-    result = {
+    return {
         "job": "refresh_job",
         "delta_rows": delta_rows,
         "tail_bootstrap": tail_bootstrap,
@@ -497,8 +547,6 @@ def _refresh(spark, args, out: str, old_bounds: list[tuple], t_start: float) -> 
         # whether this run paid the JVM's cold class loading (session.py)
         "class_archive": class_archive(spark),
     }
-    print(json.dumps(result))
-    return result
 
 
 if __name__ == "__main__":

@@ -31,21 +31,23 @@ from pyspark.sql import functions as F
 
 
 class Manifest:
-    """Append-only JSONL manifest of completed (stage, partition) units."""
+    """Append-only JSONL manifest of completed (stage, partition) units.
+
+    A crash inside :meth:`mark` can leave a torn last line: no trailing
+    newline, and not valid JSON. Readers skip it, so the unit it was
+    marking reads as not done, and the next ``mark`` cuts it off before
+    appending. An unparseable line anywhere else still raises."""
 
     def __init__(self, path: str):
         self.path = path
         os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
 
     def completed(self, stage: str) -> set[str]:
-        done = set()
-        if os.path.exists(self.path):
-            with open(self.path) as f:
-                for line in f:
-                    r = json.loads(line)
-                    if r["stage"] == stage and r["status"] == "complete":
-                        done.add(r["partition"])
-        return done
+        return {
+            r["partition"]
+            for r in self.lineage()
+            if r["stage"] == stage and r["status"] == "complete"
+        }
 
     def mark(self, stage: str, partition: str, **metrics) -> None:
         rec = {
@@ -55,16 +57,40 @@ class Manifest:
             "ts": time.time(),
             **metrics,
         }
-        with open(self.path, "a") as f:
-            f.write(json.dumps(rec) + "\n")
+        with open(self.path, "ab+") as f:
+            end = f.seek(0, os.SEEK_END)
+            if end:
+                f.seek(end - 1)
+                if f.read(1) != b"\n":
+                    f.seek(0)
+                    _, torn = _parse_lines(f.read())
+                    if torn is None:  # a whole record that lost its newline
+                        f.write(b"\n")
+                    else:
+                        f.truncate(torn)
+            f.write((json.dumps(rec) + "\n").encode())
             f.flush()
             os.fsync(f.fileno())
 
     def lineage(self) -> list[dict]:
         if not os.path.exists(self.path):
             return []
-        with open(self.path) as f:
-            return [json.loads(line) for line in f]
+        with open(self.path, "rb") as f:
+            return _parse_lines(f.read())[0]
+
+
+def _parse_lines(data: bytes) -> tuple[list[dict], int | None]:
+    """The records of a JSONL file, and the offset where a torn last line
+    (no newline, not JSON) starts, or None."""
+    lines = data.split(b"\n")
+    last = lines.pop()  # empty when the file ends with a newline
+    records = [json.loads(line) for line in lines]
+    if last:
+        try:
+            records.append(json.loads(last))
+        except ValueError:
+            return records, len(data) - len(last)
+    return records, None
 
 
 ROWS_PER_WRITE_TASK = 500_000  # ~25-30 MB of tier rows per output task

@@ -39,9 +39,9 @@ ALGEBRAIC = ("n_points", "sum_v", "sum_sq", "min_v", "max_v")
 
 def algebraic_aggs(value_col):
     """The five partial-aggregable statistics over raw facts — THE single
-    definition shared by every batch aggregate here and the streaming tier
-    (streaming/rollup_stream.py), so batch/stream interchangeability cannot
-    drift on a missed edit. ``n_points`` counts NON-NULL values (the
+    definition shared by every aggregate here, so the tiers and the
+    incremental refresh's partials cannot drift on a missed edit.
+    ``n_points`` counts NON-NULL values (the
     pandas/reference semantic): sum_v/sum_sq/min/max already skip nulls,
     so an all-rows count would silently skew the derived mean/std whenever
     the value column has nulls, and would disagree with the spine-fused

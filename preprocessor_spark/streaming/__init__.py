@@ -1,6 +1,1 @@
-from preprocessor_spark.streaming.rollup_stream import (  # noqa: F401
-    stream_corpus_source,
-    stream_dedup_exact,
-    stream_tier,
-    stream_tier_to_sink,
-)
+"""Streaming refresh of a rollup_job output (rollup_stream.py)."""

@@ -1,124 +1,39 @@
-"""Streaming ingest for the rollup tree — Structured Streaming continuous
-aggregates.
+"""Streaming refresh of a rollup_job output: each Structured Streaming
+micro-batch is one appended delta, absorbed by plans/refresh_job.absorb.
+So a streamed tree gets what a batch refresh gives: the late-data and
+stale-tail refusals, the z-score and MA-unbias continuation, the tier
+merge, the block re-encode and the manifest's double-apply guard.
 
-The reference is strictly batch (SURVEY §2.9); the target engine's
-continuous aggregates run as incremental batch over partition manifests.
-This module is the OPTIONAL streaming ingest path: the same
-``groupBy(source, window(ts, tier))`` aggregate under a watermark, so late
-sequences update their bucket until the watermark closes it. The aggregate
-expressions are shared with the batch tree (tiers.py) — one definition,
-two runners, identical rolled-up points once the stream drains
-(verified in tests via trigger(availableNow=True)).
+The contract is the refresh job's: the tree comes from rollup_job, the
+micro-batches are append-only per source (a row before its series' edge
+is refused), and the first micro-batch needs ``corpus`` (the build's input)
+to bootstrap the MA carry tail, like the job's ``--input``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import hashlib
+import os
+
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from preprocessor_spark.rollup.tiers import ALGEBRAIC, TierSpec, algebraic_aggs
-
-
-def stream_corpus_source(
-    spark: SparkSession, path: str, schema=None
-) -> DataFrame:
-    """File-source stream over a token_sequences parquet directory (each new
-    file = one micro-batch of sequences). At deployment this is the Kafka /
-    Iceberg-incremental source; the aggregate below is source-agnostic."""
-    reader = spark.readStream
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-    return reader.schema(schema).parquet(path)
-
-
-def stream_tier(
-    stream: DataFrame,
-    tier: TierSpec,
-    value_col: str = "n_tok",
-    series_cols: list[str] | None = None,
-    watermark: str = "1 hour",
-    time_col: str = "ts",
-) -> DataFrame:
-    """Windowed continuous aggregate with late-data watermark — identical
-    algebraic stats to RollupTree.base_aggregate so tier outputs are
-    interchangeable between the batch and streaming runners.
-
-    The groupBy keys on the full ``window`` STRUCT (start projected to
-    bucket_start only after the agg): extracting ``['start']`` inside the
-    key would strip the event-time metadata the watermark needs, so state
-    for closed windows would never be evicted and append-mode draining
-    would be rejected by the analyzer."""
-    series_cols = series_cols if series_cols is not None else ["source"]
-    v = F.col(value_col).cast("double")
-    return (
-        stream.withWatermark(time_col, watermark)
-        .groupBy(*series_cols, F.window(time_col, tier.duration))
-        .agg(*algebraic_aggs(v))
-        .select(
-            *series_cols,
-            F.col("window")["start"].alias("bucket_start"),
-            *ALGEBRAIC,
-        )
-    )
-
-
-def stream_tier_to_sink(
-    tier_df: DataFrame,
-    out_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Drain the streaming tier to a parquet sink. availableNow processes
-    everything currently in the source then stops — the incremental-batch
-    execution mode (and what tests use); continuous deployments drop the
-    flag. Complete-mode parquet isn't supported by Spark, so the sink uses
-    foreachBatch overwrite of the aggregate snapshot — at scale this is an
-    Iceberg MERGE keyed on (series, bucket_start)."""
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_path)
-
-    writer = (
-        tier_df.writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+from preprocessor_spark.plans import refresh_job
+from preprocessor_spark.rollup.checkpoint import Manifest
 
 
 def stream_refresh_tiers(
     stream: DataFrame,
-    inc,
+    out: str,
     checkpoint: str,
+    corpus: str | None = None,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Continuous maintenance of the BATCH tier store: each micro-batch of
-    raw facts merges into the on-disk tree via
-    rollup/incremental.IncrementalRollup — the production
-    continuous-aggregate pattern (Kafka → micro-batch → MERGE into the
-    aggregate table), and the state-free alternative to the complete-mode
-    snapshot sink above: no aggregation state lives in the stream at all,
-    so state size is zero regardless of corpus age, and the tiers the
-    stream maintains are byte-compatible with (indeed, the same files as)
-    the ones plans/rollup_job.py builds.
-
-    Late interior data is fine here — the tier merge is order-free algebra
-    (contrast plans/refresh_job.py, whose MA-unbias seam demands
-    append-only order; a deployment needing unbiased values streams the
-    PREPARED series through this sink instead of raw facts).
-
-    Replay protection: foreachBatch is at-least-once on failure recovery,
-    and an algebraic merge is NOT idempotent (re-merging a batch double
-    counts) — applied epoch ids are recorded in a sidecar under the tree
-    root and replayed epochs are skipped. The record is written after the
-    merge's directory moves, so the crash window between the two re-merges
-    at most one batch; at deployment the merge and the epoch mark are one
-    atomic Iceberg commit."""
+    """Absorb every micro-batch of ``stream`` into the rollup_job output
+    ``out``. ``available_now`` processes what the source holds and then
+    stops; a continuous deployment drops it."""
     writer = stream.writeStream.foreachBatch(
-        make_refresh_batch(inc, run_key=_checkpoint_key(checkpoint))
+        make_refresh_batch(out, _checkpoint_key(checkpoint), corpus)
     ).option("checkpointLocation", checkpoint)
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -127,105 +42,45 @@ def stream_refresh_tiers(
 
 def _checkpoint_key(checkpoint: str) -> str:
     """Stable identity of a streaming run's checkpoint: epoch ids restart
-    at 0 for every NEW checkpoint, so replay records must be scoped to the
-    checkpoint or a later query against the same tree root would silently
-    SKIP its first batches (epoch 0..k 'already applied' — data loss, the
-    opposite failure of the double-count the sidecar guards against).
-    Restarts from the SAME checkpoint continue its epoch sequence, so the
-    same key keeps protecting against true replays.
+    at 0 for every NEW checkpoint, so a micro-batch's fingerprint must be
+    scoped to the checkpoint, or a later query against the same tree
+    would be refused its first batches as already absorbed. Restarts from
+    the SAME checkpoint continue its epoch sequence, so the same key keeps
+    recognising true replays.
 
     URI locations (hdfs://, s3a://, file:// — the normal cluster forms) are
     keyed verbatim: os.path.abspath would prepend the DRIVER'S cwd, which
     differs per container, so a restart of the same checkpoint would get a
-    different key and the replay guard would be silently defeated. Only
-    bare local paths are absolutized (a relative path from a different cwd
-    IS a different directory)."""
-    import hashlib
-    import os
-
+    different key and a replay would be absorbed twice. Only bare local
+    paths are absolutized (a relative path from a different cwd IS a
+    different directory)."""
     ident = checkpoint if "://" in checkpoint else os.path.abspath(checkpoint)
     return hashlib.md5(ident.rstrip("/").encode()).hexdigest()[:12]
 
 
-def make_refresh_batch(inc, run_key: str | None = None):
-    """The foreachBatch callback behind :func:`stream_refresh_tiers`,
-    exposed so its epoch-replay bookkeeping is directly testable.
-    ``run_key`` scopes the applied-epoch records to one checkpoint
-    (see :func:`_checkpoint_key`); records written before the key existed
-    (no ``run`` field) match only run-less callers. Honoring them for ANY
-    run was considered and rejected: a legacy sidecar would then suppress
-    the first epochs of every NEW checkpoint against the same tree root
-    forever (unbounded silent data loss), whereas the cost of scoping is
-    that a keyed restart over a legacy sidecar may re-merge AT MOST the one
-    epoch that was in flight at upgrade time (the same single-batch crash
-    window the sidecar already documents)."""
-    import json
-    import os
+def make_refresh_batch(out: str, run_key: str, corpus: str | None = None):
+    """The foreachBatch callback behind :func:`stream_refresh_tiers`:
+    micro-batch ``epoch_id`` is absorbed under the fingerprint
+    ``f"{run_key}:{epoch_id}"``.
 
-    applied_path = os.path.join(inc.root, "refresh_epochs.jsonl")
+    foreachBatch is at-least-once: after a crash between the manifest's
+    completion mark and the checkpoint's commit, Spark runs the epoch
+    again. A completed epoch therefore returns without work; raising would
+    stop the query at every restart. An epoch that started but never
+    completed may be partly in the tree, and ``absorb``'s own guard
+    refuses it."""
+    manifest = Manifest(os.path.join(out, "manifest.jsonl"))
 
     def refresh_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        done: set[tuple] = set()
-        if os.path.exists(applied_path):
-            with open(applied_path) as f:
-                for line in f:
-                    rec = json.loads(line)
-                    done.add((rec.get("run"), rec["epoch"]))
-        if (run_key, int(epoch_id)) in done:
+        fingerprint = f"{run_key}:{epoch_id}"
+        if fingerprint in manifest.completed("refresh_delta"):
             return
-        metrics = inc.refresh(batch_df.sparkSession, batch_df)
-        with open(applied_path, "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "run": run_key,
-                        "epoch": int(epoch_id),
-                        "seconds": metrics["total_seconds"],
-                    }
-                )
-                + "\n"
-            )
-            f.flush()
-            os.fsync(f.fileno())
+        refresh_job.absorb(
+            batch_df.sparkSession,
+            out,
+            batch_df,
+            corpus=corpus,
+            fingerprint=fingerprint,
+        )
 
     return refresh_batch
-
-
-def stream_dedup_exact(
-    stream: DataFrame,
-    time_col: str = "ts",
-    key_cols: list[str] | None = None,
-    text_col: str = "text",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact dedup for a document/sequence ingest: keep the first
-    arrival per content key within the watermark horizon.
-
-    The dedup key is a pair of independent content hashes — xxhash64 plus
-    the first 8 bytes of md5 — never the payload itself, so the state store
-    holds 16 bytes per document.  One 64-bit hash alone is NOT exact at the
-    corpus scales this engine targets (a billion docs makes a collision
-    likely by the birthday bound, silently dropping a distinct document);
-    two independent 64-bit families push the collision probability below
-    ~1e-18 at 10^9 keys.  The watermark on the event-time column lets
-    ``dropDuplicatesWithinWatermark`` expire state (the time column itself
-    is NOT part of the key): without the bound, exact-dedup state grows with
-    the corpus forever; with it, state is bounded by the late-data horizon,
-    which is the right contract for an append-only ingest where replays
-    arrive close to the original (cross-horizon dedup belongs to the batch
-    pass — functions/dedup.py — run over the compacted table).
-
-    ``key_cols`` overrides the content hashes with explicit key columns.
-    """
-    keyed = (
-        stream
-        if key_cols
-        else stream.withColumn("__dk", F.xxhash64(text_col)).withColumn(
-            "__dk2", F.conv(F.substring(F.md5(text_col), 1, 16), 16, 10)
-        )
-    )
-    keys = list(key_cols) if key_cols else ["__dk", "__dk2"]
-    out = keyed.withWatermark(time_col, watermark).dropDuplicatesWithinWatermark(
-        keys
-    )
-    return out.drop("__dk", "__dk2") if not key_cols else out

@@ -1,5 +1,4 @@
-"""PreprocessorCore facade (EP3 parity), stage registry (§2.10), and the
-streaming rollup path (batch/stream tier equivalence)."""
+"""PreprocessorCore facade (EP3 parity) and stage registry (§2.10)."""
 
 import numpy as np
 import pandas as pd
@@ -94,108 +93,6 @@ def test_registry_topological_order_and_cycles():
     reg2.register("y", lambda df: df, depends_on=["x"])
     with pytest.raises(ValueError, match="cycle"):
         reg2.load_order()
-
-
-def test_streaming_tier_equals_batch_tier(spark, tmp_path):
-    from preprocessor_spark.rollup.tiers import RollupTree, TierSpec
-    from preprocessor_spark.streaming import (
-        stream_corpus_source,
-        stream_tier,
-        stream_tier_to_sink,
-    )
-    from preprocessor_spark.synth import token_sequences
-
-    corpus_path = str(tmp_path / "corpus")
-    token_sequences(spark, 20000).write.parquet(corpus_path)
-
-    tier = TierSpec("1h", "1 hour")
-    stream = stream_corpus_source(spark, corpus_path)
-    assert stream.isStreaming
-    agg = stream_tier(stream, tier, value_col="n_tok", series_cols=["source"])
-    q = stream_tier_to_sink(
-        agg, str(tmp_path / "tier_out"), str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-
-    got = (
-        spark.read.parquet(str(tmp_path / "tier_out"))
-        .toPandas()
-        .sort_values(["source", "bucket_start"])
-        .reset_index(drop=True)
-    )
-    batch = (
-        RollupTree(value_col="n_tok")
-        .base_aggregate(spark.read.parquet(corpus_path), tier)
-        .toPandas()
-        .sort_values(["source", "bucket_start"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(batch)
-    assert (got["n_points"].values == batch["n_points"].values).all()
-    assert np.allclose(got["sum_v"].values, batch["sum_v"].values)
-
-
-def test_stateful_streaming_ema_matches_batch(spark, tmp_path):
-    """applyInPandasWithState EMA over multi-file micro-batches == batch EMA
-    (state carries (num, den) across batches; files arrive time-ordered)."""
-    from preprocessor_spark.operators.unbiaser import Unbiaser
-    from preprocessor_spark.streaming.stateful import stream_ema_unbias
-    from preprocessor_spark.synth import token_sequences
-
-    corpus = token_sequences(spark, 4000).withColumn(
-        "v", F.col("n_tok").cast("double")
-    )
-    # write time-ordered file slices so maxFilesPerTrigger yields real
-    # multi-batch state carry
-    src_dir = str(tmp_path / "stream_src")
-    pdf = corpus.toPandas().sort_values(["ts", "doc_id"])
-    n = len(pdf)
-    for i, lo in enumerate(range(0, n, n // 4 + 1)):
-        spark.createDataFrame(pdf.iloc[lo : lo + n // 4 + 1]).coalesce(1).write.mode(
-            "append"
-        ).parquet(src_dir)
-
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    out = stream_ema_unbias(stream, value_col="v")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", str(tmp_path / "stream_out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = (
-        spark.read.parquet(str(tmp_path / "stream_out"))
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    batch = (
-        Unbiaser(
-            method="ema",
-            ema_alpha=0.1,
-            series_cols=["source"],
-            value_cols=["v"],
-            tiebreak_cols=["doc_id"],
-        )
-        .transform(corpus)
-        .select("doc_id", F.col("v").alias("residual"))
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(batch)
-    np.testing.assert_allclose(
-        got["residual"].values, batch["residual"].values, rtol=1e-9, atol=1e-12
-    )
 
 
 def test_validation_rules_gate_load(spark):
@@ -317,47 +214,6 @@ def test_content_format_sniffing(spark, tmp_path):
         detect_format(str(bad))
 
 
-def test_streaming_dedup_matches_batch(spark, tmp_path):
-    """Watermarked streaming exact-dedup: first arrival per content key
-    survives; stream output matches the batch dedup on the same corpus."""
-    from preprocessor_spark.functions.dedup import dedup_exact
-    from preprocessor_spark.streaming import stream_dedup_exact
-
-    n_unique = 80
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [f"d{i:05d}" for i in range(3 * n_unique)],
-            "text": [f"document body {i % n_unique}" for i in range(3 * n_unique)],
-            "ts": pd.date_range("2024-05-01", periods=3 * n_unique, freq="s"),
-        }
-    )
-    src = str(tmp_path / "docs")
-    spark.createDataFrame(pdf).write.parquet(src)
-
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    dd = stream_dedup_exact(stream, time_col="ts", watermark="10 minutes")
-    out, ck = str(tmp_path / "dedup_out"), str(tmp_path / "dedup_ck")
-    q = (
-        dd.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    assert got.count() == n_unique
-    assert got.select("text").distinct().count() == n_unique
-    # same surviving CONTENT as the batch dedup (which representative id
-    # survives differs: batch keeps lowest id, a micro-batch has no
-    # intra-batch arrival order)
-    batch = dedup_exact(spark.read.parquet(src))
-    assert {r["text"] for r in got.select("text").collect()} == {
-        r["text"] for r in batch.select("text").collect()
-    }
-
-
 def test_duplicate_depends_on_is_not_a_cycle():
     """A duplicate name in depends_on must not inflate the topo-sort
     in-degree into a spurious 'dependency cycle' error."""
@@ -446,34 +302,6 @@ def test_core_reload_invalidates_fitted_params(spark, raw_pdf):
         .collect()[0][0]
     )
     assert abs(mu) < 0.1  # normalized with the NEW stats, not the old
-
-
-def test_stream_tier_supports_append_mode(spark, tmp_path):
-    """The groupBy must key on the full window struct: extracting
-    window['start'] inside the key strips the event-time metadata, so
-    append-mode draining was rejected by the analyzer and watermark state
-    was never evicted."""
-    from preprocessor_spark.rollup.tiers import TierSpec
-    from preprocessor_spark.streaming import stream_tier
-    from preprocessor_spark.synth import token_sequences
-
-    src = str(tmp_path / "src")
-    token_sequences(spark, 500).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    agg = stream_tier(stream, TierSpec("5m", "5 minutes"), value_col="n_tok")
-    assert set(agg.columns) >= {"source", "bucket_start", "n_points", "sum_v"}
-    out = str(tmp_path / "out")
-    q = (
-        agg.writeStream.outputMode("append")  # analyzer accepts: watermark intact
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
 
 
 def test_registry_empty_wanted_is_empty_plan_and_unknown_names_are_clear():

@@ -3,20 +3,26 @@ refreshing a rollup_job output with appended deltas must reproduce the
 tiers AND the prepared (z-scored + MA-unbiased) series of a full-corpus
 rollup_job run under the same persisted params — the MA seam continuation
 carries exactly, two chained refreshes work from the persisted tail, and
-interior late data is refused (order-dependent stage)."""
+interior late data is refused (order-dependent stage). The streaming
+refresh (streaming/rollup_stream.py) absorbs each micro-batch through the
+same job and must leave the same tree."""
 
-import contextlib
+import glob
 import json
 import os
 import shutil
+import time
 
 import numpy as np
 import pytest
+from conftest import no_python_worker
 from pyspark.sql import functions as F
 
 from preprocessor_spark.plans import refresh_job, rollup_job
+from preprocessor_spark.rollup.checkpoint import Manifest
 from preprocessor_spark.rollup.tiers import DEFAULT_TIERS
 from preprocessor_spark.session import scoped_conf
+from preprocessor_spark.streaming import rollup_stream
 from preprocessor_spark.synth import token_sequences
 
 TIER_COLS = ["source", "bucket_start", "n_points", "sum_v", "sum_sq", "min_v", "max_v"]
@@ -72,11 +78,10 @@ def _tier_pdf(spark, root, name):
     )
 
 
-def test_refreshed_tiers_equal_full_run(spark, setup):
-    _, out, truth, _ = setup
+def _assert_tiers_equal(spark, root, expected_root):
     for tier in DEFAULT_TIERS:
-        got = _tier_pdf(spark, out, tier.name)
-        exp = _tier_pdf(spark, truth, tier.name)
+        got = _tier_pdf(spark, root, tier.name)
+        exp = _tier_pdf(spark, expected_root, tier.name)
         assert len(got) == len(exp), f"{tier.name}: {len(got)} vs {len(exp)} rows"
         assert (got["source"].values == exp["source"].values).all()
         assert (got["bucket_start"].values == exp["bucket_start"].values).all()
@@ -89,26 +94,33 @@ def test_refreshed_tiers_equal_full_run(spark, setup):
             assert np.abs(a[m] - b[m]).max() < 1e-9, f"{tier.name}.{c} diverged"
 
 
-def test_prepared_series_carries_ma_seam_exactly(spark, setup):
-    """The appended prepared rows must equal the full run's prepared rows —
-    i.e. the carry tail reproduced each source's trailing window across
-    both refresh seams."""
-    _, out, truth, _ = setup
-
+def _assert_prepared_equal(spark, root, expected_root):
     def prepared(root):
-        pdf = (
+        return (
             spark.read.parquet(os.path.join(root, "prepared"))
             .toPandas()
             .sort_values(["source", "tss", "n_tok_z"])
             .reset_index(drop=True)
         )
-        return pdf
 
-    got, exp = prepared(out), prepared(truth)
+    got, exp = prepared(root), prepared(expected_root)
     assert len(got) == len(exp)
     assert (got["source"].values == exp["source"].values).all()
     assert (got["tss"].values == exp["tss"].values).all()
     assert np.abs(got["n_tok_z"].values - exp["n_tok_z"].values).max() < 1e-9
+
+
+def test_refreshed_tiers_equal_full_run(spark, setup):
+    _, out, truth, _ = setup
+    _assert_tiers_equal(spark, out, truth)
+
+
+def test_prepared_series_carries_ma_seam_exactly(spark, setup):
+    """The appended prepared rows must equal the full run's prepared rows —
+    i.e. the carry tail reproduced each source's trailing window across
+    both refresh seams."""
+    _, out, truth, _ = setup
+    _assert_prepared_equal(spark, out, truth)
 
 
 def test_refresh_metrics_and_lineage(spark, setup):
@@ -201,33 +213,6 @@ def test_tail_off_series_edge_is_refused(spark, setup, tmp_path):
 REFRESH_SPARK_JOBS = 7
 
 
-@contextlib.contextmanager
-def _no_python_worker(spark):
-    """Make every API that runs Python on the executors raise: grouped and
-    mapped pandas/Arrow functions, Python RDDs and Python UDFs."""
-    from pyspark import SparkContext
-    from pyspark.sql import functions
-    from pyspark.sql.group import GroupedData
-
-    def refuse(name):
-        def raiser(*_a, **_k):
-            raise AssertionError(f"the refresh started a Python worker via {name}")
-
-        return raiser
-
-    frame_cls = type(spark.range(0))
-    with pytest.MonkeyPatch.context() as mp:
-        for owner, names in (
-            (GroupedData, ("applyInPandas", "applyInArrow")),
-            (frame_cls, ("mapInPandas", "mapInArrow")),
-            (SparkContext, ("parallelize",)),
-            (functions, ("udf", "pandas_udf")),
-        ):
-            for name in names:
-                mp.setattr(owner, name, refuse(f"{owner.__name__}.{name}"))
-        yield
-
-
 def _block_files(root):
     """{path relative to the blocks dir: (bytes, mtime)} of every file."""
     out = {}
@@ -282,7 +267,7 @@ def far_refresh(spark, setup, tmp_path_factory):
     sc = spark.sparkContext
     sc.setJobGroup("far_refresh", "refresh_job.main")
     try:
-        with _no_python_worker(spark), scoped_conf(spark, {OVERWRITE_MODE: "static"}):
+        with no_python_worker(spark), scoped_conf(spark, {OVERWRITE_MODE: "static"}):
             result = refresh_job.main(["--output", tree, "--delta-input", delta])
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -320,7 +305,7 @@ def test_refresh_starts_no_python_worker(spark, far_refresh):
     """The fixture's refresh ran with every Python-worker API refused: the
     refusal must be live (a worker's cold start is seconds of a refresh)."""
     assert far_refresh[4]["delta_rows"] > 0
-    with _no_python_worker(spark), pytest.raises(AssertionError, match="Python"):
+    with no_python_worker(spark), pytest.raises(AssertionError, match="Python"):
         spark.range(1).groupBy("id").applyInPandas(lambda pdf: pdf, "id long")
 
 
@@ -360,3 +345,131 @@ def test_refresh_refuses_source_only_block_layout(spark, setup, tmp_path):
     with pytest.raises(ValueError, match="rebuild with rollup_job"):
         refresh_job.main(["--output", tree, "--delta-input", delta])
     assert _block_files(tree) == before
+
+
+def _refresh_marks(tree):
+    return [
+        r["partition"]
+        for r in Manifest(os.path.join(tree, "manifest.jsonl")).lineage()
+        if r["stage"] == "refresh_delta"
+    ]
+
+
+@pytest.fixture(scope="module")
+def streamed(spark, setup, tmp_path_factory):
+    """A fresh rollup_job build of the setup's base, refreshed by a stream
+    of the setup's two deltas, one file and so one micro-batch each."""
+    paths, _, _, _ = setup
+    work = str(tmp_path_factory.mktemp("streamed"))
+    tree = os.path.join(work, "tree")
+    rollup_job.main(["--input", paths["base"], "--output", tree])
+    src = os.path.join(work, "src")
+    os.makedirs(src)
+    now = time.time()
+    for i, name in enumerate(("delta1", "delta2")):
+        staged = os.path.join(work, name)
+        spark.read.parquet(paths[name]).coalesce(1).write.parquet(staged)
+        (part,) = glob.glob(os.path.join(staged, "part-*.parquet"))
+        dest = os.path.join(src, f"{i}.parquet")
+        shutil.move(part, dest)
+        # the file source takes files oldest first
+        os.utime(dest, (now + i, now + i))
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    checkpoint = os.path.join(work, "checkpoint")
+    query = rollup_stream.stream_refresh_tiers(
+        stream, tree, checkpoint, corpus=paths["base"]
+    )
+    try:
+        assert query.awaitTermination(300), "the stream did not drain"
+    finally:
+        query.stop()
+    return tree, checkpoint
+
+
+def test_stream_leaves_the_tree_of_the_refresh_job(spark, setup, streamed):
+    """Two micro-batches leave the tree that refresh_job leaves after the
+    same two deltas: tiers, blocks, prepared series, carry tail, series
+    bounds, and one completion mark per micro-batch."""
+    _, out, _, _ = setup
+    tree, checkpoint = streamed
+    _assert_tiers_equal(spark, tree, out)
+    _assert_blocks_decode_to_tier(spark, tree)
+    _assert_prepared_equal(spark, tree, out)
+
+    def tail(root):
+        return (
+            spark.read.parquet(os.path.join(root, refresh_job.TAIL_NAME))
+            .toPandas()
+            .sort_values(["source", "ts", "doc_id"])
+            .reset_index(drop=True)
+        )
+
+    assert tail(tree).equals(tail(out))
+
+    def bounds(root):
+        with open(os.path.join(root, "series_bounds.json")) as f:
+            return json.load(f)
+
+    assert bounds(tree) == bounds(out)
+    key = rollup_stream._checkpoint_key(checkpoint)
+    assert _refresh_marks(tree) == [f"{key}:0", f"{key}:1"]
+
+
+def test_stream_replay_of_a_completed_epoch_is_a_no_op(
+    spark, setup, streamed, monkeypatch
+):
+    """foreachBatch is at-least-once: an epoch replayed after its completion
+    mark returns without calling the refresh, and changes no file."""
+    paths, _, _, _ = setup
+    tree, checkpoint = streamed
+    calls = []
+    monkeypatch.setattr(refresh_job, "absorb", lambda *a, **k: calls.append(a))
+    before = _block_files(tree)
+    key = rollup_stream._checkpoint_key(checkpoint)
+    batch = rollup_stream.make_refresh_batch(tree, key)
+    batch(spark.read.parquet(paths["delta2"]), 1)
+    assert calls == []
+    assert _block_files(tree) == before
+
+
+def test_stream_late_micro_batch_is_refused(spark, setup, streamed):
+    """A micro-batch with rows before the series edge fails with the job's
+    late-data refusal before anything is written."""
+    paths, _, _, _ = setup
+    tree, _ = streamed
+    before = _block_files(tree)
+    batch = rollup_stream.make_refresh_batch(tree, "late")
+    with pytest.raises(ValueError, match="order-dependent"):
+        batch(spark.read.parquet(paths["delta1"]).limit(50), 0)
+    assert _block_files(tree) == before
+
+
+def test_stream_epoch_started_but_not_completed_is_refused(spark, setup, tmp_path):
+    """An epoch whose refresh started and never completed may be partly in
+    the tree: its replay raises through the job's own guard."""
+    paths, out, _, _ = setup
+    tree = str(tmp_path / "tree")
+    shutil.copytree(out, tree)
+    manifest = Manifest(os.path.join(tree, "manifest.jsonl"))
+    manifest.mark("refresh_delta_started", "run:3")
+    delta = _shifted_delta(spark, paths["delta2"], str(tmp_path / "delta"), "1 DAY")
+    before = _block_files(tree)
+    batch = rollup_stream.make_refresh_batch(tree, "run")
+    with pytest.raises(ValueError, match="started but did not complete"):
+        batch(spark.read.parquet(delta), 3)
+    assert _block_files(tree) == before
+
+
+def test_stream_micro_batch_starts_no_python_worker(spark, setup, tmp_path):
+    paths, out, _, _ = setup
+    tree = str(tmp_path / "tree")
+    shutil.copytree(out, tree)
+    delta = _shifted_delta(spark, paths["delta2"], str(tmp_path / "delta"), "1 DAY")
+    batch = rollup_stream.make_refresh_batch(tree, "run")
+    with no_python_worker(spark):
+        batch(spark.read.parquet(delta), 0)
+    assert _refresh_marks(tree)[-1] == "run:0"

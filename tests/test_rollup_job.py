@@ -338,3 +338,41 @@ def test_bulk_resume_lineage_counts_survive_stringy_partition_values(
             rec = json.loads(line)
             rows[rec["partition"]] = rec.get("rows")
     assert rows == {"3": 7, "03": 2, "4": 5}
+
+
+def test_manifest_skips_and_cuts_a_torn_last_line(tmp_path):
+    """A crash inside Manifest.mark leaves a last line without its newline
+    that does not parse. Readers skip it (the unit reads as not done), the
+    next mark cuts it off instead of gluing onto it, and the whole file
+    parses after. A bad line anywhere else still raises."""
+    import json
+
+    import pytest
+
+    from preprocessor_spark.rollup.checkpoint import Manifest
+
+    path = tmp_path / "manifest.jsonl"
+    m = Manifest(str(path))
+    m.mark("refresh_delta_started", "a", rows=3)
+    m.mark("refresh_delta", "a", rows=3)
+    m.mark("refresh_delta_started", "b", rows=5)
+    whole = path.read_bytes()
+    with open(path, "ab") as f:
+        f.write(b'{"stage": "refresh_delta", "partition": "b", "sta')
+    assert m.completed("refresh_delta") == {"a"}
+    assert m.completed("refresh_delta_started") == {"a", "b"}
+    assert len(m.lineage()) == 3
+    m.mark("refresh_delta", "c")
+    lines = path.read_bytes().split(b"\n")
+    assert lines.pop() == b"" and path.read_bytes().startswith(whole)
+    assert [json.loads(line)["partition"] for line in lines] == ["a", "a", "b", "c"]
+    assert m.completed("refresh_delta") == {"a", "c"}
+    # a last record that lost only its newline is whole: kept, and the
+    # next record starts on a line of its own
+    path.write_bytes(whole.rstrip(b"\n"))
+    assert m.completed("refresh_delta") == {"a"}
+    m.mark("refresh_delta", "b")
+    assert [r["partition"] for r in m.lineage()] == ["a", "a", "b", "b"]
+    path.write_bytes(b"not json\n" + whole)
+    with pytest.raises(ValueError):
+        m.completed("refresh_delta")

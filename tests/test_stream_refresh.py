@@ -1,189 +1,7 @@
-"""Streaming continuous refresh (streaming/rollup_stream.stream_refresh_tiers):
-micro-batches of raw facts maintain the SAME on-disk tier tree the batch
-path builds — final tiers equal a full batch recompute even with
-out-of-order micro-batches, and replayed epochs are skipped (the merge is
-not idempotent, the sink must be)."""
-
-import json
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from preprocessor_spark.rollup.incremental import IncrementalRollup
-from preprocessor_spark.rollup.tiers import ALGEBRAIC, RollupTree, TierSpec
-from preprocessor_spark.streaming.rollup_stream import stream_refresh_tiers
-from preprocessor_spark.synth import token_sequences
-
-TIERS = [TierSpec("5m", "5 minutes"), TierSpec("1h", "1 hour")]
-
-
-@pytest.fixture(scope="module")
-def tree():
-    return RollupTree(
-        time_col="ts", series_cols=["source"], value_col="n_tok", tiers=TIERS
-    )
-
-
-def _tier_pdf(df):
-    return (
-        df.select("source", "bucket_start", *ALGEBRAIC)
-        .toPandas()
-        .sort_values(["source", "bucket_start"])
-        .reset_index(drop=True)
-    )
-
-
-def test_stream_maintains_batch_tiers(spark, tree, tmp_path):
-    corpus = token_sequences(spark, 6000).cache()
-    base = corpus.filter(F.col("ts") < "2020-01-01 00:40:00")
-    rest = corpus.filter(F.col("ts") >= "2020-01-01 00:40:00")
-
-    root = str(tmp_path / "tree")
-    for tier in TIERS:
-        tree.base_aggregate(base, tier).write.partitionBy("source").parquet(
-            os.path.join(root, f"tier_{tier.name}")
-        )
-
-    # stream source: three files, written OUT of time order — the tier
-    # merge is order-free, unlike the prepared-series seam
-    src = str(tmp_path / "stream_src")
-    slices = [
-        rest.filter(F.col("ts") >= "2020-01-01 00:55:00"),
-        rest.filter(F.col("ts") < "2020-01-01 00:47:00"),
-        rest.filter(
-            (F.col("ts") >= "2020-01-01 00:47:00")
-            & (F.col("ts") < "2020-01-01 00:55:00")
-        ),
-    ]
-    for i, s in enumerate(slices):
-        s.coalesce(1).write.parquet(os.path.join(src, f"slice_{i}"))
-
-    inc = IncrementalRollup(tree, root)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src + "/slice_0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/slice_*")
-    )
-    q = stream_refresh_tiers(
-        stream, inc, checkpoint=str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination(120)
-
-    epochs = [
-        json.loads(line)["epoch"]
-        for line in open(os.path.join(root, "refresh_epochs.jsonl"))
-    ]
-    assert len(epochs) >= 2  # maxFilesPerTrigger=1 → one epoch per file
-
-    for tier in TIERS:
-        got = _tier_pdf(spark.read.parquet(os.path.join(root, f"tier_{tier.name}")))
-        exp = _tier_pdf(tree.base_aggregate(corpus, tier))
-        assert len(got) == len(exp)
-        assert (got["n_points"].values == exp["n_points"].values).all()
-        assert abs(got["sum_v"].values - exp["sum_v"].values).max() < 1e-6
-        assert (got["min_v"].values == exp["min_v"].values).all()
-        assert (got["max_v"].values == exp["max_v"].values).all()
-    corpus.unpersist()
-
-
-def test_replayed_epoch_is_skipped(spark, tree, tmp_path):
-    corpus = token_sequences(spark, 2000)
-    base = corpus.filter(F.col("ts") < "2020-01-01 00:10:00")
-    delta = corpus.filter(F.col("ts") >= "2020-01-01 00:10:00")
-    root = str(tmp_path / "tree")
-    for tier in TIERS:
-        tree.base_aggregate(base, tier).write.partitionBy("source").parquet(
-            os.path.join(root, f"tier_{tier.name}")
-        )
-    inc = IncrementalRollup(tree, root)
-    # drive the real foreachBatch callback directly with a repeated epoch id
-    from preprocessor_spark.streaming.rollup_stream import make_refresh_batch
-
-    calls = []
-    orig_refresh = inc.refresh
-
-    def counting_refresh(s, df, **kw):
-        calls.append(1)
-        return orig_refresh(s, df, **kw)
-
-    inc.refresh = counting_refresh
-    refresh_batch = make_refresh_batch(inc)
-    refresh_batch(delta, 0)
-    refresh_batch(delta, 0)  # replay — must be skipped
-    assert len(calls) == 1
-    got = _tier_pdf(spark.read.parquet(os.path.join(root, "tier_5m")))
-    exp = _tier_pdf(tree.base_aggregate(corpus, TIERS[0]))
-    assert (got["n_points"].values == exp["n_points"].values).all()
-
-
-def test_replay_records_are_scoped_to_the_checkpoint(spark, tree, tmp_path):
-    """foreachBatch epoch ids restart at 0 for every NEW checkpoint, so
-    applied-epoch records must be run-scoped: a later query against the
-    same tree root must NOT skip its own epoch 0 because a previous run
-    recorded one (silent data loss). Replays within the SAME run stay
-    skipped — including run-less legacy records against run-less callers
-    (the first test above), but a legacy record must NOT block a keyed
-    run: that would suppress every new checkpoint's first epochs forever."""
-    corpus = token_sequences(spark, 2000)
-    cut1, cut2 = "2020-01-01 00:06:00", "2020-01-01 00:12:00"
-    base = corpus.filter(F.col("ts") < cut1)
-    d1 = corpus.filter((F.col("ts") >= cut1) & (F.col("ts") < cut2))
-    d2 = corpus.filter(F.col("ts") >= cut2)
-    root = str(tmp_path / "tree")
-    for tier in TIERS:
-        tree.base_aggregate(base, tier).write.partitionBy("source").parquet(
-            os.path.join(root, f"tier_{tier.name}")
-        )
-    inc = IncrementalRollup(tree, root)
-    from preprocessor_spark.streaming.rollup_stream import make_refresh_batch
-
-    calls = []
-    orig = inc.refresh
-    inc.refresh = lambda s, df, **kw: (calls.append(1), orig(s, df, **kw))[1]
-    run_a = make_refresh_batch(inc, run_key="runA")
-    run_b = make_refresh_batch(inc, run_key="runB")
-    run_a(d1, 0)
-    run_a(d1, 0)  # same-run replay: skipped
-    assert len(calls) == 1
-    run_b(d2, 0)  # NEW run, epoch 0 again: must apply, not be skipped
-    assert len(calls) == 2
-    got = _tier_pdf(spark.read.parquet(os.path.join(root, "tier_5m")))
-    exp = _tier_pdf(tree.base_aggregate(corpus, TIERS[0]))
-    assert (got["n_points"].values == exp["n_points"].values).all()
-
-
-def test_legacy_runless_records_do_not_block_keyed_runs(tmp_path):
-    """A pre-upgrade sidecar (records with no 'run' field) must not
-    suppress a KEYED run's epochs — that would silently drop the first
-    batches of every new checkpoint against the tree root forever. The
-    worst a keyed restart over a legacy sidecar can do is re-merge the one
-    in-flight epoch, the crash window the sidecar already documents."""
-    import json
-    import os
-    from types import SimpleNamespace
-
-    from preprocessor_spark.streaming.rollup_stream import make_refresh_batch
-
-    root = str(tmp_path)
-    with open(os.path.join(root, "refresh_epochs.jsonl"), "w") as f:
-        for epoch in range(3):  # legacy records: no 'run' field at all
-            f.write(json.dumps({"epoch": epoch, "seconds": 0.1}) + "\n")
-    calls = []
-    inc = SimpleNamespace(
-        root=root,
-        refresh=lambda s, df: (calls.append(1), {"total_seconds": 0.0})[1],
-    )
-    fake_df = SimpleNamespace(sparkSession=None)
-    keyed = make_refresh_batch(inc, run_key="ck-abc")
-    keyed(fake_df, 0)  # legacy epoch 0 exists — keyed run must still apply
-    assert len(calls) == 1
-    keyed(fake_df, 0)  # its own replay stays skipped
-    assert len(calls) == 1
-    # run-less caller honors the legacy records (legacy mode unchanged)
-    legacy = make_refresh_batch(inc)
-    legacy(fake_df, 1)
-    assert len(calls) == 1
+"""The streaming refresh's checkpoint identity
+(streaming/rollup_stream._checkpoint_key): it scopes each micro-batch's
+fingerprint in the manifest's double-apply guard. The stream itself is
+tested against refresh_job in tests/test_refresh_job.py."""
 
 
 def test_checkpoint_key_is_cwd_independent_for_uris(tmp_path, monkeypatch):
