@@ -30,9 +30,10 @@ refresh):
      scan, the only O(corpus) touch, paid once.
   4. delta prepared rows appended to the prepared store;
   5. every tier refreshed in place via rollup/incremental.py from the
-     profile's bounds — algebraic merge of the touched partitions in one
-     write action, with dense-tier extension seeds from the persisted
-     series bounds;
+     prepared delta (epoch-second ``tss``, bucketed by the build's epoch
+     chain) and the profile's bounds — algebraic merge of the touched
+     sources' partitions in one write action, with the dense tiers' new
+     empty buckets seeded from one tier-0 spine of the bounds' growth;
   6. Gorilla/delta-of-delta blocks re-encoded only for the (source, block)
      pairs between each source's delta min and max ts, replaced by a
      dynamic partition overwrite at that grain. The encode runs on the
@@ -469,22 +470,12 @@ def _refresh(
     bak_tail = tail_path + ".bak"
     new_tail.coalesce(1).write.mode("overwrite").parquet(tmp_tail)
 
-    # -- tier refresh (dense: the job's tiers are gap-filled) --------------
-    # the refreshed series is the prepared one; its event time re-enters
-    # timestamp space for the tier key (|delta| rows, not |corpus|)
+    # -- tier refresh: the prepared delta, bucketed as the build buckets --
     t0 = time.perf_counter()
-    tree = RollupTree(
-        time_col="ts",
-        series_cols=["source"],
-        value_col="n_tok_z",
-        tiers=DEFAULT_TIERS,
-    )
-    delta_facts = prepared_delta.select(
-        F.timestamp_seconds("tss").alias("ts"), "source", "n_tok_z"
-    )
+    tree = RollupTree(series_cols=["source"], value_col="n_tok_z", tiers=DEFAULT_TIERS)
     bounds = [(s, t0_, t1_) for s, _n, t0_, t1_ in extent]
-    inc = IncrementalRollup(tree, out, dense=True)
-    tier_metrics = inc.refresh(spark, delta_facts, manifest=manifest, bounds=bounds)
+    inc = IncrementalRollup(tree, out)
+    tier_metrics = inc.refresh(spark, prepared_delta, bounds, manifest=manifest)
     refresh_seconds = round(time.perf_counter() - t0, 3)
 
     # -- re-encode the compression blocks the delta lands in ---------------

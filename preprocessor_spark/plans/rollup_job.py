@@ -211,8 +211,8 @@ def _build(spark, args, out: str, manifest) -> dict:
     # sortWithinPartitions keeps each file run-length-friendly (source
     # dictionary runs, near-monotone ts → tight parquet encodings) without
     # an extra shuffle.
-    # The event time is stored as epoch SECONDS (int) — the rollup's bucket
-    # key is then two integer ops per row (tss - tss % step) instead of
+    # The event time is stored as epoch SECONDS (long) — the rollup's bucket
+    # key is then integer arithmetic per row (tiers.epoch_floor) instead of
     # timestamp/window-struct arithmetic, and the timestamp conversion
     # happens post-aggregate on |buckets| rows, not |facts| rows.
     prepared_path = os.path.join(out, "prepared")
@@ -250,10 +250,9 @@ def _build(spark, args, out: str, manifest) -> dict:
             # split and z-score keep: its buckets cut the unbias chunks
             unb.transform(normed, profile=profile).select(
                 # long, not int: int32 epochs silently wrap negative at/after
-                # 2038-01-19 in non-ANSI mode, corrupting bucket keys (the
-                # epoch floor also assumes non-negative epochs). On a sorted
-                # column the parquet dictionary/delta encodings make the
-                # width difference negligible.
+                # 2038-01-19 in non-ANSI mode, corrupting bucket keys. On a
+                # sorted column the parquet dictionary/delta encodings make
+                # the width difference negligible.
                 F.unix_timestamp("ts").cast("long").alias("tss"),
                 "source",
                 "n_tok_z",
@@ -301,9 +300,9 @@ def _build(spark, args, out: str, manifest) -> dict:
     # shuffle key (source, bucket) has high cardinality, so the hot source
     # spreads across reducers naturally. Salting an aggregate multiplies
     # the shuffled partial rows by the salt factor for no benefit — the
-    # salted path (tree.salted_aggregate, used by the window stages' skew
-    # handling and kept equivalence-tested) is for single-hot-KEY shapes.
-    tree = RollupTree(time_col="ts", series_cols=["source"], value_col="n_tok_z")
+    # library's salted path (tree.salted_aggregate, which no job calls,
+    # kept equivalence-tested) is for single-hot-KEY shapes.
+    tree = RollupTree(series_cols=["source"], value_col="n_tok_z")
 
     # Minimal-fixed-cost tier loop: min/max ts floored to the bucket lattice
     # equals min/max bucket_start (floor is monotonic), so the profile's

@@ -9,14 +9,17 @@ rollup/tiers.py) is closed under MERGE for insert-only deltas: every
 statistic of (old ∪ delta) is a fold of the old row's statistics with the
 delta partial's, per (series, bucket). So a refresh is
 
-    delta facts ──base_aggregate──▶ delta partials        (O(|delta|))
-    touched partitions = f(delta's per-series extent)     (driver-side)
+    delta facts ──epoch aggregate──▶ delta partials       (O(|delta|))
+    touched partitions = the delta's series               (driver-side)
     existing tier ⋈ touched partitions ──union+reagg──▶ merged rows
     one write, then ONLY those partition dirs replaced    (O(touched))
 
-and never reads or rewrites the untouched 99.9% of the tier. The same
-delta partial re-aggregates up the tree (5m partial → 1h partial → 1d
-partial), so every tier refreshes from ONE scan of the delta facts.
+and never reads or rewrites the series the delta does not touch. The
+delta arrives in the prepared shape plans/rollup_job.py writes (series,
+``tss`` epoch seconds, value), and its partials come from the build's own
+epoch chain (5m partial → 1h partial → 1d partial, every bucket key the
+floor of ``tss`` to the tier's period), so every tier refreshes from ONE
+scan of the delta facts into the buckets a rebuild would give.
 
 Reference parity: the reference recomputes its per-column statistics from
 scratch on every run (app/core/normalization_handler.py:155-174 — whole-
@@ -27,20 +30,24 @@ literature prescribes (see PAPERS.md: self-maintainable aggregate views).
 
 Deletes/updates are out of scope by design: min/max are mergeable but not
 subtractable, so retractions require either tombstone re-aggregation of
-the affected buckets from facts, or a full rebuild — `refresh` validates
-that it is only ever handed inserts (it cannot see deletes at all; the
-caller owns that contract).
+the affected buckets from facts, or a full rebuild — `refresh` assumes
+it is only ever handed inserts (it cannot see deletes at all; the caller
+owns that contract).
 
-Gap-filled (dense) tiers stay dense: a delta that extends a series' time
-range implicitly creates empty buckets between the old edge and the first
-new point; `extension_seeds` materializes exactly those (n_points=0) rows
-from the persisted per-series bounds, without touching the interior.
+The tiers are gap-filled dense and stay dense: a delta that extends a
+series' time range implicitly creates empty buckets between the old edge
+and the first new point. The refresh derives those tier-0 buckets from the
+persisted per-series bounds (:func:`extension_intervals`), builds ONE seed
+spine of them, and folds it, floored to each tier's period, into every
+tier as (n_points=0) rows, without touching the interior.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import time
 from functools import reduce
 
@@ -54,6 +61,7 @@ from preprocessor_spark.rollup.tiers import (
     TierSpec,
     algebraic_reaggs,
     duration_seconds,
+    epoch_floor,
     spine_from_bounds,
 )
 from preprocessor_spark.session import scoped_conf
@@ -91,15 +99,6 @@ def merge_partials(
     return rows.groupBy(*key_cols).agg(*aggs)
 
 
-def with_bucket_day(tier_df: DataFrame) -> DataFrame:
-    """Attach the day-level partition key incremental refresh wants the
-    tier stored under: partitioning tiers by (series, day(bucket_start))
-    bounds each refresh's rewrite to |touched series-days|, independent of
-    corpus age — by source alone, one late row rewrites that source's
-    whole history."""
-    return tier_df.withColumn("bucket_day", F.to_date("bucket_start"))
-
-
 def _balanced_or(exprs: list):
     """Pairwise (balanced) OR fold: a left-deep reduce() chain of thousands
     of terms is a known driver StackOverflowError shape in Catalyst's
@@ -113,65 +112,21 @@ def _balanced_or(exprs: list):
 
 
 def _partition_predicate(partition_cols: list[str], tuples: list[tuple]):
-    """OR-of-AND equality predicate over the affected partition tuples —
-    the shape Spark's parquet partition pruning eliminates directories
-    with. Past the inline cap, tuples are grouped by their prefix (all
-    columns but the last) into prefix-AND + last-column-isin terms — still
-    EXACT (the cross-product per-column isin would inflate both the read
-    and the dynamic-overwrite rewrite to |sources|x|days| on a sparse
-    touched set, reintroducing the O(corpus-age) rewrite this module
-    exists to avoid). Only the extreme case (more distinct prefixes than
-    the term budget) degrades to the per-column-isin superset, which stays
-    correct because superset rows round-trip unchanged through the
-    union+reagg."""
-    if len(tuples) > 1024 and len(partition_cols) > 1:
-        groups: dict[tuple, list] = {}
-        for t in tuples:
-            groups.setdefault(tuple(t[:-1]), []).append(t[-1])
-        if len(groups) <= 4096:
-            last = partition_cols[-1]
-            preds = [
-                _balanced_or(
-                    [
-                        reduce(
-                            lambda x, y: x & y,
-                            [
-                                F.col(c) == F.lit(v)
-                                for c, v in zip(partition_cols[:-1], pre)
-                            ],
-                        )
-                        & F.col(last).isin(vals)
-                        for pre, vals in groups.items()
-                    ]
-                )
-            ]
-        else:  # pragma: no cover - >4096 distinct prefixes
-            preds = [
-                F.col(c).isin(sorted({t[i] for t in tuples}))
-                for i, c in enumerate(partition_cols)
-            ]
-    elif len(tuples) > 1024:
-        # single partition column: the isin IS the exact touched set
-        preds = [F.col(partition_cols[0]).isin([t[0] for t in tuples])]
-    else:
-        preds = [
-            _balanced_or(
-                [
-                    reduce(
-                        lambda x, y: x & y,
-                        [
-                            F.col(c) == F.lit(v)
-                            for c, v in zip(partition_cols, t)
-                        ],
-                    )
-                    for t in tuples
-                ]
+    """OR-of-AND equality predicate over the touched partition tuples — the
+    shape Spark's parquet partition pruning eliminates directories with."""
+    return _balanced_or(
+        [
+            reduce(
+                lambda x, y: x & y,
+                [F.col(c) == F.lit(v) for c, v in zip(partition_cols, t)],
             )
+            for t in tuples
         ]
-    return reduce(lambda a, b: a & b, preds)
+    )
 
 
-_SAFE_DIR_VALUE_RE = None
+# partition values that name their directory as plain str(v), unescaped
+_SAFE_DIR_VALUE_RE = re.compile(r"^[A-Za-z0-9._-]+$")
 
 
 def read_touched_partitions(
@@ -185,22 +140,17 @@ def read_touched_partitions(
     basePath (partition columns recovered from the paths). A plain
     read-then-filter still LISTS the whole tier tree before pruning —
     measured as the dominant refresh cost once a tier carries thousands of
-    (source, day) dirs (refresh wall grew with corpus AGE, the opposite of
+    partition dirs (refresh wall grew with corpus AGE, the opposite of
     the O(delta) contract); explicit paths make discovery O(touched). On a
     cluster store the same listing-avoidance comes from Iceberg partition
-    metadata. Dirs that don't exist yet (new day / new series) are
-    skipped; if every dir is new, or any partition value needs Hive
+    metadata. Dirs that don't exist yet (new series) are skipped, and if
+    every dir is new the slice is empty; if any partition value needs Hive
     path-escaping beyond plain str(), fall back to the pruned full read
     (correct, just slower).
 
     ``schema`` (the tier's columns, partition columns included) pins the
     read: an unpinned read runs a Spark job to infer the schema from a
     parquet footer."""
-    import re
-
-    global _SAFE_DIR_VALUE_RE
-    if _SAFE_DIR_VALUE_RE is None:
-        _SAFE_DIR_VALUE_RE = re.compile(r"^[A-Za-z0-9._-]+$")
     reader = spark.read.schema(schema)
     # the explicit-path fast path probes directories with os.path.isdir,
     # which is only meaningful on a LOCAL filesystem: on s3a://hdfs://...
@@ -298,231 +248,120 @@ def extension_intervals(
     return intervals
 
 
-def seeds_from_intervals(
-    spark: SparkSession,
-    intervals: list[tuple],
-    series_cols: list[str],
-    step_s: int,
-    series_schema: DataFrame | None = None,
-) -> DataFrame:
-    """Empty-bucket (n_points=0, null stats) seed rows covering the given
-    lattice intervals — the rows that keep a gap-filled tier dense across
-    a bounds extension. The spine is partitioned by its exact row count: a
-    daily extension is a few hundred buckets, one task's worth."""
-    from preprocessor_spark.rollup.checkpoint import ROWS_PER_WRITE_TASK
-
-    step = int(step_s)
-    n_rows = sum((int(iv[-1]) - int(iv[-2])) // step + 1 for iv in intervals)
-    spine = spine_from_bounds(
-        spark,
-        intervals,
-        series_cols,
-        step,
-        num_partitions=max(1, -(-n_rows // ROWS_PER_WRITE_TASK)),
-        series_schema=series_schema,
-        as_epoch=True,
-    )
-    return spine.select(
-        *series_cols,
-        F.timestamp_seconds("bucket_epoch").alias("bucket_start"),
-        F.lit(0).cast("long").alias("n_points"),
-        *[F.lit(None).cast("double").alias(c) for c in ("sum_v", "sum_sq")],
-        *[F.lit(None).cast("double").alias(c) for c in ("min_v", "max_v")],
-    )
-
-
-def extension_seeds(
-    spark: SparkSession,
-    old_bounds: list[tuple],
-    new_bounds: list[tuple],
-    series_cols: list[str],
-    step_s: int,
-    series_schema: DataFrame | None = None,
-) -> DataFrame | None:
-    """:func:`extension_intervals` → :func:`seeds_from_intervals`; None
-    when nothing grew."""
-    intervals = extension_intervals(old_bounds, new_bounds, step_s)
-    if not intervals:
-        return None
-    return seeds_from_intervals(
-        spark, intervals, series_cols, step_s, series_schema=series_schema
-    )
-
-
-def _epoch_day(e: int):
-    from datetime import datetime, timezone
-
-    return datetime.fromtimestamp(int(e), tz=timezone.utc).date()
 
 
 class IncrementalRollup:
     """Tree-level driver: one scan of the delta facts refreshes every tier.
 
-    ``tree`` supplies tier specs, series/value/time columns; tiers live at
-    ``{root}/tier_{name}`` in the layout plans/rollup_job.py writes
-    (key = series_cols + bucket_start). ``partition_cols`` defaults to the
-    job's source-partitioned layout; pass ``[*series_cols, "bucket_day"]``
-    (and store tiers via :func:`with_bucket_day`) for the bounded-rewrite
-    production layout."""
+    ``tree`` supplies the tier specs and the series and value columns.
+    Tiers live at ``{root}/tier_{name}`` in the layout plans/rollup_job.py
+    writes: gap-filled dense, keyed by series_cols + bucket_start and
+    partitioned by the series columns, with the per-series bounds sidecar
+    ``{root}/series_bounds.json`` (:func:`save_bounds`)."""
 
-    def __init__(
-        self,
-        tree: RollupTree,
-        root: str,
-        partition_cols: list[str] | None = None,
-        dense: bool = False,
-    ):
+    def __init__(self, tree: RollupTree, root: str):
         self.tree = tree
         self.root = root
-        self.partition_cols = partition_cols or list(tree.series_cols)
-        self.dense = dense
+        self.partition_cols = list(tree.series_cols)
         self.bounds_path = os.path.join(root, "series_bounds.json")
 
     def tier_path(self, tier: TierSpec) -> str:
         return os.path.join(self.root, f"tier_{tier.name}")
 
     def delta_partials(self, delta_df: DataFrame) -> dict[str, DataFrame]:
-        """Algebraic partials of the delta at every tier — finest from the
-        facts, each coarser tier re-aggregated from the previous partial
-        (same chain as the batch tree, so one fact scan serves all)."""
+        """Algebraic partials of the delta at every tier, keyed by
+        ``bucket_epoch``: the finest from the facts, each coarser tier
+        re-aggregated from the previous partial. This is the build's epoch
+        chain (plans/rollup_job.py), so a refresh buckets each fact where a
+        rebuild would, and one fact scan serves all tiers."""
         tree = self.tree
-        out: dict[str, DataFrame] = {}
-        cur = tree.base_aggregate(delta_df, tree.tiers[0])
-        out[tree.tiers[0].name] = cur
-        for t in tree.tiers[1:]:
-            cur = tree.reaggregate(cur, t)
-            out[t.name] = cur
+        steps = [duration_seconds(t.duration) for t in tree.tiers]
+        cur = tree.base_aggregate_with_spine_epoch(delta_df, steps[0]).select(
+            *tree.series_cols,
+            F.unix_timestamp("bucket_start").alias("bucket_epoch"),
+            *ALGEBRAIC,
+        )
+        out = {tree.tiers[0].name: cur}
+        for tier, step in zip(tree.tiers[1:], steps[1:]):
+            cur = tree.reaggregate_epoch(cur, step)
+            out[tier.name] = cur
         return out
-
-    def delta_bounds(self, delta_df: DataFrame) -> list[tuple]:
-        """Per-series (*series, t0, t1) extent of the delta facts in exact
-        epoch seconds, from one aggregate. Exact, not floored to a tier
-        lattice: the dense bounds sidecar it extends is also what
-        plans/refresh_job's tail-at-edge validation compares against
-        per-series max(ts)."""
-        tree = self.tree
-        return [
-            tuple(r)
-            for r in delta_df.groupBy(*tree.series_cols)
-            .agg(
-                F.unix_timestamp(F.min(tree.time_col)).cast("long"),
-                F.unix_timestamp(F.max(tree.time_col)).cast("long"),
-            )
-            .collect()
-        ]
 
     def refresh(
         self,
         spark: SparkSession,
         delta_df: DataFrame,
+        bounds: list[tuple],
         manifest=None,
-        bounds: list[tuple] | None = None,
     ) -> dict:
-        """Refresh every tier from one delta of NEW facts. With
-        ``dense=True`` the per-series bounds sidecar is consulted and
-        extended, and boundary-growth seed buckets are folded in so each
-        tier stays gap-filled dense.
+        """Refresh every tier from one delta of NEW facts in the prepared
+        shape: series columns, ``tss`` (epoch seconds) and the value column.
+        ``bounds`` is the delta's per-series (*series, t0, t1) extent in
+        epoch seconds (plans/refresh_job gets it from its delta profile).
 
-        ``bounds`` is the delta's :meth:`delta_bounds`, when the caller
-        already has it (plans/refresh_job gets it from its delta profile);
-        without it, the refresh computes it with one aggregate. Every
-        tier's touched partitions derive from it on the driver, so the
-        only other Spark job is the one tier-tagged write action that lands
-        every tier's merged partitions (see :meth:`_refresh_fused`)."""
+        The touched partitions are the delta's series. The bounds sidecar
+        is extended by ``bounds``, and the tier-0 buckets the extension adds
+        become null seed rows, floored to each tier's period and folded into
+        that tier's partial, so every tier stays gap-filled dense. The only
+        Spark job is the one tier-tagged write that lands every tier's
+        merged partitions (see :meth:`_refresh_fused`)."""
         tree = self.tree
         t_all = time.perf_counter()
-        if bounds is None:
-            bounds = self.delta_bounds(delta_df)
         partials = self.delta_partials(delta_df)
 
-        seed_intervals: dict[str, list[tuple]] = {}
-        if self.dense:
-            old_bounds = (
-                load_bounds(self.bounds_path)
-                if os.path.exists(self.bounds_path)
-                else []
-            )
-            new_bounds = merge_bounds(old_bounds, bounds)
-            for tier in tree.tiers:
-                step = duration_seconds(tier.duration)
-                ivs = extension_intervals(old_bounds, new_bounds, step)
-                if ivs:
-                    seed_intervals[tier.name] = ivs
+        old_bounds = load_bounds(self.bounds_path)
+        new_bounds = merge_bounds(old_bounds, bounds)
+        step0 = duration_seconds(tree.tiers[0].duration)
+        ivs = extension_intervals(old_bounds, new_bounds, step0)
+        spine = None
+        if ivs:
+            from preprocessor_spark.rollup.checkpoint import ROWS_PER_WRITE_TASK
 
-        key_cols = [*tree.series_cols, "bucket_start"]
-        merge_keys = [
-            *key_cols,
-            *[c for c in self.partition_cols if c not in key_cols],
-        ]
-        parts: dict[str, DataFrame] = {}
-        schemas: dict[str, T.StructType] = {}
-        touched: dict[str, list[tuple]] = {}
-        for tier in tree.tiers:
-            step = duration_seconds(tier.duration)
-            part = partials[tier.name]
-            # the stored tier holds what this aggregate writes: its schema
-            # is the read schema of the touched partitions (no inference)
-            schemas[tier.name] = self._with_layout(part).select(
-                *merge_keys, *ALGEBRAIC
-            ).schema
-            ivs = seed_intervals.get(tier.name, [])
-            if ivs:
-                # seed rows are (n_points=0, null) — merging them into a
-                # bucket that also has delta facts is a no-op fold; a
-                # bucket with only a seed lands dense-empty, as required
-                seeds = seeds_from_intervals(
-                    spark, ivs, tree.series_cols, step, series_schema=delta_df
-                )
-                part = part.select(*key_cols, *ALGEBRAIC).unionByName(
-                    seeds.select(*key_cols, *ALGEBRAIC)
-                )
-            parts[tier.name] = self._with_layout(part)
-            touched[tier.name] = sorted(
-                self._touched_partitions([*bounds, *ivs], step)
+            n_rows = sum((iv[-1] - iv[-2]) // step0 + 1 for iv in ivs)
+            spine = spine_from_bounds(
+                spark,
+                ivs,
+                tree.series_cols,
+                step0,
+                num_partitions=-(-n_rows // ROWS_PER_WRITE_TASK),
+                series_schema=delta_df,
+                as_epoch=True,
             )
-        metrics = self._refresh_fused(
-            spark, parts, merge_keys, touched, schemas, manifest
-        )
-        if self.dense:
-            save_bounds(self.bounds_path, new_bounds, tree.series_cols)
+
+        parts: dict[str, DataFrame] = {}
+        for tier in tree.tiers:
+            part = partials[tier.name]
+            if spine is not None:
+                # seeds join AFTER the aggregate: unioned into the facts they
+                # would cost the aggregate the delta's source partitioning.
+                # A seed is (n_points=0, null stats): merged into a bucket
+                # with delta facts it changes nothing, and a bucket with only
+                # seeds lands dense-empty
+                step = duration_seconds(tier.duration)
+                part = part.unionByName(
+                    spine.select(
+                        *tree.series_cols,
+                        epoch_floor(F.col("bucket_epoch"), step).alias("bucket_epoch"),
+                        F.lit(0).cast("long").alias("n_points"),
+                        *[F.lit(None).cast("double").alias(c) for c in ALGEBRAIC[1:]],
+                    )
+                )
+            parts[tier.name] = part.select(
+                *tree.series_cols,
+                F.timestamp_seconds("bucket_epoch").alias("bucket_start"),
+                *ALGEBRAIC,
+            )
+        touched = sorted({tuple(r[:-2]) for r in bounds})
+        metrics = self._refresh_fused(spark, parts, touched, manifest)
+        save_bounds(self.bounds_path, new_bounds, tree.series_cols)
         metrics["total_seconds"] = round(time.perf_counter() - t_all, 3)
         return metrics
-
-    def _with_layout(self, df: DataFrame) -> DataFrame:
-        return with_bucket_day(df) if "bucket_day" in self.partition_cols else df
-
-    def _touched_partitions(self, intervals: list[tuple], step_s: int) -> set[tuple]:
-        """Partition tuples that a tier's buckets inside the given
-        (*series, t0, t1) epoch intervals land in — from driver-known
-        intervals, no Spark job. Exact for the series-only layout; with a
-        day column it is every day a bucket of [t0, t1] falls on, a
-        superset when the delta skips days (the extra partitions are read
-        and rewritten unchanged)."""
-        step = int(step_s)
-        out: set[tuple] = set()
-        for iv in intervals:
-            series = dict(zip(self.tree.series_cols, iv[:-2]))
-            if "bucket_day" not in self.partition_cols:
-                out.add(tuple(series[c] for c in self.partition_cols))
-                continue
-            a, b = int(iv[-2]), int(iv[-1])
-            a, b = a - a % step, b - b % step
-            if 86400 % step == 0:
-                days = range(a - a % 86400, b - b % 86400 + 1, 86400)
-            else:
-                days = sorted({e - e % 86400 for e in range(a, b + 1, step)})
-            for e in days:
-                vals = {**series, "bucket_day": _epoch_day(e)}
-                out.add(tuple(vals[c] for c in self.partition_cols))
-        return out
 
     def _refresh_fused(
         self,
         spark: SparkSession,
         parts: dict[str, DataFrame],
-        merge_keys: list[str],
-        touched: dict[str, list[tuple]],
-        schemas: dict[str, T.StructType],
+        touched: list[tuple],
         manifest=None,
     ) -> dict:
         """One write action for the whole tree: each tier's merged rows are
@@ -535,31 +374,29 @@ class IncrementalRollup:
         relies on the caller's double-apply guard (refresh_job's
         started-without-completed mark refuses the rerun), not on
         recomputation."""
-        import shutil
-
         from pyspark.sql import Observation
 
         t0 = time.perf_counter()
         tiers = self.tree.tiers
-        tagged: DataFrame | None = None
-        for tier in tiers:
-            tup = touched[tier.name]
-            if not tup:
-                continue
-            existing = read_touched_partitions(
-                spark, self.tier_path(tier), self.partition_cols, tup,
-                schema=schemas[tier.name],
-            )
-            merged = merge_partials(
-                existing, parts[tier.name], merge_keys,
-                cluster_cols=self.partition_cols,
-            ).withColumn("__tier", F.lit(tier.name))
-            tagged = merged if tagged is None else tagged.unionByName(merged)
-        if tagged is None:
+        if not touched:
             return {
                 t.name: {"partitions_rewritten": 0, "rows_written": 0, "seconds": 0.0}
                 for t in tiers
             }
+        key_cols = [*self.tree.series_cols, "bucket_start"]
+        tagged: DataFrame | None = None
+        for tier in tiers:
+            part = parts[tier.name]
+            # the stored tier holds what this aggregate writes: its schema
+            # is the read schema of the touched partitions (no inference)
+            existing = read_touched_partitions(
+                spark, self.tier_path(tier), self.partition_cols, touched,
+                schema=part.schema,
+            )
+            merged = merge_partials(
+                existing, part, key_cols, cluster_cols=self.partition_cols
+            ).withColumn("__tier", F.lit(tier.name))
+            tagged = merged if tagged is None else tagged.unionByName(merged)
         tmp = os.path.join(self.root, "__refresh_tmp")
         shutil.rmtree(tmp, ignore_errors=True)
         obs = Observation("refresh_rows")
@@ -582,49 +419,34 @@ class IncrementalRollup:
         # per-exchange materialize barriers are pure fixed cost here, and
         # the shuffle width should follow |touched|, not the session default
         # (measured warm at 2M-row/1%-delta: 3.2 s → 2.1 s)
-        width = min(spark.sparkContext.defaultParallelism, len(touched[tiers[0].name]))
+        width = min(spark.sparkContext.defaultParallelism, len(touched))
         with scoped_conf(
             spark,
             {
                 "spark.sql.adaptive.enabled": "false",
-                "spark.sql.shuffle.partitions": max(1, width),
+                "spark.sql.shuffle.partitions": width,
             },
         ):
             tagged.write.partitionBy("__tier", *self.partition_cols).parquet(tmp)
         tier_rows = {t.name: int(obs.get[t.name] or 0) for t in tiers}
-        depth = len(self.partition_cols)
         for tier in tiers:
             src_root = os.path.join(tmp, f"__tier={tier.name}")
-            # tmp contents drive the moves: a touched partition with no
-            # merged rows (superset edge) simply has no dir here
-            if not touched[tier.name] or not os.path.isdir(src_root):
-                continue
             dest_root = self.tier_path(tier)
-            # move each LEAF partition dir (depth = |partition_cols|) into
-            # place, replacing only the partitions this refresh touched
-            stack = [()]
-            for _ in range(depth):
-                stack = [
-                    (*rel, child)
-                    for rel in stack
-                    for child in sorted(
-                        os.listdir(os.path.join(src_root, *rel))
-                    )
-                    if "=" in child
-                ]
-            for rel in stack:
-                target = os.path.join(dest_root, *rel)
-                os.makedirs(os.path.dirname(target), exist_ok=True)
+            os.makedirs(dest_root, exist_ok=True)
+            # replace each touched partition dir with its merged rows
+            for child in sorted(os.listdir(src_root)):
+                if "=" not in child:
+                    continue
+                target = os.path.join(dest_root, child)
                 if os.path.isdir(target):
                     shutil.rmtree(target)
-                shutil.move(os.path.join(src_root, *rel), target)
+                shutil.move(os.path.join(src_root, child), target)
         shutil.rmtree(tmp, ignore_errors=True)
         dt = round(time.perf_counter() - t0, 3)
         metrics: dict[str, dict] = {}
         for tier in tiers:
-            tup = touched[tier.name]
             if manifest is not None:
-                for t in tup:
+                for t in touched:
                     # rows = the TIER's written rows; seconds = the one
                     # write action's shared wall
                     manifest.mark(
@@ -635,7 +457,7 @@ class IncrementalRollup:
                         kind="refresh_fused",
                     )
             metrics[tier.name] = {
-                "partitions_rewritten": len(tup),
+                "partitions_rewritten": len(touched),
                 "rows_written": tier_rows[tier.name],
                 # the whole tree is one write action: this is its wall,
                 # shared across tiers, not a per-tier cost

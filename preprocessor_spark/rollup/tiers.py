@@ -20,8 +20,10 @@ Scale notes:
     aggregation: ``salted_aggregate`` pre-aggregates on (series, bucket,
     salt) then folds partials — same shape as Spark's own partial/final agg
     but with an explicit intermediate key for pathological single-key skew;
-  * buckets use ``F.window(ts, d)`` (tumbling); bucket_start is the tier's
-    time key, so re-aggregation windows nest exactly (5m ⊂ 1h ⊂ 1d).
+  * buckets are tumbling and floor the time to the tier period
+    (``F.window(ts, d)``, or :func:`epoch_floor` on epoch seconds);
+    bucket_start is the tier's time key, so re-aggregation windows nest
+    exactly (5m ⊂ 1h ⊂ 1d).
 """
 
 from __future__ import annotations
@@ -55,6 +57,15 @@ def algebraic_aggs(value_col):
         F.min(v).alias("min_v"),
         F.max(v).alias("max_v"),
     ]
+
+
+def epoch_floor(e, step_s: int):
+    """Start of the ``step_s``-second bucket holding epoch second ``e`` (a
+    long column): ``e - pmod(e, step)``. That is the floor ``F.window``
+    takes and Python's ``%`` computes on the driver, before 1970 as after;
+    Spark's ``%`` truncates toward zero and would put a negative epoch one
+    bucket late."""
+    return e - F.pmod(e, F.lit(int(step_s)))
 
 
 def stored_tier_schema(series_fields: list) -> T.StructType:
@@ -212,7 +223,11 @@ class RollupTree:
         )
 
     def base_aggregate_with_spine_epoch(
-        self, df: DataFrame, step_s: int, spine: DataFrame, epoch_col: str = "tss"
+        self,
+        df: DataFrame,
+        step_s: int,
+        spine: DataFrame | None = None,
+        epoch_col: str = "tss",
     ) -> DataFrame:
         """Tier-0 aggregate + gap fill fused into ONE aggregation — the
         10^12-scale hot path. Facts are unioned with null-valued seed rows
@@ -225,35 +240,38 @@ class RollupTree:
         every aggregate path.)
 
         ``df`` carries the event time as epoch SECONDS (``epoch_col``,
-        int/long) instead of a timestamp, so the per-row bucket key is two
-        integer ops (``tss - tss % step``) rather than the
+        int/long) instead of a timestamp, so the per-row bucket key is
+        integer arithmetic (:func:`epoch_floor`) rather than the
         timestamp/window-struct arithmetic of ``F.window`` — and the
         conversion back to a ``bucket_start`` timestamp happens AFTER the
         aggregate, on |buckets| rows instead of |facts| rows.
         ``F.window(ts, d)["start"]`` epoch-aligns tumbling windows to
-        ``floor(epoch/step)*step`` for non-negative epochs, which is exactly
-        this integer floor — equivalence with the gap-filled F.window chain
-        is pinned by tests/test_rollup.py::test_epoch_aggregate_equivalence.
+        ``floor(epoch/step)*step``, which is exactly this integer floor —
+        equivalence with the gap-filled F.window chain is pinned by
+        tests/test_rollup.py::test_epoch_aggregate_equivalence.
 
         ``spine``: dense (series, bucket_epoch:long) seed rows (e.g. from
-        :func:`spine_from_bounds` with ``as_epoch=True``)."""
+        :func:`spine_from_bounds` with ``as_epoch=True``). Without it the
+        aggregate fills no gaps: the incremental refresh adds its seeds
+        after the aggregate, which keeps the delta's partitioning."""
         v = F.col(self.value_col).cast("double")
-        seeds = spine.select(
-            *self.series_cols,
-            F.col("bucket_epoch").cast("long").alias(epoch_col),
-            F.lit(None).cast("double").alias(self.value_col),
-        )
         facts = df.select(
             *self.series_cols,
             F.col(epoch_col).cast("long").alias(epoch_col),
             self.value_col,
         )
-        e = F.col(epoch_col)
+        if spine is not None:
+            facts = facts.unionByName(
+                spine.select(
+                    *self.series_cols,
+                    F.col("bucket_epoch").cast("long").alias(epoch_col),
+                    F.lit(None).cast("double").alias(self.value_col),
+                )
+            )
         return (
-            facts.unionByName(seeds)
-            .groupBy(
+            facts.groupBy(
                 *self.series_cols,
-                (e - e % F.lit(int(step_s))).alias("bucket_epoch"),
+                epoch_floor(F.col(epoch_col), step_s).alias("bucket_epoch"),
             )
             .agg(*algebraic_aggs(v))
             .select(
@@ -279,14 +297,13 @@ class RollupTree:
         """Epoch-integer twin of :meth:`reaggregate`: the input carries its
         bucket as epoch seconds (``bucket_epoch`` long) and the output
         stays in epoch space, so a chain of coarse tiers composes in ONE
-        Spark plan with two integer ops per row and no timestamp
+        Spark plan with integer arithmetic per row and no timestamp
         arithmetic. ``F.window`` equivalence as in
         :meth:`base_aggregate_with_spine_epoch`."""
-        b = F.col("bucket_epoch")
         return (
             tier_df.groupBy(
                 *self.series_cols,
-                (b - b % F.lit(int(to_step_s))).alias("bucket_epoch"),
+                epoch_floor(F.col("bucket_epoch"), to_step_s).alias("bucket_epoch"),
             )
             .agg(*algebraic_reaggs())
         )
@@ -425,8 +442,8 @@ def spine_from_bounds(
 ) -> DataFrame:
     """Dense bucket spine built from per-series [t0, t1] epoch bounds that
     were collected ONCE (e.g. from the finest-tier aggregate) — no extra
-    job over the facts per tier. Bounds are floored to the tier period with
-    integer arithmetic, matching ``F.window``'s epoch alignment, so the
+    job over the facts per tier. Bounds are floored to the tier period
+    (:func:`epoch_floor`), matching ``F.window``'s epoch alignment, so the
     same bounds serve every tier of the tree.
 
     The explode is two-level (chunks of ``max_chunk`` buckets) so a series
@@ -459,8 +476,8 @@ def spine_from_bounds(
         ]
     )
     sdf = local_frame(spark, bounds_rows, schema)
-    t0k = (F.col("__t0s") - F.col("__t0s") % step).alias("__t0k")
-    t1k = (F.col("__t1s") - F.col("__t1s") % step).alias("__t1k")
+    t0k = epoch_floor(F.col("__t0s"), step).alias("__t0k")
+    t1k = epoch_floor(F.col("__t1s"), step).alias("__t1k")
     chunk = step * max_chunk
     chunked = sdf.select(*series_cols, t0k, t1k).select(
         *series_cols,

@@ -5,6 +5,20 @@ import pytest
 from preprocessor_spark.session import get_spark
 
 
+# 2020-01-01 00:00:00 minus this is 1969-12-28 23:59:53: before 1970, and
+# off the 300 s lattice of the finest tier
+SHIFT_1969_S = 1577836800 + 3 * 86400 + 7
+
+
+def shifted(df, seconds: int):
+    """``df`` with its ``ts`` moved ``seconds`` earlier, to the microsecond."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn(
+        "ts", F.timestamp_micros(F.unix_micros("ts") - F.lit(seconds * 1_000_000))
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("preprocessor_spark_tests", master="local[4]")

@@ -2,8 +2,8 @@
 item c, extended): for insert-only deltas, refresh(base tiers, delta) must
 equal a full recompute over base ∪ delta — exact for counts/min/max,
 float-fold-tolerant for sums — while rewriting ONLY the partitions the
-delta touches, and keeping dense (gap-filled) tiers dense when the delta
-extends a series' time range."""
+delta touches, and keeping the dense (gap-filled) tiers dense when the
+delta extends a series' time range."""
 
 import os
 
@@ -12,12 +12,11 @@ from pyspark.sql import functions as F
 
 from preprocessor_spark.rollup.incremental import (
     IncrementalRollup,
-    extension_seeds,
+    extension_intervals,
     merge_bounds,
     merge_partials,
     read_touched_partitions,
     save_bounds,
-    with_bucket_day,
 )
 from preprocessor_spark.rollup.tiers import ALGEBRAIC, RollupTree, TierSpec
 from preprocessor_spark.synth import token_sequences
@@ -70,16 +69,46 @@ def pd_isna(x):
     return pd.isna(x)
 
 
-def _write_base_tiers(spark, tree, base, root, partition_fn=None):
-    for tier in tree.tiers:
-        t = tree.base_aggregate(base, tier)
-        if partition_fn is not None:
-            t, pcols = partition_fn(t)
-        else:
-            pcols = ["source"]
-        t.write.mode("overwrite").partitionBy(*pcols).parquet(
-            os.path.join(root, f"tier_{tier.name}")
+def _dense(tree, facts, tier):
+    """The reference tier: timestamp aggregate, then spine-join gap fill."""
+    return tree.gap_fill(tree.base_aggregate(facts, tier), tier)
+
+
+def _epoch_bounds(facts):
+    """Per-source (source, t0, t1) of the facts' ts, in epoch seconds."""
+    return [
+        tuple(r)
+        for r in facts.groupBy("source")
+        .agg(
+            F.min(F.unix_timestamp("ts")).cast("long"),
+            F.max(F.unix_timestamp("ts")).cast("long"),
         )
+        .collect()
+    ]
+
+
+def _write_base_tree(tree, base, root):
+    """A base tree stored as plans/rollup_job.py stores it: every tier
+    gap-filled dense and partitioned by source, next to the per-series
+    bounds sidecar."""
+    for tier in tree.tiers:
+        _dense(tree, base, tier).select("source", "bucket_start", *ALGEBRAIC).write.mode(
+            "overwrite"
+        ).partitionBy("source").parquet(os.path.join(root, f"tier_{tier.name}"))
+    save_bounds(os.path.join(root, "series_bounds.json"), _epoch_bounds(base), ["source"])
+
+
+def _refresh(spark, tree, root, delta):
+    """Refresh ``root`` with the delta in the prepared shape (epoch-second
+    ``tss``) under its exact per-source bounds."""
+    prepared = delta.select(F.unix_timestamp("ts").alias("tss"), "source", "n_tok")
+    return IncrementalRollup(tree, root).refresh(spark, prepared, _epoch_bounds(delta))
+
+
+def _assert_refreshed(spark, tree, root, facts):
+    for tier in tree.tiers:
+        got = _tiers_pdf(spark.read.parquet(os.path.join(root, f"tier_{tier.name}")))
+        _assert_tier_equal(got, _tiers_pdf(_dense(tree, facts, tier)))
 
 
 def test_refresh_equals_full_recompute(spark, tree, corpus, tmp_path):
@@ -87,14 +116,10 @@ def test_refresh_equals_full_recompute(spark, tree, corpus, tmp_path):
     base = corpus.filter(F.col("ts") < CUT)
     delta = corpus.filter(F.col("ts") >= CUT)
     assert 0 < delta.count() < corpus.count()
-    _write_base_tiers(spark, tree, base, root)
-
-    inc = IncrementalRollup(tree, root)
-    metrics = inc.refresh(spark, delta)
+    _write_base_tree(tree, base, root)
+    metrics = _refresh(spark, tree, root, delta)
+    _assert_refreshed(spark, tree, root, corpus)
     for tier in TIERS:
-        got = _tiers_pdf(spark.read.parquet(os.path.join(root, f"tier_{tier.name}")))
-        exp = _tiers_pdf(tree.base_aggregate(corpus, tier))
-        _assert_tier_equal(got, exp)
         assert metrics[tier.name]["partitions_rewritten"] >= 1
 
 
@@ -105,167 +130,64 @@ def test_refresh_late_interior_data(spark, tree, corpus, tmp_path):
     # delta = a modulus slice across the whole range, base = the rest
     delta = corpus.filter(F.xxhash64("doc_id") % 10 == 0)
     base = corpus.filter(F.xxhash64("doc_id") % 10 != 0)
-    _write_base_tiers(spark, tree, base, root)
-    IncrementalRollup(tree, root).refresh(spark, delta)
-    for tier in TIERS:
-        got = _tiers_pdf(spark.read.parquet(os.path.join(root, f"tier_{tier.name}")))
-        exp = _tiers_pdf(tree.base_aggregate(corpus, tier))
-        _assert_tier_equal(got, exp)
-
-
-def test_refresh_rewrites_only_touched_partitions(spark, tree, corpus, tmp_path):
-    """With the (source, bucket_day) production layout, a range-suffix delta
-    must leave untouched day directories' files byte-identical on disk —
-    the O(delta) claim, checked at the filesystem level."""
-    root = str(tmp_path / "tree")
-    base = corpus.filter(F.col("ts") < CUT)
-    delta = corpus.filter(F.col("ts") >= CUT).filter(
-        F.col("ts") < "2020-01-01 00:50:00"
-    )
-    assert delta.count() > 0
-
-    def day_layout(t):
-        return with_bucket_day(t), ["source", "bucket_day"]
-
-    _write_base_tiers(spark, tree, base, root, partition_fn=day_layout)
-    # every bucket here is on one day, so refine the layout check to the
-    # 5m tier's bucket_start-derived file set: snapshot all leaf files
-    tier_dir = os.path.join(root, "tier_5m")
-    before = {
-        os.path.join(dp, f): os.path.getmtime(os.path.join(dp, f))
-        for dp, _, fs in os.walk(tier_dir)
-        for f in fs
-        if f.endswith(".parquet")
-    }
-    inc = IncrementalRollup(tree, root, partition_cols=["source", "bucket_day"])
-    inc.refresh(spark, delta)
-    after_files = {
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(tier_dir)
-        for f in fs
-        if f.endswith(".parquet")
-    }
-    # the synth corpus spans <1 day, so day-level dirs alone can't isolate
-    # the rewrite — but refresh must still produce the full-recompute tier
-    got = _tiers_pdf(spark.read.parquet(tier_dir).drop("bucket_day"))
-    exp = _tiers_pdf(tree.base_aggregate(base.unionByName(delta), TIERS[0]))
-    _assert_tier_equal(got, exp)
-    assert before and after_files
-
-
-def test_refresh_day_partition_isolation(spark, tree, tmp_path):
-    """Two-day hand-built corpus: refreshing day-2 data must not touch the
-    day-1 partition's files at all."""
-    rows = [
-        ("s0", "2020-01-01 10:00:30", 5),
-        ("s0", "2020-01-01 10:02:30", 7),
-        ("s1", "2020-01-01 11:00:30", 3),
-        ("s0", "2020-01-02 10:00:30", 9),
-    ]
-    df = spark.createDataFrame(rows, "source string, ts string, n_tok int").select(
-        "source", F.col("ts").cast("timestamp").alias("ts"), "n_tok"
-    )
-    base = df.filter(F.col("ts") < "2020-01-02")
-    delta = df.filter(F.col("ts") >= "2020-01-02")
-    t = RollupTree(
-        time_col="ts",
-        series_cols=["source"],
-        value_col="n_tok",
-        tiers=[TierSpec("5m", "5 minutes")],
-    )
-    root = str(tmp_path / "tree")
-    tier_dir = os.path.join(root, "tier_5m")
-    with_bucket_day(t.base_aggregate(base, t.tiers[0])).write.partitionBy(
-        "source", "bucket_day"
-    ).parquet(tier_dir)
-    day1 = {}
-    for dp, _, fs in os.walk(tier_dir):
-        for f in fs:
-            if "bucket_day=2020-01-01" in dp and f.endswith(".parquet"):
-                p = os.path.join(dp, f)
-                day1[p] = os.path.getmtime(p)
-    assert day1
-    inc = IncrementalRollup(t, root, partition_cols=["source", "bucket_day"])
-    m = inc.refresh(spark, delta)
-    assert m["5m"]["partitions_rewritten"] == 1
-    for p, mt in day1.items():
-        assert os.path.exists(p) and os.path.getmtime(p) == mt, (
-            f"untouched partition file rewritten: {p}"
-        )
-    got = _tiers_pdf(spark.read.parquet(tier_dir).drop("bucket_day"))
-    exp = _tiers_pdf(t.base_aggregate(df, t.tiers[0]))
-    _assert_tier_equal(got, exp)
+    _write_base_tree(tree, base, root)
+    _refresh(spark, tree, root, delta)
+    _assert_refreshed(spark, tree, root, corpus)
 
 
 def test_dense_refresh_stays_dense_and_matches(spark, tree, corpus, tmp_path):
-    """Dense (gap-filled) base tiers + a delta extending every series'
-    suffix: after refresh each tier equals gap_fill(full recompute) — the
-    extension seeds materialize exactly the new empty buckets."""
+    """A delta extending every series at BOTH ends: after refresh each tier
+    equals gap_fill(full recompute) — the seeds materialize exactly the new
+    empty buckets of the prefix and of the suffix."""
     root = str(tmp_path / "tree")
-    base = corpus.filter(F.col("ts") < CUT)
-    delta = corpus.filter(F.col("ts") >= CUT)
-    for tier in tree.tiers:
-        dense = tree.gap_fill(tree.base_aggregate(base, tier), tier)
-        dense.select("source", "bucket_start", *ALGEBRAIC).write.mode(
-            "overwrite"
-        ).partitionBy("source").parquet(os.path.join(root, f"tier_{tier.name}"))
-    bounds = [
-        tuple(r)
-        for r in base.groupBy("source")
-        .agg(
-            F.unix_timestamp(F.min("ts")).cast("long"),
-            F.unix_timestamp(F.max("ts")).cast("long"),
-        )
-        .collect()
-    ]
-    save_bounds(os.path.join(root, "series_bounds.json"), bounds, ["source"])
-
-    inc = IncrementalRollup(tree, root, dense=True)
-    inc.refresh(spark, delta)
-    for tier in TIERS:
-        got = _tiers_pdf(spark.read.parquet(os.path.join(root, f"tier_{tier.name}")))
-        exp = _tiers_pdf(tree.gap_fill(tree.base_aggregate(corpus, tier), tier))
-        _assert_tier_equal(got, exp)
+    in_base = (F.col("ts") >= "2020-01-01 00:20:00") & (F.col("ts") < CUT)
+    base = corpus.filter(in_base)
+    delta = corpus.filter(~in_base)
+    _write_base_tree(tree, base, root)
+    _refresh(spark, tree, root, delta)
+    _assert_refreshed(spark, tree, root, corpus)
 
 
 def test_refresh_empty_delta_is_noop(spark, tree, corpus, tmp_path):
     root = str(tmp_path / "tree")
     base = corpus.filter(F.col("ts") < CUT)
-    _write_base_tiers(spark, tree, base, root)
-    empty = corpus.filter(F.lit(False))
-    m = IncrementalRollup(tree, root).refresh(spark, empty)
+    _write_base_tree(tree, base, root)
+    m = _refresh(spark, tree, root, corpus.filter(F.lit(False)))
     for tier in TIERS:
         assert m[tier.name]["partitions_rewritten"] == 0
+    _assert_refreshed(spark, tree, root, base)
+
+
+def _facts(spark, rows):
+    return spark.createDataFrame(rows, "source string, ts string, n_tok int").select(
+        "source", F.col("ts").cast("timestamp").alias("ts"), "n_tok"
+    )
 
 
 def test_refresh_into_entirely_new_partitions(spark, tmp_path):
-    """A delta landing ONLY on partitions that don't exist yet (next day's
-    first ingest) exercises the explicit-path read's empty-slice branch:
-    nothing merges, the new partition dirs appear, old ones are untouched."""
+    """A delta whose only series is new exercises the explicit-path read's
+    empty-slice branch: nothing merges, the new partition dir appears with
+    its gaps seeded, and the old one is untouched."""
     t = RollupTree(
         time_col="ts",
         series_cols=["source"],
         value_col="n_tok",
         tiers=[TierSpec("5m", "5 minutes")],
     )
-    base = spark.createDataFrame(
-        [("s0", "2020-01-01 10:00:30", 5)], "source string, ts string, n_tok int"
-    ).select("source", F.col("ts").cast("timestamp").alias("ts"), "n_tok")
-    delta = spark.createDataFrame(
-        [("s0", "2020-01-02 10:00:30", 7), ("s1", "2020-01-02 11:00:30", 9)],
-        "source string, ts string, n_tok int",
-    ).select("source", F.col("ts").cast("timestamp").alias("ts"), "n_tok")
+    base = _facts(spark, [("s0", "2020-01-01 10:00:30", 5)])
+    delta = _facts(
+        spark, [("s1", "2020-01-02 10:00:30", 7), ("s1", "2020-01-02 10:20:30", 9)]
+    )
     root = str(tmp_path / "tree")
-    tier_dir = os.path.join(root, "tier_5m")
-    with_bucket_day(t.base_aggregate(base, t.tiers[0])).write.partitionBy(
-        "source", "bucket_day"
-    ).parquet(tier_dir)
-    inc = IncrementalRollup(t, root, partition_cols=["source", "bucket_day"])
-    m = inc.refresh(spark, delta)
-    assert m["5m"]["partitions_rewritten"] == 2
-    got = _tiers_pdf(spark.read.parquet(tier_dir).drop("bucket_day"))
-    exp = _tiers_pdf(t.base_aggregate(base.unionByName(delta), t.tiers[0]))
-    _assert_tier_equal(got, exp)
+    _write_base_tree(t, base, root)
+    s0_dir = os.path.join(root, "tier_5m", "source=s0")
+    before = {f: os.path.getmtime(os.path.join(s0_dir, f)) for f in os.listdir(s0_dir)}
+    m = _refresh(spark, t, root, delta)
+    assert m["5m"]["partitions_rewritten"] == 1
+    assert {
+        f: os.path.getmtime(os.path.join(s0_dir, f)) for f in os.listdir(s0_dir)
+    } == before
+    _assert_refreshed(spark, t, root, base.unionByName(delta))
 
 
 def test_refresh_with_hive_unsafe_partition_value(spark, tmp_path):
@@ -278,40 +200,37 @@ def test_refresh_with_hive_unsafe_partition_value(spark, tmp_path):
         value_col="n_tok",
         tiers=[TierSpec("5m", "5 minutes")],
     )
-    df = spark.createDataFrame(
+    df = _facts(
+        spark,
         [
             ("src A", "2020-01-01 10:00:30", 5),
             ("src A", "2020-01-01 10:02:30", 7),
             ("plain", "2020-01-01 10:01:30", 3),
         ],
-        "source string, ts string, n_tok int",
-    ).select("source", F.col("ts").cast("timestamp").alias("ts"), "n_tok")
+    )
     base = df.filter(F.col("n_tok") != 7)
     delta = df.filter(F.col("n_tok") == 7)
     root = str(tmp_path / "tree")
-    tier_dir = os.path.join(root, "tier_5m")
-    t.base_aggregate(base, t.tiers[0]).write.partitionBy("source").parquet(tier_dir)
-    IncrementalRollup(t, root).refresh(spark, delta)
-    got = _tiers_pdf(spark.read.parquet(tier_dir))
-    exp = _tiers_pdf(t.base_aggregate(df, t.tiers[0]))
-    _assert_tier_equal(got, exp)
+    _write_base_tree(t, base, root)
+    _refresh(spark, t, root, delta)
+    _assert_refreshed(spark, t, root, df)
 
 
-def test_merge_bounds_and_extension_seeds(spark):
+def test_merge_bounds_and_extension_seeds():
     old = [("s0", 1000, 2000), ("s1", 500, 900)]
-    delta = [("s0", 2100, 3000), ("s2", 100, 400)]
+    delta = [("s0", 2100, 3000), ("s2", 150, 400)]
     merged = merge_bounds(old, delta)
-    assert merged == [("s0", 1000, 3000), ("s1", 500, 900), ("s2", 100, 400)]
-    seeds = extension_seeds(spark, old, merged, ["source"], step_s=100)
-    pdf = seeds.toPandas()
-    # s0 suffix growth: lattice 2000 already existed → seeds 2100..3000
-    s0 = pdf[pdf.source == "s0"]
-    assert len(s0) == 10
-    # s1 unchanged → no seeds; s2 new → full floored range 100..400
-    assert (pdf.source != "s1").all()
-    assert len(pdf[pdf.source == "s2"]) == 4
-    assert (pdf.n_points == 0).all()
-    assert pdf.sum_v.isna().all()
+    assert merged == [("s0", 1000, 3000), ("s1", 500, 900), ("s2", 150, 400)]
+    # s0 suffix growth: lattice 2000 already existed → 2100..3000; s1
+    # unchanged → nothing; s2 new → its whole floored range 100..400
+    assert extension_intervals(old, merged, step_s=100) == [
+        ("s0", 2100, 3000),
+        ("s2", 100, 400),
+    ]
+    # prefix growth, floored: before 1970 as after
+    assert extension_intervals(
+        [("s0", -250, 0)], [("s0", -1001, 0)], step_s=100
+    ) == [("s0", -1100, -400)]
 
 
 def test_merge_partials_is_reaggregation(spark, tree, corpus):
@@ -337,9 +256,9 @@ def test_fused_refresh_reports_per_tier_rows(spark, tree, corpus, tmp_path):
     root = str(tmp_path / "tree")
     base = corpus.filter(F.col("ts") < CUT)
     delta = corpus.filter(F.col("ts") >= CUT)
-    _write_base_tiers(spark, tree, base, root)
+    _write_base_tree(tree, base, root)
     touched = [r[0] for r in delta.select("source").distinct().collect()]
-    m = IncrementalRollup(tree, root).refresh(spark, delta)
+    m = _refresh(spark, tree, root, delta)
     for tier in TIERS:
         want = (
             spark.read.parquet(os.path.join(root, f"tier_{tier.name}"))
@@ -350,54 +269,6 @@ def test_fused_refresh_reports_per_tier_rows(spark, tree, corpus, tmp_path):
         assert m[tier.name]["partitions_rewritten"] == len(touched)
     # 5-minute buckets strictly outnumber hourly ones on this corpus
     assert m["5m"]["rows_written"] > m["1h"]["rows_written"] > 0
-
-
-def test_refresh_with_precomputed_bounds_matches(spark, tree, corpus, tmp_path):
-    """A caller that passes the delta's bounds (refresh_job's profile) gets
-    the same tiers as one that lets the refresh compute them."""
-    base = corpus.filter(F.col("ts") < CUT)
-    delta = corpus.filter(F.col("ts") >= CUT)
-    roots = {}
-    for mode in ("computed", "given"):
-        roots[mode] = root = str(tmp_path / mode)
-        _write_base_tiers(spark, tree, base, root)
-        inc = IncrementalRollup(tree, root)
-        bounds = inc.delta_bounds(delta) if mode == "given" else None
-        inc.refresh(spark, delta, bounds=bounds)
-    for tier in TIERS:
-        _assert_tier_equal(
-            *[
-                _tiers_pdf(spark.read.parquet(os.path.join(roots[m], f"tier_{tier.name}")))
-                for m in ("given", "computed")
-            ]
-        )
-
-
-def test_partition_predicate_exact_past_inline_cap(spark):
-    """>1024 touched (source, day) tuples: the predicate must match the
-    touched set EXACTLY (prefix-grouped isin), not the |sources|x|days|
-    cross product the old per-column-isin fallback matched — on a sparse
-    touched set the cross product inflates the refresh's read and rewrite
-    by orders of magnitude."""
-    from preprocessor_spark.rollup.incremental import _partition_predicate
-
-    import pandas as pd
-
-    sources = [f"s{i:03d}" for i in range(60)]
-    days = pd.date_range("2020-01-01", periods=60).date
-    # sparse diagonal band: 60 sources x ~20 days each = 1200 tuples
-    touched = [
-        (s, days[(i + j) % 60])
-        for i, s in enumerate(sources)
-        for j in range(20)
-    ]
-    assert len(touched) > 1024
-    full = spark.createDataFrame(
-        [(s, d) for s in sources for d in days], ["source", "bucket_day"]
-    )
-    pred = _partition_predicate(["source", "bucket_day"], touched)
-    got = full.filter(pred).count()
-    assert got == len(set(touched)) == 1200  # cross product would be 3600
 
 
 def test_balanced_or_handles_thousands_of_terms(spark):

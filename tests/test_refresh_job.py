@@ -15,7 +15,7 @@ import time
 
 import numpy as np
 import pytest
-from conftest import no_python_worker
+from conftest import SHIFT_1969_S, no_python_worker, shifted
 from pyspark.sql import functions as F
 
 from preprocessor_spark.plans import refresh_job, rollup_job
@@ -78,20 +78,26 @@ def _tier_pdf(spark, root, name):
     )
 
 
+def _assert_rows_equal(got, exp, name):
+    assert len(got) == len(exp), f"{name}: {len(got)} vs {len(exp)} rows"
+    assert (got["source"].values == exp["source"].values).all()
+    assert (got["bucket_start"].values == exp["bucket_start"].values).all()
+    assert (got["n_points"].values == exp["n_points"].values).all()
+    for c in ("sum_v", "sum_sq", "min_v", "max_v"):
+        a = got[c].to_numpy(float)
+        b = exp[c].to_numpy(float)
+        assert (np.isnan(a) == np.isnan(b)).all(), f"{name}.{c} null drift"
+        m = ~np.isnan(a)
+        assert np.abs(a[m] - b[m]).max() < 1e-9, f"{name}.{c} diverged"
+
+
 def _assert_tiers_equal(spark, root, expected_root):
     for tier in DEFAULT_TIERS:
-        got = _tier_pdf(spark, root, tier.name)
-        exp = _tier_pdf(spark, expected_root, tier.name)
-        assert len(got) == len(exp), f"{tier.name}: {len(got)} vs {len(exp)} rows"
-        assert (got["source"].values == exp["source"].values).all()
-        assert (got["bucket_start"].values == exp["bucket_start"].values).all()
-        assert (got["n_points"].values == exp["n_points"].values).all()
-        for c in ("sum_v", "sum_sq", "min_v", "max_v"):
-            a = got[c].to_numpy(float)
-            b = exp[c].to_numpy(float)
-            assert (np.isnan(a) == np.isnan(b)).all(), f"{tier.name}.{c} null drift"
-            m = ~np.isnan(a)
-            assert np.abs(a[m] - b[m]).max() < 1e-9, f"{tier.name}.{c} diverged"
+        _assert_rows_equal(
+            _tier_pdf(spark, root, tier.name),
+            _tier_pdf(spark, expected_root, tier.name),
+            tier.name,
+        )
 
 
 def _assert_prepared_equal(spark, root, expected_root):
@@ -224,16 +230,20 @@ def _block_files(root):
     return out
 
 
-def _assert_blocks_decode_to_tier(spark, tree):
+def _decoded_blocks(spark, tree):
     from preprocessor_spark.rollup.compression import decode_tier_blocks
 
     blocks = spark.read.parquet(os.path.join(tree, "blocks_5m"))
-    decoded = (
+    return (
         decode_tier_blocks(blocks, ["source"])
         .toPandas()[TIER_COLS]
         .sort_values(["source", "bucket_start"])
         .reset_index(drop=True)
     )
+
+
+def _assert_blocks_decode_to_tier(spark, tree):
+    decoded = _decoded_blocks(spark, tree)
     tier = _tier_pdf(spark, tree, "5m")
     tier = tier[tier["n_points"] > 0].reset_index(drop=True)
     assert len(decoded) == len(tier)
@@ -307,6 +317,39 @@ def test_refresh_starts_no_python_worker(spark, far_refresh):
     assert far_refresh[4]["delta_rows"] > 0
     with no_python_worker(spark), pytest.raises(AssertionError, match="Python"):
         spark.range(1).groupBy("id").applyInPandas(lambda pdf: pdf, "id long")
+
+
+@pytest.mark.parametrize("shift_s", [0, SHIFT_1969_S], ids=["2020", "1969"])
+def test_refresh_equals_rebuild_across_the_epoch(spark, tmp_path, shift_s):
+    """A build refreshed with a suffix delta leaves the tiers and blocks
+    that a rebuild of base ∪ delta leaves, also for a corpus before 1970
+    whose times are off the bucket lattice: there a bucket key that
+    truncates toward zero instead of flooring lands one bucket late."""
+    full = shifted(token_sequences(spark, 16_000), shift_s)
+    (cut,) = full.select(F.percentile(F.unix_micros("ts"), 0.8)).first()
+    paths = {}
+    for name, df in (
+        ("full", full),
+        ("base", full.filter(F.unix_micros("ts") < cut)),
+        ("delta", full.filter(F.unix_micros("ts") >= cut)),
+    ):
+        paths[name] = str(tmp_path / name)
+        df.write.parquet(paths[name])
+    out, truth = str(tmp_path / "out"), str(tmp_path / "truth")
+    rollup_job.main(["--input", paths["base"], "--output", out])
+    refresh_job.main(
+        ["--output", out, "--delta-input", paths["delta"], "--input", paths["base"]]
+    )
+    os.makedirs(truth)
+    for f in ("split_params.json", "norm_params.json"):
+        shutil.copy(os.path.join(out, f), os.path.join(truth, f))
+    rollup_job.main(["--input", paths["full"], "--output", truth, "--resume"])
+
+    assert spark.read.parquet(paths["delta"]).count() > 0
+    _assert_tiers_equal(spark, out, truth)
+    _assert_rows_equal(
+        _decoded_blocks(spark, out), _decoded_blocks(spark, truth), "blocks_5m"
+    )
 
 
 def test_refresh_reports_its_block_encode(spark, far_refresh):

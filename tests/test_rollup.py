@@ -4,6 +4,7 @@ gap-fill yields exactly the dense bucket spine; salted == unsalted."""
 
 import pandas as pd
 import pytest
+from conftest import SHIFT_1969_S, shifted
 
 from preprocessor_spark.rollup.tiers import RollupTree, TierSpec
 from preprocessor_spark.synth import token_sequences
@@ -233,39 +234,42 @@ def test_epoch_aggregate_equivalence(spark):
     chain with a spine LEFT JOIN gap fill bucket-for-bucket, at tier 0 and
     through the coarse re-aggregations — pins the
     floor(epoch/step)*step == F.window(ts, d)['start'] alignment the
-    10^12-scale job relies on."""
+    10^12-scale job relies on, before 1970 as after."""
     from pyspark.sql import functions as F
 
     from preprocessor_spark.rollup.tiers import DEFAULT_TIERS, duration_seconds
 
-    corpus = token_sequences(spark, 20_000)
     tree = RollupTree(time_col="ts", series_cols=["source"], value_col="n_tok")
     tier = DEFAULT_TIERS[0]
     step = duration_seconds(tier.duration)
-    facts, spine = _epoch_inputs(spark, corpus, step)
-    # int, not long, epochs in: the aggregate widens them itself
-    facts = facts.withColumn("tss", F.col("tss").cast("int"))
-    got = tree.base_aggregate_with_spine_epoch(facts, step, spine)
-    ref = tree.gap_fill(tree.base_aggregate(corpus, tier), tier)
-    assert _mismatches(ref, got) == 0
+    corpus = token_sequences(spark, 20_000)
+    # as generated, and moved before 1970 off the 5m lattice, where an
+    # epoch key that truncates toward zero lands one bucket late
+    for name, facts_ts in (("2020", corpus), ("1969", shifted(corpus, SHIFT_1969_S))):
+        facts, spine = _epoch_inputs(spark, facts_ts, step)
+        # int, not long, epochs in: the aggregate widens them itself
+        facts = facts.withColumn("tss", F.col("tss").cast("int"))
+        got = tree.base_aggregate_with_spine_epoch(facts, step, spine)
+        ref = tree.gap_fill(tree.base_aggregate(facts_ts, tier), tier)
+        assert _mismatches(ref, got) == 0, f"{name}: tier {tier.name} diverged"
 
-    # the coarse chain: epoch re-agg of the epoch tier == window re-agg
-    for coarse in DEFAULT_TIERS[1:]:
-        cstep = duration_seconds(coarse.duration)
-        ref = tree.reaggregate(ref, coarse)
-        got_c = tree.reaggregate_epoch(
-            got.select(
+        # the coarse chain: epoch re-agg of the epoch tier == window re-agg
+        for coarse in DEFAULT_TIERS[1:]:
+            cstep = duration_seconds(coarse.duration)
+            ref = tree.reaggregate(ref, coarse)
+            got_c = tree.reaggregate_epoch(
+                got.select(
+                    "source",
+                    F.unix_timestamp("bucket_start").alias("bucket_epoch"),
+                    "n_points", "sum_v", "sum_sq", "min_v", "max_v",
+                ),
+                cstep,
+            ).select(
                 "source",
-                F.unix_timestamp("bucket_start").alias("bucket_epoch"),
+                F.timestamp_seconds("bucket_epoch").alias("bucket_start"),
                 "n_points", "sum_v", "sum_sq", "min_v", "max_v",
-            ),
-            cstep,
-        ).select(
-            "source",
-            F.timestamp_seconds("bucket_epoch").alias("bucket_start"),
-            "n_points", "sum_v", "sum_sq", "min_v", "max_v",
-        )
-        assert _mismatches(ref, got_c) == 0, f"coarse tier {coarse.name} diverged"
+            )
+            assert _mismatches(ref, got_c) == 0, f"{name}: tier {coarse.name} diverged"
 
 
 def test_retention_policy_enforce_and_expiry(spark):

@@ -9,6 +9,7 @@ import shutil
 
 import pandas as pd
 import pytest
+from conftest import SHIFT_1969_S, shifted
 from pyspark.sql import functions as F
 
 from preprocessor_spark.plans import rollup_job
@@ -207,28 +208,32 @@ def test_series_bounds_and_input_rows_match_prepared_and_corpus(spark, tmp_path)
 
 
 def test_spine_from_bounds_equals_dense_spine(spark):
-    corpus = token_sequences(spark, 5_000)
+    """The spine of the facts' per-source [min, max] epoch seconds equals
+    the gap-fill spine of every tier: the bounds are floored to each tier's
+    period, also before 1970 and off the lattice."""
+    generated = token_sequences(spark, 5_000)
     tree = RollupTree(time_col="ts", series_cols=["source"], value_col="n_tok")
-    for tier in DEFAULT_TIERS:
-        cur = tree.base_aggregate(corpus, tier)
-        ref = tree.gap_fill(cur, tier).select("source", "bucket_start")
+    for name, corpus in (("2020", generated), ("1969", shifted(generated, SHIFT_1969_S))):
         bounds = [
             tuple(r)
-            for r in cur.groupBy("source")
+            for r in corpus.groupBy("source")
             .agg(
-                F.min(F.unix_timestamp("bucket_start")).alias("t0"),
-                F.max(F.unix_timestamp("bucket_start")).alias("t1"),
+                F.min(F.unix_timestamp("ts")).alias("t0"),
+                F.max(F.unix_timestamp("ts")).alias("t1"),
             )
             .collect()
         ]
-        spine = spine_from_bounds(
-            spark, bounds, ["source"], duration_seconds(tier.duration),
-            max_chunk=7,  # force the two-level chunked explode path
-        )
-        assert (
-            spine.exceptAll(ref).count() == 0
-            and ref.exceptAll(spine).count() == 0
-        ), f"spine mismatch at {tier.name}"
+        for tier in DEFAULT_TIERS:
+            cur = tree.base_aggregate(corpus, tier)
+            ref = tree.gap_fill(cur, tier).select("source", "bucket_start")
+            spine = spine_from_bounds(
+                spark, bounds, ["source"], duration_seconds(tier.duration),
+                max_chunk=7,  # force the two-level chunked explode path
+            )
+            assert (
+                spine.exceptAll(ref).count() == 0
+                and ref.exceptAll(spine).count() == 0
+            ), f"{name}: spine mismatch at {tier.name}"
 
 
 def test_spine_from_bounds_non_string_series(spark):
