@@ -74,10 +74,9 @@ import time
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-TAIL_NAME = "unbias_tail.parquet"
+from preprocessor_spark.plans.rollup_job import BLOCK_BUCKETS, MA_WINDOW, TAIL_NAME
+
 TAIL_COLS = ["source", "ts", "doc_id", "n_tok"]
-W_SIZE = 5  # rollup_job's MA-unbias window
-BLOCK_BUCKETS, BUCKET_SECONDS = 4096, 300  # rollup_job's 5m-tier blocks
 
 
 def top_rows(
@@ -173,7 +172,6 @@ def main(argv: list[str] | None = None) -> dict:
         "bootstrap the unbias carry tail)",
     )
     p.add_argument("--master", default=None)
-    p.add_argument("--no-blocks", action="store_true")
     args = p.parse_args(argv)
 
     from preprocessor_spark import get_spark
@@ -185,7 +183,6 @@ def main(argv: list[str] | None = None) -> dict:
         args.output,
         spark.read.parquet(args.delta_input),
         corpus=args.input,
-        blocks=not args.no_blocks,
     )
     print(json.dumps(result))
     return result
@@ -198,7 +195,6 @@ def absorb(
     *,
     corpus: str | None = None,
     fingerprint: str | None = None,
-    blocks: bool = True,
 ) -> dict:
     """Absorb ``delta_df`` into the rollup_job output ``out``: steps 0–7 of
     the module docstring. Returns the job's JSON record.
@@ -206,8 +202,7 @@ def absorb(
     ``corpus`` is the original corpus's path, read only by the first
     refresh of ``out`` to bootstrap the carry tail. ``fingerprint`` names
     the delta in the manifest's double-apply guard; by default it is the
-    delta's content extent (rows and per-source time bounds). ``blocks``
-    re-encodes the touched compression blocks."""
+    delta's content extent (rows and per-source time bounds)."""
     from preprocessor_spark.rollup.incremental import load_bounds
     from preprocessor_spark.session import scoped_conf
 
@@ -239,7 +234,6 @@ def absorb(
             delta_df,
             corpus,
             fingerprint,
-            blocks,
             load_bounds(bounds_path),
             t_start,
         )
@@ -251,7 +245,6 @@ def _refresh(
     delta: DataFrame,
     corpus: str | None,
     fingerprint: str | None,
-    blocks: bool,
     old_bounds: list[tuple],
     t_start: float,
 ) -> dict:
@@ -266,6 +259,7 @@ def _refresh(
     from preprocessor_spark.rollup.tiers import (
         DEFAULT_TIERS,
         RollupTree,
+        duration_seconds,
         stored_tier_schema,
     )
     from preprocessor_spark.session import class_archive
@@ -285,7 +279,7 @@ def _refresh(
             ["source"],
             "ts",
             ["doc_id"],
-            k=W_SIZE - 1,
+            k=MA_WINDOW - 1,
         )
     else:
         tail_raw = None
@@ -387,7 +381,7 @@ def _refresh(
     # not read back.
     blocks_path = os.path.join(out, "blocks_" + DEFAULT_TIERS[0].name)
     old_layout = sorted(glob.glob(os.path.join(blocks_path, "source=*", "*.parquet")))
-    if old_layout and blocks:
+    if old_layout:
         raise ValueError(
             f"{blocks_path} holds blocks in the layout before (source, block) "
             f"partitions (e.g. {old_layout[0]}); a refresh re-encodes single "
@@ -427,7 +421,7 @@ def _refresh(
     )
     unb = Unbiaser(
         method="ma",
-        window_size=W_SIZE,
+        window_size=MA_WINDOW,
         series_cols=["source"],
         value_cols=["n_tok_z"],
         tiebreak_cols=["doc_id"],
@@ -458,7 +452,7 @@ def _refresh(
         ["source"],
         "ts",
         ["doc_id"],
-        k=W_SIZE - 1,
+        k=MA_WINDOW - 1,
     )
     # NOTE: only MATERIALIZE the new tail here (the .tmp write) — the swap
     # of tail_path itself must wait until after the tier refresh below:
@@ -475,41 +469,34 @@ def _refresh(
     tree = RollupTree(series_cols=["source"], value_col="n_tok_z", tiers=DEFAULT_TIERS)
     bounds = [(s, t0_, t1_) for s, _n, t0_, t1_ in extent]
     inc = IncrementalRollup(tree, out)
-    tier_metrics = inc.refresh(spark, prepared_delta, bounds, manifest=manifest)
+    tier_metrics = inc.refresh(spark, prepared_delta, bounds)
     refresh_seconds = round(time.perf_counter() - t0, 3)
 
     # -- re-encode the compression blocks the delta lands in ---------------
     # on the driver: at most BLOCK_BUCKETS rows per touched block, where a
     # Python worker's cold start would cost seconds
-    compress_seconds = encode_rows = blocks_written = None
-    if blocks:
-        t0 = time.perf_counter()
-        tier0 = spark.read.schema(stored_tier_schema([delta.schema["source"]])).parquet(
-            os.path.join(out, f"tier_{DEFAULT_TIERS[0].name}")
+    t0 = time.perf_counter()
+    tier0 = spark.read.schema(stored_tier_schema([delta.schema["source"]])).parquet(
+        os.path.join(out, f"tier_{DEFAULT_TIERS[0].name}")
+    )
+    step0 = duration_seconds(DEFAULT_TIERS[0].duration)
+    span = BLOCK_BUCKETS * step0
+    touched_rows = tier0.filter(
+        F.col("source").isin([s for s, _, _ in bounds])
+        & _balanced_or(
+            [
+                (F.col("source") == s)
+                & (F.col("bucket_start") >= F.timestamp_seconds(F.lit(a - a % span)))
+                & (F.col("bucket_start") < F.timestamp_seconds(F.lit(b - b % span + span)))
+                for s, a, b in bounds
+            ]
         )
-        span = BLOCK_BUCKETS * BUCKET_SECONDS
-        touched_rows = tier0.filter(
-            F.col("source").isin([s for s, _, _ in bounds])
-            & _balanced_or(
-                [
-                    (F.col("source") == s)
-                    & (F.col("bucket_start") >= F.timestamp_seconds(F.lit(a - a % span)))
-                    & (
-                        F.col("bucket_start")
-                        < F.timestamp_seconds(F.lit(b - b % span + span))
-                    )
-                    for s, a, b in bounds
-                ]
-            )
-        )
-        blocks = encode_partitioned_blocks_local(
-            touched_rows, ["source"], BLOCK_BUCKETS, BUCKET_SECONDS
-        )
-        blocks.frame.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("source", BLOCK_COL).parquet(blocks_path)
-        encode_rows, blocks_written = blocks.rows, blocks.blocks
-        compress_seconds = round(time.perf_counter() - t0, 3)
+    )
+    encoded = encode_partitioned_blocks_local(touched_rows, ["source"], BLOCK_BUCKETS, step0)
+    encoded.frame.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("source", BLOCK_COL).parquet(blocks_path)
+    compress_seconds = round(time.perf_counter() - t0, 3)
 
     prepared_delta.unpersist()
     # swap the carry tail into place now that nothing can re-read the old
@@ -530,8 +517,8 @@ def _refresh(
         "prepare_seconds": prepare_seconds,
         "refresh_seconds": refresh_seconds,
         "compress_seconds": compress_seconds,
-        "encode_rows": encode_rows,
-        "blocks_written": blocks_written,
+        "encode_rows": encoded.rows,
+        "blocks_written": encoded.blocks,
         "tiers": tier_metrics,
         "total_seconds": total,
         "delta_rows_per_sec": round(delta_rows / max(total, 1e-9)),

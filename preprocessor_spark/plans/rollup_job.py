@@ -46,6 +46,12 @@ PREPARE_RG_BYTES = 4 << 20
 # buckets of the corpus profile: the split fit reads edge timestamps from
 # ~rows/PROFILE_BUCKETS-row buckets; the unbias chunking coarsens them
 PROFILE_BUCKETS = 4096
+# What a refresh (plans/refresh_job.py) must continue exactly as the build
+# left it: the MA-unbias window, the 5m tier's compression block (buckets
+# per block; a bucket is the tier's period) and the carry tail's sidecar.
+MA_WINDOW = 5
+BLOCK_BUCKETS = 4096
+TAIL_NAME = "unbias_tail.parquet"
 
 
 def _epoch_seconds(micros: int) -> int:
@@ -65,7 +71,8 @@ def main(argv: list[str] | None = None) -> dict:
     args = p.parse_args(argv)
 
     from preprocessor_spark import get_spark
-    from preprocessor_spark.rollup.checkpoint import Manifest
+    from preprocessor_spark.rollup.checkpoint import TIER_PREFIX, Manifest
+    from preprocessor_spark.rollup.tiers import DEFAULT_TIERS
     from preprocessor_spark.session import class_archive, scoped_conf
 
     spark = get_spark("rollup_job", master=args.master, batch_committer_v2=True)
@@ -88,12 +95,17 @@ def main(argv: list[str] | None = None) -> dict:
         # --input, whose edge then matches the rebuilt series_bounds.json.
         import shutil as _shutil
 
-        tail_sidecar = os.path.join(out, "unbias_tail.parquet")
+        tail_sidecar = os.path.join(out, TAIL_NAME)
         if os.path.exists(tail_sidecar):
             _shutil.rmtree(tail_sidecar + ".prev", ignore_errors=True)
             os.replace(tail_sidecar, tail_sidecar + ".prev")
         for leftover in (tail_sidecar + ".tmp", tail_sidecar + ".bak"):
             _shutil.rmtree(leftover, ignore_errors=True)
+        # the build replaces only the units of the new corpus's series: a
+        # series the old tree had and the new corpus lacks would survive in
+        # every tier, and the block encode would carry it into blocks_5m
+        for tier in DEFAULT_TIERS:
+            _shutil.rmtree(os.path.join(out, TIER_PREFIX + tier.name), ignore_errors=True)
     manifest = Manifest(manifest_path)
     # a build is a fixed sequence of statically sized stages (sizes below,
     # all from the profile): AQE's per-exchange materialize + re-plan
@@ -114,6 +126,7 @@ def _build(spark, args, out: str, manifest) -> dict:
     from preprocessor_spark.params import load_params, save_params
     from preprocessor_spark.rollup.checkpoint import (
         ROWS_PER_WRITE_TASK,
+        TIER_COL,
         run_resumable_observed,
         run_resumable_observed_tiers,
     )
@@ -192,7 +205,7 @@ def _build(spark, args, out: str, manifest) -> dict:
     # -- unbias (MA residual of the z-scored series per source) ----------
     unb = Unbiaser(
         method="ma",
-        window_size=5,
+        window_size=MA_WINDOW,
         series_cols=["source"],
         value_cols=["n_tok_z"],
         tiebreak_cols=["doc_id"],
@@ -337,9 +350,7 @@ def _build(spark, args, out: str, manifest) -> dict:
         filled = tree.base_aggregate_with_spine_epoch(prepared, step0, spine)
         sc.setJobDescription(f"tier0_{base.name}")
         run_resumable_observed(
-            spark,
             filled,
-            stage=f"tier_{base.name}",
             partition_col="source",
             out_path=os.path.join(out, f"tier_{base.name}"),
             manifest=manifest,
@@ -394,13 +405,13 @@ def _build(spark, args, out: str, manifest) -> dict:
                     f"previous tier's period ({prev_step}s)"
                 )
             cur = tree.reaggregate_epoch(cur, step)
-            tagged.append(cur.withColumn("tier", F.lit(tier.name)))
+            tagged.append(cur.withColumn(TIER_COL, F.lit(tier.name)))
             prev_step = step
         allc = tagged[0]
         for t in tagged[1:]:
             allc = allc.unionByName(t)
         allc = allc.select(
-            "tier",
+            TIER_COL,
             "source",
             F.timestamp_seconds("bucket_epoch").alias("bucket_start"),
             *ALGEBRAIC,
@@ -408,9 +419,7 @@ def _build(spark, args, out: str, manifest) -> dict:
         sc.setJobDescription("coarse")
         with scoped_conf(spark, tier_conf):
             run_resumable_observed_tiers(
-                spark,
                 allc,
-                tier_col="tier",
                 partition_col="source",
                 out_root=out,
                 manifest=manifest,
@@ -448,7 +457,7 @@ def _build(spark, args, out: str, manifest) -> dict:
     encode_parts = max(1, min(cores, -(-tier0_rows // ROWS_PER_WRITE_TASK)))
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": encode_parts}):
         encode_partitioned_blocks(
-            tier0, ["source"], block_buckets=4096, bucket_seconds=300
+            tier0, ["source"], block_buckets=BLOCK_BUCKETS, bucket_seconds=step0
         ).write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy(
             "source", BLOCK_COL
         ).parquet(os.path.join(out, "blocks_" + base.name))

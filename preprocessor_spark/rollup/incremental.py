@@ -12,7 +12,7 @@ delta partial's, per (series, bucket). So a refresh is
     delta facts ──epoch aggregate──▶ delta partials       (O(|delta|))
     touched partitions = the delta's series               (driver-side)
     existing tier ⋈ touched partitions ──union+reagg──▶ merged rows
-    one write, then ONLY those partition dirs replaced    (O(touched))
+    one write replaces ONLY those partitions              (O(touched))
 
 and never reads or rewrites the series the delta does not touch. The
 delta arrives in the prepared shape plans/rollup_job.py writes (series,
@@ -47,7 +47,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import shutil
 import time
 from functools import reduce
 
@@ -55,6 +54,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from preprocessor_spark.rollup.checkpoint import (
+    ROWS_PER_WRITE_TASK,
+    TIER_COL,
+    Manifest,
+    write_units,
+)
 from preprocessor_spark.rollup.tiers import (
     ALGEBRAIC,
     RollupTree,
@@ -257,13 +262,15 @@ class IncrementalRollup:
     Tiers live at ``{root}/tier_{name}`` in the layout plans/rollup_job.py
     writes: gap-filled dense, keyed by series_cols + bucket_start and
     partitioned by the series columns, with the per-series bounds sidecar
-    ``{root}/series_bounds.json`` (:func:`save_bounds`)."""
+    ``{root}/series_bounds.json`` (:func:`save_bounds`) and the lineage
+    manifest ``{root}/manifest.jsonl``."""
 
     def __init__(self, tree: RollupTree, root: str):
         self.tree = tree
         self.root = root
         self.partition_cols = list(tree.series_cols)
         self.bounds_path = os.path.join(root, "series_bounds.json")
+        self.manifest = Manifest(os.path.join(root, "manifest.jsonl"))
 
     def tier_path(self, tier: TierSpec) -> str:
         return os.path.join(self.root, f"tier_{tier.name}")
@@ -292,7 +299,6 @@ class IncrementalRollup:
         spark: SparkSession,
         delta_df: DataFrame,
         bounds: list[tuple],
-        manifest=None,
     ) -> dict:
         """Refresh every tier from one delta of NEW facts in the prepared
         shape: series columns, ``tss`` (epoch seconds) and the value column.
@@ -304,7 +310,8 @@ class IncrementalRollup:
         become null seed rows, floored to each tier's period and folded into
         that tier's partial, so every tier stays gap-filled dense. The only
         Spark job is the one tier-tagged write that lands every tier's
-        merged partitions (see :meth:`_refresh_fused`)."""
+        merged partitions and marks each as ``refresh_<tier>`` (see
+        :meth:`_refresh_fused`)."""
         tree = self.tree
         t_all = time.perf_counter()
         partials = self.delta_partials(delta_df)
@@ -315,8 +322,6 @@ class IncrementalRollup:
         ivs = extension_intervals(old_bounds, new_bounds, step0)
         spine = None
         if ivs:
-            from preprocessor_spark.rollup.checkpoint import ROWS_PER_WRITE_TASK
-
             n_rows = sum((iv[-1] - iv[-2]) // step0 + 1 for iv in ivs)
             spine = spine_from_bounds(
                 spark,
@@ -352,7 +357,7 @@ class IncrementalRollup:
                 *ALGEBRAIC,
             )
         touched = sorted({tuple(r[:-2]) for r in bounds})
-        metrics = self._refresh_fused(spark, parts, touched, manifest)
+        metrics = self._refresh_fused(spark, parts, touched)
         save_bounds(self.bounds_path, new_bounds, tree.series_cols)
         metrics["total_seconds"] = round(time.perf_counter() - t_all, 3)
         return metrics
@@ -362,27 +367,24 @@ class IncrementalRollup:
         spark: SparkSession,
         parts: dict[str, DataFrame],
         touched: list[tuple],
-        manifest=None,
     ) -> dict:
-        """One write action for the whole tree: each tier's merged rows are
-        tier-tagged and Hive-partitioned into a temp dir, then each touched
-        partition directory is moved into its tier's layout driver-side.
-        Manifest marks land only after the moves. NOTE the crash contract
-        differs from run_resumable_observed_tiers: a merge is NOT
-        idempotent (re-merging a delta into a partition that was already
-        moved would double-count it), so recovery from a crash mid-move
-        relies on the caller's double-apply guard (refresh_job's
-        started-without-completed mark refuses the rerun), not on
-        recomputation."""
-        from pyspark.sql import Observation
+        """One write action for the whole tree: each tier's merged rows of
+        the touched partitions, tier-tagged, go through
+        :func:`checkpoint.write_units`, which replaces those partitions in
+        every tier and then marks each ``refresh_<tier>`` with its rows.
 
-        t0 = time.perf_counter()
+        Crash contract: a merge is NOT idempotent. Re-merging a delta into
+        a partition whose merged rows were already moved in would
+        double-count it, so a rerun after a crash is not a recovery.
+        refresh_job marks the delta started before its first write and
+        refuses a rerun of a delta that started but did not complete."""
         tiers = self.tree.tiers
         if not touched:
             return {
                 t.name: {"partitions_rewritten": 0, "rows_written": 0, "seconds": 0.0}
                 for t in tiers
             }
+        t0 = time.perf_counter()
         key_cols = [*self.tree.series_cols, "bucket_start"]
         tagged: DataFrame | None = None
         for tier in tiers:
@@ -395,25 +397,8 @@ class IncrementalRollup:
             )
             merged = merge_partials(
                 existing, part, key_cols, cluster_cols=self.partition_cols
-            ).withColumn("__tier", F.lit(tier.name))
+            ).withColumn(TIER_COL, F.lit(tier.name))
             tagged = merged if tagged is None else tagged.unionByName(merged)
-        tmp = os.path.join(self.root, "__refresh_tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        obs = Observation("refresh_rows")
-        # per-tier row counts from the ONE observation — stamping the
-        # whole-tree total into every tier's metrics/lineage would claim
-        # e.g. the 1d tier wrote 5m+1h+1d rows combined
-        tagged = tagged.observe(
-            obs,
-            *[
-                F.sum(
-                    F.when(F.col("__tier") == t.name, F.lit(1)).otherwise(
-                        F.lit(0)
-                    )
-                ).alias(t.name)
-                for t in tiers
-            ],
-        )
         # static sizing for the one merge+write action: the shuffled data
         # is bounded by the touched partitions (driver-known), so AQE's
         # per-exchange materialize barriers are pure fixed cost here, and
@@ -427,40 +412,22 @@ class IncrementalRollup:
                 "spark.sql.shuffle.partitions": width,
             },
         ):
-            tagged.write.partitionBy("__tier", *self.partition_cols).parquet(tmp)
-        tier_rows = {t.name: int(obs.get[t.name] or 0) for t in tiers}
-        for tier in tiers:
-            src_root = os.path.join(tmp, f"__tier={tier.name}")
-            dest_root = self.tier_path(tier)
-            os.makedirs(dest_root, exist_ok=True)
-            # replace each touched partition dir with its merged rows
-            for child in sorted(os.listdir(src_root)):
-                if "=" not in child:
-                    continue
-                target = os.path.join(dest_root, child)
-                if os.path.isdir(target):
-                    shutil.rmtree(target)
-                shutil.move(os.path.join(src_root, child), target)
-        shutil.rmtree(tmp, ignore_errors=True)
+            rows = write_units(
+                tagged,
+                self.partition_cols,
+                [(t.name, p) for t in tiers for p in touched],
+                self.root,
+                self.manifest,
+                "refresh_",
+            )
         dt = round(time.perf_counter() - t0, 3)
-        metrics: dict[str, dict] = {}
-        for tier in tiers:
-            if manifest is not None:
-                for t in touched:
-                    # rows = the TIER's written rows; seconds = the one
-                    # write action's shared wall
-                    manifest.mark(
-                        f"refresh_{tier.name}",
-                        "/".join(str(v) for v in t),
-                        rows=tier_rows[tier.name],
-                        seconds=dt,
-                        kind="refresh_fused",
-                    )
-            metrics[tier.name] = {
+        return {
+            tier.name: {
                 "partitions_rewritten": len(touched),
-                "rows_written": tier_rows[tier.name],
+                "rows_written": sum(n for (t, _p), n in rows.items() if t == tier.name),
                 # the whole tree is one write action: this is its wall,
                 # shared across tiers, not a per-tier cost
                 "seconds": dt,
             }
-        return metrics
+            for tier in tiers
+        }

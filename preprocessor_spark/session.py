@@ -100,7 +100,7 @@ def get_spark(
     crash leaves partially-committed task files visible — so it is only
     safe for jobs whose consumers gate on ``_SUCCESS`` / the run manifest
     (the rollup job and benches do: ``rollup_job.py`` resume checks
-    ``_SUCCESS``, ``checkpoint.run_resumable*`` record completed stages in
+    ``_SUCCESS``, ``checkpoint.write_units`` records completed units in
     the manifest before readers trust them). Interactive / library
     sessions keep the default v1 driver-side atomic commit.
 

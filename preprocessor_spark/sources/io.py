@@ -56,7 +56,7 @@ def sniff_format_by_content(path: str, spark: SparkSession | None = None) -> str
         # first data file inside (the text sniffer below would read
         # compressed binary as 'lines' and could mis-sniff it as CSV).
         # WALK, don't listdir: hive-partitioned datasets (this repo's own
-        # write_split_datasets / run_resumable_bulk outputs) have only
+        # write_split_datasets outputs and rollup tiers) have only
         # _SUCCESS and key=value/ subdirs at the top level — the data
         # files live one or more levels down.
         found_data_file = False

@@ -1,9 +1,9 @@
 """Tier block encode→decode round-trip through Spark (applyInPandas /
-mapInPandas), byte identity of the executor and driver encoders, and
-checkpoint/resume idempotence (SURVEY §5 strategy c, d)."""
+mapInPandas) and byte identity of the executor and driver encoders
+(SURVEY §5 strategy c). Checkpoint/resume is tested with the build, in
+tests/test_rollup_job.py."""
 
 import datetime as dt
-import os
 
 import numpy as np
 import pytest
@@ -159,48 +159,6 @@ def test_blocks_are_bounded_and_compressed(spark, tier_1h):
         .sum()
     )
     assert enc_bytes < raw_bytes  # net compression on realistic tier data
-
-
-def test_checkpoint_resume_idempotent(spark, tier_1h, tmp_path):
-    from preprocessor_spark.rollup.checkpoint import Manifest, run_resumable
-
-    out = str(tmp_path / "tier_out")
-    man = Manifest(str(tmp_path / "manifest.jsonl"))
-    first = run_resumable(spark, tier_1h, "tier1h", "source", out, man)
-    assert sorted(first) == sorted(
-        r[0] for r in tier_1h.select("source").distinct().collect()
-    )
-    # rerun: everything skipped, output unchanged
-    before = spark.read.parquet(out).count()
-    second = run_resumable(spark, tier_1h, "tier1h", "source", out, man)
-    assert second == []
-    assert spark.read.parquet(out).count() == before
-    # lineage rows carry metrics per partition
-    lin = man.lineage()
-    assert all(r["rows"] > 0 and "seconds" in r for r in lin)
-
-
-def test_checkpoint_partial_failure_resume(spark, tier_1h, tmp_path):
-    from preprocessor_spark.rollup.checkpoint import Manifest, run_resumable
-
-    out = str(tmp_path / "tier_out")
-    man = Manifest(str(tmp_path / "manifest.jsonl"))
-    sources = sorted(r[0] for r in tier_1h.select("source").distinct().collect())
-    # simulate a prior run that completed only the first two partitions
-    for s in sources[:2]:
-        run_resumable(
-            spark,
-            tier_1h.filter(f"source = '{s}'"),
-            "tier1h",
-            "source",
-            out,
-            man,
-        )
-    resumed = run_resumable(spark, tier_1h, "tier1h", "source", out, man)
-    assert sorted(resumed) == sources[2:]
-    got = spark.read.parquet(out)
-    assert got.count() == tier_1h.count()
-    assert os.path.isdir(os.path.join(out, f"source={sources[0]}"))
 
 
 def test_gap_rows_roundtrip_null_stats_and_negative_epochs(spark):

@@ -134,12 +134,22 @@ def test_refresh_metrics_and_lineage(spark, setup):
     assert r1["tail_bootstrap"] is True
     assert r2["tail_bootstrap"] is False
     assert r1["delta_rows"] > 0 and r2["delta_rows"] > 0
-    stages = set()
-    with open(os.path.join(out, "manifest.jsonl")) as f:
-        for line in f:
-            stages.add(json.loads(line)["stage"])
+    # each refresh_<tier> mark counts its own partition: the last mark of
+    # each (tier, source) holds that partition's rows on disk
+    last = {}
+    for r in Manifest(os.path.join(out, "manifest.jsonl")).lineage():
+        last[(r["stage"], r["partition"])] = r["rows"]
     for t in DEFAULT_TIERS:
-        assert f"refresh_{t.name}" in stages
+        on_disk = {
+            r["source"]: r["count"]
+            for r in spark.read.parquet(os.path.join(out, f"tier_{t.name}"))
+            .groupBy("source")
+            .count()
+            .collect()
+        }
+        marked = {p: n for (st, p), n in last.items() if st == f"refresh_{t.name}"}
+        assert len(marked) > 1
+        assert marked == {p: on_disk[p] for p in marked}, t.name
 
 
 def test_double_apply_is_refused(spark, setup):

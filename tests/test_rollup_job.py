@@ -110,22 +110,27 @@ def test_job_lineage_per_partition(spark, job_out):
 
 def test_job_resume_skips_completed_and_is_identical(spark, job_out, tmp_path):
     corpus, out, _, _ = job_out
-    # simulate a crash after tier_5m: drop manifest rows for 1h/1d and the
-    # written 1h/1d outputs, then resume
+    # simulate a crash in the coarse write: tier_5m is marked, tier_1h only
+    # for its first two sources (the other units lost their dirs), tier_1d
+    # not at all and gone; then resume
     out2 = str(tmp_path / "out_resumed")
     shutil.copytree(out, out2)
     man = os.path.join(out2, "manifest.jsonl")
     rows = [json.loads(line) for line in open(man)]
+    sources = sorted(r["partition"] for r in rows if r["stage"] == "tier_1h")
+    kept = [
+        r
+        for r in rows
+        if r["stage"] == "tier_5m"
+        or (r["stage"] == "tier_1h" and r["partition"] in sources[:2])
+    ]
     with open(man, "w") as f:
-        for r in rows:
-            if r["stage"] == "tier_5m":
-                f.write(json.dumps(r) + "\n")
-    shutil.rmtree(os.path.join(out2, "tier_1h"))
+        f.writelines(json.dumps(r) + "\n" for r in kept)
+    for s in sources[2:]:
+        shutil.rmtree(os.path.join(out2, "tier_1h", f"source={s}"))
     shutil.rmtree(os.path.join(out2, "tier_1d"))
 
-    res2 = rollup_job.main(
-        ["--input", corpus, "--output", out2, "--resume"]
-    )
+    rollup_job.main(["--input", corpus, "--output", out2, "--resume"])
     for tier in DEFAULT_TIERS:
         a = spark.read.parquet(os.path.join(out, f"tier_{tier.name}")).select(
             TIER_COLS
@@ -134,14 +139,14 @@ def test_job_resume_skips_completed_and_is_identical(spark, job_out, tmp_path):
             TIER_COLS
         )
         assert _close(spark, a, b, tol=1e-12), f"resume diverged at {tier.name}"
-    # the resumed run did not rewrite tier_5m: manifest still has exactly
-    # one completion row per source for it
+    # the resumed run kept the marked units' rows and wrote each unmarked
+    # unit once
     lineage = [json.loads(line) for line in open(man)]
-    per_src = {}
-    for r in lineage:
-        if r["stage"] == "tier_5m":
-            per_src[r["partition"]] = per_src.get(r["partition"], 0) + 1
-    assert all(v == 1 for v in per_src.values())
+    assert lineage[: len(kept)] == kept
+    written = [(r["stage"], r["partition"]) for r in lineage[len(kept):]]
+    assert sorted(written) == sorted(
+        [("tier_1h", s) for s in sources[2:]] + [("tier_1d", s) for s in sources]
+    )
 
 
 def test_build_spark_job_count_is_pinned(job_out):
@@ -321,10 +326,9 @@ def test_bulk_resume_lineage_counts_survive_stringy_partition_values(
     """Partition values whose directory names round-trip through type
     inference differently ('3'→int 3, '03'→int 3 too — a collision!) must
     still get true lineage counts: the counts ride the write itself as
-    value-keyed observed aggregates, never a read-back lookup."""
-    import os
-
-    from preprocessor_spark.rollup.checkpoint import Manifest, run_resumable_bulk
+    value-keyed observed aggregates, never a read-back lookup. A rerun
+    skips every marked unit and leaves the tier as it was."""
+    from preprocessor_spark.rollup.checkpoint import Manifest, run_resumable_observed
 
     df = spark.createDataFrame(
         [("3", i) for i in range(7)]
@@ -332,17 +336,64 @@ def test_bulk_resume_lineage_counts_survive_stringy_partition_values(
         + [("4", i) for i in range(5)],
         "source string, v long",
     )
-    out = str(tmp_path / "out")
-    manifest = Manifest(os.path.join(str(tmp_path), "manifest.jsonl"))
-    run_resumable_bulk(spark, df, "stage", "source", out, manifest)
-    rows = {}
-    import json
+    out = str(tmp_path / "tier_x")
+    manifest = Manifest(str(tmp_path / "manifest.jsonl"))
+    values = ["03", "3", "4"]
+    written = run_resumable_observed(df, "source", out, manifest, values, 14)
+    assert written == {"3": 7, "03": 2, "4": 5}
+    assert {r["partition"]: r["rows"] for r in manifest.lineage()} == written
+    assert {r["stage"] for r in manifest.lineage()} == {"tier_x"}
+    assert sorted(os.listdir(out)) == ["source=03", "source=3", "source=4"]
+    assert not os.path.exists(tmp_path / "_units_tmp")
 
-    with open(os.path.join(str(tmp_path), "manifest.jsonl")) as f:
-        for line in f:
-            rec = json.loads(line)
-            rows[rec["partition"]] = rec.get("rows")
-    assert rows == {"3": 7, "03": 2, "4": 5}
+    assert run_resumable_observed(df, "source", out, manifest, values, 14) == {}
+    assert len(manifest.lineage()) == 3
+    assert spark.read.parquet(out).count() == 14
+
+
+def test_write_units_replaces_only_its_units_under_two_series_columns(
+    spark, tmp_path
+):
+    """With two series columns a unit is a second-level directory: writing
+    (a, 1) replaces a=a/b=1 and leaves its sibling a=a/b=2 in place."""
+    from preprocessor_spark.rollup.checkpoint import TIER_COL, Manifest, write_units
+
+    root = str(tmp_path)
+    manifest = Manifest(os.path.join(root, "manifest.jsonl"))
+
+    def write(rows, units):
+        df = spark.createDataFrame(rows, "a string, b long, v long")
+        return write_units(
+            df.withColumn(TIER_COL, F.lit("t")), ["a", "b"], units, root, manifest, "s_"
+        )
+
+    write([("a", 1, 0), ("a", 2, 0), ("a", 2, 1)], [("t", ("a", 1)), ("t", ("a", 2))])
+    assert write([("a", 1, 5), ("a", 1, 6)], [("t", ("a", 1))]) == {("t", "a/1"): 2}
+    got = spark.read.parquet(os.path.join(root, "tier_t"))
+    assert sorted(tuple(r) for r in got.select("a", "b", "v").collect()) == [
+        ("a", 1, 5), ("a", 1, 6), ("a", 2, 0), ("a", 2, 1)
+    ]
+    assert [(r["stage"], r["partition"], r["rows"]) for r in manifest.lineage()] == [
+        ("s_t", "a/1", 1), ("s_t", "a/2", 2), ("s_t", "a/1", 2)
+    ]
+
+
+def test_fresh_build_drops_series_the_new_corpus_lacks(spark, tmp_path):
+    """A build without --resume into an old output dir leaves no series of
+    the old tree in any tier or in the blocks."""
+    corpus, out = str(tmp_path / "corpus"), str(tmp_path / "out")
+    write_corpus(spark, corpus, 3_000)
+    rollup_job.main(["--input", corpus, "--output", out])
+    sources = sorted(
+        r[0] for r in spark.read.parquet(corpus).select("source").distinct().collect()
+    )
+    gone = sources[-1]
+    fewer = str(tmp_path / "fewer")
+    spark.read.parquet(corpus).filter(F.col("source") != gone).write.parquet(fewer)
+    rollup_job.main(["--input", fewer, "--output", out])
+    for name in [f"tier_{t.name}" for t in DEFAULT_TIERS] + ["blocks_5m"]:
+        got = spark.read.parquet(os.path.join(out, name)).select("source").distinct()
+        assert sorted(r[0] for r in got.collect()) == sources[:-1], name
 
 
 def test_manifest_skips_and_cuts_a_torn_last_line(tmp_path):
