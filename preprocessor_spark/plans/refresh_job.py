@@ -31,19 +31,20 @@ refresh):
   4. delta prepared rows appended to the prepared store;
   5. every tier refreshed in place via rollup/incremental.py from the
      prepared delta (epoch-second ``tss``, bucketed by the build's epoch
-     chain) and the profile's bounds — algebraic merge of the touched
-     sources' partitions in one write action, with the dense tiers' new
-     empty buckets seeded from one tier-0 spine of the bounds' growth;
-  6. Gorilla/delta-of-delta blocks re-encoded only for the (source, block)
-     pairs between each source's delta min and max ts, replaced by a
-     dynamic partition overwrite at that grain. The encode runs on the
-     driver (``compression.encode_partitioned_blocks_local``): its input is
-     bounded by the delta (at most 4096 rows per touched block), and an
-     executor encode would start a Python worker, whose cold start costs
-     seconds where the encode costs milliseconds. So no step of a refresh
-     starts a Python worker. A tree whose blocks predate the (source,
-     block) layout is refused up front: migrating it would re-encode the
-     whole history;
+     chain) and the profile's bounds. Spark aggregates the delta to 5m
+     partials and collects them as Arrow: its last job. On the driver the
+     1h/1d partials are folded from them, the dense tiers' new empty
+     buckets are seeded from the bounds' growth, and each touched (tier,
+     source) merges its touched (source, block) files with pyarrow and
+     publishes them through ``checkpoint.publish_units``;
+  6. Gorilla/delta-of-delta blocks re-encoded, inside step 5, only for the
+     (source, block) pairs of the 5m files it rewrote, from the merged rows
+     it holds (``compression.encode_blocks_local``), and their directories
+     replaced. An executor encode would start a Python worker, whose cold
+     start costs seconds where the encode costs milliseconds, so no step of
+     a refresh starts a Python worker. A tree whose tier files or blocks
+     predate the (source, block) layout is refused up front, before any
+     mark: migrating it would rewrite the whole history;
   7. lineage rows appended to the same manifest.
 
 The job reads its own datasets (carry tail, tier partitions) with their
@@ -74,7 +75,8 @@ import time
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from preprocessor_spark.plans.rollup_job import BLOCK_BUCKETS, MA_WINDOW, TAIL_NAME
+from preprocessor_spark.plans.rollup_job import MA_WINDOW, TAIL_NAME
+from preprocessor_spark.rollup.tiers import epoch_seconds
 
 TAIL_COLS = ["source", "ts", "doc_id", "n_tok"]
 
@@ -146,14 +148,11 @@ def delta_profile(delta: DataFrame, tail: DataFrame | None) -> list[tuple]:
     if tail is not None:
         rows = rows.unionByName(tail.select("source", "ts", F.lit(True).alias("__carry")))
 
-    def epoch(c):
-        return F.unix_timestamp(c).cast("long")
-
     prof = rows.groupBy("source").agg(
         F.count(F.when(~carry, F.lit(1))).alias("n"),
-        epoch(F.min(F.when(~carry, F.col("ts")))).alias("t0"),
-        epoch(F.max(F.when(~carry, F.col("ts")))).alias("t1"),
-        epoch(F.max(F.when(carry, F.col("ts")))).alias("tail_t1"),
+        epoch_seconds(F.min(F.when(~carry, F.col("ts")))).alias("t0"),
+        epoch_seconds(F.max(F.when(~carry, F.col("ts")))).alias("t1"),
+        epoch_seconds(F.max(F.when(carry, F.col("ts")))).alias("tail_t1"),
     )
     return sorted(
         (tuple(r) for r in prof.collect()),
@@ -226,7 +225,12 @@ def absorb(
     # then from what it reports (see _refresh)
     with scoped_conf(
         spark,
-        {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": 1},
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": 1,
+            # INT64 times, as the build and the refresh's pyarrow writes store
+            "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+        },
     ):
         return _refresh(
             spark,
@@ -251,17 +255,8 @@ def _refresh(
     from preprocessor_spark.operators import Normalizer, TemporalSplitter, Unbiaser
     from preprocessor_spark.params import load_params
     from preprocessor_spark.rollup.checkpoint import ROWS_PER_WRITE_TASK, Manifest
-    from preprocessor_spark.rollup.compression import (
-        BLOCK_COL,
-        encode_partitioned_blocks_local,
-    )
-    from preprocessor_spark.rollup.incremental import IncrementalRollup, _balanced_or
-    from preprocessor_spark.rollup.tiers import (
-        DEFAULT_TIERS,
-        RollupTree,
-        duration_seconds,
-        stored_tier_schema,
-    )
+    from preprocessor_spark.rollup.incremental import IncrementalRollup
+    from preprocessor_spark.rollup.tiers import DEFAULT_TIERS, RollupTree
     from preprocessor_spark.session import class_archive
 
     manifest = Manifest(os.path.join(out, "manifest.jsonl"))
@@ -375,20 +370,21 @@ def _refresh(
             "refreshing"
         )
 
-    # Block layout: blocks written before the (source, block) layout sit
-    # directly under source=<s>/. Re-encoding them into it would be the
-    # refresh's only O(history) step, and the two layouts side by side do
-    # not read back.
-    blocks_path = os.path.join(out, "blocks_" + DEFAULT_TIERS[0].name)
-    old_layout = sorted(glob.glob(os.path.join(blocks_path, "source=*", "*.parquet")))
-    if old_layout:
-        raise ValueError(
-            f"{blocks_path} holds blocks in the layout before (source, block) "
-            f"partitions (e.g. {old_layout[0]}); a refresh re-encodes single "
-            "blocks and cannot migrate them — rebuild with rollup_job"
-        )
+    # Block layout: tier files and blocks written before the (source,
+    # block) layout sit directly under source=<s>/. Moving them into it
+    # would be the refresh's only O(history) step, and the two layouts side
+    # by side do not read back.
+    for dataset in ["blocks_" + DEFAULT_TIERS[0].name, *(f"tier_{t.name}" for t in DEFAULT_TIERS)]:
+        path = os.path.join(out, dataset)
+        old_layout = sorted(glob.glob(os.path.join(path, "source=*", "*.parquet")))
+        if old_layout:
+            raise ValueError(
+                f"{path} holds files in the layout before (source, block) "
+                f"partitions (e.g. {old_layout[0]}); a refresh rewrites single "
+                "blocks and cannot migrate them — rebuild with rollup_job"
+            )
 
-    # every later shuffle is keyed by source (the tier merge sizes its own):
+    # every later shuffle is keyed by source, the tier partials' included:
     # no wider than the delta's sources, and one task per ROWS_PER_WRITE_TASK
     # rows — a daily delta is one task, and writes one file per dataset
     spark.conf.set(
@@ -430,7 +426,7 @@ def _refresh(
         unb.transform(tail_z.unionByName(delta_z))
         .filter(~F.col("__carry"))
         .select(
-            F.unix_timestamp("ts").cast("long").alias("tss"),
+            epoch_seconds("ts").alias("tss"),
             "source",
             "n_tok_z",
         )
@@ -464,39 +460,13 @@ def _refresh(
     bak_tail = tail_path + ".bak"
     new_tail.coalesce(1).write.mode("overwrite").parquet(tmp_tail)
 
-    # -- tier refresh: the prepared delta, bucketed as the build buckets --
+    # -- tier refresh: the prepared delta, bucketed as the build buckets, --
+    # merged on the driver with the touched blocks and their compression
     t0 = time.perf_counter()
     tree = RollupTree(series_cols=["source"], value_col="n_tok_z", tiers=DEFAULT_TIERS)
     bounds = [(s, t0_, t1_) for s, _n, t0_, t1_ in extent]
-    inc = IncrementalRollup(tree, out)
-    tier_metrics = inc.refresh(spark, prepared_delta, bounds)
+    tier_metrics = IncrementalRollup(tree, out).refresh(prepared_delta, bounds)
     refresh_seconds = round(time.perf_counter() - t0, 3)
-
-    # -- re-encode the compression blocks the delta lands in ---------------
-    # on the driver: at most BLOCK_BUCKETS rows per touched block, where a
-    # Python worker's cold start would cost seconds
-    t0 = time.perf_counter()
-    tier0 = spark.read.schema(stored_tier_schema([delta.schema["source"]])).parquet(
-        os.path.join(out, f"tier_{DEFAULT_TIERS[0].name}")
-    )
-    step0 = duration_seconds(DEFAULT_TIERS[0].duration)
-    span = BLOCK_BUCKETS * step0
-    touched_rows = tier0.filter(
-        F.col("source").isin([s for s, _, _ in bounds])
-        & _balanced_or(
-            [
-                (F.col("source") == s)
-                & (F.col("bucket_start") >= F.timestamp_seconds(F.lit(a - a % span)))
-                & (F.col("bucket_start") < F.timestamp_seconds(F.lit(b - b % span + span)))
-                for s, a, b in bounds
-            ]
-        )
-    )
-    encoded = encode_partitioned_blocks_local(touched_rows, ["source"], BLOCK_BUCKETS, step0)
-    encoded.frame.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("source", BLOCK_COL).parquet(blocks_path)
-    compress_seconds = round(time.perf_counter() - t0, 3)
 
     prepared_delta.unpersist()
     # swap the carry tail into place now that nothing can re-read the old
@@ -516,9 +486,9 @@ def _refresh(
         "tail_bootstrap": tail_bootstrap,
         "prepare_seconds": prepare_seconds,
         "refresh_seconds": refresh_seconds,
-        "compress_seconds": compress_seconds,
-        "encode_rows": encoded.rows,
-        "blocks_written": encoded.blocks,
+        "compress_seconds": tier_metrics.pop("encode_seconds"),
+        "encode_rows": tier_metrics.pop("encode_rows"),
+        "blocks_written": tier_metrics.pop("blocks_written"),
         "tiers": tier_metrics,
         "total_seconds": total,
         "delta_rows_per_sec": round(delta_rows / max(total, 1e-9)),

@@ -11,7 +11,9 @@ Pipeline (the north-rule composition):
      sidecars with checksums);
   4. MA-unbias the normalized series per source;
   5. rollup tree: 5m → 1h → 1d continuous aggregates of token-length stats,
-     gap-filled dense per source at each tier;
+     gap-filled dense per source at each tier, each tier's files one
+     directory per (source, block) (``tiers.block_of``), so a refresh
+     rewrites only the blocks its delta lands in;
   6. Gorilla/delta-of-delta block compression per (source, block);
   7. per-partition checkpointed writes + lineage manifest (resumable).
 
@@ -47,19 +49,10 @@ PREPARE_RG_BYTES = 4 << 20
 # ~rows/PROFILE_BUCKETS-row buckets; the unbias chunking coarsens them
 PROFILE_BUCKETS = 4096
 # What a refresh (plans/refresh_job.py) must continue exactly as the build
-# left it: the MA-unbias window, the 5m tier's compression block (buckets
-# per block; a bucket is the tier's period) and the carry tail's sidecar.
+# left it: the MA-unbias window and the carry tail's sidecar (the block
+# grain of the tiers is tiers.block_of).
 MA_WINDOW = 5
-BLOCK_BUCKETS = 4096
 TAIL_NAME = "unbias_tail.parquet"
-
-
-def _epoch_seconds(micros: int) -> int:
-    """``unix_timestamp(ts)`` of a time given as epoch micros: Spark
-    truncates toward zero, so before 1970 a sub-second time is one second
-    later than its floor. Monotonic, so it commutes with min and max."""
-    s = abs(micros) // 1_000_000
-    return s if micros >= 0 else -s
 
 
 def main(argv: list[str] | None = None) -> dict:
@@ -112,7 +105,15 @@ def main(argv: list[str] | None = None) -> dict:
     # barriers are pure fixed cost here — a job per exchange and idle
     # scheduling gaps that scale with core count, not data (measured
     # ~0.5 s/exchange even warm). The caller's settings come back after.
-    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+    # Times are stored as INT64 micros, the type the refresh's pyarrow
+    # writes use, with column statistics (INT96 has none).
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+        },
+    ):
         result = _build(spark, args, out, manifest)
     # whether this run paid the JVM's cold class loading (session.py)
     result["class_archive"] = class_archive(spark)
@@ -130,16 +131,17 @@ def _build(spark, args, out: str, manifest) -> dict:
         run_resumable_observed,
         run_resumable_observed_tiers,
     )
-    from preprocessor_spark.rollup.compression import (
-        BLOCK_COL,
-        encode_partitioned_blocks,
-    )
+    from preprocessor_spark.rollup.compression import encode_partitioned_blocks
     from preprocessor_spark.rollup.incremental import save_bounds
     from preprocessor_spark.rollup.tiers import (
         ALGEBRAIC,
+        BLOCK_BUCKETS,
+        BLOCK_COL,
         DEFAULT_TIERS,
         RollupTree,
+        block_of,
         duration_seconds,
+        epoch_seconds,
         spine_from_bounds,
         stored_tier_schema,
     )
@@ -162,9 +164,10 @@ def _build(spark, args, out: str, manifest) -> dict:
     sc.setLocalProperty("spark.job.description", None)
     n_rows = profile.rows
     # per-series [t0, t1] in epoch SECONDS as the prepared series stores
-    # them (tss = unix_timestamp(ts)), without reading it back
+    # them (tss = tiers.epoch_seconds(ts), the floor of the micros),
+    # without reading it back
     bounds_rows = [
-        (src, _epoch_seconds(lo), _epoch_seconds(hi))
+        (src, lo // 1_000_000, hi // 1_000_000)
         for src, _n, lo, hi in profile.bounds
         if lo is not None
     ]
@@ -266,7 +269,7 @@ def _build(spark, args, out: str, manifest) -> dict:
                 # 2038-01-19 in non-ANSI mode, corrupting bucket keys. On a
                 # sorted column the parquet dictionary/delta encodings make
                 # the width difference negligible.
-                F.unix_timestamp("ts").cast("long").alias("tss"),
+                epoch_seconds("ts").alias("tss"),
                 "source",
                 "n_tok_z",
             ).sortWithinPartitions(
@@ -348,6 +351,9 @@ def _build(spark, args, out: str, manifest) -> dict:
             num_partitions=spine_parts, series_schema=prepared, as_epoch=True,
         )
         filled = tree.base_aggregate_with_spine_epoch(prepared, step0, spine)
+        filled = filled.withColumn(
+            BLOCK_COL, block_of(F.unix_timestamp("bucket_start"), step0)
+        )
         sc.setJobDescription(f"tier0_{base.name}")
         run_resumable_observed(
             filled,
@@ -405,7 +411,11 @@ def _build(spark, args, out: str, manifest) -> dict:
                     f"previous tier's period ({prev_step}s)"
                 )
             cur = tree.reaggregate_epoch(cur, step)
-            tagged.append(cur.withColumn(TIER_COL, F.lit(tier.name)))
+            tagged.append(
+                cur.withColumn(TIER_COL, F.lit(tier.name)).withColumn(
+                    BLOCK_COL, block_of(F.col("bucket_epoch"), step)
+                )
+            )
             prev_step = step
         allc = tagged[0]
         for t in tagged[1:]:
@@ -415,6 +425,7 @@ def _build(spark, args, out: str, manifest) -> dict:
             "source",
             F.timestamp_seconds("bucket_epoch").alias("bucket_start"),
             *ALGEBRAIC,
+            BLOCK_COL,
         )
         sc.setJobDescription("coarse")
         with scoped_conf(spark, tier_conf):
@@ -444,11 +455,11 @@ def _build(spark, args, out: str, manifest) -> dict:
         }
 
     # -- compression of the finest tier -----------------------------------
-    # blocks are partitioned by (source, block): a refresh re-encodes and
-    # replaces only the blocks its delta lands in. A build replaces every
-    # block (a static overwrite: no block of an older history survives). One
-    # encode task per ROWS_PER_WRITE_TASK tier rows: each task starts a
-    # Python worker.
+    # blocks are partitioned by (source, block), the grain of the tier's own
+    # files: a refresh re-encodes and replaces only the blocks its delta
+    # lands in. A build replaces every block (a static overwrite: no block
+    # of an older history survives). One encode task per
+    # ROWS_PER_WRITE_TASK tier rows: each task starts a Python worker.
     sc.setJobDescription("compress")
     t0 = time.perf_counter()
     tier0 = spark.read.schema(tier_schema).parquet(
@@ -457,7 +468,7 @@ def _build(spark, args, out: str, manifest) -> dict:
     encode_parts = max(1, min(cores, -(-tier0_rows // ROWS_PER_WRITE_TASK)))
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": encode_parts}):
         encode_partitioned_blocks(
-            tier0, ["source"], block_buckets=BLOCK_BUCKETS, bucket_seconds=step0
+            tier0, ["source"], BLOCK_BUCKETS, step0
         ).write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy(
             "source", BLOCK_COL
         ).parquet(os.path.join(out, "blocks_" + base.name))

@@ -8,17 +8,21 @@ manifest (north rule: "resumable from per-partition checkpoints with lineage
 + metrics emitted per Iceberg partition").
 
 Model: a rollup tree at ``root`` keeps each tier in ``root/tier_<t>``,
-Hive-partitioned by the series columns. A unit is one (tier, series)
-partition of it. :func:`write_units` is the only code that replaces units:
-one write of a tier-tagged frame into a temp dir under ``root``, a
-driver-side move of each unit's directory into ``tier_<t>/``, then one
-manifest mark per unit with the unit's rows, counted by an Observation on
-the write itself. The build writes tier 0 through
+Hive-partitioned by the series columns and then by ``block`` (the tier's
+block grain, ``tiers.block_of``). A unit is a (tier, series) partition of
+it for the build and a (tier, series, block) partition for the refresh.
+:func:`publish_units` is the only code that puts units into the tree: a
+writer lands them in a temp dir under ``root``, and the publish counts
+each unit's rows from its parquet footers, moves its directory into
+``tier_<t>/`` and marks it in the manifest. The build writes through
+:func:`write_units` (one Spark write, then the publish): tier 0 through
 :func:`run_resumable_observed` and the coarse tiers through
-:func:`run_resumable_observed_tiers`, which skip units already marked: a
-rerun after a crash rewrites exactly the unmarked ones. The refresh
-(rollup/incremental.py) merges into the units it writes, which is not
-idempotent, so its caller refuses the rerun instead (plans/refresh_job.py).
+:func:`run_resumable_observed_tiers`, which skip units already marked, so
+a rerun after a crash rewrites exactly the unmarked ones. The refresh
+(rollup/incremental.py) writes its merged units with pyarrow on the driver
+and publishes them the same way. It merges into the units it writes, which
+is not idempotent, so its caller refuses the rerun instead
+(plans/refresh_job.py).
 
 On a cluster the manifest is itself an Iceberg table and each unit is an
 Iceberg partition overwrite; the sandbox uses a JSON-lines manifest +
@@ -31,10 +35,12 @@ import json
 import os
 import shutil
 import time
-from functools import reduce
 
-from pyspark.sql import DataFrame, Observation
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from preprocessor_spark.rollup.tiers import BLOCK_COL
 
 
 class Manifest:
@@ -151,44 +157,89 @@ def write_units(
     stage_prefix: str,
 ) -> dict[tuple[str, str], int]:
     """Replace the ``units`` of the tree at ``out_root`` with the rows of
-    ``df`` and mark each unit in ``manifest``.
+    ``df`` and mark each unit in ``manifest``: one Spark write into
+    :data:`UNITS_TMP`, then :func:`publish_units`.
 
     A unit is (tier name, values of ``partition_cols``). ``df`` holds the
     rows of ``units`` only, tagged with their tier in :data:`TIER_COL` and
-    already in the caller's write layout. One write lands them in a temp
-    dir under ``out_root``; each unit's directory then replaces its
-    counterpart in ``out_root/tier_<t>/``. The marks land after the moves:
-    stage ``stage_prefix + t``, partition the values joined by ``/``,
-    ``rows`` the unit's rows and ``seconds`` the wall of the write and the
-    moves. The rows come from an Observation on the write, keyed by the
-    original values: directory names round-trip through type inference
-    ('03' reads back as 3), so a read-back count could miss a unit.
-    Returns {(tier, partition): rows}."""
-    obs = Observation(f"{stage_prefix}unit_rows")
-    df = df.observe(
-        obs,
-        *[
-            F.count_if(
-                reduce(
-                    lambda a, b: a & b,
-                    [F.col(c).eqNullSafe(v) for c, v in zip(partition_cols, values)],
-                    F.col(TIER_COL) == tier,
-                )
-            ).alias(f"c_{i}")
-            for i, (tier, values) in enumerate(units)
-        ],
-    )
+    already in the caller's write layout. A frame that carries the block
+    key :data:`~preprocessor_spark.rollup.tiers.BLOCK_COL` (a tier of the
+    rollup jobs) is written one directory level deeper, by block, inside
+    each unit. Returns {(tier, partition): rows}."""
     tmp = os.path.join(out_root, UNITS_TMP)
     shutil.rmtree(tmp, ignore_errors=True)
     t0 = time.perf_counter()
-    df.write.partitionBy(TIER_COL, *partition_cols).parquet(tmp)
-    got = obs.get
+    block = [BLOCK_COL] if BLOCK_COL in df.columns else []
+    df.write.partitionBy(TIER_COL, *partition_cols, *block).parquet(tmp)
+    return publish_units(out_root, partition_cols, units, manifest, stage_prefix, t0)
+
+
+# Characters Spark's Hive-style partition writer escapes in a directory
+# name (ExternalCatalogUtils.escapePathName on a POSIX host), as %XX.
+_ESCAPED = frozenset([*map(chr, range(1, 0x20)), *'"#%\'*/:=?\\\x7f{[]^'])
+DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def partition_dir(cols: list[str], values: tuple) -> str:
+    """The relative directory Spark's ``partitionBy(*cols)`` writer gives
+    the rows with ``values``: ``col=value`` levels, each value escaped as
+    ``escapePathName`` escapes it, a null or empty one named
+    :data:`DEFAULT_PARTITION`."""
+    def name(v):
+        if v is None or v == "":
+            return DEFAULT_PARTITION
+        return "".join(f"%{ord(c):02X}" if c in _ESCAPED else c for c in str(v))
+
+    return os.path.join(*[f"{c}={name(v)}" for c, v in zip(cols, values)])
+
+
+def parquet_rows(path: str) -> int:
+    """Rows of the parquet files under ``path``, from their footers."""
+    return sum(
+        pq.read_metadata(os.path.join(dp, f)).num_rows
+        for dp, _, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+def replace_dirs(src_root: str, dest_root: str, rels: list[str]) -> None:
+    """Move each directory ``src_root/rel`` to ``dest_root/rel``, replacing
+    what was there."""
+    for rel in rels:
+        target = os.path.join(dest_root, rel)
+        shutil.rmtree(target, ignore_errors=True)
+        os.makedirs(os.path.dirname(target), exist_ok=True)
+        os.replace(os.path.join(src_root, rel), target)
+
+
+def publish_units(
+    out_root: str,
+    unit_cols: list[str],
+    units: list[tuple[str, tuple]],
+    manifest: Manifest,
+    stage_prefix: str,
+    t0: float,
+) -> dict[tuple[str, str], int]:
+    """Publish the units written under ``out_root/UNITS_TMP`` and mark them:
+    the one step that puts tier units into a tree, for the build's Spark
+    writes and the refresh's Arrow writes alike.
+
+    A writer lands unit (tier t, values of ``unit_cols``) in
+    ``UNITS_TMP/__tier=t/`` under :func:`partition_dir`. Each unit
+    directory written there replaces its counterpart in ``tier_<t>/``;
+    the temp dir is removed; then each of ``units`` is marked: stage
+    ``stage_prefix + t``, partition the values joined by ``/``, ``rows``
+    the unit's rows, counted from its files' footers before the move, and
+    ``seconds`` the wall since ``t0``. The rows are keyed by the unit's
+    directory name, never by a value read back from one ('03' and '3'
+    both infer as 3). Returns {(tier, partition): rows}."""
+    tmp = os.path.join(out_root, UNITS_TMP)
+    rows = {}
     for tier in sorted({t for t, _ in units}):
         src = os.path.join(tmp, f"{TIER_COL}={tier}")
-        dest = os.path.join(out_root, TIER_PREFIX + tier)
-        # the unit dirs: partition_cols levels of key=value dirs
         rels = [""]
-        for _ in partition_cols:
+        for _ in unit_cols:
             rels = [
                 os.path.join(r, c)
                 for r in rels
@@ -197,18 +248,16 @@ def write_units(
                 if "=" in c
             ]
         for rel in rels:
-            target = os.path.join(dest, rel)
-            shutil.rmtree(target, ignore_errors=True)
-            os.makedirs(os.path.dirname(target), exist_ok=True)
-            os.replace(os.path.join(src, rel), target)
+            rows[(tier, rel)] = parquet_rows(os.path.join(src, rel))
+        replace_dirs(src, os.path.join(out_root, TIER_PREFIX + tier), rels)
     shutil.rmtree(tmp)
     dt = round(time.perf_counter() - t0, 3)
     counts = {}
-    for i, (tier, values) in enumerate(units):
+    for tier, values in units:
         partition = "/".join(str(v) for v in values)
-        rows = int(got[f"c_{i}"])
-        manifest.mark(stage_prefix + tier, partition, rows=rows, seconds=dt)
-        counts[(tier, partition)] = rows
+        n = rows.get((tier, partition_dir(unit_cols, values)), 0)
+        manifest.mark(stage_prefix + tier, partition, rows=n, seconds=dt)
+        counts[(tier, partition)] = n
     return counts
 
 

@@ -16,35 +16,35 @@ are:
   * ``encode_tier_blocks`` / ``encode_partitioned_blocks`` run it on the
     executors inside Arrow ``applyInPandas``: a full build encodes every
     block of the history, which grows with the corpus;
-  * ``encode_partitioned_blocks_local`` runs it on the driver over an
-    Arrow collect: a refresh re-encodes only the blocks its delta lands in
-    (at most ``block_buckets`` rows each), and a Python worker's start
-    (seconds, cold) would cost far more than encoding them.
+  * ``encode_blocks_local`` runs it on the driver over rows the driver
+    already holds as Arrow: a refresh re-encodes only the blocks its delta
+    lands in (at most ``block_buckets`` rows each), from the merged 5m rows
+    it has just written, and a Python worker's start (seconds, cold) would
+    cost far more than encoding them.
 
-Both take the bucket times as epoch seconds computed in Spark, so the two
-write identical bytes, and decode (``mapInPandas``) returns UTC instants:
-blocks read back the same under any session time zone. Blocks are rows of
-a normal DataFrame (binary columns), so they write to any partitioned sink
-and are pruned by (series, block_start) predicates at read time.
+Both take the bucket times as epoch seconds, so the two write identical
+bytes, and decode (``mapInPandas``) returns UTC instants: blocks read back
+the same under any session time zone. Blocks are rows of a normal
+DataFrame (binary columns), so they write to any partitioned sink and are
+pruned by (series, block_start) predicates at read time.
 
 On disk (``blocks_<tier>`` of the rollup jobs) the blocks are partitioned
-by ``(source, block)``, where ``block`` = floor(epoch(block_start) / span)
-and span = block_buckets × bucket_seconds (4096 × 300 s ≈ 14.2 days for
-the 5m tier): one directory per block, holding that block's one row. A
-refresh re-encodes only the blocks its delta lands in and replaces them
-with a dynamic partition overwrite at that grain; every other block's
-files stay as they are. ``encode_partitioned_blocks`` adds the ``block``
-key; the encoder's own output schema does not carry it.
+by ``(source, block)``, where ``block`` is the tier files' block rule
+(``tiers.block_of``: floor(epoch / (block_buckets × bucket_seconds)),
+4096 × 300 s ≈ 14.2 days for the 5m tier): one directory per block,
+holding that block's one row, over the same span as the tier's own
+``block`` directory. A refresh re-encodes only the blocks its delta lands
+in and replaces those directories; every other block's files stay as they
+are. ``encode_partitioned_blocks`` adds the ``block`` key; the executor
+encoder's own output schema does not carry it.
 """
 
 from __future__ import annotations
 
-import datetime as dt
-from typing import NamedTuple
-
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -55,7 +55,7 @@ from preprocessor_spark.rollup.codec import (
     xor_decode,
     xor_encode,
 )
-from preprocessor_spark.session import local_frame
+from preprocessor_spark.rollup.tiers import BLOCK_BUCKETS, BLOCK_COL, block_of
 
 INT_STATS = ("n_points",)
 FLOAT_STATS = ("sum_v", "sum_sq", "min_v", "max_v")
@@ -73,15 +73,11 @@ def _block_schema(series_cols: list[str], df: DataFrame) -> T.StructType:
     return T.StructType(fields)
 
 
-BLOCK_COL = "block"
-
-
-def block_index(ts, span_seconds: int):
-    """Block of a timestamp: floor(epoch / span). Floor, not
-    cast('long'): the cast truncates toward zero, so pre-1970
-    (negative-epoch) buckets would straddle epoch in one double-width block
-    and every historical block would sit off the floor-based grid."""
-    return F.floor(F.unix_timestamp(ts) / F.lit(int(span_seconds))).cast("long")
+def block_index(ts, bucket_seconds: int, block_buckets: int = BLOCK_BUCKETS):
+    """Block of a bucket timestamp: the tier files' block rule
+    (``tiers.block_of``), so a block of the finest tier's files and its
+    compression block cover the same span."""
+    return block_of(F.unix_timestamp(ts), bucket_seconds, block_buckets)
 
 
 def encode_block(tss: np.ndarray, stats) -> dict[str, object]:
@@ -104,7 +100,7 @@ def _keyed_for_blocks(
     tier_df: DataFrame, block_buckets: int, bucket_seconds: int
 ) -> DataFrame:
     return tier_df.filter(F.col("n_points") > 0).withColumn(
-        BLOCK_COL, block_index("bucket_start", block_buckets * bucket_seconds)
+        BLOCK_COL, block_index("bucket_start", bucket_seconds, block_buckets)
     )
 
 
@@ -126,59 +122,53 @@ def encode_partitioned_blocks(
     )
 
 
-class LocalBlocks(NamedTuple):
-    """Blocks encoded on the driver: the frame to write, how many blocks
-    it holds and how many tier rows they encode."""
-
-    frame: DataFrame
-    blocks: int
-    rows: int
-
-
-def encode_partitioned_blocks_local(
-    tier_df: DataFrame,
+def encode_blocks_local(
+    rows: pa.Table,
     series_cols: list[str],
-    block_buckets: int,
     bucket_seconds: int,
-) -> LocalBlocks:
-    """``encode_partitioned_blocks`` with the encode on the driver: one
-    Arrow collect of the non-empty rows (epoch seconds computed in Spark),
-    ``encode_block`` per (series, block), and a frame built from an Arrow
-    table (``session.local_frame``) — no Python worker starts. For input
-    bounded by a refresh's delta; the collected rows must fit the
-    driver."""
-    keyed = _keyed_for_blocks(tier_df, block_buckets, bucket_seconds)
+    block_buckets: int = BLOCK_BUCKETS,
+) -> pa.Table:
+    """``encode_partitioned_blocks`` on the driver, for tier rows already
+    held there as Arrow: ``series_cols``, ``bucket_epoch`` (epoch seconds)
+    and the statistics. Returns one row per (series, block) of the
+    non-empty rows, keyed like the executor encoder's (``block_start`` in
+    UTC) and with the same bytes. No Spark job and no Python worker: for
+    the blocks a refresh re-encodes, at most ``block_buckets`` rows each."""
+    rows = rows.filter(pc.greater(rows["n_points"], 0))
+    tss = rows["bucket_epoch"].to_numpy()
     keys = [*series_cols, BLOCK_COL]
     stat_cols = [*INT_STATS, *FLOAT_STATS]
-    table = keyed.select(
-        *keys, F.unix_timestamp("bucket_start").alias("__tss"), *stat_cols
-    ).toArrow()
-    cols = {c: table.column(c).to_numpy() for c in ("__tss", *stat_cols)}
+    cols = {c: rows[c].to_numpy() for c in stat_cols}
     # Arrow's hash grouping keeps null keys as a group, as Spark's does
     groups = (
-        table.select(keys)
-        .append_column("__i", pa.array(np.arange(table.num_rows)))
+        rows.select(series_cols)
+        .append_column(BLOCK_COL, pa.array(block_of(tss, bucket_seconds, block_buckets)))
+        .append_column("__i", pa.array(np.arange(rows.num_rows)))
         .group_by(keys, use_threads=False)
         .aggregate([("__i", "list")])
     )
-    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
-    rows = []
+    out: dict[str, list] = {c: [] for c in (*keys, "block_start")}
     for key, idx in zip(
         groups.select(keys).to_pylist(), groups.column("__i_list").to_pylist()
     ):
         idx = np.asarray(idx)
-        tss = cols["__tss"][idx]
-        blobs = encode_block(tss, {c: cols[c][idx] for c in stat_cols})
-        block_start = epoch + dt.timedelta(seconds=int(tss.min()))
-        rows.append((*key.values(), block_start, *blobs.values()))
-    frame = local_frame(keyed.sparkSession, rows, _block_schema(keys, keyed))
-    return LocalBlocks(frame, len(rows), table.num_rows)
+        for c, v in key.items():
+            out[c].append(v)
+        out["block_start"].append(int(tss[idx].min()) * 1_000_000)
+        for c, v in encode_block(tss[idx], {c: cols[c][idx] for c in stat_cols}).items():
+            out.setdefault(c, []).append(v)
+    fields = [rows.schema.field(c) for c in series_cols]
+    fields += [pa.field(BLOCK_COL, pa.int64()), pa.field("block_start", pa.timestamp("us", "UTC"))]
+    fields += [pa.field("n", pa.int32()), pa.field("ts_blob", pa.binary())]
+    fields += [pa.field(f"{c}_blob", pa.binary()) for c in stat_cols]
+    schema = pa.schema(fields)
+    return pa.table({f.name: out.get(f.name, []) for f in fields}, schema=schema)
 
 
 def encode_tier_blocks(
     tier_df: DataFrame,
     series_cols: list[str] | None = None,
-    block_buckets: int = 4096,
+    block_buckets: int = BLOCK_BUCKETS,
     bucket_seconds: int = 3600,
 ) -> DataFrame:
     """Pack a tier (series, bucket_start, n_points, sum_v, sum_sq, min_v,
@@ -187,7 +177,7 @@ def encode_tier_blocks(
     sort) and any block re-encodes independently (checkpoint/resume unit)."""
     series_cols = series_cols if series_cols is not None else ["source"]
     df = tier_df.withColumn(
-        "__block", block_index("bucket_start", block_buckets * bucket_seconds)
+        "__block", block_index("bucket_start", bucket_seconds, block_buckets)
     ).withColumn("__tss", F.unix_timestamp("bucket_start"))
     schema = _block_schema(series_cols, tier_df)
     scols = list(series_cols)

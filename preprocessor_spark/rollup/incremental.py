@@ -1,5 +1,5 @@
 """Incremental continuous-aggregate refresh — merge a delta of new rows
-into an existing rollup tier tree touching only the affected buckets.
+into an existing rollup tier tree touching only the affected blocks.
 
 This is the half of "continuous aggregates" the batch tree alone doesn't
 give you: at 10^12-sequence scale a daily ingest is ~0.1% of the corpus,
@@ -9,17 +9,29 @@ rollup/tiers.py) is closed under MERGE for insert-only deltas: every
 statistic of (old ∪ delta) is a fold of the old row's statistics with the
 delta partial's, per (series, bucket). So a refresh is
 
-    delta facts ──epoch aggregate──▶ delta partials       (O(|delta|))
-    touched partitions = the delta's series               (driver-side)
-    existing tier ⋈ touched partitions ──union+reagg──▶ merged rows
-    one write replaces ONLY those partitions              (O(touched))
+    delta facts ──Spark epoch aggregate──▶ finest-tier partials      (O(|delta|))
+        one Arrow collect: the refresh's last Spark job
+    partials ∪ extension seeds ──floor + fold──▶ every tier's partials (driver)
+    per touched (tier, series): its touched block files ──fold──▶ merged
+        blocks ──pyarrow──▶ temp dir ──checkpoint.publish_units──▶ tree
 
-and never reads or rewrites the series the delta does not touch. The
-delta arrives in the prepared shape plans/rollup_job.py writes (series,
-``tss`` epoch seconds, value), and its partials come from the build's own
-epoch chain (5m partial → 1h partial → 1d partial, every bucket key the
-floor of ``tss`` to the tier's period), so every tier refreshes from ONE
-scan of the delta facts into the buckets a rebuild would give.
+and never reads or rewrites a block the delta does not land in. Every tier
+file holds one block of its series (``tiers.block_of``: BLOCK_BUCKETS
+buckets of the tier's period), so the touched files follow from the
+partials' bucket keys on the driver. The delta arrives in the prepared
+shape plans/rollup_job.py writes (series, ``tss`` epoch seconds, value),
+and its partials come from the build's own epoch chain (every bucket key
+the floor of ``tss`` to the tier's period), so every tier refreshes from
+ONE scan of the delta facts into the buckets a rebuild would give.
+
+After the collect the refresh runs no Spark job and starts no Python
+worker: its work is bounded by the delta and a few blocks per touched
+series, which cost milliseconds on the driver where a cold Spark stage
+costs seconds. It takes one (tier, series) unit at a time, so the driver
+holds the partials plus one unit's touched blocks (at most a few × 4096
+rows). The finest tier's compression blocks (``blocks_<tier>``) are
+re-encoded from the merged rows of that unit, with the bytes the build's
+executor encoder writes (rollup/compression.py).
 
 Reference parity: the reference recomputes its per-column statistics from
 scratch on every run (app/core/normalization_handler.py:155-174 — whole-
@@ -37,39 +49,45 @@ owns that contract).
 The tiers are gap-filled dense and stay dense: a delta that extends a
 series' time range implicitly creates empty buckets between the old edge
 and the first new point. The refresh derives those tier-0 buckets from the
-persisted per-series bounds (:func:`extension_intervals`), builds ONE seed
-spine of them, and folds it, floored to each tier's period, into every
-tier as (n_points=0) rows, without touching the interior.
+persisted per-series bounds (:func:`extension_intervals`) and folds them,
+floored to each tier's period, into every tier as (n_points=0) rows,
+without touching the interior.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
+import shutil
 import time
-from functools import reduce
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from preprocessor_spark.rollup.checkpoint import (
-    ROWS_PER_WRITE_TASK,
     TIER_COL,
+    UNITS_TMP,
     Manifest,
-    write_units,
+    partition_dir,
+    publish_units,
+    replace_dirs,
 )
+from preprocessor_spark.rollup.compression import encode_blocks_local
 from preprocessor_spark.rollup.tiers import (
     ALGEBRAIC,
+    BLOCK_COL,
     RollupTree,
     TierSpec,
     algebraic_reaggs,
+    block_of,
     duration_seconds,
-    epoch_floor,
-    spine_from_bounds,
 )
-from preprocessor_spark.session import scoped_conf
 
 
 def merge_partials(
@@ -77,110 +95,93 @@ def merge_partials(
     delta_partial: DataFrame,
     key_cols: list[str],
     hist: tuple[str, int] | None = None,
-    cluster_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Fold delta partials into existing tier rows per key: union + one
-    hash re-aggregation (sums of sums, min of mins, max of maxes — the
-    same fold as a tier→tier re-aggregate, so merged == recomputed by
-    construction for insert-only deltas).
+    """Fold delta partials into existing tier rows per key, in Spark: union
+    + one hash re-aggregation (sums of sums, min of mins, max of maxes —
+    the same fold as a tier→tier re-aggregate, so merged == recomputed by
+    construction for insert-only deltas). :func:`fold_partials` is the
+    same fold on the driver, which the refresh uses.
 
     Gap rows participate naturally: an existing (n_points=0, null stats)
     seed merged with a delta partial yields the delta's stats; a seed with
     no delta survives unchanged. Both inputs must carry exactly
     key_cols + ALGEBRAIC (+ the histogram column when ``hist`` names one:
-    ``(column_name, nbins)`` — element-wise mergeable, tiers.py).
-
-    ``cluster_cols`` ⊆ ``key_cols`` hash-partitions the fold by those
-    columns only (the fold reuses that exchange): pass the tier's partition
-    columns, and each output partition directory is written by one task,
-    as one file, instead of by every task."""
+    ``(column_name, nbins)`` — element-wise mergeable, tiers.py)."""
     from preprocessor_spark.rollup.tiers import histogram_reagg
 
     cols = [*key_cols, *ALGEBRAIC, *([hist[0]] if hist else [])]
     aggs = [*algebraic_reaggs(), *([histogram_reagg(hist[1], hist[0])] if hist else [])]
     rows = existing.select(*cols).unionByName(delta_partial.select(*cols))
-    if cluster_cols:
-        rows = rows.repartition(*cluster_cols)
     return rows.groupBy(*key_cols).agg(*aggs)
 
 
-def _balanced_or(exprs: list):
-    """Pairwise (balanced) OR fold: a left-deep reduce() chain of thousands
-    of terms is a known driver StackOverflowError shape in Catalyst's
-    recursive expression rules; balancing keeps depth at log2(n)."""
-    while len(exprs) > 1:
-        exprs = [
-            exprs[i] | exprs[i + 1] if i + 1 < len(exprs) else exprs[i]
-            for i in range(0, len(exprs), 2)
-        ]
-    return exprs[0]
+_FOLD = (
+    ("n_points", "sum"),
+    ("sum_v", "sum"),
+    ("sum_sq", "sum"),
+    ("min_v", "min"),
+    ("max_v", "max"),
+)
+# tier rows on the driver: the bucket as epoch seconds, then the statistics
+EPOCH_ROWS = pa.schema(
+    [
+        pa.field("bucket_epoch", pa.int64()),
+        pa.field("n_points", pa.int64()),
+        *[pa.field(c, pa.float64()) for c in ALGEBRAIC[1:]],
+    ]
+)
+# the columns of a stored tier file (its partition columns are directories)
+STORED_ROWS = pa.schema([pa.field("bucket_start", pa.timestamp("us", "UTC")), *EPOCH_ROWS.remove(0)])
 
 
-def _partition_predicate(partition_cols: list[str], tuples: list[tuple]):
-    """OR-of-AND equality predicate over the touched partition tuples — the
-    shape Spark's parquet partition pruning eliminates directories with."""
-    return _balanced_or(
-        [
-            reduce(
-                lambda x, y: x & y,
-                [F.col(c) == F.lit(v) for c, v in zip(partition_cols, t)],
-            )
-            for t in tuples
-        ]
-    )
-
-
-# partition values that name their directory as plain str(v), unescaped
-_SAFE_DIR_VALUE_RE = re.compile(r"^[A-Za-z0-9._-]+$")
+def fold_partials(rows: pa.Table, keys: list[str]) -> pa.Table:
+    """:func:`merge_partials`' fold on the driver: per ``keys``, the sum of
+    n_points, sum_v and sum_sq, the min of min_v and the max of max_v,
+    nulls skipped (a group of nulls folds to null) and null keys kept as a
+    group, as Spark's aggregate does. Single-threaded, so that sums are
+    folded in one fixed order."""
+    out = rows.group_by(keys, use_threads=False).aggregate(list(_FOLD))
+    return pa.table({**{k: out[k] for k in keys}, **{c: out[f"{c}_{f}"] for c, f in _FOLD}})
 
 
 def read_touched_partitions(
-    spark: SparkSession,
     tier_path: str,
     partition_cols: list[str],
     tuples: list[tuple],
-    schema: T.StructType,
-) -> DataFrame:
-    """Read ONLY the touched partition directories, by explicit path +
-    basePath (partition columns recovered from the paths). A plain
-    read-then-filter still LISTS the whole tier tree before pruning —
-    measured as the dominant refresh cost once a tier carries thousands of
-    partition dirs (refresh wall grew with corpus AGE, the opposite of
-    the O(delta) contract); explicit paths make discovery O(touched). On a
-    cluster store the same listing-avoidance comes from Iceberg partition
-    metadata. Dirs that don't exist yet (new series) are skipped, and if
-    every dir is new the slice is empty; if any partition value needs Hive
-    path-escaping beyond plain str(), fall back to the pruned full read
-    (correct, just slower).
-
-    ``schema`` (the tier's columns, partition columns included) pins the
-    read: an unpinned read runs a Spark job to infer the schema from a
-    parquet footer."""
-    reader = spark.read.schema(schema)
-    # the explicit-path fast path probes directories with os.path.isdir,
-    # which is only meaningful on a LOCAL filesystem: on s3a://hdfs://...
-    # every probe would fail and the 'existing' slice would come back
-    # empty — the merge would then silently replace accumulated partitions
-    # with delta-only statistics. URI stores take the pruned full read
-    # (partition-pruned by Spark, still correct).
-    if "://" not in tier_path and all(
-        _SAFE_DIR_VALUE_RE.match(str(v)) for t in tuples for v in t
-    ):
-        paths = [
-            os.path.join(
-                tier_path, *[f"{c}={v}" for c, v in zip(partition_cols, t)]
+    schema: pa.Schema,
+) -> pa.Table:
+    """Read ONLY the touched partitions of a tier, on the driver with
+    pyarrow: for each tuple of ``partition_cols`` values, the parquet files
+    of the directory Spark's writer names for it
+    (:func:`checkpoint.partition_dir`). Nothing lists the rest of the tier,
+    so the read is O(touched) however many partitions the tier holds.
+    ``schema`` is the result's: the partition columns, whose values come
+    from the tuples, and the stored columns. A directory that does not
+    exist yet (a new series or block) adds no rows. A URI
+    (``file://...``) is read through pyarrow's filesystem for its
+    scheme."""
+    if "://" in tier_path:
+        fs, base = pafs.FileSystem.from_uri(tier_path)
+    else:
+        fs, base = pafs.LocalFileSystem(), os.path.abspath(tier_path)
+    stored = pa.schema([f for f in schema if f.name not in partition_cols])
+    parts = []
+    for values in tuples:
+        found = fs.get_file_info(
+            pafs.FileSelector(
+                f"{base}/{partition_dir(partition_cols, values)}", allow_not_found=True
             )
-            for t in tuples
-        ]
-        existing_paths = [p for p in paths if os.path.isdir(p)]
-        if not existing_paths:
-            # brand-new partitions only: an empty slice keeps the union
-            # schema aligned; nothing merges
-            return reader.option("basePath", tier_path).parquet(tier_path).limit(0)
-        return reader.option("basePath", tier_path).parquet(*existing_paths)
-    return reader.parquet(tier_path).filter(
-        _partition_predicate(partition_cols, tuples)
-    )
+        )
+        for info in sorted(found, key=lambda i: i.path):
+            name = info.base_name
+            if not name.endswith(".parquet") or name.startswith(("_", ".")):
+                continue
+            t = pq.read_table(info.path, columns=stored.names, filesystem=fs).cast(stored)
+            for c, v in zip(partition_cols, values):
+                f = schema.field(c)
+                t = t.append_column(f, pa.array([v] * t.num_rows, f.type))
+            parts.append(t.select(schema.names))
+    return pa.concat_tables(parts) if parts else schema.empty_table()
 
 
 # -- per-series bounds sidecar (dense-tier extension bookkeeping) ---------
@@ -253,6 +254,39 @@ def extension_intervals(
     return intervals
 
 
+def _write_parquet(directory: str, table: pa.Table) -> None:
+    os.makedirs(directory, exist_ok=True)
+    # no Arrow schema in the footer: it would double the footer of a tier
+    # file, which every Spark read of the tier opens
+    pq.write_table(
+        table,
+        os.path.join(directory, f"part-{uuid.uuid4().hex}.parquet"),
+        store_schema=False,
+    )
+
+
+def _by_series(rows: pa.Table, series_cols: list[str]):
+    """(series key, that series' rows without the series columns) per
+    series of ``rows``, null keys first."""
+    groups = (
+        rows.select(series_cols)
+        .append_column("__i", pa.array(np.arange(rows.num_rows)))
+        .group_by(series_cols, use_threads=False)
+        .aggregate([("__i", "list")])
+    )
+    keys = [tuple(k.values()) for k in groups.select(series_cols).to_pylist()]
+    pairs = sorted(
+        zip(keys, groups.column("__i_list").to_pylist()),
+        key=lambda kv: [(v is not None, v) for v in kv[0]],
+    )
+    for key, idx in pairs:
+        yield key, rows.take(idx).drop_columns(series_cols)
+
+
+def _runs(sorted_keys: np.ndarray):
+    """(key, start, stop) of each run of equal values of a sorted array."""
+    cuts = [0, *(np.flatnonzero(np.diff(sorted_keys)) + 1), len(sorted_keys)]
+    return [(int(sorted_keys[a]), a, b) for a, b in zip(cuts[:-1], cuts[1:])]
 
 
 class IncrementalRollup:
@@ -261,173 +295,193 @@ class IncrementalRollup:
     ``tree`` supplies the tier specs and the series and value columns.
     Tiers live at ``{root}/tier_{name}`` in the layout plans/rollup_job.py
     writes: gap-filled dense, keyed by series_cols + bucket_start and
-    partitioned by the series columns, with the per-series bounds sidecar
+    partitioned by the series columns and the block
+    (:attr:`partition_cols`), with the finest tier's compression blocks at
+    ``{root}/blocks_{name}``, the per-series bounds sidecar
     ``{root}/series_bounds.json`` (:func:`save_bounds`) and the lineage
     manifest ``{root}/manifest.jsonl``."""
 
     def __init__(self, tree: RollupTree, root: str):
         self.tree = tree
         self.root = root
-        self.partition_cols = list(tree.series_cols)
+        # one directory, and the refresh's unit, per (series, block)
+        self.partition_cols = [*tree.series_cols, BLOCK_COL]
         self.bounds_path = os.path.join(root, "series_bounds.json")
         self.manifest = Manifest(os.path.join(root, "manifest.jsonl"))
 
     def tier_path(self, tier: TierSpec) -> str:
         return os.path.join(self.root, f"tier_{tier.name}")
 
-    def delta_partials(self, delta_df: DataFrame) -> dict[str, DataFrame]:
-        """Algebraic partials of the delta at every tier, keyed by
-        ``bucket_epoch``: the finest from the facts, each coarser tier
-        re-aggregated from the previous partial. This is the build's epoch
-        chain (plans/rollup_job.py), so a refresh buckets each fact where a
-        rebuild would, and one fact scan serves all tiers."""
+    def delta_partials(self, delta_df: DataFrame, seeds: list[tuple]) -> dict[str, pa.Table]:
+        """Algebraic partials of the delta at every tier, as Arrow tables of
+        series_cols + :data:`EPOCH_ROWS`. Spark aggregates the facts to the
+        finest tier with the build's epoch chain, and ``toArrow`` collects
+        that: the refresh's last Spark job. ``seeds`` ((*series, t0, t1)
+        intervals on the finest lattice, from :func:`extension_intervals`)
+        join it as (n_points=0, null stats) rows. Each tier is then that
+        table with its bucket keys floored to the tier's period, folded."""
         tree = self.tree
+        series = tree.series_cols
         steps = [duration_seconds(t.duration) for t in tree.tiers]
-        cur = tree.base_aggregate_with_spine_epoch(delta_df, steps[0]).select(
-            *tree.series_cols,
-            F.unix_timestamp("bucket_start").alias("bucket_epoch"),
-            *ALGEBRAIC,
+        base = (
+            tree.base_aggregate_with_spine_epoch(delta_df, steps[0])
+            .select(
+                *series,
+                F.unix_timestamp("bucket_start").alias("bucket_epoch"),
+                *ALGEBRAIC,
+            )
+            .toArrow()
         )
-        out = {tree.tiers[0].name: cur}
-        for tier, step in zip(tree.tiers[1:], steps[1:]):
-            cur = tree.reaggregate_epoch(cur, step)
-            out[tier.name] = cur
+        schema = pa.schema(
+            [*(base.schema.field(c).with_nullable(True) for c in series), *EPOCH_ROWS]
+        )
+        base = base.cast(schema)
+        if seeds:
+            lens = np.array([(b - a) // steps[0] + 1 for *_, a, b in seeds])
+            at = np.repeat(np.arange(len(seeds)), lens)
+            cols = {
+                f.name: pa.array([iv[i] for iv in seeds], f.type).take(at)
+                for i, f in enumerate(schema.field(c) for c in series)
+            }
+            cols["bucket_epoch"] = np.concatenate(
+                [np.arange(a, b + 1, steps[0], dtype=np.int64) for *_, a, b in seeds]
+            )
+            cols["n_points"] = np.zeros(len(at), np.int64)
+            for c in ALGEBRAIC[1:]:
+                cols[c] = pa.nulls(len(at), pa.float64())
+            base = pa.concat_tables([base, pa.table(cols, schema=schema)])
+        out = {}
+        epochs = base["bucket_epoch"].to_numpy()
+        for tier, step in zip(tree.tiers, steps):
+            floored = base.set_column(
+                base.schema.get_field_index("bucket_epoch"),
+                "bucket_epoch",
+                pa.array(epochs - epochs % step),
+            )
+            out[tier.name] = fold_partials(floored, [*series, "bucket_epoch"])
         return out
 
-    def refresh(
-        self,
-        spark: SparkSession,
-        delta_df: DataFrame,
-        bounds: list[tuple],
-    ) -> dict:
+    def refresh(self, delta_df: DataFrame, bounds: list[tuple]) -> dict:
         """Refresh every tier from one delta of NEW facts in the prepared
         shape: series columns, ``tss`` (epoch seconds) and the value column.
         ``bounds`` is the delta's per-series (*series, t0, t1) extent in
         epoch seconds (plans/refresh_job gets it from its delta profile).
 
-        The touched partitions are the delta's series. The bounds sidecar
-        is extended by ``bounds``, and the tier-0 buckets the extension adds
-        become null seed rows, floored to each tier's period and folded into
-        that tier's partial, so every tier stays gap-filled dense. The only
-        Spark job is the one tier-tagged write that lands every tier's
-        merged partitions and marks each as ``refresh_<tier>`` (see
-        :meth:`_refresh_fused`)."""
-        tree = self.tree
-        t_all = time.perf_counter()
-        partials = self.delta_partials(delta_df)
+        The bounds sidecar is extended by ``bounds``, and the tier-0
+        buckets the extension adds become seed rows of every tier's
+        partials, so every tier stays gap-filled dense. Then, one (tier,
+        series) at a time, the block files the partials land in are read
+        and folded with them, and each merged block is written with pyarrow
+        into the temp dir of :func:`checkpoint.publish_units`, which moves
+        the blocks into the tree and marks each (tier, series, block) as
+        ``refresh_<tier>``. The compression blocks of the finest tier that
+        the delta's facts land in are re-encoded from the merged rows, and
+        replace theirs (a block that gained only gap rows keeps its
+        blocks).
 
+        Crash contract: a merge is NOT idempotent. Re-merging a delta into
+        a block whose merged rows were already moved in would double-count
+        it, so a rerun after a crash is not a recovery. refresh_job marks
+        the delta started before its first write and refuses a rerun of a
+        delta that started but did not complete."""
+        tree = self.tree
+        series = tree.series_cols
+        t_all = time.perf_counter()
+        metrics: dict = {
+            t.name: {"partitions_rewritten": 0, "rows_written": 0, "seconds": 0.0}
+            for t in tree.tiers
+        }
+        metrics.update(blocks_written=0, encode_rows=0, encode_seconds=0.0)
+        if not bounds:
+            metrics["total_seconds"] = round(time.perf_counter() - t_all, 3)
+            return metrics
         old_bounds = load_bounds(self.bounds_path)
         new_bounds = merge_bounds(old_bounds, bounds)
         step0 = duration_seconds(tree.tiers[0].duration)
-        ivs = extension_intervals(old_bounds, new_bounds, step0)
-        spine = None
-        if ivs:
-            n_rows = sum((iv[-1] - iv[-2]) // step0 + 1 for iv in ivs)
-            spine = spine_from_bounds(
-                spark,
-                ivs,
-                tree.series_cols,
-                step0,
-                num_partitions=-(-n_rows // ROWS_PER_WRITE_TASK),
-                series_schema=delta_df,
-                as_epoch=True,
-            )
+        partials = self.delta_partials(
+            delta_df, extension_intervals(old_bounds, new_bounds, step0)
+        )
 
-        parts: dict[str, DataFrame] = {}
-        for tier in tree.tiers:
-            part = partials[tier.name]
-            if spine is not None:
-                # seeds join AFTER the aggregate: unioned into the facts they
-                # would cost the aggregate the delta's source partitioning.
-                # A seed is (n_points=0, null stats): merged into a bucket
-                # with delta facts it changes nothing, and a bucket with only
-                # seeds lands dense-empty
-                step = duration_seconds(tier.duration)
-                part = part.unionByName(
-                    spine.select(
-                        *tree.series_cols,
-                        epoch_floor(F.col("bucket_epoch"), step).alias("bucket_epoch"),
-                        F.lit(0).cast("long").alias("n_points"),
-                        *[F.lit(None).cast("double").alias(c) for c in ALGEBRAIC[1:]],
-                    )
-                )
-            parts[tier.name] = part.select(
-                *tree.series_cols,
-                F.timestamp_seconds("bucket_epoch").alias("bucket_start"),
-                *ALGEBRAIC,
-            )
-        touched = sorted({tuple(r[:-2]) for r in bounds})
-        metrics = self._refresh_fused(spark, parts, touched)
-        save_bounds(self.bounds_path, new_bounds, tree.series_cols)
-        metrics["total_seconds"] = round(time.perf_counter() - t_all, 3)
-        return metrics
-
-    def _refresh_fused(
-        self,
-        spark: SparkSession,
-        parts: dict[str, DataFrame],
-        touched: list[tuple],
-    ) -> dict:
-        """One write action for the whole tree: each tier's merged rows of
-        the touched partitions, tier-tagged, go through
-        :func:`checkpoint.write_units`, which replaces those partitions in
-        every tier and then marks each ``refresh_<tier>`` with its rows.
-
-        Crash contract: a merge is NOT idempotent. Re-merging a delta into
-        a partition whose merged rows were already moved in would
-        double-count it, so a rerun after a crash is not a recovery.
-        refresh_job marks the delta started before its first write and
-        refuses a rerun of a delta that started but did not complete."""
-        tiers = self.tree.tiers
-        if not touched:
-            return {
-                t.name: {"partitions_rewritten": 0, "rows_written": 0, "seconds": 0.0}
-                for t in tiers
-            }
         t0 = time.perf_counter()
-        key_cols = [*self.tree.series_cols, "bucket_start"]
-        tagged: DataFrame | None = None
-        for tier in tiers:
-            part = parts[tier.name]
-            # the stored tier holds what this aggregate writes: its schema
-            # is the read schema of the touched partitions (no inference)
-            existing = read_touched_partitions(
-                spark, self.tier_path(tier), self.partition_cols, touched,
-                schema=part.schema,
+        tmp = os.path.join(self.root, UNITS_TMP)
+        shutil.rmtree(tmp, ignore_errors=True)
+        blocks_tmp = os.path.join(tmp, "blocks")
+        units, block_dirs, encode_s = [], [], 0.0
+        for tier in tree.tiers:
+            step = duration_seconds(tier.duration)
+            part = partials[tier.name]
+            schema = pa.schema(
+                [
+                    *(part.schema.field(c) for c in series),
+                    pa.field(BLOCK_COL, pa.int64()),
+                    *STORED_ROWS,
+                ]
             )
-            merged = merge_partials(
-                existing, part, key_cols, cluster_cols=self.partition_cols
-            ).withColumn(TIER_COL, F.lit(tier.name))
-            tagged = merged if tagged is None else tagged.unionByName(merged)
-        # static sizing for the one merge+write action: the shuffled data
-        # is bounded by the touched partitions (driver-known), so AQE's
-        # per-exchange materialize barriers are pure fixed cost here, and
-        # the shuffle width should follow |touched|, not the session default
-        # (measured warm at 2M-row/1%-delta: 3.2 s → 2.1 s)
-        width = min(spark.sparkContext.defaultParallelism, len(touched))
-        with scoped_conf(
-            spark,
-            {
-                "spark.sql.adaptive.enabled": "false",
-                "spark.sql.shuffle.partitions": width,
-            },
-        ):
-            rows = write_units(
-                tagged,
-                self.partition_cols,
-                [(t.name, p) for t in tiers for p in touched],
-                self.root,
-                self.manifest,
-                "refresh_",
-            )
-        dt = round(time.perf_counter() - t0, 3)
-        return {
-            tier.name: {
-                "partitions_rewritten": len(touched),
-                "rows_written": sum(n for (t, _p), n in rows.items() if t == tier.name),
-                # the whole tree is one write action: this is its wall,
-                # shared across tiers, not a per-tier cost
-                "seconds": dt,
-            }
-            for tier in tiers
-        }
+            for key, rows in _by_series(part, series):
+                touched = np.unique(block_of(rows["bucket_epoch"].to_numpy(), step))
+                old = read_touched_partitions(
+                    self.tier_path(tier),
+                    self.partition_cols,
+                    [(*key, int(k)) for k in touched],
+                    schema,
+                )
+                micros = old["bucket_start"].cast(pa.int64()).to_numpy()
+                old = old.drop_columns(self.partition_cols).set_column(
+                    0, "bucket_epoch", pa.array(np.floor_divide(micros, 1_000_000))
+                )
+                merged = fold_partials(
+                    pa.concat_tables([old.cast(EPOCH_ROWS), rows.cast(EPOCH_ROWS)]),
+                    ["bucket_epoch"],
+                ).sort_by("bucket_epoch")
+                epochs = merged["bucket_epoch"].to_numpy()
+                stored = merged.set_column(
+                    0, "bucket_start", pa.array(epochs * 1_000_000, STORED_ROWS[0].type)
+                )
+                merged_blocks = block_of(epochs, step)
+                for k, a, b in _runs(merged_blocks):
+                    rel = partition_dir(self.partition_cols, (*key, k))
+                    _write_parquet(
+                        os.path.join(tmp, f"{TIER_COL}={tier.name}", rel),
+                        stored.slice(a, b - a),
+                    )
+                    units.append((tier.name, (*key, k)))
+                if tier is tree.tiers[0]:
+                    # a block whose delta rows are all seeds keeps its
+                    # non-empty rows, and so its compression block
+                    t_enc = time.perf_counter()
+                    facts = rows.filter(pc.greater(rows["n_points"], 0))
+                    changed = np.isin(
+                        merged_blocks, block_of(facts["bucket_epoch"].to_numpy(), step)
+                    )
+                    blocks = encode_blocks_local(merged.filter(changed), [], step)
+                    for row in blocks.to_pylist():
+                        rel = partition_dir(self.partition_cols, (*key, row.pop(BLOCK_COL)))
+                        _write_parquet(
+                            os.path.join(blocks_tmp, rel),
+                            pa.Table.from_pylist([row], blocks.schema.remove(0)),
+                        )
+                        block_dirs.append(rel)
+                    metrics["encode_rows"] += int(pc.sum(blocks["n"]).as_py() or 0)
+                    encode_s += time.perf_counter() - t_enc
+        replace_dirs(
+            blocks_tmp,
+            os.path.join(self.root, f"blocks_{tree.tiers[0].name}"),
+            block_dirs,
+        )
+        rows_by_unit = publish_units(
+            self.root, self.partition_cols, units, self.manifest, "refresh_", t0
+        )
+        save_bounds(self.bounds_path, new_bounds, series)
+        seconds = round(time.perf_counter() - t0, 3)
+        for (tier_name, _p), n in rows_by_unit.items():
+            m = metrics[tier_name]
+            m["partitions_rewritten"] += 1
+            m["rows_written"] += n
+            # the merge of every tier is one driver pass: its wall, shared
+            m["seconds"] = seconds
+        metrics.update(
+            blocks_written=len(block_dirs),
+            encode_seconds=round(encode_s, 3),
+            total_seconds=round(time.perf_counter() - t_all, 3),
+        )
+        return metrics

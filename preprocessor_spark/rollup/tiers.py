@@ -30,7 +30,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,6 +67,33 @@ def epoch_floor(e, step_s: int):
     Spark's ``%`` truncates toward zero and would put a negative epoch one
     bucket late."""
     return e - F.pmod(e, F.lit(int(step_s)))
+
+
+def epoch_seconds(ts):
+    """Epoch second of a timestamp column, floored: ``unix_seconds`` floors
+    the micros, where ``unix_timestamp`` truncates toward zero and would
+    put a sub-second time before 1970 one second late. Every stored epoch
+    second of the rollup jobs (the prepared ``tss``, the series bounds and
+    the refresh's delta profile) is this floor, as ``F.window`` takes it."""
+    return F.unix_seconds(ts)
+
+
+# The block grain of every tier file and of the finest tier's compression
+# blocks: a block holds BLOCK_BUCKETS consecutive buckets of its tier
+# (4096 x 300 s ~ 14.2 days at 5m, ~171 days at 1h, ~11.2 years at 1d).
+BLOCK_BUCKETS = 4096
+BLOCK_COL = "block"
+
+
+def block_of(epoch, step_s: int, buckets: int = BLOCK_BUCKETS):
+    """Block of epoch second ``epoch`` in a tier of period ``step_s``:
+    ``floor(epoch / (buckets x step_s))``, floored as :func:`epoch_floor`
+    floors, before 1970 as after. ``epoch`` is a long column (Spark) or an
+    int64 numpy array (the driver); both give the same block."""
+    span = int(buckets) * int(step_s)
+    if isinstance(epoch, Column):
+        return (epoch_floor(epoch, span) / F.lit(span)).cast("long")
+    return np.floor_divide(epoch, span)
 
 
 def stored_tier_schema(series_fields: list) -> T.StructType:
@@ -253,7 +281,7 @@ class RollupTree:
         ``spine``: dense (series, bucket_epoch:long) seed rows (e.g. from
         :func:`spine_from_bounds` with ``as_epoch=True``). Without it the
         aggregate fills no gaps: the incremental refresh adds its seeds
-        after the aggregate, which keeps the delta's partitioning."""
+        on the driver, after it collects the aggregate."""
         v = F.col(self.value_col).cast("double")
         facts = df.select(
             *self.series_cols,

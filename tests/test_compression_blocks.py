@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from preprocessor_spark.rollup.compression import (
     decode_tier_blocks,
+    encode_blocks_local,
     encode_partitioned_blocks,
-    encode_partitioned_blocks_local,
     encode_tier_blocks,
 )
 from preprocessor_spark.rollup.tiers import RollupTree, TierSpec
@@ -94,6 +94,21 @@ def _adversarial_tier(spark):
     )
 
 
+def _local_blocks(tier, bucket_s, block_buckets):
+    """The driver encoder's blocks of ``tier``: its rows collected as Arrow
+    with their epoch seconds, as the refresh holds them."""
+    rows = tier.select(
+        "source", F.unix_timestamp("bucket_start").alias("bucket_epoch"),
+        "n_points", "sum_v", "sum_sq", "min_v", "max_v",
+    ).toArrow()
+    return encode_blocks_local(rows, ["source"], bucket_s, block_buckets)
+
+
+def _epochs(pdf_col):
+    """Epoch seconds of a column of naive-UTC or UTC-aware times."""
+    return [int(t.timestamp()) for t in pdf_col.dt.tz_localize(None).dt.tz_localize("UTC")]
+
+
 @pytest.mark.parametrize("which", ["tier_1h", "adversarial"])
 def test_driver_and_executor_encoders_write_identical_blocks(spark, tier_1h, which):
     """The refresh encodes its touched blocks on the driver, the build on
@@ -103,19 +118,18 @@ def test_driver_and_executor_encoders_write_identical_blocks(spark, tier_1h, whi
         _adversarial_tier(spark), 300
     )
     executor = encode_partitioned_blocks(tier, ["source"], 4, bucket_s)
-    local = encode_partitioned_blocks_local(tier, ["source"], 4, bucket_s)
-    assert local.frame.schema == executor.schema
+    local = _local_blocks(tier, bucket_s, 4)
+    assert local.column_names == executor.columns
     keys = ["source", "block"]
     a = executor.toPandas().sort_values(keys, na_position="first").reset_index(drop=True)
-    b = local.frame.toPandas().sort_values(keys, na_position="first").reset_index(
-        drop=True
-    )
-    assert (local.blocks, local.rows) == (len(a), int(a["n"].sum()))
+    b = local.to_pandas().sort_values(keys, na_position="first").reset_index(drop=True)
+    assert len(b) == len(a)
     if which == "adversarial":
         assert sorted(a["n"].tolist()) == [1, 1, 2, 3, 3, 4]
-    assert list(a.columns) == list(b.columns)
+    assert _epochs(a["block_start"]) == _epochs(b["block_start"])
     for c in a.columns:
-        assert a[c].tolist() == b[c].tolist(), c
+        if c != "block_start":
+            assert a[c].tolist() == b[c].tolist(), c
 
 
 def test_blocks_keep_instants_in_a_non_utc_session(spark):
@@ -141,8 +155,12 @@ def test_blocks_keep_instants_in_a_non_utc_session(spark):
 
     with scoped_conf(spark, {"spark.sql.session.timeZone": "America/New_York"}):
         executor = encode_partitioned_blocks(tier, ["source"], 4096, 3600)
-        local = encode_partitioned_blocks_local(tier, ["source"], 4096, 3600).frame
-        assert executor.collect() == local.collect()
+        local = _local_blocks(tier, 3600, 4096).to_pylist()
+        got = [r.asDict() for r in executor.collect()]
+        assert [r.pop("block_start").timestamp() for r in got] == [
+            r.pop("block_start").timestamp() for r in local
+        ]
+        assert got == local
         assert epochs(executor, "block_start") == epochs(tier, "bucket_start")[:1]
         back = decode_tier_blocks(executor, ["source", "block"])
         assert epochs(back, "bucket_start") == epochs(tier, "bucket_start")

@@ -18,7 +18,14 @@ from preprocessor_spark.rollup.incremental import (
     read_touched_partitions,
     save_bounds,
 )
-from preprocessor_spark.rollup.tiers import ALGEBRAIC, RollupTree, TierSpec
+from preprocessor_spark.rollup.tiers import (
+    ALGEBRAIC,
+    BLOCK_COL,
+    RollupTree,
+    TierSpec,
+    block_of,
+    duration_seconds,
+)
 from preprocessor_spark.synth import token_sequences
 
 TIERS = [TierSpec("5m", "5 minutes"), TierSpec("1h", "1 hour")]
@@ -89,12 +96,15 @@ def _epoch_bounds(facts):
 
 def _write_base_tree(tree, base, root):
     """A base tree stored as plans/rollup_job.py stores it: every tier
-    gap-filled dense and partitioned by source, next to the per-series
-    bounds sidecar."""
+    gap-filled dense and partitioned by source and block, next to the
+    per-series bounds sidecar."""
     for tier in tree.tiers:
-        _dense(tree, base, tier).select("source", "bucket_start", *ALGEBRAIC).write.mode(
-            "overwrite"
-        ).partitionBy("source").parquet(os.path.join(root, f"tier_{tier.name}"))
+        step = duration_seconds(tier.duration)
+        _dense(tree, base, tier).select("source", "bucket_start", *ALGEBRAIC).withColumn(
+            BLOCK_COL, block_of(F.unix_timestamp("bucket_start"), step)
+        ).write.mode("overwrite").partitionBy("source", BLOCK_COL).parquet(
+            os.path.join(root, f"tier_{tier.name}")
+        )
     save_bounds(os.path.join(root, "series_bounds.json"), _epoch_bounds(base), ["source"])
 
 
@@ -102,7 +112,7 @@ def _refresh(spark, tree, root, delta):
     """Refresh ``root`` with the delta in the prepared shape (epoch-second
     ``tss``) under its exact per-source bounds."""
     prepared = delta.select(F.unix_timestamp("ts").alias("tss"), "source", "n_tok")
-    return IncrementalRollup(tree, root).refresh(spark, prepared, _epoch_bounds(delta))
+    return IncrementalRollup(tree, root).refresh(prepared, _epoch_bounds(delta))
 
 
 def _assert_refreshed(spark, tree, root, facts):
@@ -165,9 +175,9 @@ def _facts(spark, rows):
 
 
 def test_refresh_into_entirely_new_partitions(spark, tmp_path):
-    """A delta whose only series is new exercises the explicit-path read's
-    empty-slice branch: nothing merges, the new partition dir appears with
-    its gaps seeded, and the old one is untouched."""
+    """A delta whose only series is new reads no existing file: nothing
+    merges, the new partition dir appears with its gaps seeded, and the
+    old one is untouched."""
     t = RollupTree(
         time_col="ts",
         series_cols=["source"],
@@ -191,9 +201,9 @@ def test_refresh_into_entirely_new_partitions(spark, tmp_path):
 
 
 def test_refresh_with_hive_unsafe_partition_value(spark, tmp_path):
-    """A partition value needing Hive path escaping (space in the series
-    key) must route through the pruned-read fallback and still merge
-    correctly."""
+    """Series keys that are not plain directory names (a space, and
+    characters Spark's writer escapes as %XX) are read from and written to
+    the directories Spark names for them, and merge correctly."""
     t = RollupTree(
         time_col="ts",
         series_cols=["source"],
@@ -205,6 +215,8 @@ def test_refresh_with_hive_unsafe_partition_value(spark, tmp_path):
         [
             ("src A", "2020-01-01 10:00:30", 5),
             ("src A", "2020-01-01 10:02:30", 7),
+            ("a/b=c%", "2020-01-01 10:00:30", 2),
+            ("a/b=c%", "2020-01-01 10:03:30", 7),
             ("plain", "2020-01-01 10:01:30", 3),
         ],
     )
@@ -212,7 +224,9 @@ def test_refresh_with_hive_unsafe_partition_value(spark, tmp_path):
     delta = df.filter(F.col("n_tok") == 7)
     root = str(tmp_path / "tree")
     _write_base_tree(t, base, root)
+    before = set(os.listdir(os.path.join(root, "tier_5m")))
     _refresh(spark, t, root, delta)
+    assert set(os.listdir(os.path.join(root, "tier_5m"))) == before
     _assert_refreshed(spark, t, root, df)
 
 
@@ -271,34 +285,35 @@ def test_fused_refresh_reports_per_tier_rows(spark, tree, corpus, tmp_path):
     assert m["5m"]["rows_written"] > m["1h"]["rows_written"] > 0
 
 
-def test_balanced_or_handles_thousands_of_terms(spark):
-    """A left-deep OR chain of thousands of terms can blow the driver
-    stack in Catalyst's recursive rules; the balanced fold must keep a
-    4096-term predicate analyzable."""
-    from preprocessor_spark.rollup.incremental import _balanced_or
-
-    pred = _balanced_or([F.lit(i == 4095) for i in range(4096)])
-    assert spark.range(1).filter(pred).count() == 1
-    pred_false = _balanced_or([F.lit(False) for _ in range(4096)])
-    assert spark.range(1).filter(pred_false).count() == 0
-
-
 def test_read_touched_partitions_uri_store_reads_existing_partitions(
     spark, tree, corpus, tmp_path
 ):
-    """On a URI store os.path.isdir is meaningless, so the explicit-path
-    discovery must fall back to the pruned full read: with a file:// tier
-    path an isdir probe sees every partition as 'new', and the merge would
-    replace accumulated statistics with delta-only rows."""
+    """The driver's reader of touched (series, block) files takes a URI
+    as well as a path: with a file:// tier it reads the files of the
+    touched partitions that exist, attaches their partition values, and
+    skips the ones that do not exist yet."""
+    import pyarrow as pa
+
+    from preprocessor_spark.rollup.incremental import STORED_ROWS
+
     tier = tree.tiers[0]
     local = str(tmp_path / "tier_5m")
-    stored = tree.base_aggregate(corpus, tier)
-    stored.write.partitionBy("source").parquet(local)
-    touched = [("s0",), ("s3",), ("s_new",)]
-    got = read_touched_partitions(
-        spark, "file://" + local, ["source"], touched,
-        schema=stored.select("source", "bucket_start", *ALGEBRAIC).schema,
+    stored = tree.base_aggregate(corpus, tier).withColumn(
+        BLOCK_COL, block_of(F.unix_timestamp("bucket_start"), 300)
     )
+    stored.write.partitionBy("source", BLOCK_COL).parquet(local)
+    (block,) = {r[0] for r in stored.select(BLOCK_COL).distinct().collect()}
+    touched = [("s0", block), ("s3", block), ("s_new", block), ("s0", block + 1)]
+    schema = pa.schema(
+        [pa.field("source", pa.string()), pa.field(BLOCK_COL, pa.int64()), *STORED_ROWS]
+    )
+    got = read_touched_partitions("file://" + local, ["source", BLOCK_COL], touched, schema)
+    assert got.schema == schema
     want = stored.filter(F.col("source").isin("s0", "s3"))
-    assert got.count() == want.count() > 0
-    _assert_tier_equal(_tiers_pdf(got), _tiers_pdf(want))
+    assert got.num_rows == want.count() > 0
+    got = got.to_pandas()
+    # the session is in UTC (session.get_spark): naive times are UTC
+    got["bucket_start"] = got["bucket_start"].dt.tz_localize(None)
+    _assert_tier_equal(
+        got.sort_values(["source", "bucket_start"]).reset_index(drop=True), _tiers_pdf(want)
+    )

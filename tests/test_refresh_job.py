@@ -134,16 +134,16 @@ def test_refresh_metrics_and_lineage(spark, setup):
     assert r1["tail_bootstrap"] is True
     assert r2["tail_bootstrap"] is False
     assert r1["delta_rows"] > 0 and r2["delta_rows"] > 0
-    # each refresh_<tier> mark counts its own partition: the last mark of
-    # each (tier, source) holds that partition's rows on disk
+    # each refresh_<tier> mark counts its own (source, block) unit: the
+    # last mark of each holds that unit's rows on disk
     last = {}
     for r in Manifest(os.path.join(out, "manifest.jsonl")).lineage():
         last[(r["stage"], r["partition"])] = r["rows"]
     for t in DEFAULT_TIERS:
         on_disk = {
-            r["source"]: r["count"]
+            f"{r['source']}/{r['block']}": r["count"]
             for r in spark.read.parquet(os.path.join(out, f"tier_{t.name}"))
-            .groupBy("source")
+            .groupBy("source", "block")
             .count()
             .collect()
         }
@@ -222,15 +222,14 @@ def test_tail_off_series_edge_is_refused(spark, setup, tmp_path):
 
 # A refresh of the setup's output costs exactly this many Spark jobs: the
 # delta's schema inference, the delta profile, the prepared append, the
-# carry-tail write, the one tier merge write, and for the blocks a collect
-# of the touched tier rows plus the write of the driver-encoded blocks
-# (one more than an executor encode, whose shuffle and Python stage ran as
-# one job: the cold Python worker cost seconds, a job costs milliseconds).
-REFRESH_SPARK_JOBS = 7
+# carry-tail write and the Arrow collect of the delta's 5m partials. The
+# tier merge, its writes and the block encode run on the driver after
+# that collect, and start no Spark job.
+REFRESH_SPARK_JOBS = 5
 
 
 def _block_files(root):
-    """{path relative to the blocks dir: (bytes, mtime)} of every file."""
+    """{path relative to ``root``: (bytes, mtime)} of every file."""
     out = {}
     for dp, _, fs in os.walk(root):
         for f in fs:
@@ -271,19 +270,20 @@ def _shifted_delta(spark, src, dest, interval):
 @pytest.fixture(scope="module")
 def far_refresh(spark, setup, tmp_path_factory):
     """A copy of the setup's output refreshed by a delta 20 days past the
-    series edge: its rows land in the next 14.2-day block of every source,
-    so each (source, block) dir the setup wrote is untouched. The refresh
-    runs under its own job group so its Spark jobs can be counted, with
-    every way of starting a Python worker made to raise, and with the
-    session's overwrite mode static, so only the block write's own dynamic
-    option can spare the untouched blocks."""
+    series edge, which puts rows in the second 14.2-day 5m block of every
+    source, then by the measured refresh 40 days past the edge: its rows
+    land in the third block, its gap rows in the second, and the first is
+    untouched. The measured refresh runs under its own job group so its
+    Spark jobs can be counted, with every way of starting a Python worker
+    made to raise, and with the session's overwrite mode static."""
     paths, out, _, _ = setup
     work = tmp_path_factory.mktemp("far_refresh")
     tree = str(work / "tree")
     shutil.copytree(out, tree)
-    delta = _shifted_delta(spark, paths["delta2"], str(work / "delta"), "20 DAYS")
-    blocks = os.path.join(tree, "blocks_5m")
-    before = _block_files(blocks)
+    first = _shifted_delta(spark, paths["delta2"], str(work / "first"), "20 DAYS")
+    refresh_job.main(["--output", tree, "--delta-input", first])
+    delta = _shifted_delta(spark, paths["delta2"], str(work / "delta"), "40 DAYS")
+    before = _block_files(tree)
     sc = spark.sparkContext
     sc.setJobGroup("far_refresh", "refresh_job.main")
     try:
@@ -293,7 +293,16 @@ def far_refresh(spark, setup, tmp_path_factory):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup("far_refresh")
-    return tree, before, _block_files(blocks), jobs, result
+    return tree, before, _block_files(tree), jobs, result
+
+
+def _in(dataset, files):
+    """The files of ``files`` under the ``dataset`` dir, relative to it."""
+    return {
+        os.path.relpath(p, dataset): c
+        for p, c in files.items()
+        if p.split(os.sep)[0] == dataset
+    }
 
 
 def test_refreshed_blocks_decode_to_the_tier_and_spare_untouched_blocks(
@@ -304,6 +313,7 @@ def test_refreshed_blocks_decode_to_the_tier_and_spare_untouched_blocks(
     land in are unchanged (perfbench's refresh check reads only tiers)."""
     tree, before, after, _, _ = far_refresh
     _assert_blocks_decode_to_tier(spark, tree)
+    before, after = _in("blocks_5m", before), _in("blocks_5m", after)
     # files at the root (the build's _SUCCESS marker) belong to no block
     old_dirs = {os.path.dirname(p) for p in before} - {""}
     new_dirs = {os.path.dirname(p) for p in after} - old_dirs - {""}
@@ -313,6 +323,34 @@ def test_refreshed_blocks_decode_to_the_tier_and_spare_untouched_blocks(
     }
     for path, content in before.items():
         assert after.get(path) == content, f"untouched block file rewritten: {path}"
+
+
+def test_refresh_rewrites_only_the_tier_blocks_it_marks(far_refresh):
+    """Every tier file of a (source, block) the refresh did not mark is
+    byte for byte the file it was, and the first 5m block of every source,
+    which neither the delta nor its gap rows reach, is one of them."""
+    tree, before, after, _, _ = far_refresh
+    earlier = before["manifest.jsonl"][0].count(b"\n")
+    stages = {f"refresh_{t.name}": t.name for t in DEFAULT_TIERS}
+    marked = {
+        (stages[r["stage"]], r["partition"])
+        for r in Manifest(os.path.join(tree, "manifest.jsonl")).lineage()[earlier:]
+        if r["stage"] in stages
+    }
+    assert {t for t, _ in marked} == set(stages.values())
+    for t in DEFAULT_TIERS:
+        old, new = _in(f"tier_{t.name}", before), _in(f"tier_{t.name}", after)
+        # the files of (source, block) dirs, not the build's _SUCCESS
+        untouched = [
+            p for p in old
+            if os.sep in p
+            and (t.name, "/".join(d.split("=", 1)[1] for d in p.split(os.sep)[:2]))
+            not in marked
+        ]
+        assert all(new.get(p) == old[p] for p in untouched), t.name
+        if t.name == "5m":
+            assert {p.split(os.sep)[1] for p in untouched} == {"block=1284"}
+            assert len({p.split(os.sep)[0] for p in untouched}) > 1
 
 
 def test_refresh_spark_job_count_is_pinned(far_refresh):
@@ -329,14 +367,35 @@ def test_refresh_starts_no_python_worker(spark, far_refresh):
         spark.range(1).groupBy("id").applyInPandas(lambda pdf: pdf, "id long")
 
 
-@pytest.mark.parametrize("shift_s", [0, SHIFT_1969_S], ids=["2020", "1969"])
-def test_refresh_equals_rebuild_across_the_epoch(spark, tmp_path, shift_s):
+# corpus shifts (seconds earlier) of the refresh == rebuild cases
+EPOCH_CASES = {
+    "2020": 0,
+    "1969": SHIFT_1969_S,
+    # the 5m block edge at 2020-01-14 13:20:00 (block 1285) falls at 04:00
+    # of the shifted corpus, inside the delta: two touched blocks a source
+    "block-edge": -(1285 * 4096 * 300 - 1577836800 - 4 * 3600),
+    # a source of the delta's rows only (renamed below)
+    "new-source": 0,
+}
+
+
+@pytest.mark.parametrize("case", list(EPOCH_CASES))
+def test_refresh_equals_rebuild_across_the_epoch(spark, tmp_path, case):
     """A build refreshed with a suffix delta leaves the tiers and blocks
-    that a rebuild of base ∪ delta leaves, also for a corpus before 1970
-    whose times are off the bucket lattice: there a bucket key that
-    truncates toward zero instead of flooring lands one bucket late."""
-    full = shifted(token_sequences(spark, 16_000), shift_s)
+    that a rebuild of base ∪ delta leaves: also for a corpus before 1970
+    whose times are off the bucket lattice (there a bucket key that
+    truncates toward zero instead of flooring lands one bucket late), for
+    a delta that straddles a 5m block edge, and for a source that only the
+    delta has."""
+    full = shifted(token_sequences(spark, 16_000), EPOCH_CASES[case])
     (cut,) = full.select(F.percentile(F.unix_micros("ts"), 0.8)).first()
+    if case == "new-source":
+        full = full.withColumn(
+            "source",
+            F.when(
+                (F.unix_micros("ts") >= cut) & (F.col("source") == "s1"), F.lit("s9")
+            ).otherwise(F.col("source")),
+        )
     paths = {}
     for name, df in (
         ("full", full),
@@ -356,6 +415,13 @@ def test_refresh_equals_rebuild_across_the_epoch(spark, tmp_path, shift_s):
     rollup_job.main(["--input", paths["full"], "--output", truth, "--resume"])
 
     assert spark.read.parquet(paths["delta"]).count() > 0
+    if case == "block-edge":
+        sources = glob.glob(os.path.join(out, "tier_5m", "source=*"))
+        assert sources and all(
+            sorted(os.listdir(d)) == ["block=1284", "block=1285"] for d in sources
+        )
+    if case == "new-source":
+        assert os.path.isdir(os.path.join(out, "tier_5m", "source=s9"))
     _assert_tiers_equal(spark, out, truth)
     _assert_rows_equal(
         _decoded_blocks(spark, out), _decoded_blocks(spark, truth), "blocks_5m"
@@ -366,6 +432,7 @@ def test_refresh_reports_its_block_encode(spark, far_refresh):
     """The JSON line records the driver-side encode: the blocks written
     (one per new (source, block) dir) and the tier rows they hold."""
     tree, before, after, _, result = far_refresh
+    before, after = _in("blocks_5m", before), _in("blocks_5m", after)
     new_dirs = {os.path.dirname(p) for p in after} - {
         os.path.dirname(p) for p in before
     }
@@ -398,6 +465,124 @@ def test_refresh_refuses_source_only_block_layout(spark, setup, tmp_path):
     with pytest.raises(ValueError, match="rebuild with rollup_job"):
         refresh_job.main(["--output", tree, "--delta-input", delta])
     assert _block_files(tree) == before
+
+
+def test_refresh_refuses_source_only_tier_layout(spark, setup, tmp_path):
+    """A tree whose tier files sit directly under source=<s>/ (the layout
+    before tier blocks) is refused before the refresh marks anything:
+    moving it into blocks would rewrite the whole history, so the error
+    asks for a rebuild, and the tree and its manifest are left as they
+    were."""
+    paths, out, _, _ = setup
+    tree = str(tmp_path / "tree")
+    shutil.copytree(out, tree)
+    tier = os.path.join(tree, "tier_1h")
+    old = spark.read.parquet(tier).drop("block")
+    old.write.partitionBy("source").parquet(tier + ".old")
+    shutil.rmtree(tier)
+    os.replace(tier + ".old", tier)
+    delta = _shifted_delta(spark, paths["delta2"], str(tmp_path / "delta"), "1 DAY")
+    before = _block_files(tree)
+    with pytest.raises(ValueError, match="rebuild with rollup_job"):
+        refresh_job.main(["--output", tree, "--delta-input", delta])
+    assert _block_files(tree) == before
+
+
+# 1969-12-29 00:00:00 less half a second: every row of the corpus sits 0.5 s
+# before a minute, so a row at a 5-minute edge floors to the last second of
+# the bucket before it, where a truncation toward zero would put it one
+# bucket late. (SHIFT_1969_S leaves every row 7.5 s before a minute, where
+# the floor and the truncation give the same bucket.)
+SUB_SECOND_1969_US = (SHIFT_1969_S - 7) * 1_000_000 + 500_000
+
+
+def _reference_tiers(spark, facts_path, norm_params_path):
+    """The tiers of a corpus computed in pandas from its raw ``ts``: the
+    epoch second is the floor of the micros, each value z-scored under the
+    persisted params less its source's trailing 5-row mean in (ts, doc_id)
+    order, every tier gap-filled from each source's first to last bucket."""
+    import pandas as pd
+
+    from preprocessor_spark.params import load_params
+    from preprocessor_spark.rollup.tiers import duration_seconds
+
+    p = load_params(norm_params_path).params["per_column"]["n_tok_z"]
+    f = (
+        spark.read.parquet(facts_path)
+        .select("source", F.unix_micros("ts").alias("us"), "doc_id", "n_tok")
+        .toPandas()
+        .sort_values(["source", "us", "doc_id"], kind="stable")
+    )
+    z = (f["n_tok"].astype("float64") - p["mean"]) / p["std"]
+    ma = z.groupby(f["source"]).transform(
+        lambda x: x.rolling(rollup_job.MA_WINDOW, min_periods=1).mean()
+    )
+    tss = f["us"].to_numpy() // 1_000_000
+    out = {}
+    for tier in DEFAULT_TIERS:
+        step = duration_seconds(tier.duration)
+        g = pd.DataFrame(
+            {"source": f["source"].to_numpy(), "b": tss - tss % step, "v": (z - ma).to_numpy()}
+        )
+        agg = g.assign(sq=g["v"] * g["v"]).groupby(["source", "b"]).agg(
+            n_points=("v", "size"), sum_v=("v", "sum"), sum_sq=("sq", "sum"),
+            min_v=("v", "min"), max_v=("v", "max"),
+        )
+        spine = pd.MultiIndex.from_tuples(
+            [
+                (s, b)
+                for s, bs in agg.reset_index().groupby("source")["b"]
+                for b in range(bs.min(), bs.max() + step, step)
+            ],
+            names=["source", "b"],
+        )
+        t = agg.reindex(spine).reset_index()
+        t["n_points"] = t["n_points"].fillna(0).astype("int64")
+        t["bucket_start"] = pd.to_datetime(t["b"], unit="s")
+        out[tier.name] = t[TIER_COLS]
+    return out
+
+
+def _assert_tiers_match_reference(spark, root, want):
+    for name, ref in want.items():
+        got = _tier_pdf(spark, root, name)
+        assert len(got) == len(ref), name
+        for c in ("source", "bucket_start", "n_points"):
+            assert (got[c].to_numpy() == ref[c].to_numpy()).all(), (name, c)
+        for c in ("sum_v", "sum_sq", "min_v", "max_v"):
+            a, b = got[c].to_numpy(float), ref[c].to_numpy(float)
+            assert (np.isnan(a) == np.isnan(b)).all(), (name, c)
+            m = ~np.isnan(b)
+            assert (np.abs(a[m] - b[m]) <= 1e-9 * np.maximum(1.0, np.abs(b[m]))).all(), (
+                name, c,
+            )
+
+
+def test_sub_second_times_before_1970_bucket_by_their_floor(spark, tmp_path):
+    """Before 1970 a sub-second time is stored, bounded and bucketed by the
+    floor of its epoch micros, in the build and in the refresh alike: both
+    leave the tiers an independent pandas rebuild from the raw ``ts``
+    gives."""
+    full = token_sequences(spark, 16_000).withColumn(
+        "ts", F.timestamp_micros(F.unix_micros("ts") - F.lit(SUB_SECOND_1969_US))
+    )
+    (cut,) = full.select(F.percentile(F.unix_micros("ts"), 0.8)).first()
+    paths = {}
+    for name, df in (
+        ("full", full),
+        ("base", full.filter(F.unix_micros("ts") < cut)),
+        ("delta", full.filter(F.unix_micros("ts") >= cut)),
+    ):
+        paths[name] = str(tmp_path / name)
+        df.write.parquet(paths[name])
+    out = str(tmp_path / "out")
+    rollup_job.main(["--input", paths["base"], "--output", out])
+    params = os.path.join(out, "norm_params.json")
+    _assert_tiers_match_reference(spark, out, _reference_tiers(spark, paths["base"], params))
+    refresh_job.main(
+        ["--output", out, "--delta-input", paths["delta"], "--input", paths["base"]]
+    )
+    _assert_tiers_match_reference(spark, out, _reference_tiers(spark, paths["full"], params))
 
 
 def _refresh_marks(tree):

@@ -183,9 +183,9 @@ def test_series_bounds_and_input_rows_match_prepared_and_corpus(spark, tmp_path)
     """The series bounds and the row count come from the corpus profile
     (epoch micros turned into seconds on the driver), not from scans of the
     prepared series and the corpus: they must equal what those scans give,
-    also for timestamps before 1970 with sub-second parts, where
-    unix_timestamp truncates toward zero and a floor would be one second
-    early."""
+    also for timestamps before 1970 with sub-second parts, where both
+    store the floor of the micros (unix_timestamp would truncate toward
+    zero, one second late)."""
     from preprocessor_spark.rollup.incremental import load_bounds
 
     corpus = str(tmp_path / "corpus_1969")
@@ -325,9 +325,10 @@ def test_bulk_resume_lineage_counts_survive_stringy_partition_values(
 ):
     """Partition values whose directory names round-trip through type
     inference differently ('3'→int 3, '03'→int 3 too — a collision!) must
-    still get true lineage counts: the counts ride the write itself as
-    value-keyed observed aggregates, never a read-back lookup. A rerun
-    skips every marked unit and leaves the tier as it was."""
+    still get true lineage counts: each unit's rows come from the footers
+    of its files, keyed by the unit's escaped directory name, never from a
+    read-back lookup of values. A rerun skips every marked unit and leaves
+    the tier as it was."""
     from preprocessor_spark.rollup.checkpoint import Manifest, run_resumable_observed
 
     df = spark.createDataFrame(
@@ -376,6 +377,31 @@ def test_write_units_replaces_only_its_units_under_two_series_columns(
     assert [(r["stage"], r["partition"], r["rows"]) for r in manifest.lineage()] == [
         ("s_t", "a/1", 1), ("s_t", "a/2", 2), ("s_t", "a/1", 2)
     ]
+
+
+def test_partition_dir_names_what_sparks_writer_names(spark, tmp_path):
+    """The refresh names the unit directories it writes with pyarrow, and
+    finds the build's, by ``partition_dir``: it must give the directory
+    Spark's partitionBy writer gives, escapes and nulls included."""
+    from preprocessor_spark.rollup.checkpoint import partition_dir
+
+    values = [
+        "plain", "a b", "x=y%", "b/c", "#?*:", "tab\there", "{[^]}", "\\'\"",
+        "ü", "03", "", None,
+    ]
+    rows = [(v, k, 0) for v in values for k in (-5, 3)]
+    out = str(tmp_path / "t")
+    spark.createDataFrame(rows, "a string, b long, v long").write.partitionBy(
+        "a", "b"
+    ).parquet(out)
+    written = {
+        os.path.relpath(dp, out)
+        for dp, _, fs in os.walk(out)
+        if any(f.endswith(".parquet") for f in fs)
+    }
+    # "" and None share Spark's default partition
+    assert written == {partition_dir(["a", "b"], (v, k)) for v, k, _ in rows}
+    assert len(written) == 2 * (len(values) - 1)
 
 
 def test_fresh_build_drops_series_the_new_corpus_lacks(spark, tmp_path):
