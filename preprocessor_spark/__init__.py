@@ -9,9 +9,10 @@ compression) over tables of pre-tokenized training sequences
 
 Design tenets (see SURVEY.md):
   * DataFrame / SQL first — Catalyst plans everything; no RDDs.
-  * No per-row Python. Sequential-scan semantics (EMA, per-series interpolation,
-    Gorilla block encode) run as Arrow-vectorized ``applyInPandas`` stages; a
-    refresh's few touched blocks encode on the driver with the same numpy code.
+  * No per-row Python. Sequential-scan semantics (EMA, per-series interpolation)
+    run as Arrow-vectorized ``applyInPandas`` stages; the rollup jobs encode
+    their Gorilla blocks on the driver, from the 5m tier rows as Arrow, with
+    the same numpy code.
   * Two-phase fit/transform with JSON param sidecars (atomic write + checksum),
     mirroring the reference's persisted-parameter model
     (reference: app/core/normalization_handler.py:299-404).

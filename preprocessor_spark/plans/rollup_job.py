@@ -13,9 +13,18 @@ Pipeline (the north-rule composition):
   5. rollup tree: 5m → 1h → 1d continuous aggregates of token-length stats,
      gap-filled dense per source at each tier, each tier's files one
      directory per (source, block) (``tiers.block_of``), so a refresh
-     rewrites only the blocks its delta lands in;
-  6. Gorilla/delta-of-delta block compression per (source, block);
-  7. per-partition checkpointed writes + lineage manifest (resumable).
+     rewrites only the blocks its delta lands in. Spark aggregates the
+     facts into the 5m tier and writes it (its last job); the driver then
+     reads that tier back with pyarrow one source at a time and folds the
+     1h and 1d tiers from it (``incremental.fold_partials``), with no
+     Spark job and no Python worker: the 5m tier holds one row per source
+     per bucket, so its size follows the history span, not the facts;
+  6. Gorilla/delta-of-delta block compression per (source, block), in the
+     same driver pass (``compression.encode_blocks_local``), with the
+     writers the refresh uses (``incremental.write_tier_blocks`` and
+     ``write_series_blocks``);
+  7. per-(tier, source) checkpointed writes + lineage manifest (resumable:
+     marked units are skipped, ``blocks_5m`` is replaced whole).
 
 Every driver-side fact the stages need — the row count, the split fit's
 bucket counts, the unbias chunk cuts, the per-series time bounds behind
@@ -34,8 +43,11 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import time
+
+import pyarrow as pa
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -86,19 +98,17 @@ def main(argv: list[str] | None = None) -> dict:
         # predecessors for the first w-1 delta rows per source). Rotate it
         # with the manifest; a post-rebuild refresh re-bootstraps via
         # --input, whose edge then matches the rebuilt series_bounds.json.
-        import shutil as _shutil
-
         tail_sidecar = os.path.join(out, TAIL_NAME)
         if os.path.exists(tail_sidecar):
-            _shutil.rmtree(tail_sidecar + ".prev", ignore_errors=True)
+            shutil.rmtree(tail_sidecar + ".prev", ignore_errors=True)
             os.replace(tail_sidecar, tail_sidecar + ".prev")
         for leftover in (tail_sidecar + ".tmp", tail_sidecar + ".bak"):
-            _shutil.rmtree(leftover, ignore_errors=True)
+            shutil.rmtree(leftover, ignore_errors=True)
         # the build replaces only the units of the new corpus's series: a
         # series the old tree had and the new corpus lacks would survive in
         # every tier, and the block encode would carry it into blocks_5m
         for tier in DEFAULT_TIERS:
-            _shutil.rmtree(os.path.join(out, TIER_PREFIX + tier.name), ignore_errors=True)
+            shutil.rmtree(os.path.join(out, TIER_PREFIX + tier.name), ignore_errors=True)
     manifest = Manifest(manifest_path)
     # a build is a fixed sequence of statically sized stages (sizes below,
     # all from the profile): AQE's per-exchange materialize + re-plan
@@ -125,17 +135,27 @@ def _build(spark, args, out: str, manifest) -> dict:
     from preprocessor_spark.operators import Normalizer, TemporalSplitter, Unbiaser
     from preprocessor_spark.operators.positions import time_profile
     from preprocessor_spark.params import load_params, save_params
+    from pyspark.sql.pandas.types import to_arrow_type
+
     from preprocessor_spark.rollup.checkpoint import (
         ROWS_PER_WRITE_TASK,
         TIER_COL,
+        TIER_PREFIX,
+        UNITS_TMP,
+        partition_dir,
+        publish_units,
         run_resumable_observed,
-        run_resumable_observed_tiers,
     )
-    from preprocessor_spark.rollup.compression import encode_partitioned_blocks
-    from preprocessor_spark.rollup.incremental import save_bounds
+    from preprocessor_spark.rollup.incremental import (
+        STORED_ROWS,
+        as_epoch_rows,
+        fold_partials,
+        read_touched_partitions,
+        save_bounds,
+        write_series_blocks,
+        write_tier_blocks,
+    )
     from preprocessor_spark.rollup.tiers import (
-        ALGEBRAIC,
-        BLOCK_BUCKETS,
         BLOCK_COL,
         DEFAULT_TIERS,
         RollupTree,
@@ -143,7 +163,6 @@ def _build(spark, args, out: str, manifest) -> dict:
         duration_seconds,
         epoch_seconds,
         spine_from_bounds,
-        stored_tier_schema,
     )
     from preprocessor_spark.session import scoped_conf
 
@@ -306,7 +325,6 @@ def _build(spark, args, out: str, manifest) -> dict:
             ]
         )
     ).parquet(prepared_path)
-    tier_schema = stored_tier_schema([source_field])
 
     # -- rollup tree with gap-fill + compression ---------------------------
     # the rolled-up series is the PREPROCESSED one (z-scored + MA-unbiased
@@ -324,9 +342,10 @@ def _build(spark, args, out: str, manifest) -> dict:
     # equals min/max bucket_start (floor is monotonic), so the profile's
     # bounds give every gap-fill spine and every tier's exact row count on
     # the driver — the tier-0 aggregate itself never needs to be cached or
-    # collected: each tier is ONE job (agg → spine → write). Lineage row
-    # counts ride the write action as Observation metrics. Job descriptions
-    # tag each phase for the Spark UI and event-log attribution.
+    # collected: tier 0 is ONE job (agg → spine → write), and the driver
+    # finishes the tree from its files. Lineage row counts come from the
+    # written files' footers. Job descriptions tag each phase for the
+    # Spark UI and event-log attribution.
     def spine_size(step: int) -> int:
         # exact gap-filled row count per tier: floor-to-lattice both ends,
         # count buckets
@@ -336,9 +355,21 @@ def _build(spark, args, out: str, manifest) -> dict:
         )
 
     metrics = {}
-    # ---- tier 0: facts → finest tier (one job) ----------------------
-    base = DEFAULT_TIERS[0]
+    base, coarse = DEFAULT_TIERS[0], DEFAULT_TIERS[1:]
     step0 = duration_seconds(base.duration)
+    coarse_steps = [duration_seconds(t.duration) for t in coarse]
+    for tier, step in zip(coarse, coarse_steps):
+        if step % step0 != 0:
+            # Not an assert: the coarse tiers are folded from the finest
+            # tier's buckets, which is only valid when each coarse period
+            # is a multiple of the finest, and python -O would strip an
+            # assert — a custom tier must fail loudly, not misalign buckets
+            # silently.
+            raise ValueError(
+                f"tier {tier.name} period ({step}s) must nest in the finest "
+                f"tier's period ({step0}s)"
+            )
+    # ---- tier 0: facts → finest tier (one job) ----------------------
     exp_rows = spine_size(step0)
     spine_parts = max(1, min(cores * 2, -(-exp_rows // ROWS_PER_WRITE_TASK)))
     t0 = time.perf_counter()
@@ -358,13 +389,14 @@ def _build(spark, args, out: str, manifest) -> dict:
         run_resumable_observed(
             filled,
             partition_col="source",
-            out_path=os.path.join(out, f"tier_{base.name}"),
+            out_path=os.path.join(out, TIER_PREFIX + base.name),
             manifest=manifest,
             values=sources,
             expected_rows=exp_rows,
         )
+    sc.setLocalProperty("spark.job.description", None)
     tier0_rows = sum(
-        r["rows"] for r in manifest.lineage() if r["stage"] == f"tier_{base.name}"
+        r["rows"] for r in manifest.lineage() if r["stage"] == TIER_PREFIX + base.name
     )
     dt = time.perf_counter() - t0
     metrics[base.name] = {
@@ -374,78 +406,68 @@ def _build(spark, args, out: str, manifest) -> dict:
         "points_per_sec": round(n_rows / dt),
     }
 
-    # ---- coarse tiers: the WHOLE chain in ONE job --------------------
-    # Re-aggregate from tier 0's checkpointed output (lazy read →
-    # resume-safe chain). Gap rows (n_points=0, null stats) are INCLUDED:
-    # tier 0 is gap-filled dense over each series' floored [t0, t1], so
-    # aggregating it bucket-complete yields each dense coarse tier directly
-    # — sum(n_points)=0 and null-skipping sum/min/max reproduce exactly
-    # what a spine LEFT JOIN would, without building a spine. Tier periods
-    # nest (300 s | 3600 s | 86400 s), each coarse tier re-aggregates the
-    # previous one INSIDE one plan (Catalyst reuses the shared aggregate
-    # exchange), and one tier-tagged union write lands every tier — so the
-    # whole coarse half of the tree pays a single job's fixed cost
-    # (scheduling, commit, observation), the cost that previously capped
-    # coarse-tier N→4N scaling efficiency at ~0.33.
-    coarse = DEFAULT_TIERS[1:]
+    # ---- the rest of the tree on the driver, one source at a time -------
+    # Tier 0 is one row per series per 5m bucket: its size follows the
+    # history span, not the facts, and a few thousand rows a source cost
+    # milliseconds in Arrow where a cold Spark stage (and the encode's
+    # Python worker) costs seconds. Tier 0 is dense over each source's
+    # floored [t0, t1], so the bounds name every block file it wrote, with
+    # no listing; and because each coarse period is a multiple of the
+    # finest, each coarse tier is tier 0's rows floored to its period and
+    # folded, gap rows included (sum(n_points) = 0 and null-skipping folds
+    # give exactly the gap rows a dense spine would). The rows are folded
+    # in time order. Marked (tier, source) units are skipped on resume;
+    # blocks_5m is replaced whole, so no block of an older history stays.
+    t0 = time.perf_counter()
+    tmp = os.path.join(out, UNITS_TMP)
+    shutil.rmtree(tmp, ignore_errors=True)
+    blocks_tmp = os.path.join(tmp, "blocks")
+    os.makedirs(blocks_tmp)
+    tier0_schema = pa.schema(
+        [
+            pa.field("source", to_arrow_type(source_field.dataType)),
+            pa.field(BLOCK_COL, pa.int64()),
+            *STORED_ROWS,
+        ]
+    )
+    done = {t.name: manifest.completed(TIER_PREFIX + t.name) for t in coarse}
+    units, encode_s, encode_rows, blocks_written = [], 0.0, 0, 0
+    for src, lo, hi in bounds_rows:
+        stored = read_touched_partitions(
+            os.path.join(out, TIER_PREFIX + base.name),
+            ["source", BLOCK_COL],
+            [(src, k) for k in range(block_of(lo, step0), block_of(hi, step0) + 1)],
+            tier0_schema,
+        )
+        rows = as_epoch_rows(stored, ["source", BLOCK_COL]).sort_by("bucket_epoch")
+        unit = partition_dir(["source"], (src,))
+        t_enc = time.perf_counter()
+        ks, n = write_series_blocks(os.path.join(blocks_tmp, unit), rows, step0)
+        encode_s += time.perf_counter() - t_enc
+        encode_rows += n
+        blocks_written += len(ks)
+        epochs = rows["bucket_epoch"].to_numpy()
+        for tier, step in zip(coarse, coarse_steps):
+            if str(src) in done[tier.name]:
+                continue
+            floored = rows.set_column(0, "bucket_epoch", pa.array(epochs - epochs % step))
+            write_tier_blocks(
+                os.path.join(tmp, f"{TIER_COL}={tier.name}", unit),
+                fold_partials(floored, ["bucket_epoch"]).sort_by("bucket_epoch"),
+                step,
+            )
+            units.append((tier.name, (src,)))
+    blocks_path = os.path.join(out, "blocks_" + base.name)
+    shutil.rmtree(blocks_path, ignore_errors=True)
+    os.replace(blocks_tmp, blocks_path)
+    publish_units(out, ["source"], units, manifest, TIER_PREFIX, t0)
     if coarse:
-        t0 = time.perf_counter()
-        cur = spark.read.schema(tier_schema).parquet(
-            os.path.join(out, f"tier_{base.name}")
-        ).select(
-            "source",
-            F.unix_timestamp("bucket_start").alias("bucket_epoch"),
-            *ALGEBRAIC,
-        )
-        tagged = []
-        prev_step = step0
-        for tier in coarse:
-            step = duration_seconds(tier.duration)
-            if step % prev_step != 0:
-                # Not an assert: the one-job coarse chain is only valid
-                # when each tier's period nests in the previous one, and
-                # python -O would strip an assert — a non-nesting custom
-                # tier must fail loudly, not misalign buckets silently.
-                raise ValueError(
-                    f"tier {tier.name} period ({step}s) must nest in the "
-                    f"previous tier's period ({prev_step}s)"
-                )
-            cur = tree.reaggregate_epoch(cur, step)
-            tagged.append(
-                cur.withColumn(TIER_COL, F.lit(tier.name)).withColumn(
-                    BLOCK_COL, block_of(F.col("bucket_epoch"), step)
-                )
-            )
-            prev_step = step
-        allc = tagged[0]
-        for t in tagged[1:]:
-            allc = allc.unionByName(t)
-        allc = allc.select(
-            TIER_COL,
-            "source",
-            F.timestamp_seconds("bucket_epoch").alias("bucket_start"),
-            *ALGEBRAIC,
-            BLOCK_COL,
-        )
-        sc.setJobDescription("coarse")
-        with scoped_conf(spark, tier_conf):
-            run_resumable_observed_tiers(
-                allc,
-                partition_col="source",
-                out_root=out,
-                manifest=manifest,
-                tier_names=[t.name for t in coarse],
-                values=sources,
-            )
+        lineage = manifest.lineage()
         rows_by_tier = {
-            t.name: sum(
-                r["rows"]
-                for r in manifest.lineage()
-                if r["stage"] == f"tier_{t.name}"
-            )
+            t.name: sum(r["rows"] for r in lineage if r["stage"] == TIER_PREFIX + t.name)
             for t in coarse
         }
-        dt = time.perf_counter() - t0
+        dt = time.perf_counter() - t0 - encode_s
         metrics["+".join(t.name for t in coarse)] = {
             "seconds": round(dt, 3),
             "in_points": tier0_rows,
@@ -453,26 +475,6 @@ def _build(spark, args, out: str, manifest) -> dict:
             "points_per_sec": round(tier0_rows / dt),
             "out_buckets_by_tier": rows_by_tier,
         }
-
-    # -- compression of the finest tier -----------------------------------
-    # blocks are partitioned by (source, block), the grain of the tier's own
-    # files: a refresh re-encodes and replaces only the blocks its delta
-    # lands in. A build replaces every block (a static overwrite: no block
-    # of an older history survives). One encode task per
-    # ROWS_PER_WRITE_TASK tier rows: each task starts a Python worker.
-    sc.setJobDescription("compress")
-    t0 = time.perf_counter()
-    tier0 = spark.read.schema(tier_schema).parquet(
-        os.path.join(out, f"tier_{base.name}")
-    )
-    encode_parts = max(1, min(cores, -(-tier0_rows // ROWS_PER_WRITE_TASK)))
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": encode_parts}):
-        encode_partitioned_blocks(
-            tier0, ["source"], BLOCK_BUCKETS, step0
-        ).write.mode("overwrite").option("partitionOverwriteMode", "static").partitionBy(
-            "source", BLOCK_COL
-        ).parquet(os.path.join(out, "blocks_" + base.name))
-    compress_seconds = round(time.perf_counter() - t0, 3)
 
     total = time.perf_counter() - t_start
     rollup_seconds = sum(m["seconds"] for m in metrics.values())
@@ -489,7 +491,9 @@ def _build(spark, args, out: str, manifest) -> dict:
         ),
         "rollup_points_per_sec": round(n_rows / max(rollup_seconds, 1e-9)),
         "tiers": metrics,
-        "compress_seconds": compress_seconds,
+        "compress_seconds": round(encode_s, 3),
+        "encode_rows": encode_rows,
+        "blocks_written": blocks_written,
         "lineage_rows": len(manifest.lineage()),
     }
 

@@ -14,15 +14,16 @@ it for the build and a (tier, series, block) partition for the refresh.
 :func:`publish_units` is the only code that puts units into the tree: a
 writer lands them in a temp dir under ``root``, and the publish counts
 each unit's rows from its parquet footers, moves its directory into
-``tier_<t>/`` and marks it in the manifest. The build writes through
-:func:`write_units` (one Spark write, then the publish): tier 0 through
-:func:`run_resumable_observed` and the coarse tiers through
-:func:`run_resumable_observed_tiers`, which skip units already marked, so
-a rerun after a crash rewrites exactly the unmarked ones. The refresh
-(rollup/incremental.py) writes its merged units with pyarrow on the driver
-and publishes them the same way. It merges into the units it writes, which
-is not idempotent, so its caller refuses the rerun instead
-(plans/refresh_job.py).
+``tier_<t>/`` and marks every unit in the manifest with one append. The
+build writes tier 0 through :func:`run_resumable_observed` (one Spark
+write via :func:`write_units`, then the publish) and its coarse tiers with
+pyarrow on the driver (plans/rollup_job.py); both skip units already
+marked, so a rerun after a crash rewrites exactly the unmarked ones.
+:func:`run_resumable_observed_tiers`, the Spark writer of several tiers in
+one job, has no job caller. The refresh (rollup/incremental.py) writes its
+merged units with pyarrow on the driver and publishes them the same way.
+It merges into the units it writes, which is not idempotent, so its caller
+refuses the rerun instead (plans/refresh_job.py).
 
 On a cluster the manifest is itself an Iceberg table and each unit is an
 Iceberg partition overwrite; the sandbox uses a JSON-lines manifest +
@@ -63,13 +64,16 @@ class Manifest:
         }
 
     def mark(self, stage: str, partition: str, **metrics) -> None:
-        rec = {
-            "stage": stage,
-            "partition": partition,
-            "status": "complete",
-            "ts": time.time(),
-            **metrics,
-        }
+        self.mark_all([{"stage": stage, "partition": partition, **metrics}])
+
+    def mark_all(self, records: list[dict]) -> None:
+        """Mark each record's (``stage``, ``partition``) complete, with the
+        rest of the record as its metrics, in ONE append and one fsync: a
+        publish of many units pays one sync, not one per unit."""
+        if not records:
+            return
+        head = {"stage": None, "partition": None, "status": "complete", "ts": time.time()}
+        lines = "".join(json.dumps({**head, **r}) + "\n" for r in records).encode()
         with open(self.path, "ab+") as f:
             end = f.seek(0, os.SEEK_END)
             if end:
@@ -81,7 +85,7 @@ class Manifest:
                         f.write(b"\n")
                     else:
                         f.truncate(torn)
-            f.write((json.dumps(rec) + "\n").encode())
+            f.write(lines)
             f.flush()
             os.fsync(f.fileno())
 
@@ -228,7 +232,8 @@ def publish_units(
     A writer lands unit (tier t, values of ``unit_cols``) in
     ``UNITS_TMP/__tier=t/`` under :func:`partition_dir`. Each unit
     directory written there replaces its counterpart in ``tier_<t>/``;
-    the temp dir is removed; then each of ``units`` is marked: stage
+    the temp dir is removed; then each of ``units`` is marked, all in one
+    :meth:`Manifest.mark_all`: stage
     ``stage_prefix + t``, partition the values joined by ``/``, ``rows``
     the unit's rows, counted from its files' footers before the move, and
     ``seconds`` the wall since ``t0``. The rows are keyed by the unit's
@@ -252,12 +257,18 @@ def publish_units(
         replace_dirs(src, os.path.join(out_root, TIER_PREFIX + tier), rels)
     shutil.rmtree(tmp)
     dt = round(time.perf_counter() - t0, 3)
-    counts = {}
-    for tier, values in units:
-        partition = "/".join(str(v) for v in values)
-        n = rows.get((tier, partition_dir(unit_cols, values)), 0)
-        manifest.mark(stage_prefix + tier, partition, rows=n, seconds=dt)
-        counts[(tier, partition)] = n
+    counts = {
+        (tier, "/".join(str(v) for v in values)): rows.get(
+            (tier, partition_dir(unit_cols, values)), 0
+        )
+        for tier, values in units
+    }
+    manifest.mark_all(
+        [
+            {"stage": stage_prefix + t, "partition": p, "rows": n, "seconds": dt}
+            for (t, p), n in counts.items()
+        ]
+    )
     return counts
 
 

@@ -2,9 +2,11 @@
 implemented as fully numpy-vectorized bitstream transforms (both encode AND
 decode), with no per-element Python (north rule: "no per-row Python
 anywhere"). The codecs are plain numpy, so they run wherever a block's rows
-are: inside Arrow ``applyInPandas`` stages on the executors when a build
-encodes a whole history, and on the driver when a refresh re-encodes the
-few blocks its delta touches. Both venues call them through
+are: on the driver, where both rollup jobs encode their blocks (a build
+every block of the history, from its finest tier read back as Arrow; a
+refresh the few blocks its delta touches), and inside Arrow
+``applyInPandas`` stages on the executors for a tier DataFrame
+(``compression.encode_tier_blocks``). Both venues call them through
 ``compression.encode_block``.
 
 Relation to the classic Gorilla paper (Pelkonen et al., VLDB'15):

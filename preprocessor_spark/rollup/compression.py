@@ -13,14 +13,17 @@ One function, ``encode_block``, encodes one (series, block) group —
 numpy-vectorized, no per-row Python — and runs where the group's rows
 are:
 
-  * ``encode_tier_blocks`` / ``encode_partitioned_blocks`` run it on the
-    executors inside Arrow ``applyInPandas``: a full build encodes every
-    block of the history, which grows with the corpus;
-  * ``encode_blocks_local`` runs it on the driver over rows the driver
-    already holds as Arrow: a refresh re-encodes only the blocks its delta
-    lands in (at most ``block_buckets`` rows each), from the merged 5m rows
-    it has just written, and a Python worker's start (seconds, cold) would
-    cost far more than encoding them.
+  * ``encode_blocks_local`` runs it on the driver over tier rows already
+    held there as Arrow. Both rollup jobs encode this way: the build
+    encodes each series' blocks from its finest tier's rows, read back on
+    the driver after the tier-0 write, and a refresh re-encodes only the
+    blocks its delta lands in, from the merged 5m rows it has just
+    written. A tier of the finest period holds one row per series per
+    bucket (its size follows the history span, not the facts), and a
+    Python worker's cold start (seconds) would cost more than encoding it;
+  * ``encode_tier_blocks`` runs it on the executors inside Arrow
+    ``applyInPandas``, for any tier DataFrame (the driver contract's
+    query and the benchmark's reads use it).
 
 Both take the bucket times as epoch seconds, so the two write identical
 bytes, and decode (``mapInPandas``) returns UTC instants: blocks read back
@@ -33,10 +36,11 @@ by ``(source, block)``, where ``block`` is the tier files' block rule
 (``tiers.block_of``: floor(epoch / (block_buckets × bucket_seconds)),
 4096 × 300 s ≈ 14.2 days for the 5m tier): one directory per block,
 holding that block's one row, over the same span as the tier's own
-``block`` directory. A refresh re-encodes only the blocks its delta lands
-in and replaces those directories; every other block's files stay as they
-are. ``encode_partitioned_blocks`` adds the ``block`` key; the executor
-encoder's own output schema does not carry it.
+``block`` directory, written by ``incremental.write_series_blocks``. A
+refresh re-encodes only the blocks its delta lands in and replaces those
+directories; every other block's files stay as they are.
+``encode_blocks_local`` returns the ``block`` key; the executor encoder's
+output schema does not carry it.
 """
 
 from __future__ import annotations
@@ -96,44 +100,18 @@ def encode_block(tss: np.ndarray, stats) -> dict[str, object]:
     return out
 
 
-def _keyed_for_blocks(
-    tier_df: DataFrame, block_buckets: int, bucket_seconds: int
-) -> DataFrame:
-    return tier_df.filter(F.col("n_points") > 0).withColumn(
-        BLOCK_COL, block_index("bucket_start", bucket_seconds, block_buckets)
-    )
-
-
-def encode_partitioned_blocks(
-    tier_df: DataFrame,
-    series_cols: list[str],
-    block_buckets: int,
-    bucket_seconds: int,
-) -> DataFrame:
-    """Blocks of the tier's non-empty rows, keyed for the on-disk
-    ``(*series_cols, block)`` layout: write them with
-    ``partitionBy(*series_cols, BLOCK_COL)``. ``block`` is computed from
-    each bucket, which gives the block of its ``block_start``."""
-    return encode_tier_blocks(
-        _keyed_for_blocks(tier_df, block_buckets, bucket_seconds),
-        [*series_cols, BLOCK_COL],
-        block_buckets,
-        bucket_seconds,
-    )
-
-
 def encode_blocks_local(
     rows: pa.Table,
     series_cols: list[str],
     bucket_seconds: int,
     block_buckets: int = BLOCK_BUCKETS,
 ) -> pa.Table:
-    """``encode_partitioned_blocks`` on the driver, for tier rows already
-    held there as Arrow: ``series_cols``, ``bucket_epoch`` (epoch seconds)
-    and the statistics. Returns one row per (series, block) of the
-    non-empty rows, keyed like the executor encoder's (``block_start`` in
-    UTC) and with the same bytes. No Spark job and no Python worker: for
-    the blocks a refresh re-encodes, at most ``block_buckets`` rows each."""
+    """The blocks of tier rows held on the driver as Arrow:
+    ``series_cols``, ``bucket_epoch`` (epoch seconds) and the statistics.
+    Returns one row per (series, block) of the non-empty rows, keyed by
+    ``series_cols`` and :data:`~preprocessor_spark.rollup.tiers.BLOCK_COL`
+    (``block_start`` in UTC), with the bytes ``encode_tier_blocks`` gives
+    the same rows. No Spark job and no Python worker."""
     rows = rows.filter(pc.greater(rows["n_points"], 0))
     tss = rows["bucket_epoch"].to_numpy()
     keys = [*series_cols, BLOCK_COL]

@@ -30,8 +30,10 @@ series, which cost milliseconds on the driver where a cold Spark stage
 costs seconds. It takes one (tier, series) unit at a time, so the driver
 holds the partials plus one unit's touched blocks (at most a few × 4096
 rows). The finest tier's compression blocks (``blocks_<tier>``) are
-re-encoded from the merged rows of that unit, with the bytes the build's
-executor encoder writes (rollup/compression.py).
+re-encoded from the merged rows of that unit. The merged rows and the
+blocks are written by :func:`write_tier_blocks` and
+:func:`write_series_blocks`, the writers the build's driver pass uses
+(plans/rollup_job.py), so a refreshed tree is laid out as a rebuilt one.
 
 Reference parity: the reference recomputes its per-column statistics from
 scratch on every run (app/core/normalization_handler.py:155-174 — whole-
@@ -184,6 +186,18 @@ def read_touched_partitions(
     return pa.concat_tables(parts) if parts else schema.empty_table()
 
 
+def as_epoch_rows(stored: pa.Table, partition_cols: list[str]) -> pa.Table:
+    """Tier rows as :func:`read_touched_partitions` reads them, without
+    their ``partition_cols`` and with ``bucket_start`` as epoch seconds:
+    :data:`EPOCH_ROWS`."""
+    micros = stored["bucket_start"].cast(pa.int64()).to_numpy()
+    return (
+        stored.drop_columns(partition_cols)
+        .set_column(0, "bucket_epoch", pa.array(np.floor_divide(micros, 1_000_000)))
+        .cast(EPOCH_ROWS)
+    )
+
+
 # -- per-series bounds sidecar (dense-tier extension bookkeeping) ---------
 
 
@@ -254,7 +268,7 @@ def extension_intervals(
     return intervals
 
 
-def _write_parquet(directory: str, table: pa.Table) -> None:
+def _write_parquet(directory: str, table: pa.Table, **options) -> None:
     os.makedirs(directory, exist_ok=True)
     # no Arrow schema in the footer: it would double the footer of a tier
     # file, which every Spark read of the tier opens
@@ -262,7 +276,44 @@ def _write_parquet(directory: str, table: pa.Table) -> None:
         table,
         os.path.join(directory, f"part-{uuid.uuid4().hex}.parquet"),
         store_schema=False,
+        **options,
     )
+
+
+def write_tier_blocks(unit_dir: str, rows: pa.Table, step: int) -> np.ndarray:
+    """Write one series' rows of a tier of period ``step`` (:data:`EPOCH_ROWS`,
+    sorted by bucket_epoch) under ``unit_dir``, one parquet file per block
+    of the tier (``block=<k>/``, ``tiers.block_of``), with ``bucket_start``
+    stored as a UTC timestamp. Returns each row's block."""
+    epochs = rows["bucket_epoch"].to_numpy()
+    stored = rows.set_column(
+        0, "bucket_start", pa.array(epochs * 1_000_000, STORED_ROWS[0].type)
+    )
+    blocks = block_of(epochs, step)
+    for k, a, b in _runs(blocks):
+        _write_parquet(os.path.join(unit_dir, f"{BLOCK_COL}={k}"), stored.slice(a, b - a))
+    return blocks
+
+
+def write_series_blocks(unit_dir: str, rows: pa.Table, step: int) -> tuple[list[int], int]:
+    """Encode one series' non-empty rows of a tier of period ``step``
+    (:data:`EPOCH_ROWS`) into compression blocks
+    (``compression.encode_blocks_local``) and write each block's one row
+    under ``unit_dir/block=<k>/``. Only ``block_start`` and ``n`` get
+    column statistics, and no column a dictionary: either would copy every
+    blob into the file's page and chunk metadata. Returns the blocks
+    written and the rows they encode."""
+    blocks = encode_blocks_local(rows, [], step)
+    ks = blocks[BLOCK_COL].to_pylist()
+    body = blocks.drop_columns(BLOCK_COL)
+    for i, k in enumerate(ks):
+        _write_parquet(
+            os.path.join(unit_dir, f"{BLOCK_COL}={k}"),
+            body.slice(i, 1),
+            write_statistics=["block_start", "n"],
+            use_dictionary=False,
+        )
+    return ks, int(pc.sum(blocks["n"]).as_py() or 0)
 
 
 def _by_series(rows: pa.Table, series_cols: list[str]):
@@ -425,26 +476,17 @@ class IncrementalRollup:
                     [(*key, int(k)) for k in touched],
                     schema,
                 )
-                micros = old["bucket_start"].cast(pa.int64()).to_numpy()
-                old = old.drop_columns(self.partition_cols).set_column(
-                    0, "bucket_epoch", pa.array(np.floor_divide(micros, 1_000_000))
-                )
                 merged = fold_partials(
-                    pa.concat_tables([old.cast(EPOCH_ROWS), rows.cast(EPOCH_ROWS)]),
+                    pa.concat_tables(
+                        [as_epoch_rows(old, self.partition_cols), rows.cast(EPOCH_ROWS)]
+                    ),
                     ["bucket_epoch"],
                 ).sort_by("bucket_epoch")
-                epochs = merged["bucket_epoch"].to_numpy()
-                stored = merged.set_column(
-                    0, "bucket_start", pa.array(epochs * 1_000_000, STORED_ROWS[0].type)
+                unit = partition_dir(series, key)
+                merged_blocks = write_tier_blocks(
+                    os.path.join(tmp, f"{TIER_COL}={tier.name}", unit), merged, step
                 )
-                merged_blocks = block_of(epochs, step)
-                for k, a, b in _runs(merged_blocks):
-                    rel = partition_dir(self.partition_cols, (*key, k))
-                    _write_parquet(
-                        os.path.join(tmp, f"{TIER_COL}={tier.name}", rel),
-                        stored.slice(a, b - a),
-                    )
-                    units.append((tier.name, (*key, k)))
+                units += [(tier.name, (*key, int(k))) for k in np.unique(merged_blocks)]
                 if tier is tree.tiers[0]:
                     # a block whose delta rows are all seeds keeps its
                     # non-empty rows, and so its compression block
@@ -453,15 +495,11 @@ class IncrementalRollup:
                     changed = np.isin(
                         merged_blocks, block_of(facts["bucket_epoch"].to_numpy(), step)
                     )
-                    blocks = encode_blocks_local(merged.filter(changed), [], step)
-                    for row in blocks.to_pylist():
-                        rel = partition_dir(self.partition_cols, (*key, row.pop(BLOCK_COL)))
-                        _write_parquet(
-                            os.path.join(blocks_tmp, rel),
-                            pa.Table.from_pylist([row], blocks.schema.remove(0)),
-                        )
-                        block_dirs.append(rel)
-                    metrics["encode_rows"] += int(pc.sum(blocks["n"]).as_py() or 0)
+                    ks, n = write_series_blocks(
+                        os.path.join(blocks_tmp, unit), merged.filter(changed), step
+                    )
+                    block_dirs += [partition_dir(self.partition_cols, (*key, k)) for k in ks]
+                    metrics["encode_rows"] += n
                     encode_s += time.perf_counter() - t_enc
         replace_dirs(
             blocks_tmp,

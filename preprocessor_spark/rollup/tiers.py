@@ -96,21 +96,6 @@ def block_of(epoch, step_s: int, buckets: int = BLOCK_BUCKETS):
     return np.floor_divide(epoch, span)
 
 
-def stored_tier_schema(series_fields: list) -> T.StructType:
-    """Schema of a tier the rollup jobs store for a double-valued series:
-    the series fields, then bucket_start and the algebraic statistics.
-    Reads of the jobs' own tiers pin it: an unpinned parquet read runs a
-    Spark job to infer the schema from a footer."""
-    return T.StructType(
-        [
-            *series_fields,
-            T.StructField("bucket_start", T.TimestampType()),
-            T.StructField("n_points", T.LongType()),
-            *[T.StructField(c, T.DoubleType()) for c in ALGEBRAIC[1:]],
-        ]
-    )
-
-
 def algebraic_reaggs():
     """Fold of already-aggregated tier rows into a coarser tier (sums of
     sums; min of mins; max of maxes)."""

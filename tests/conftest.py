@@ -36,7 +36,7 @@ def no_python_worker(spark):
 
     def refuse(name):
         def raiser(*_a, **_k):
-            raise AssertionError(f"the refresh started a Python worker via {name}")
+            raise AssertionError(f"a Python worker was started via {name}")
 
         return raiser
 

@@ -9,7 +9,7 @@ import shutil
 
 import pandas as pd
 import pytest
-from conftest import SHIFT_1969_S, shifted
+from conftest import SHIFT_1969_S, no_python_worker, shifted
 from pyspark.sql import functions as F
 
 from preprocessor_spark.plans import rollup_job
@@ -44,9 +44,10 @@ def job_out(spark, tmp_path_factory):
 # A build of the fixture's corpus costs exactly this many Spark jobs: the
 # corpus's schema inference, the two profile aggregates, the split fit's
 # edge pass and its tie recount (the corpus has ties at split edges), the
-# normalizer fit, the unbias chunk broadcast, the prepared write, the
-# tier-0 write, the coarse-tier write and the block encode.
-BUILD_SPARK_JOBS = 11
+# normalizer fit, the unbias chunk broadcast, the prepared write and the
+# tier-0 write. The coarse tiers and the blocks are written on the driver
+# from tier 0's files, with no Spark job.
+BUILD_SPARK_JOBS = 9
 
 
 def _close(spark, a, b, tol=1e-9):
@@ -63,11 +64,10 @@ def _close(spark, a, b, tol=1e-9):
     )
 
 
-def test_job_tiers_match_library_chain(spark, job_out):
-    """The job's epoch-integer tier path must equal the library's
-    timestamp/F.window chain — prepared stores epoch seconds (tss), so
-    decode it back to a timestamp and rebuild the reference tree."""
-    _, out, res, _ = job_out
+def _assert_tiers_match_library_chain(spark, out, res):
+    """Every tier of the build at ``out`` equals the library's
+    timestamp/F.window chain over its prepared series (epoch seconds,
+    decoded back to a timestamp), and has the rows ``res`` reports."""
     prepared = spark.read.parquet(os.path.join(out, "prepared")).withColumn(
         "ts", F.timestamp_seconds("tss")
     )
@@ -88,6 +88,49 @@ def test_job_tiers_match_library_chain(spark, job_out):
             else res["tiers"][coarse_key]["out_buckets_by_tier"][tier.name]
         )
         assert reported == got.count()
+
+
+def test_job_tiers_match_library_chain(spark, job_out):
+    """The job's epoch-integer tier 0 and its driver-folded coarse tiers
+    must equal the library's chain."""
+    _, out, res, _ = job_out
+    _assert_tiers_match_library_chain(spark, out, res)
+
+
+def test_build_with_hive_unsafe_source_value(spark, tmp_path):
+    """A source value that Spark's writer escapes in a directory name is
+    built like any other: the driver pass finds its tier-0 files under the
+    escaped name, every tier equals the library chain, the blocks decode
+    to the non-empty 5m rows, and no step starts a Python worker."""
+    from preprocessor_spark.rollup.compression import decode_tier_blocks
+
+    raw, corpus, out = (str(tmp_path / n) for n in ("raw", "corpus", "out"))
+    write_corpus(spark, raw, 3_000)
+    facts = spark.read.parquet(raw)
+    first = min(r[0] for r in facts.select("source").distinct().collect())
+    unsafe = "a/b=c%"
+    facts.withColumn(
+        "source", F.when(F.col("source") == first, unsafe).otherwise(F.col("source"))
+    ).write.parquet(corpus)
+    with no_python_worker(spark):
+        res = rollup_job.main(["--input", corpus, "--output", out])
+    _assert_tiers_match_library_chain(spark, out, res)
+    for tier in DEFAULT_TIERS:
+        assert os.path.isdir(os.path.join(out, f"tier_{tier.name}", "source=a%2Fb%3Dc%25"))
+    keys = ["source", "bucket_start"]
+    decoded = decode_tier_blocks(
+        spark.read.parquet(os.path.join(out, "blocks_5m")), ["source"]
+    ).toPandas()[TIER_COLS].sort_values(keys).reset_index(drop=True)
+    tier = spark.read.parquet(os.path.join(out, "tier_5m")).filter("n_points > 0")
+    tier = tier.select(TIER_COLS).toPandas().sort_values(keys).reset_index(drop=True)
+    assert unsafe in set(decoded["source"])
+    assert res["encode_rows"] == len(tier) == len(decoded)
+    blocks = os.path.join(out, "blocks_5m")
+    assert res["blocks_written"] == sum(
+        len(os.listdir(os.path.join(blocks, d))) for d in os.listdir(blocks)
+    )
+    for c in TIER_COLS:
+        assert (decoded[c].to_numpy() == tier[c].to_numpy()).all(), c
 
 
 def test_job_lineage_per_partition(spark, job_out):
