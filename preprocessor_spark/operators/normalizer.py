@@ -20,10 +20,15 @@ Scale notes: the fit is a single partial+final hash aggregate over the fact
 table (one pass, no shuffle beyond the final 1-row reduce); params are a
 handful of scalars collected to the driver and injected as literals — the
 transform adds zero shuffles and stays inside one codegen stage with the
-surrounding plan.
+surrounding plan. A job whose earlier pass already summed the training
+rows (the rollup build's split fit) takes the z-score params from those
+moments (:meth:`Normalizer.fit_moments`) and runs no fit aggregate.
 """
 
 from __future__ import annotations
+
+import math
+from fractions import Fraction
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -94,16 +99,45 @@ class Normalizer:
             params = {
                 c: {"min": row[f"{c}__min"], "max": row[f"{c}__max"]} for c in cols
             }
+        return self._stage_params(cols, params, row["__n"])
+
+    def fit_moments(self, moments: dict[str, tuple], n_samples: int) -> StageParams:
+        """z-score params from each column's (count, sum, sum of squares)
+        of its non-null values, gathered by a pass that already ran (the
+        build's split fit, ``TemporalSplitter.split_moments``) instead of
+        an aggregate of its own. ``n_samples`` is the rows they describe,
+        nulls included, as :meth:`fit` counts them.
+
+        Equal to :meth:`fit` over those rows: the mean is the sum over the
+        count, as Spark's average of the column; the sample std is
+        computed exactly from integer moments and rounded once, where
+        Spark's streaming update rounds at every row (they agree to about
+        1e-15 relative). The same edges hold: no values → null mean, fewer
+        than two values or zero variance → std 1.0."""
+        if self.method != "zscore":
+            raise ValueError(f"moments fit a zscore, not {self.method}")
+        cols = self.columns or list(moments)
+        per_column = {}
+        for c in cols:
+            n, s1, s2 = moments[c]
+            std = 1.0
+            if n > 1:
+                var = (Fraction(s2) * n - Fraction(s1) ** 2) / (n * (n - 1))
+                std = math.sqrt(max(var, 0)) or 1.0
+            per_column[c] = {"mean": s1 / n if n else None, "std": std}
+        return self._stage_params(cols, per_column, n_samples)
+
+    def _stage_params(self, cols: list[str], per_column: dict, n_samples: int) -> StageParams:
         return StageParams(
             stage=self.name,
             method=self.method,
             params={
                 "columns": cols,
-                "per_column": params,
+                "per_column": per_column,
                 "feature_range": list(self.feature_range),
                 "epsilon": self.epsilon,
             },
-            n_samples=row["__n"],
+            n_samples=n_samples,
         )
 
     def transform(self, df: DataFrame, params: StageParams) -> DataFrame:

@@ -2,13 +2,28 @@
 start from.
 
 :func:`time_profile` is the one fact-finding pass behind every
-value-bucketed operator here: two small aggregates over the leading order
-key give, per series, the row count and the min/max of the key's encoding,
-and per (series, value bucket) the row count. Buckets are cut from the
-key's VALUE (never from physical partitioning — range-partitioner sampling
-is not guaranteed stable across plan executions), so its consumers are pure
-functions of the data ⇒ identical results at any parallelism (the engine's
-determinism invariant):
+value-bucketed operator here. Per (series, bucket of the leading order
+key) it counts the rows and takes the key's min, and optionally the count,
+sum and sum of squares of a value column; the per-series row counts and
+key ranges come with it. Buckets are cut from the key's VALUE (never from
+physical partitioning — range-partitioner sampling is not guaranteed
+stable across plan executions), so its consumers are pure functions of the
+data ⇒ identical results at any parallelism (the engine's determinism
+invariant). There are two bucket schemes:
+
+  * value-range buckets (the default): ``n_buckets`` equal slices of the
+    key's global range, for any bucketable key. The slices need the range
+    first, so this profile is two small aggregates: per series, then per
+    (series, bucket);
+  * lattice buckets (``step_s``, timestamp keys only): the key's epoch
+    micros floored to a ``step_s``-second lattice, as a rollup tier floors
+    them. That needs no range first, so the profile is ONE aggregate, and
+    each series' bounds are folded from its bucket rows on the driver. A
+    job that rolls up at that step (plans/rollup_job.py) profiles on its
+    finest tier's lattice.
+
+Either way the bucket ids are dense from 0 in key order (-1 for a null
+key), so every consumer takes either profile:
 
   * ``grouped_positions`` — exact, dense, 0-based positions per group under
     ``ORDER BY order_cols`` without any single-partition window: running
@@ -18,21 +33,28 @@ determinism invariant):
     chunks for the sequential-window operators (chunked MA unbias W1, the
     ACF lag screen W14);
   * ``TemporalSplitter.fit_time_boundaries`` — the exact-count splitter's
-    quantile lookup (W6).
+    quantile lookup (W6), and the split moments of the profile's value
+    column (the build's z-score fit).
 
 A job that needs several of these (``plans/rollup_job.py``) builds one
 profile and passes it to each; called without one, a consumer builds its
-own.
+own. The profile is collected as Arrow and kept as an Arrow table: the
+driver side is vectorized, so a profile of tens of thousands of lattice
+buckets costs milliseconds.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from preprocessor_spark.arrowops import group_by
 from preprocessor_spark.session import local_frame
 
 
@@ -46,6 +68,12 @@ BUCKETABLE_DTYPE_PREFIXES = (
     "tinyint", "smallint", "int", "bigint", "float", "double",
     "decimal", "timestamp", "date",
 )
+
+# columns of TimeProfile.counts after the series columns
+BKT, ROWS, T0 = "__bkt", "__n", "__t0"
+# and, for a profile of a value column: the count, sum and sum of squares
+# of its non-null values
+MOMENTS = ("__vn", "__vs", "__vss")
 
 
 def is_bucketable_dtype(dtype: str) -> bool:
@@ -66,24 +94,39 @@ def _encode_lead(df: DataFrame, lead: str):
     return F.col(lead).cast("double")
 
 
+def value_moments(df: DataFrame, value_col: str) -> list[Column]:
+    """Count, sum and sum of squares of ``value_col``'s non-null values, as
+    aggregates (unaliased: a caller may take them over a window). An
+    integral column sums as ``decimal(38,0)``: exact, where a ``long`` sum
+    of squares overflows (an error under ANSI mode) once values near 2^31
+    meet. Other columns sum as doubles."""
+    exact = isinstance(df.schema[value_col].dataType, T.IntegralType)
+    v = F.col(value_col).cast("decimal(38,0)" if exact else "double")
+    return [F.count(value_col), F.sum(v), F.sum(v * v)]
+
+
 @dataclass(frozen=True)
 class TimeProfile:
     """What :func:`time_profile` learned about one table.
 
     ``bounds``: one row per series, ``(*series, rows, lo, hi)``, where lo
-    and hi are the min and max of the order key's encoding (null when the
-    series has no non-null key). ``counts``: one row per non-empty
-    (series, bucket), ``(*series, bucket, rows)``. Both are sorted by series
-    (nulls first), ``counts`` then by bucket. ``bucket`` is the integer
-    bucket-id column over any frame with the profiled order column: -1 for a
-    null key (ORDER BY ASC is NULLS FIRST), else 0 … n_buckets−1 in value
+    and hi are the min and max of the order key's encoding (epoch micros
+    for a timestamp; null when the series has no non-null key), sorted by
+    series, nulls first. ``counts``: an Arrow table with one row per
+    non-empty (series, bucket): the series columns, then :data:`BKT`,
+    :data:`ROWS` (its rows), :data:`T0` (its least key, in the key's type)
+    and, when ``value_col`` is set, the :data:`MOMENTS` of that column,
+    sorted by series (nulls first) and bucket. ``bucket`` is the integer
+    bucket-id column over any frame with the profiled order column: -1 for
+    a null key (ORDER BY ASC is NULLS FIRST), else 0 … n_buckets−1 in key
     order, equal keys always in one bucket."""
 
     series_cols: list[str]
     bounds: list[tuple]
-    counts: list[tuple]
+    counts: pa.Table
     bucket: Column
     n_buckets: int
+    value_col: str | None = None
 
     @property
     def rows(self) -> int:
@@ -94,14 +137,21 @@ class TimeProfile:
         return {tuple(b[:-3]): b[-3] for b in self.bounds}
 
 
-def _collect_sorted(df: DataFrame, n_keys: int) -> list[tuple]:
-    """Collect a small aggregate as Arrow batches (no per-row ``Row``
-    objects) and sort it on the driver by its first ``n_keys`` columns,
-    nulls first — an ``orderBy`` in the query would cost a range-partitioner
-    sampling job of its own."""
-    table = df.toArrow()
-    rows = list(zip(*(c.to_pylist() for c in table.columns)))
-    return sorted(rows, key=lambda r: [(v is not None, v) for v in r[:n_keys]])
+def _collect_sorted(df: DataFrame, keys: list[str]) -> pa.Table:
+    """Collect a small aggregate as Arrow and sort it on the driver by
+    ``keys``, nulls first — an ``orderBy`` in the query would cost a
+    range-partitioner sampling job of its own."""
+    return _sorted(df.toArrow(), keys)
+
+
+def _sorted(table: pa.Table, keys: list[str]) -> pa.Table:
+    if not keys:
+        return table
+    return table.sort_by([(k, "ascending") for k in keys], null_placement="at_start")
+
+
+def _tuples(table: pa.Table) -> list[tuple]:
+    return list(zip(*(c.to_pylist() for c in table.columns)))
 
 
 def time_profile(
@@ -109,20 +159,37 @@ def time_profile(
     order_col: str,
     series_cols: list[str] | None = None,
     n_buckets: int = 4096,
+    step_s: int | None = None,
+    value_col: str | None = None,
 ) -> TimeProfile:
-    """Profile ``df`` along ``order_col`` (any bucketable dtype, see
-    :func:`is_bucketable_dtype`) per ``series_cols``: two small aggregates,
-    the per-series one first because the bucket cuts need the global key
-    range. Each collects |series| resp. |series| × |buckets| rows."""
+    """Profile ``df`` along ``order_col`` per ``series_cols``.
+
+    Without ``step_s``: ``n_buckets`` value-range buckets of any bucketable
+    key (:func:`is_bucketable_dtype`), in two small aggregates, the
+    per-series one first because the bucket cuts need the global key
+    range. With ``step_s``: buckets of the ``step_s``-second lattice of a
+    timestamp key, in ONE aggregate, each non-empty lattice bucket's rows
+    and min/max key; the series bounds are folded from those rows, and the
+    bucket ids are relative to the lowest non-empty one. ``value_col``
+    adds its :func:`value_moments` per bucket."""
     series_cols = list(series_cols or [])
     enc = _encode_lead(df, order_col)
-    bounds = _collect_sorted(
-        df.groupBy(*series_cols).agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.min(enc).alias("__lo"),
-            F.max(enc).alias("__hi"),
-        ),
-        len(series_cols),
+    moments = (
+        [m.alias(n) for m, n in zip(value_moments(df, value_col), MOMENTS)]
+        if value_col
+        else []
+    )
+    if step_s is not None:
+        return _lattice_profile(df, order_col, series_cols, int(step_s), moments, value_col)
+    bounds = _tuples(
+        _collect_sorted(
+            df.groupBy(*series_cols).agg(
+                F.count(F.lit(1)).alias("__n"),
+                F.min(enc).alias("__lo"),
+                F.max(enc).alias("__hi"),
+            ),
+            series_cols,
+        )
     )
     los = [b[-2] for b in bounds if b[-2] is not None]
     his = [b[-1] for b in bounds if b[-1] is not None]
@@ -141,10 +208,68 @@ def time_profile(
         )
     ).cast("int")
     counts = _collect_sorted(
-        df.groupBy(*series_cols, bucket.alias("__bkt")).count(),
-        len(series_cols) + 1,
+        df.groupBy(*series_cols, bucket.alias(BKT)).agg(
+            F.count(F.lit(1)).alias(ROWS), F.min(order_col).alias(T0), *moments
+        ),
+        [*series_cols, BKT],
     )
-    return TimeProfile(series_cols, bounds, counts, bucket, n_buckets)
+    return TimeProfile(series_cols, bounds, counts, bucket, n_buckets, value_col)
+
+
+def _lattice_profile(
+    df: DataFrame,
+    order_col: str,
+    series_cols: list[str],
+    step_s: int,
+    moments: list[Column],
+    value_col: str | None,
+) -> TimeProfile:
+    if not dict(df.dtypes)[order_col].startswith("timestamp"):
+        raise ValueError(
+            f"a lattice profile needs a timestamp key, got {order_col!r} "
+            f"({dict(df.dtypes)[order_col]}): profile it without step_s"
+        )
+    enc = _encode_lead(df, order_col)
+    step_us = step_s * 1_000_000
+    # the floor to the lattice (pmod, as tiers.epoch_floor), then an exact
+    # integral division: a double division could round a bucket's last
+    # micro into the next bucket
+    lattice = F.call_function("div", enc - F.pmod(enc, F.lit(step_us)), F.lit(step_us))
+    raw = df.groupBy(*series_cols, lattice.alias(BKT)).agg(
+        F.count(F.lit(1)).alias(ROWS),
+        F.min(order_col).alias(T0),
+        F.max(order_col).alias("__t1"),
+        *moments,
+    ).toArrow()
+    ids = raw[BKT]
+    first = pc.min(ids).as_py()
+    first = 0 if first is None else first
+    rel = pc.fill_null(pc.subtract(ids, first), -1)
+    n_buckets = max(pc.max(rel).as_py() or 0, 0) + 1
+    if n_buckets > np.iinfo(np.int32).max:
+        raise ValueError(
+            f"{order_col!r} spans {n_buckets} buckets of {step_s}s: more than "
+            "an int bucket id holds"
+        )
+    raw = raw.set_column(raw.schema.get_field_index(BKT), BKT, rel.cast(pa.int32()))
+    per_series = _sorted(
+        group_by(raw, series_cols, [(ROWS, "sum"), (T0, "min"), ("__t1", "max")]),
+        series_cols,
+    )
+    bounds = _tuples(
+        pa.table(
+            [
+                *(per_series[c] for c in series_cols),
+                pc.fill_null(per_series[f"{ROWS}_sum"], 0),
+                per_series[f"{T0}_min"].cast(pa.int64()),
+                per_series["__t1_max"].cast(pa.int64()),
+            ],
+            names=[*series_cols, "__n", "__lo", "__hi"],
+        )
+    )
+    bucket = F.when(enc.isNull(), F.lit(-1)).otherwise(lattice - F.lit(first)).cast("int")
+    counts = _sorted(raw.drop_columns("__t1"), [*series_cols, BKT])
+    return TimeProfile(series_cols, bounds, counts, bucket, n_buckets, value_col)
 
 
 def grouped_positions(
@@ -199,7 +324,7 @@ def grouped_positions_and_totals(
     # re-evaluated per row and its size grows with parallelism)
     acc: dict[tuple, int] = {}
     rows = []
-    for *g, bkt, cnt in prof.counts:
+    for *g, bkt, cnt in _tuples(prof.counts.select([*group_cols, BKT, ROWS])):
         g = tuple(g)
         rows.append((*g, bkt, acc.get(g, 0)))
         acc[g] = acc.get(g, 0) + cnt
@@ -246,9 +371,10 @@ def chunked_assignment(
     series × chunks instead of being capped at |series|, while carried tails
     give every chunk head its true trailing context.
 
-    The per-(series, value-bucket) counts of a :func:`time_profile`
-    (``profile``, or one built here) pack contiguous value-range buckets of
-    the ``order_col`` ENCODING into ≥chunk_rows chunks; rows get their chunk
+    The per-(series, bucket) counts of a :func:`time_profile` (``profile``,
+    in either bucket scheme, or a value-range one built here) pack
+    contiguous buckets of the ``order_col`` ENCODING into ≥chunk_rows
+    chunks, on the driver with Arrow; rows get their chunk
     id via a broadcast join, so no full-width positions shuffle is spent
     deriving chunk ids. Bucket boundaries are pure value cuts on the order
     key, so cross-chunk order matches ``ORDER BY order_col`` exactly,
@@ -280,14 +406,13 @@ def chunked_assignment(
     bucket = profile.bucket
     if factor > 1:
         bucket = F.floor(bucket / F.lit(factor)).cast("int")
+    coarse = profile.counts.select([*series_cols, ROWS]).append_column(
+        BKT, pa.array(np.floor_divide(profile.counts[BKT].to_numpy(), factor))
+    )
+    coarse = _sorted(group_by(coarse, [*series_cols, BKT], [(ROWS, "sum")]), [*series_cols, BKT])
     by_series: dict[tuple, list] = {}
-    for *key, bkt, cnt in profile.counts:
-        bl = by_series.setdefault(tuple(key), [])
-        bkt //= factor
-        if bl and bl[-1][0] == bkt:
-            bl[-1] = (bkt, bl[-1][1] + cnt)
-        else:
-            bl.append((bkt, cnt))
+    for *key, bkt, cnt in _tuples(coarse):
+        by_series.setdefault(tuple(key), []).append((bkt, cnt))
     if chunk_rows is None:
         # auto: size chunks so the LARGEST series yields ~4 window tasks
         # per core (measured: a 5M-row single-series lag pass is ~2x faster

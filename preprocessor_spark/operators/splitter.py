@@ -25,12 +25,17 @@ time-boundary splits this module also emits (``boundaries`` →
 
 from __future__ import annotations
 
-import bisect
+from decimal import Decimal
 from typing import TYPE_CHECKING
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from preprocessor_spark.arrowops import group_by
 from preprocessor_spark.params import StageParams
 
 if TYPE_CHECKING:
@@ -83,6 +88,25 @@ def split_counts(total: int, ratios: dict[str, float]) -> dict[str, int]:
     return counts
 
 
+def _exact(v):
+    """A moment sum as an exact Python number: a ``decimal(38,0)`` sum
+    becomes an int (a null, an empty sum, 0)."""
+    if v is None:
+        return 0
+    return int(v) if isinstance(v, Decimal) else v
+
+
+def _collected(value: pa.Scalar, dtype: T.DataType):
+    """The Python value ``collect()`` gives for a value of a Spark column of
+    ``dtype``, collected as Arrow: timestamps and dates through the type's
+    own conversion of its internal int, so that its ``str`` is the one the
+    rows of a ``collect()`` give."""
+    if value.is_valid and dtype.needConversion():
+        unit = pa.int64() if pa.types.is_timestamp(value.type) else pa.int32()
+        return dtype.fromInternal(value.cast(unit).as_py())
+    return value.as_py()
+
+
 def split_boundaries(total: int, ratios: dict[str, float]) -> list[tuple[str, int, int]]:
     """Contiguous [start, end) row-position slices in d1..d6 order."""
     counts = split_counts(total, ratios)
@@ -112,6 +136,9 @@ class TemporalSplitter:
         self.tiebreak_cols = tiebreak_cols or []
         self.shuffle = shuffle
         self.seed = seed
+        # set by fit_time_boundaries: each split's (count, sum, sum of
+        # squares) of its profile's value column, or None
+        self.split_moments: dict[str, tuple] | None = None
 
     def transform(self, df: DataFrame) -> DataFrame:
         """Label every row with split_id ∈ d1..d6 (exact reference counts).
@@ -163,26 +190,46 @@ class TemporalSplitter:
         This fit instead treats the problem as an exact quantile lookup:
 
           1. a :func:`~preprocessor_spark.operators.positions.time_profile`
-             of the time key (``profile``, per any series split — its
-             counts are summed over series — or one built here with
-             ``n_buckets`` buckets): value-range bucket counts → the global
-             position offsets of every bucket + the exact total → the
-             reference's remainder rule gives the split edge positions;
+             of the time key (``profile``, in either bucket scheme and per
+             any series split — its counts are summed over series — or one
+             built here with ``n_buckets`` value-range buckets): bucket
+             counts → the global position offsets of every bucket + the
+             exact total → the reference's remainder rule gives the split
+             edge positions;
           2. the row AT each edge position lives in a known bucket at a
-             known within-bucket rank — ONE more pass sorts only the few
-             edge buckets (≤ 2 per split, ~total/n_buckets rows each) and
-             reads the edge timestamps.
+             known within-bucket rank — ONE edge pass sorts only the few
+             edge buckets (≤ 2 per split) by time and, from range frames,
+             reads for each edge timestamp the bucket's rows up to it, the
+             rows tied at it and the next distinct timestamp (a tie run
+             that ends its bucket continues into the next non-empty
+             bucket, whose least time the profile holds).
 
-        Two small aggregates and one edge pass over the time column (the
-        aggregates are free when a job already holds a profile), no
-        full-width shuffle — the 10^12-scale fit path. Labels then come
-        from :meth:`split_by_time_boundaries` (pure predicates). Equivalent
-        to the positional path whenever edge timestamps are unique (the
-        same precondition split_by_time_boundaries already carries)."""
-        from preprocessor_spark.operators.positions import time_profile
+        Labels then come from :meth:`split_by_time_boundaries` (pure
+        predicates), whose inclusive ranges give every row tied at an
+        edge to the EARLIER split. The counts and start times recorded are
+        the ones those labels give, read from the same pass: a split
+        wholly absorbed by a tie run is dropped, and ``boundary_ties``
+        records that an edge timestamp continued across a boundary.
+
+        When the profile carries a value column's moments, the pass also
+        sums that column up to each edge, and :attr:`split_moments` holds
+        each split's (count, sum, sum of squares) of its non-null values
+        under those labels — what a job needs to fit a z-score on some
+        splits (``Normalizer.fit_moments``) without another pass; else it
+        is None."""
+        from preprocessor_spark.operators.positions import (
+            BKT,
+            MOMENTS,
+            ROWS,
+            T0,
+            time_profile,
+            value_moments,
+        )
 
         if profile is None:
             profile = time_profile(df, self.time_col, [], n_buckets)
+        value_col = profile.value_col
+        self.split_moments = None
         total = profile.rows
         if all(b[-2] is None for b in profile.bounds):
             # all-null encodings: only legitimate for an EMPTY table — a
@@ -196,106 +243,120 @@ class TemporalSplitter:
                     f"(dtype {dtype}) encodes to NULL for every row — cast "
                     "it to a timestamp/numeric type before fitting"
                 )
+            if value_col:
+                self.split_moments = {}
             return StageParams(
                 stage=self.name, method="temporal",
                 params={"ratios": self.ratios, "boundaries": {}},
             )
-        bucket = profile.bucket
-        counts: dict[int, int] = {}
-        for *_series, bkt, n in profile.counts:
-            counts[bkt] = counts.get(bkt, 0) + n
+        sums = [(ROWS, "sum"), (T0, "min")]
+        if value_col:
+            sums += [(m, "sum") for m in MOMENTS]
+        # the profile's buckets summed over series, in bucket order
+        per = group_by(profile.counts, [BKT], sums).sort_by(BKT)
+        bkts = per[BKT].to_numpy()
+        sizes = per[f"{ROWS}_sum"].to_numpy()
         # null keys are detectable here for free but they cannot be
         # expressed in the time-range predicates this fit exists to
         # produce: fail fast
-        if -1 in counts:
+        if bkts[0] == -1:
             raise ValueError(
                 f"time column '{self.time_col}' contains "
-                f"{counts[-1]} null values: time-boundary splits "
+                f"{sizes[0]} null values: time-boundary splits "
                 "are range predicates and cannot route null timestamps — "
                 "drop/fill them first, or use the positional transform() "
                 "path (which places nulls in the first split)"
             )
-        off, acc = {}, 0
-        for bkt in sorted(counts):
-            off[bkt] = acc
-            acc += counts[bkt]
+        off = np.concatenate([[0], np.cumsum(sizes)[:-1]])
         bounds = split_boundaries(total, self.ratios)
-        edges = sorted(
-            {p for _, s, e in bounds if e > s for p in (s, e - 1)}
+        edges = sorted({p for _, s, e in bounds if e > s for p in (s, e - 1)})
+        # each edge position's bucket (the rightmost with offset <= p)
+        at = dict(zip(edges, np.searchsorted(off, edges, side="right") - 1))
+        edge_pred = None
+        for p, i in at.items():
+            r = int(p - off[i])
+            c = (
+                (F.col("__bkt") == int(bkts[i]))
+                & (F.col("__le") - F.col("__tie") <= r)
+                & (F.col("__le") > r)
+            )
+            edge_pred = c if edge_pred is None else (edge_pred | c)
+        # every position of a tie run has the run's timestamp, so the order
+        # needs no tiebreak, and one row per run (its last) carries it
+        w = Window.partitionBy("__bkt").orderBy(self.time_col)
+        upto = w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+        cum = (
+            [m.over(upto).alias(n) for m, n in zip(value_moments(df, value_col), MOMENTS)]
+            if value_col
+            else []
         )
-        # map each edge position to (bucket, within-bucket rank)
-        bkts = sorted(off)
-        wanted: dict[int, list[int]] = {}
-        for p in edges:
-            # rightmost bucket with offset <= p
-            i = bisect.bisect_right([off[b] for b in bkts], p) - 1
-            b = bkts[i]
-            wanted.setdefault(b, []).append(p - off[b])
-        pair_pred = None
-        for b, ranks in wanted.items():
-            c = (F.col("__bkt") == b) & F.col("__rn").isin(ranks)
-            pair_pred = c if pair_pred is None else (pair_pred | c)
-        w = Window.partitionBy("__bkt").orderBy(self.time_col, *self.tiebreak_cols)
         hit = (
-            df.select(self.time_col, *self.tiebreak_cols, bucket.alias("__bkt"))
-            .filter(F.col("__bkt").isin(list(wanted)))
-            .withColumn("__rn", F.row_number().over(w) - 1)
-            .filter(pair_pred)
-            .select("__bkt", "__rn", self.time_col)
+            df.select(
+                self.time_col,
+                *([value_col] if value_col else []),
+                profile.bucket.alias("__bkt"),
+            )
+            .filter(F.col("__bkt").isin([int(bkts[i]) for i in set(at.values())]))
+            .select(
+                "__bkt",
+                self.time_col,
+                F.count(F.lit(1)).over(upto).alias("__le"),
+                F.count(F.lit(1))
+                .over(w.rangeBetween(Window.currentRow, Window.currentRow))
+                .alias("__tie"),
+                F.row_number().over(w).alias("__rn"),
+                F.lead(self.time_col).over(w).alias("__next"),
+                *cum,
+            )
+            .filter((F.col("__rn") == F.col("__le")) & edge_pred)
             .collect()
         )
-        ts_at = {
-            off[r["__bkt"]] + r["__rn"]: r[self.time_col] for r in hit
-        }
-        rows = {}
+        moment_cols = [f"{m}_sum" for m in MOMENTS] if value_col else []
+        # per edge position: its timestamp, the rows up to and including
+        # it (all ties), the next distinct timestamp, and the moments of
+        # the rows up to it
+        ts_at, upto_at, next_at, m_at = {}, {}, {}, {}
+        for p, i in at.items():
+            r = p - off[i]
+            (h,) = [
+                h for h in hit
+                if h["__bkt"] == bkts[i] and h["__le"] - h["__tie"] <= r < h["__le"]
+            ]
+            ts_at[p] = h[self.time_col]
+            upto_at[p] = int(off[i]) + h["__le"]
+            nxt = h["__next"]
+            if nxt is None and i + 1 < len(bkts):
+                nxt = _collected(per[f"{T0}_min"][i + 1], df.schema[self.time_col].dataType)
+            next_at[p] = nxt
+            m_at[p] = tuple(
+                _exact(pc.sum(per[c].slice(0, i)).as_py()) + _exact(h[m])
+                for c, m in zip(moment_cols, MOMENTS)
+            )
+        rows, moments, tied = {}, {}, False
+        last = None  # the end position of the previous non-empty split
         for k, s, e in bounds:
             if e <= s:
                 continue
+            if last is None:
+                start, n0, m0 = ts_at[s], 0, (0,) * len(moment_cols)
+            else:
+                tied = tied or ts_at[last] == ts_at[s]
+                n0, m0 = upto_at[last], m_at[last]
+                # ties at the previous end were labeled with it: this
+                # split starts at the next distinct time
+                start = ts_at[s] if n0 == s else next_at[last]
+            last = e - 1
+            if upto_at[last] == n0:  # wholly absorbed by a tie run
+                continue
             rows[k] = {
                 "split_id": k,
-                "start_time": str(ts_at[s]),
-                "end_time": str(ts_at[e - 1]),
-                "sample_count": e - s,
+                "start_time": str(start),
+                "end_time": str(ts_at[last]),
+                "sample_count": upto_at[last] - n0,
             }
-        # Tie detection: when the timestamp AT a split edge continues across
-        # the boundary (tie-heavy time columns — e.g. many rows per minute),
-        # the inclusive [start, end] predicates of split_by_time_boundaries
-        # give every tied row to the EARLIER split, so positional counts
-        # above would diverge from what the labels produce. Detect it from
-        # the edge timestamps already in hand (zero extra work) and, when
-        # present, record the ACTUAL predicate-derived counts and bounds
-        # (one extra aggregate over the time column only) so the persisted
-        # params always agree with the labels they will generate.
-        order = [k for k in SPLIT_KEYS if k in rows]
-        tied = any(
-            rows[a]["end_time"] == rows[b]["start_time"]
-            for a, b in zip(order, order[1:])
-        )
-        if tied:
-            labeled = TemporalSplitter.split_by_time_boundaries(
-                df.select(self.time_col), self.time_col, rows
-            )
-            actual = {
-                r["split_id"]: r
-                for r in labeled.groupBy("split_id")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min(self.time_col).alias("t0"),
-                    F.max(self.time_col).alias("t1"),
-                )
-                .collect()
-            }
-            for k in list(rows):
-                a = actual.get(k)
-                if a is None:  # fully absorbed by a tie run — drop the split
-                    del rows[k]
-                    continue
-                rows[k] = {
-                    "split_id": k,
-                    "start_time": str(a["t0"]),
-                    "end_time": str(a["t1"]),
-                    "sample_count": a["n"],
-                }
+            moments[k] = tuple(a - b for a, b in zip(m_at[last], m0))
+        if value_col:
+            self.split_moments = moments
         return StageParams(
             stage=self.name,
             method="temporal",
@@ -355,8 +416,6 @@ class TemporalSplitter:
                     rows.append((g, k, s, e))
         spark = df.sparkSession
         strat_field = df.schema[strat_col]
-        from pyspark.sql import types as T
-
         bschema = T.StructType(
             [
                 strat_field,

@@ -6,31 +6,46 @@
 Pipeline (the north-rule composition):
   1. scan the pre-tokenized corpus (doc_id, tokens, n_tok, source, ts);
   2. six-way temporal split labels (persisted time boundaries → on resume the
-     labels come from pure partition-prunable predicates, no global sort);
-  3. z-score normalize n_tok fit ONLY on d1+d2 (params persisted as JSON
-     sidecars with checksums);
+     labels come from pure partition-prunable predicates, no global sort),
+     fitted from the profile plus ONE edge pass over the few buckets that
+     hold split edges;
+  3. z-score normalize n_tok fit ONLY on d1+d2, from the moments of n_tok
+     that the same edge pass sums up to each split edge
+     (``Normalizer.fit_moments``: no aggregate of its own); both params are
+     persisted as JSON sidecars with checksums, and a resume reuses them
+     together or refits both;
   4. MA-unbias the normalized series per source;
   5. rollup tree: 5m → 1h → 1d continuous aggregates of token-length stats,
      gap-filled dense per source at each tier, each tier's files one
      directory per (source, block) (``tiers.block_of``), so a refresh
      rewrites only the blocks its delta lands in. Spark aggregates the
-     facts into the 5m tier and writes it (its last job); the driver then
-     reads that tier back with pyarrow one source at a time and folds the
-     1h and 1d tiers from it (``incremental.fold_partials``), with no
-     Spark job and no Python worker: the 5m tier holds one row per source
-     per bucket, so its size follows the history span, not the facts;
+     facts into the non-empty 5m buckets and collects them with
+     ``toArrow`` (its last job, ``incremental.epoch_partials``); the
+     driver adds each source's gap rows over its floored bounds
+     (``incremental.gap_seeds``, as the refresh seeds its extensions),
+     writes the dense 5m tier and folds the 1h and 1d tiers from it
+     (``incremental.fold_partials``), one source at a time, with no Spark
+     job and no Python worker: the 5m tier holds one row per source per
+     bucket, so its size follows the history span, not the facts;
   6. Gorilla/delta-of-delta block compression per (source, block), in the
      same driver pass (``compression.encode_blocks_local``), with the
      writers the refresh uses (``incremental.write_tier_blocks`` and
      ``write_series_blocks``);
-  7. per-(tier, source) checkpointed writes + lineage manifest (resumable:
-     marked units are skipped, ``blocks_5m`` is replaced whole).
+  7. per-(tier, source) checkpointed writes + lineage manifest: ONE
+     ``checkpoint.publish_units`` moves and marks every unit the pass
+     wrote (resumable: marked units are skipped, ``blocks_5m`` is replaced
+     whole).
 
 Every driver-side fact the stages need — the row count, the split fit's
 bucket counts, the unbias chunk cuts, the per-series time bounds behind
-``series_bounds.json`` and the gap-fill spines — comes from ONE time
-profile of the corpus (``operators.positions.time_profile``: two small
-aggregates over (source, ts)), not from a scan per stage. The build runs
+``series_bounds.json`` and the gap rows, and, with the edge pass, the
+z-score's moments — comes from ONE time profile of the corpus
+(``operators.positions.time_profile`` on the 5m lattice: one aggregate per
+(source, 5m bucket) of the rows, the min/max ts and the count, sum and sum
+of squares of n_tok), not from a scan per stage. Its rows are the non-empty
+5m buckets, the rows the driver pass handles anyway. The build runs six
+Spark jobs: the corpus's schema inference, the profile, the edge pass, the
+unbias chunk broadcast, the prepared write and the tier-0 collect. It runs
 with AQE off: every shuffle is sized from the profile, so AQE's re-planning
 would only add a job per exchange.
 
@@ -57,9 +72,6 @@ from pyspark.sql import types as T
 # stay splittable into those waves.
 SCAN_WAVES = 4
 PREPARE_RG_BYTES = 4 << 20
-# buckets of the corpus profile: the split fit reads edge timestamps from
-# ~rows/PROFILE_BUCKETS-row buckets; the unbias chunking coarsens them
-PROFILE_BUCKETS = 4096
 # What a refresh (plans/refresh_job.py) must continue exactly as the build
 # left it: the MA-unbias window and the carry tail's sidecar (the block
 # grain of the tiers is tiers.block_of).
@@ -76,40 +88,14 @@ def main(argv: list[str] | None = None) -> dict:
     args = p.parse_args(argv)
 
     from preprocessor_spark import get_spark
-    from preprocessor_spark.rollup.checkpoint import TIER_PREFIX, Manifest
-    from preprocessor_spark.rollup.tiers import DEFAULT_TIERS
+    from preprocessor_spark.rollup.checkpoint import Manifest
     from preprocessor_spark.session import class_archive, scoped_conf
 
     spark = get_spark("rollup_job", master=args.master, batch_committer_v2=True)
     spark.sparkContext.setLogLevel("ERROR")
     out = args.output
     os.makedirs(out, exist_ok=True)
-    manifest_path = os.path.join(out, "manifest.jsonl")
-    if not args.resume and os.path.exists(manifest_path):
-        # a FRESH run into an existing output dir must not inherit the old
-        # run's completion marks — they would silently skip every tier
-        # recompute and leave stale tier data inconsistent with the newly
-        # fitted params/prepared series; rotate, don't delete (audit trail)
-        os.replace(manifest_path, manifest_path + ".prev")
-    if not args.resume:
-        # refresh_job's MA-carry sidecar belongs to the PREVIOUS build's
-        # prepared series: left in place, the next refresh would silently
-        # continue the unbias seam from stale carry rows (wrong
-        # predecessors for the first w-1 delta rows per source). Rotate it
-        # with the manifest; a post-rebuild refresh re-bootstraps via
-        # --input, whose edge then matches the rebuilt series_bounds.json.
-        tail_sidecar = os.path.join(out, TAIL_NAME)
-        if os.path.exists(tail_sidecar):
-            shutil.rmtree(tail_sidecar + ".prev", ignore_errors=True)
-            os.replace(tail_sidecar, tail_sidecar + ".prev")
-        for leftover in (tail_sidecar + ".tmp", tail_sidecar + ".bak"):
-            shutil.rmtree(leftover, ignore_errors=True)
-        # the build replaces only the units of the new corpus's series: a
-        # series the old tree had and the new corpus lacks would survive in
-        # every tier, and the block encode would carry it into blocks_5m
-        for tier in DEFAULT_TIERS:
-            shutil.rmtree(os.path.join(out, TIER_PREFIX + tier.name), ignore_errors=True)
-    manifest = Manifest(manifest_path)
+    manifest = Manifest(os.path.join(out, "manifest.jsonl"))
     # a build is a fixed sequence of statically sized stages (sizes below,
     # all from the profile): AQE's per-exchange materialize + re-plan
     # barriers are pure fixed cost here — a job per exchange and idle
@@ -131,38 +117,86 @@ def main(argv: list[str] | None = None) -> dict:
     return result
 
 
+def fit_params(corpus, profile) -> tuple:
+    """The build's split boundaries and its z-score of n_tok over d1+d2,
+    as (split params, z-score params), from ``profile`` (the corpus's
+    lattice profile with the moments of n_tok) plus the split fit's ONE
+    edge pass. The boundary fit reads the profile's bucket counts, with no
+    global row_number shuffle (equivalence with the positional path is
+    tested in tests/test_splitter.py); its pass also sums n_tok up to each
+    edge, so the z-score needs no pass of its own. n_tok_z is n_tok as a
+    double: its moments are n_tok's."""
+    from preprocessor_spark.operators import Normalizer, TemporalSplitter
+
+    sp = TemporalSplitter(time_col="ts", tiebreak_cols=["doc_id"])
+    split = sp.fit_time_boundaries(corpus, profile=profile)
+    train = [k for k in ("d1", "d2") if k in sp.split_moments]
+    moments = tuple(sum(sp.split_moments[k][i] for k in train) for i in range(3))
+    rows = sum(split.params["boundaries"][k]["sample_count"] for k in train)
+    norm = Normalizer(method="zscore", columns=["n_tok_z"])
+    return split, norm.fit_moments({"n_tok_z": moments}, n_samples=rows)
+
+
+def _clear_previous_build(out: str) -> None:
+    """Make ``out`` ready for a fresh (not resumed) build: rotate the old
+    manifest and carry tail, and remove every tier. Runs after the fits, so
+    that a corpus the fit refuses leaves the old tree as it was."""
+    from preprocessor_spark.rollup.checkpoint import TIER_PREFIX
+    from preprocessor_spark.rollup.tiers import DEFAULT_TIERS
+
+    # a FRESH run into an existing output dir must not inherit the old
+    # run's completion marks — they would silently skip every tier
+    # recompute and leave stale tier data inconsistent with the newly
+    # fitted params/prepared series; rotate, don't delete (audit trail)
+    manifest_path = os.path.join(out, "manifest.jsonl")
+    if os.path.exists(manifest_path):
+        os.replace(manifest_path, manifest_path + ".prev")
+    # refresh_job's MA-carry sidecar belongs to the PREVIOUS build's
+    # prepared series: left in place, the next refresh would silently
+    # continue the unbias seam from stale carry rows (wrong predecessors
+    # for the first w-1 delta rows per source). Rotate it with the
+    # manifest; a post-rebuild refresh re-bootstraps via --input, whose
+    # edge then matches the rebuilt series_bounds.json.
+    tail_sidecar = os.path.join(out, TAIL_NAME)
+    if os.path.exists(tail_sidecar):
+        shutil.rmtree(tail_sidecar + ".prev", ignore_errors=True)
+        os.replace(tail_sidecar, tail_sidecar + ".prev")
+    for leftover in (tail_sidecar + ".tmp", tail_sidecar + ".bak"):
+        shutil.rmtree(leftover, ignore_errors=True)
+    # the build replaces only the units of the new corpus's series: a
+    # series the old tree had and the new corpus lacks would survive in
+    # every tier, and the block encode would carry it into blocks_5m
+    for tier in DEFAULT_TIERS:
+        shutil.rmtree(os.path.join(out, TIER_PREFIX + tier.name), ignore_errors=True)
+
+
 def _build(spark, args, out: str, manifest) -> dict:
     from preprocessor_spark.operators import Normalizer, TemporalSplitter, Unbiaser
     from preprocessor_spark.operators.positions import time_profile
     from preprocessor_spark.params import load_params, save_params
-    from pyspark.sql.pandas.types import to_arrow_type
 
     from preprocessor_spark.rollup.checkpoint import (
-        ROWS_PER_WRITE_TASK,
         TIER_COL,
         TIER_PREFIX,
         UNITS_TMP,
         partition_dir,
         publish_units,
-        run_resumable_observed,
     )
     from preprocessor_spark.rollup.incremental import (
-        STORED_ROWS,
-        as_epoch_rows,
+        EPOCH_ROWS,
+        by_series,
+        epoch_partials,
         fold_partials,
-        read_touched_partitions,
+        gap_seeds,
         save_bounds,
         write_series_blocks,
         write_tier_blocks,
     )
     from preprocessor_spark.rollup.tiers import (
-        BLOCK_COL,
         DEFAULT_TIERS,
         RollupTree,
-        block_of,
         duration_seconds,
         epoch_seconds,
-        spine_from_bounds,
     )
     from preprocessor_spark.session import scoped_conf
 
@@ -171,17 +205,51 @@ def _build(spark, args, out: str, manifest) -> dict:
     t_start = time.perf_counter()
     corpus = spark.read.parquet(args.input)
     source_field = corpus.schema["source"]
+    base, coarse = DEFAULT_TIERS[0], DEFAULT_TIERS[1:]
+    step0 = duration_seconds(base.duration)
+    coarse_steps = [duration_seconds(t.duration) for t in coarse]
+    for tier, step in zip(coarse, coarse_steps):
+        if step % step0 != 0:
+            # Not an assert: the coarse tiers are folded from the finest
+            # tier's buckets, which is only valid when each coarse period
+            # is a multiple of the finest, and python -O would strip an
+            # assert — a custom tier must fail loudly, not misalign buckets
+            # silently.
+            raise ValueError(
+                f"tier {tier.name} period ({step}s) must nest in the finest "
+                f"tier's period ({step0}s)"
+            )
 
     # -- profile: the one fact-finding pass over the corpus ----------------
-    # per source: rows and min/max ts; per (source, ts bucket): rows. The
-    # aggregates, the split fit's edge pass and the normalizer fit each
-    # collect a few hundred rows at most: one reduce partition each.
+    # one aggregate per (source, 5m bucket): rows, min/max ts and the
+    # moments of n_tok. It, the split fit's edge pass and the tier-0
+    # aggregate collect a few ten thousand rows at most: one reduce
+    # partition for the first two.
     one_part = {"spark.sql.shuffle.partitions": 1}
     sc.setJobDescription("profile")
     with scoped_conf(spark, one_part):
-        profile = time_profile(corpus, "ts", ["source"], PROFILE_BUCKETS)
+        profile = time_profile(corpus, "ts", ["source"], step_s=step0, value_col="n_tok")
     sc.setLocalProperty("spark.job.description", None)
     n_rows = profile.rows
+
+    # -- split and z-score: one fit, resumed together -------------------
+    split_params_path = os.path.join(out, "split_params.json")
+    norm_params_path = os.path.join(out, "norm_params.json")
+    fitted = not (
+        args.resume
+        and os.path.exists(split_params_path)
+        and os.path.exists(norm_params_path)
+    )
+    if fitted:
+        with scoped_conf(spark, one_part):
+            split_params, nparams = fit_params(corpus, profile)
+    else:
+        split_params, nparams = load_params(split_params_path), load_params(norm_params_path)
+    if not args.resume:
+        _clear_previous_build(out)
+    if fitted:
+        save_params(split_params_path, split_params)
+        save_params(norm_params_path, nparams)
     # per-series [t0, t1] in epoch SECONDS as the prepared series stores
     # them (tss = tiers.epoch_seconds(ts), the floor of the micros),
     # without reading it back
@@ -190,39 +258,18 @@ def _build(spark, args, out: str, manifest) -> dict:
         for src, _n, lo, hi in profile.bounds
         if lo is not None
     ]
-    sources = [r[0] for r in bounds_rows]
     # sidecar consumed by plans/refresh_job.py: the per-series edge state a
     # dense tier needs to seed ONLY its new buckets on an incremental
     # refresh (rollup/incremental.py)
     save_bounds(os.path.join(out, "series_bounds.json"), bounds_rows, ["source"])
-
-    # -- split: fit boundaries once, resume from persisted predicates -----
-    split_params_path = os.path.join(out, "split_params.json")
-    sp = TemporalSplitter(time_col="ts", tiebreak_cols=["doc_id"])
-    if not (args.resume and os.path.exists(split_params_path)):
-        # exact-quantile boundary fit from the profile's bucket counts plus
-        # one edge pass, no global row_number shuffle (equivalence with the
-        # positional path is tested in tests/test_splitter.py)
-        with scoped_conf(spark, one_part):
-            save_params(
-                split_params_path, sp.fit_time_boundaries(corpus, profile=profile)
-            )
-    boundaries = load_params(split_params_path).params["boundaries"]
+    boundaries = split_params.params["boundaries"]
     # labels from boundaries = the sort-free scale path (pure predicates)
     labeled = TemporalSplitter.split_by_time_boundaries(corpus, "ts", boundaries)
 
     # -- normalize: train-only fit, transform all -------------------------
     # raw n_tok stays for the rollup; n_tok_z is the z-scored series
-    norm_params_path = os.path.join(out, "norm_params.json")
     with_z = labeled.withColumn("n_tok_z", F.col("n_tok").cast("double"))
-    norm = Normalizer(method="zscore", columns=["n_tok_z"])
-    if args.resume and os.path.exists(norm_params_path):
-        nparams = load_params(norm_params_path)
-    else:
-        with scoped_conf(spark, one_part):
-            nparams = norm.fit(with_z.filter(F.col("split_id").isin("d1", "d2")))
-        save_params(norm_params_path, nparams)
-    normed = norm.transform(with_z, nparams)
+    normed = Normalizer().transform(with_z, nparams)
 
     # -- unbias (MA residual of the z-scored series per source) ----------
     unb = Unbiaser(
@@ -263,8 +310,8 @@ def _build(spark, args, out: str, manifest) -> dict:
         # 4N, 2 ragged task waves, prepare N→4N efficiency 0.52-0.69).
         # ~2M-row partitions eliminate the spill (measured: 8-core prepare
         # wall -34%, CPU below even the 2-core baseline, efficiency 0.86).
-        # The tier aggregates below prefer cores×1 (map-side combine
-        # collapses them before the shuffle).
+        # The tier-0 aggregate below prefers cores×1 (map-side combine
+        # collapses it before the shuffle).
         prep_parts = max(cores, n_rows // 2_000_000)
         # Row-group size: parquet scan parallelism is ROW-GROUP-bound — a
         # file with one row group is one indivisible task no matter what
@@ -338,66 +385,30 @@ def _build(spark, args, out: str, manifest) -> dict:
     # kept equivalence-tested) is for single-hot-KEY shapes.
     tree = RollupTree(series_cols=["source"], value_col="n_tok_z")
 
-    # Minimal-fixed-cost tier loop: min/max ts floored to the bucket lattice
-    # equals min/max bucket_start (floor is monotonic), so the profile's
-    # bounds give every gap-fill spine and every tier's exact row count on
-    # the driver — the tier-0 aggregate itself never needs to be cached or
-    # collected: tier 0 is ONE job (agg → spine → write), and the driver
-    # finishes the tree from its files. Lineage row counts come from the
-    # written files' footers. Job descriptions tag each phase for the
-    # Spark UI and event-log attribution.
-    def spine_size(step: int) -> int:
-        # exact gap-filled row count per tier: floor-to-lattice both ends,
-        # count buckets
-        return sum(
-            ((t1 - t1 % step) - (t0 - t0 % step)) // step + 1
-            for _src, t0, t1 in bounds_rows
-        )
-
+    # ---- tier 0: facts → the non-empty 5m buckets (one job) -------------
+    # Its rows are the profile's, a few per source per hour of history:
+    # Spark aggregates the facts and the driver collects the result; gap
+    # rows are added below, from the bounds, where a spine in the
+    # aggregate would ride the facts' shuffle and a Spark write would be
+    # read back. Job descriptions tag each phase for the Spark UI and
+    # event-log attribution.
     metrics = {}
-    base, coarse = DEFAULT_TIERS[0], DEFAULT_TIERS[1:]
-    step0 = duration_seconds(base.duration)
-    coarse_steps = [duration_seconds(t.duration) for t in coarse]
-    for tier, step in zip(coarse, coarse_steps):
-        if step % step0 != 0:
-            # Not an assert: the coarse tiers are folded from the finest
-            # tier's buckets, which is only valid when each coarse period
-            # is a multiple of the finest, and python -O would strip an
-            # assert — a custom tier must fail loudly, not misalign buckets
-            # silently.
-            raise ValueError(
-                f"tier {tier.name} period ({step}s) must nest in the finest "
-                f"tier's period ({step0}s)"
-            )
-    # ---- tier 0: facts → finest tier (one job) ----------------------
-    exp_rows = spine_size(step0)
-    spine_parts = max(1, min(cores * 2, -(-exp_rows // ROWS_PER_WRITE_TASK)))
     t0 = time.perf_counter()
+    sc.setJobDescription(f"tier0_{base.name}")
     with scoped_conf(spark, tier_conf):
-        # gap fill is FUSED into the aggregate (null-valued spine seeds +
-        # non-null count) — no join stage, and the whole per-row path stays
-        # in int arithmetic (see RollupTree.base_aggregate_with_spine_epoch)
-        spine = spine_from_bounds(
-            spark, bounds_rows, ["source"], step0,
-            num_partitions=spine_parts, series_schema=prepared, as_epoch=True,
-        )
-        filled = tree.base_aggregate_with_spine_epoch(prepared, step0, spine)
-        filled = filled.withColumn(
-            BLOCK_COL, block_of(F.unix_timestamp("bucket_start"), step0)
-        )
-        sc.setJobDescription(f"tier0_{base.name}")
-        run_resumable_observed(
-            filled,
-            partition_col="source",
-            out_path=os.path.join(out, TIER_PREFIX + base.name),
-            manifest=manifest,
-            values=sources,
-            expected_rows=exp_rows,
-        )
+        facts = epoch_partials(tree, prepared, step0)
     sc.setLocalProperty("spark.job.description", None)
-    tier0_rows = sum(
-        r["rows"] for r in manifest.lineage() if r["stage"] == TIER_PREFIX + base.name
+    # every 5m bucket of each source's floored [t0, t1]: a gap bucket
+    # folds to n_points = 0 and null stats, as the refresh's seeds do
+    dense = fold_partials(
+        pa.concat_tables([facts, gap_seeds(bounds_rows, facts.schema, step0)]),
+        ["source", "bucket_epoch"],
     )
+    tier0 = {
+        key: rows.cast(EPOCH_ROWS).sort_by("bucket_epoch")
+        for key, rows in by_series(dense, ["source"])
+    }
+    tier0_rows = sum(t.num_rows for t in tier0.values())
     dt = time.perf_counter() - t0
     metrics[base.name] = {
         "seconds": round(dt, 3),
@@ -406,41 +417,30 @@ def _build(spark, args, out: str, manifest) -> dict:
         "points_per_sec": round(n_rows / dt),
     }
 
-    # ---- the rest of the tree on the driver, one source at a time -------
+    # ---- every tier and the blocks on the driver, one source at a time --
     # Tier 0 is one row per series per 5m bucket: its size follows the
     # history span, not the facts, and a few thousand rows a source cost
     # milliseconds in Arrow where a cold Spark stage (and the encode's
-    # Python worker) costs seconds. Tier 0 is dense over each source's
-    # floored [t0, t1], so the bounds name every block file it wrote, with
-    # no listing; and because each coarse period is a multiple of the
-    # finest, each coarse tier is tier 0's rows floored to its period and
-    # folded, gap rows included (sum(n_points) = 0 and null-skipping folds
-    # give exactly the gap rows a dense spine would). The rows are folded
-    # in time order. Marked (tier, source) units are skipped on resume;
-    # blocks_5m is replaced whole, so no block of an older history stays.
+    # Python worker) costs seconds. Because each coarse period is a
+    # multiple of the finest, each coarse tier is tier 0's rows floored to
+    # its period and folded, gap rows included (sum(n_points) = 0 and
+    # null-skipping folds give exactly the gap rows a dense spine would).
+    # The rows are folded in time order. Marked (tier, source) units are
+    # skipped on resume; blocks_5m is replaced whole, so no block of an
+    # older history stays.
     t0 = time.perf_counter()
     tmp = os.path.join(out, UNITS_TMP)
     shutil.rmtree(tmp, ignore_errors=True)
     blocks_tmp = os.path.join(tmp, "blocks")
     os.makedirs(blocks_tmp)
-    tier0_schema = pa.schema(
-        [
-            pa.field("source", to_arrow_type(source_field.dataType)),
-            pa.field(BLOCK_COL, pa.int64()),
-            *STORED_ROWS,
-        ]
-    )
-    done = {t.name: manifest.completed(TIER_PREFIX + t.name) for t in coarse}
+    done = {t.name: manifest.completed(TIER_PREFIX + t.name) for t in DEFAULT_TIERS}
     units, encode_s, encode_rows, blocks_written = [], 0.0, 0, 0
-    for src, lo, hi in bounds_rows:
-        stored = read_touched_partitions(
-            os.path.join(out, TIER_PREFIX + base.name),
-            ["source", BLOCK_COL],
-            [(src, k) for k in range(block_of(lo, step0), block_of(hi, step0) + 1)],
-            tier0_schema,
-        )
-        rows = as_epoch_rows(stored, ["source", BLOCK_COL]).sort_by("bucket_epoch")
+    for src, _lo, _hi in bounds_rows:
+        rows = tier0[(src,)]
         unit = partition_dir(["source"], (src,))
+        if str(src) not in done[base.name]:
+            write_tier_blocks(os.path.join(tmp, f"{TIER_COL}={base.name}", unit), rows, step0)
+            units.append((base.name, (src,)))
         t_enc = time.perf_counter()
         ks, n = write_series_blocks(os.path.join(blocks_tmp, unit), rows, step0)
         encode_s += time.perf_counter() - t_enc

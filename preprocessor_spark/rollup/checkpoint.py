@@ -15,13 +15,14 @@ it for the build and a (tier, series, block) partition for the refresh.
 writer lands them in a temp dir under ``root``, and the publish counts
 each unit's rows from its parquet footers, moves its directory into
 ``tier_<t>/`` and marks every unit in the manifest with one append. The
-build writes tier 0 through :func:`run_resumable_observed` (one Spark
-write via :func:`write_units`, then the publish) and its coarse tiers with
-pyarrow on the driver (plans/rollup_job.py); both skip units already
-marked, so a rerun after a crash rewrites exactly the unmarked ones.
-:func:`run_resumable_observed_tiers`, the Spark writer of several tiers in
-one job, has no job caller. The refresh (rollup/incremental.py) writes its
-merged units with pyarrow on the driver and publishes them the same way.
+build writes every tier with pyarrow on the driver (plans/rollup_job.py)
+and publishes them all at once; it skips units already marked, so a rerun
+after a crash rewrites exactly the unmarked ones. The Spark writers
+:func:`run_resumable_observed` (one tier, via :func:`write_units` and
+:func:`_write_layout`) and :func:`run_resumable_observed_tiers` (several
+tiers in one job) have no job caller. The refresh (rollup/incremental.py)
+writes its merged units with pyarrow on the driver and publishes them the
+same way.
 It merges into the units it writes, which is not idempotent, so its caller
 refuses the rerun instead (plans/refresh_job.py).
 

@@ -15,8 +15,8 @@ are:
 
   * ``encode_blocks_local`` runs it on the driver over tier rows already
     held there as Arrow. Both rollup jobs encode this way: the build
-    encodes each series' blocks from its finest tier's rows, read back on
-    the driver after the tier-0 write, and a refresh re-encodes only the
+    encodes each series' blocks from its finest tier's rows, which the
+    driver holds after the tier-0 collect, and a refresh re-encodes only the
     blocks its delta lands in, from the merged 5m rows it has just
     written. A tier of the finest period holds one row per series per
     bucket (its size follows the history span, not the facts), and a

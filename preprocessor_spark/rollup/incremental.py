@@ -52,8 +52,9 @@ The tiers are gap-filled dense and stay dense: a delta that extends a
 series' time range implicitly creates empty buckets between the old edge
 and the first new point. The refresh derives those tier-0 buckets from the
 persisted per-series bounds (:func:`extension_intervals`) and folds them,
-floored to each tier's period, into every tier as (n_points=0) rows,
-without touching the interior.
+floored to each tier's period, into every tier as (n_points=0) rows
+(:func:`gap_seeds`), without touching the interior. The build makes its
+dense tier 0 the same way, from seeds over each series' whole bounds.
 """
 
 from __future__ import annotations
@@ -72,6 +73,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from preprocessor_spark.arrowops import group_by
 from preprocessor_spark.rollup.checkpoint import (
     TIER_COL,
     UNITS_TMP,
@@ -142,7 +144,7 @@ def fold_partials(rows: pa.Table, keys: list[str]) -> pa.Table:
     nulls skipped (a group of nulls folds to null) and null keys kept as a
     group, as Spark's aggregate does. Single-threaded, so that sums are
     folded in one fixed order."""
-    out = rows.group_by(keys, use_threads=False).aggregate(list(_FOLD))
+    out = group_by(rows, keys, list(_FOLD))
     return pa.table({**{k: out[k] for k in keys}, **{c: out[f"{c}_{f}"] for c, f in _FOLD}})
 
 
@@ -316,14 +318,58 @@ def write_series_blocks(unit_dir: str, rows: pa.Table, step: int) -> tuple[list[
     return ks, int(pc.sum(blocks["n"]).as_py() or 0)
 
 
-def _by_series(rows: pa.Table, series_cols: list[str]):
+def epoch_partials(tree: RollupTree, facts: DataFrame, step: int) -> pa.Table:
+    """The tree's finest-tier aggregate of ``facts`` (the prepared shape:
+    series columns, ``tss`` epoch seconds, the value column) at period
+    ``step``, without gap rows, collected with ``toArrow``: series_cols +
+    :data:`EPOCH_ROWS`, one row per non-empty (series, bucket). The build
+    and the refresh run it as their last Spark job."""
+    series = tree.series_cols
+    rows = (
+        tree.base_aggregate_with_spine_epoch(facts, step)
+        .select(*series, F.unix_timestamp("bucket_start").alias("bucket_epoch"), *ALGEBRAIC)
+        .toArrow()
+    )
+    schema = pa.schema(
+        [*(rows.schema.field(c).with_nullable(True) for c in series), *EPOCH_ROWS]
+    )
+    return rows.cast(schema)
+
+
+def gap_seeds(intervals: list[tuple], schema: pa.Schema, step: int) -> pa.Table:
+    """Gap rows in ``schema`` (series columns + :data:`EPOCH_ROWS`): one
+    (n_points=0, null stats) row per bucket of the ``step`` lattice in each
+    (*series, t0, t1) epoch interval, its ends floored to the lattice.
+    Folded with a series' partials (:func:`fold_partials`), they make its
+    rows dense over the interval, as a spine does, and leave every
+    non-empty bucket's statistics as they were."""
+    n_series = len(schema) - len(EPOCH_ROWS)
+    if not intervals:
+        return schema.empty_table()
+    lo = np.array([iv[-2] for iv in intervals], np.int64)
+    hi = np.array([iv[-1] for iv in intervals], np.int64)
+    lo, hi = lo - lo % step, hi - hi % step
+    at = np.repeat(np.arange(len(intervals)), (hi - lo) // step + 1)
+    cols = {
+        f.name: pa.array([iv[i] for iv in intervals], f.type).take(at)
+        for i, f in enumerate(schema.field(j) for j in range(n_series))
+    }
+    cols["bucket_epoch"] = np.concatenate(
+        [np.arange(a, b + 1, step, dtype=np.int64) for a, b in zip(lo, hi)]
+    )
+    cols["n_points"] = np.zeros(len(at), np.int64)
+    for c in ALGEBRAIC[1:]:
+        cols[c] = pa.nulls(len(at), pa.float64())
+    return pa.table(cols, schema=schema)
+
+
+def by_series(rows: pa.Table, series_cols: list[str]):
     """(series key, that series' rows without the series columns) per
     series of ``rows``, null keys first."""
-    groups = (
-        rows.select(series_cols)
-        .append_column("__i", pa.array(np.arange(rows.num_rows)))
-        .group_by(series_cols, use_threads=False)
-        .aggregate([("__i", "list")])
+    groups = group_by(
+        rows.select(series_cols).append_column("__i", pa.array(np.arange(rows.num_rows))),
+        series_cols,
+        [("__i", "list")],
     )
     keys = [tuple(k.values()) for k in groups.select(series_cols).to_pylist()]
     pairs = sorted(
@@ -366,41 +412,17 @@ class IncrementalRollup:
     def delta_partials(self, delta_df: DataFrame, seeds: list[tuple]) -> dict[str, pa.Table]:
         """Algebraic partials of the delta at every tier, as Arrow tables of
         series_cols + :data:`EPOCH_ROWS`. Spark aggregates the facts to the
-        finest tier with the build's epoch chain, and ``toArrow`` collects
-        that: the refresh's last Spark job. ``seeds`` ((*series, t0, t1)
-        intervals on the finest lattice, from :func:`extension_intervals`)
-        join it as (n_points=0, null stats) rows. Each tier is then that
-        table with its bucket keys floored to the tier's period, folded."""
+        finest tier with the build's epoch chain, and :func:`epoch_partials`
+        collects that: the refresh's last Spark job. ``seeds`` ((*series,
+        t0, t1) intervals on the finest lattice, from
+        :func:`extension_intervals`) join it as :func:`gap_seeds`. Each tier
+        is then that table with its bucket keys floored to the tier's
+        period, folded."""
         tree = self.tree
         series = tree.series_cols
         steps = [duration_seconds(t.duration) for t in tree.tiers]
-        base = (
-            tree.base_aggregate_with_spine_epoch(delta_df, steps[0])
-            .select(
-                *series,
-                F.unix_timestamp("bucket_start").alias("bucket_epoch"),
-                *ALGEBRAIC,
-            )
-            .toArrow()
-        )
-        schema = pa.schema(
-            [*(base.schema.field(c).with_nullable(True) for c in series), *EPOCH_ROWS]
-        )
-        base = base.cast(schema)
-        if seeds:
-            lens = np.array([(b - a) // steps[0] + 1 for *_, a, b in seeds])
-            at = np.repeat(np.arange(len(seeds)), lens)
-            cols = {
-                f.name: pa.array([iv[i] for iv in seeds], f.type).take(at)
-                for i, f in enumerate(schema.field(c) for c in series)
-            }
-            cols["bucket_epoch"] = np.concatenate(
-                [np.arange(a, b + 1, steps[0], dtype=np.int64) for *_, a, b in seeds]
-            )
-            cols["n_points"] = np.zeros(len(at), np.int64)
-            for c in ALGEBRAIC[1:]:
-                cols[c] = pa.nulls(len(at), pa.float64())
-            base = pa.concat_tables([base, pa.table(cols, schema=schema)])
+        base = epoch_partials(tree, delta_df, steps[0])
+        base = pa.concat_tables([base, gap_seeds(seeds, base.schema, steps[0])])
         out = {}
         epochs = base["bucket_epoch"].to_numpy()
         for tier, step in zip(tree.tiers, steps):
@@ -468,7 +490,7 @@ class IncrementalRollup:
                     *STORED_ROWS,
                 ]
             )
-            for key, rows in _by_series(part, series):
+            for key, rows in by_series(part, series):
                 touched = np.unique(block_of(rows["bucket_epoch"].to_numpy(), step))
                 old = read_touched_partitions(
                     self.tier_path(tier),

@@ -247,6 +247,41 @@ def test_merge_bounds_and_extension_seeds():
     ) == [("s0", -1100, -400)]
 
 
+def test_fold_partials_keeps_one_group_per_null_series_key():
+    """A null series key folds into ONE row per bucket, as in Spark: pyarrow
+    16's grouping alone splits such groups when the nullable key comes
+    before the bucket key."""
+    import numpy as np
+    import pyarrow as pa
+
+    from preprocessor_spark.rollup.incremental import EPOCH_ROWS, fold_partials
+
+    rng = np.random.default_rng(0)
+    n = 20_000
+    source = [None if x == 0 else "abc"[x - 1] * int(x) for x in rng.integers(0, 4, n)]
+    epoch = rng.integers(0, 6_000, n) * 300
+    v = rng.normal(0, 1, n)
+    rows = pa.table(
+        {
+            "source": pa.array(source, pa.string()),
+            "bucket_epoch": epoch,
+            "n_points": np.ones(n, np.int64),
+            "sum_v": v,
+            "sum_sq": v * v,
+            "min_v": v,
+            "max_v": v,
+        },
+        schema=pa.schema([pa.field("source", pa.string()), *EPOCH_ROWS]),
+    )
+    got = fold_partials(rows, ["source", "bucket_epoch"])
+    want: dict = {}
+    for s, e in zip(source, epoch.tolist()):
+        want[(s, e)] = want.get((s, e), 0) + 1
+    keys = list(zip(got["source"].to_pylist(), got["bucket_epoch"].to_pylist()))
+    assert len(keys) == len(set(keys)) == len(want)
+    assert dict(zip(keys, got["n_points"].to_pylist())) == want
+
+
 def test_merge_partials_is_reaggregation(spark, tree, corpus):
     """merge(base partial, delta partial) == full partial, as DataFrames
     (the library-level identity the path-level tests rely on)."""

@@ -10,6 +10,8 @@ import shutil
 import pandas as pd
 import pytest
 from conftest import SHIFT_1969_S, no_python_worker, shifted
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from preprocessor_spark.plans import rollup_job
@@ -42,12 +44,12 @@ def job_out(spark, tmp_path_factory):
 
 
 # A build of the fixture's corpus costs exactly this many Spark jobs: the
-# corpus's schema inference, the two profile aggregates, the split fit's
-# edge pass and its tie recount (the corpus has ties at split edges), the
-# normalizer fit, the unbias chunk broadcast, the prepared write and the
-# tier-0 write. The coarse tiers and the blocks are written on the driver
-# from tier 0's files, with no Spark job.
-BUILD_SPARK_JOBS = 9
+# corpus's schema inference, the profile (one aggregate on the 5m
+# lattice), the split fit's edge pass (which also sums n_tok for the
+# z-score, ties at split edges included), the unbias chunk broadcast, the
+# prepared write and the tier-0 collect. Every tier and the blocks are
+# written on the driver from that collect, with no Spark job.
+BUILD_SPARK_JOBS = 6
 
 
 def _close(spark, a, b, tol=1e-9):
@@ -173,7 +175,18 @@ def test_job_resume_skips_completed_and_is_identical(spark, job_out, tmp_path):
         shutil.rmtree(os.path.join(out2, "tier_1h", f"source={s}"))
     shutil.rmtree(os.path.join(out2, "tier_1d"))
 
+    def tier0_files():
+        root = os.path.join(out2, "tier_5m")
+        return {
+            os.path.join(dp, f): os.stat(os.path.join(dp, f)).st_mtime_ns
+            for dp, _, fs in os.walk(root)
+            for f in fs
+        }
+
+    before = tier0_files()
     rollup_job.main(["--input", corpus, "--output", out2, "--resume"])
+    # the marked tier-0 units are not rewritten: the same files, untouched
+    assert tier0_files() == before
     for tier in DEFAULT_TIERS:
         a = spark.read.parquet(os.path.join(out, f"tier_{tier.name}")).select(
             TIER_COLS
@@ -501,3 +514,157 @@ def test_manifest_skips_and_cuts_a_torn_last_line(tmp_path):
     path.write_bytes(b"not json\n" + whole)
     with pytest.raises(ValueError):
         m.completed("refresh_delta")
+
+
+# -- the build's fit: split and z-score from the lattice profile ---------
+
+
+def _fit_corpus(spark, case):
+    """A small corpus of ``case``'s shape: ``ties`` rows per distinct
+    time on average, distinct times ``grain_s`` apart starting ``phase_s``
+    into the lattice, optionally a tie run over 45-65% of the rows (it
+    swallows d2 whole), a sub-second offset per distinct time, a shift
+    before 1970 and null n_tok."""
+    import numpy as np
+
+    rng = np.random.default_rng(case["seed"])
+    n = case["rows"]
+    steps = np.sort(rng.integers(0, max(n // case["ties"], 2), n))
+    us = 1_577_836_800_000_000 + (steps * case["grain_s"] + case["phase_s"]) * 1_000_000
+    if case["sub_second"]:
+        us = us + (steps * 7919) % 1_000_000
+    us = us - case["shift_s"] * 1_000_000
+    if case["burst"]:
+        lo, hi = int(n * 0.45), int(n * 0.65)
+        us[lo:hi] = us[lo]
+    sources = [f"s{i}" for i in range(case["sources"])]
+    n_tok = rng.integers(1, 400, n)
+    nulls = rng.random(n) < case["null_frac"]
+    rows = [
+        (f"d{i}", None if nulls[i] else int(n_tok[i]), sources[int(k)], int(t))
+        for i, (k, t) in enumerate(zip(rng.integers(0, len(sources), n), us))
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, n_tok int, source string, us long")
+    return df.select("doc_id", "n_tok", "source", F.timestamp_micros("us").alias("ts"))
+
+
+_FIT_BASE = dict(
+    seed=0, rows=2_000, ties=20, grain_s=60, phase_s=0, sub_second=False,
+    shift_s=0, burst=False, sources=3, null_frac=0.0,
+)
+_fit_cases = st.fixed_dictionaries(
+    {
+        "seed": st.integers(0, 2**16),
+        "rows": st.integers(200, 2_500),
+        "ties": st.sampled_from([1, 3, 20, 60]),
+        "grain_s": st.sampled_from([1, 60, 300, 7_200]),
+        "phase_s": st.sampled_from([0, 59, 240]),
+        "sub_second": st.booleans(),
+        "shift_s": st.sampled_from([0, SHIFT_1969_S]),
+        "burst": st.booleans(),
+        "sources": st.integers(1, 4),
+        "null_frac": st.sampled_from([0.0, 0.3]),
+    }
+)
+
+
+@settings(max_examples=4, derandomize=True, deadline=None)
+@given(case=_fit_cases)
+@example(case=_FIT_BASE)  # minute-grain ties at the split edges
+@example(case={**_FIT_BASE, "burst": True})  # d2 wholly absorbed by a tie run
+# one distinct time per 5m bucket, at its last minute: every tie run ends
+# its lattice bucket, and the next split starts in the next bucket
+@example(case={**_FIT_BASE, "grain_s": 300, "phase_s": 240, "ties": 40})
+@example(case={**_FIT_BASE, "shift_s": SHIFT_1969_S, "sub_second": True})
+@example(case={**_FIT_BASE, "sources": 1})
+@example(case={**_FIT_BASE, "null_frac": 0.3})
+def test_build_fit_equals_value_range_fit_and_normalizer_fit(spark, case):
+    """The build's fit (a lattice profile with n_tok's moments, the split
+    fit's one edge pass, ``Normalizer.fit_moments``) gives the split
+    params of a fit over a value-range profile, which are the counts and
+    bounds the labels themselves give, and the z-score that
+    ``Normalizer.fit`` computes over the d1+d2 labels: the same mean and
+    sample count, the std within 1e-12."""
+    from preprocessor_spark.operators import Normalizer, TemporalSplitter
+    from preprocessor_spark.operators.positions import time_profile
+
+    corpus = _fit_corpus(spark, case).cache()
+    prof = time_profile(
+        corpus, "ts", ["source"], step_s=duration_seconds(DEFAULT_TIERS[0].duration),
+        value_col="n_tok",
+    )
+    got, got_norm = rollup_job.fit_params(corpus, prof)
+
+    sp = TemporalSplitter(time_col="ts", tiebreak_cols=["doc_id"])
+    want = sp.fit_time_boundaries(corpus)
+    assert got.params == want.params
+    labeled = TemporalSplitter.split_by_time_boundaries(
+        corpus, "ts", want.params["boundaries"]
+    )
+    assert got.params["boundaries"] == sp.params(labeled).params["boundaries"]
+    if case["burst"]:
+        assert "d2" not in got.params["boundaries"]
+    train = labeled.filter(F.col("split_id").isin("d1", "d2"))
+    want_norm = Normalizer(method="zscore", columns=["n_tok_z"]).fit(
+        train.withColumn("n_tok_z", F.col("n_tok").cast("double"))
+    )
+    g, w = (p.params["per_column"]["n_tok_z"] for p in (got_norm, want_norm))
+    assert g["mean"] == w["mean"]
+    assert abs(g["std"] - w["std"]) <= 1e-12 * w["std"]
+    assert got_norm.n_samples == want_norm.n_samples
+    corpus.unpersist()
+
+
+def test_build_fit_moments_do_not_overflow_near_2_31(spark):
+    """n_tok values near 2^31 square to near 2^62: two of them overflow a
+    long sum of squares, which ANSI mode turns into an error. The build's
+    moments are exact decimals, and its z-score equals the exact one."""
+    from fractions import Fraction
+    import math
+
+    from preprocessor_spark.operators import TemporalSplitter
+    from preprocessor_spark.operators.positions import time_profile
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    corpus = _fit_corpus(spark, _FIT_BASE).withColumn(
+        "n_tok", F.lit(2**31 - 1) - F.col("n_tok")
+    )
+    with pytest.raises(Exception, match="(?i)overflow"):
+        corpus.agg(F.sum(F.col("n_tok").cast("long") * F.col("n_tok").cast("long"))).collect()
+    prof = time_profile(corpus, "ts", ["source"], step_s=300, value_col="n_tok")
+    split, norm = rollup_job.fit_params(corpus, prof)
+    train = TemporalSplitter.split_by_time_boundaries(
+        corpus, "ts", split.params["boundaries"]
+    ).filter(F.col("split_id").isin("d1", "d2"))
+    vals = [r[0] for r in train.select("n_tok").collect()]
+    n, s1, s2 = len(vals), sum(vals), sum(v * v for v in vals)
+    got = norm.params["per_column"]["n_tok_z"]
+    assert max(vals) > 2**31 - 500 and norm.n_samples == n
+    assert got["mean"] == s1 / n
+    assert got["std"] == math.sqrt((Fraction(s2) * n - Fraction(s1) ** 2) / (n * (n - 1)))
+
+
+def test_build_refuses_a_null_ts_before_any_write(spark, tmp_path):
+    """A corpus with a null ts is refused with the split fit's message, and
+    the tree of an earlier build in the output dir is left as it was: no
+    file written, moved or removed."""
+    corpus, bad, out = (str(tmp_path / n) for n in ("corpus", "bad", "out"))
+    write_corpus(spark, corpus, 3_000)
+    rollup_job.main(["--input", corpus, "--output", out])
+    facts = spark.read.parquet(corpus)
+    first = facts.agg(F.min("doc_id")).first()[0]
+    facts.withColumn(
+        "ts", F.when(F.col("doc_id") == first, None).otherwise(F.col("ts"))
+    ).write.parquet(bad)
+
+    def files():
+        return {
+            os.path.join(dp, f): os.stat(os.path.join(dp, f)).st_mtime_ns
+            for dp, _, fs in os.walk(out)
+            for f in fs
+        }
+
+    before = files()
+    with pytest.raises(ValueError, match="contains 1 null values"):
+        rollup_job.main(["--input", bad, "--output", out])
+    assert files() == before

@@ -104,7 +104,10 @@ add(
     "union into ONE partial+final aggregate (count of non-null values), so\n"
     "the tier tree has a single exchange per tier and no join stages. Event\n"
     "times are epoch seconds: the bucket key is an integer floor, and the\n"
-    "bucket_start timestamp is computed after the aggregate.",
+    "bucket_start timestamp is computed after the aggregate. No job runs\n"
+    "this fused form any more: the build and the refresh aggregate only the\n"
+    "facts (no spine) and add the gap rows on the driver\n"
+    "(incremental.gap_seeds). The plan stays as the library path's evidence.",
 )
 add(
     "Dense tier re-aggregation (1h from gap-filled 5m)",
@@ -136,7 +139,8 @@ add(
     "Chunked MA unbias — ONE full-width shuffle (Unbiaser(chunk_rows=...))",
     _chunked_ma_plan(),
     "Chunk ids come from driver-side packing of value-range time buckets\n"
-    "(a time profile: two light aggregates) and reach rows via a\n"
+    "(a time profile: two light aggregates; the build passes its own\n"
+    "one-aggregate profile on the 5m lattice) and reach rows via a\n"
     "BroadcastHashJoin; the only hash Exchange is the (series, chunk)\n"
     "window itself — parallelism is series x chunks with exact\n"
     "trailing-window semantics.",
