@@ -5,56 +5,69 @@ existing rollup_job output, touching O(|delta|) data.
         --output /path/out --delta-input /path/new_sequences [--input /path/corpus]
 
 ``absorb`` runs the steps below on a delta DataFrame. ``main`` is its
-command line; streaming/rollup_stream.py calls it once per micro-batch.
+command line: it reads the delta under the build's input contract
+(:data:`INPUT_SCHEMA`, checked against one parquet footer on the driver),
+so no job infers its schema. streaming/rollup_stream.py calls ``absorb``
+once per micro-batch.
 
 Continues every stage of plans/rollup_job.py on the delta ONLY, under the
 original run's persisted decisions (the production contract: params are
 fitted once and versioned — a param re-fit is a rebuild event, not a
-refresh):
+refresh). A refresh with a carry tail runs two Spark jobs:
 
-  0. ONE profile aggregate over delta ∪ carry tail gives, per source, the
-     delta's row count and exact min/max ts and the tail's max ts. Every
-     driver-side decision below comes from it: the double-apply
-     fingerprint, the late-data and stale-tail refusals, the bounds the
-     tier refresh extends and derives its touched partitions from, and the
-     blocks to re-encode;
-  1. split labels from the persisted time boundaries (pure predicates);
-  2. z-score from the persisted params (no re-fit);
-  3. MA-unbias CONTINUATION: the first delta rows' trailing windows span
-     the seam, so the job prepends each source's last w−1 historical rows
-     (the "carry tail"), runs the identical window, and drops the carried
-     rows — residuals equal a full-corpus recompute exactly. The tail is
-     persisted per refresh (sources × (w−1) rows — tiny), rebuilt with one
-     top-(w−1) window over tail ∪ delta; the FIRST refresh bootstraps it
-     from the original corpus (--input) with a max-ts + widening-margin
-     scan, the only O(corpus) touch, paid once.
-  4. delta prepared rows appended to the prepared store;
-  5. every tier refreshed in place via rollup/incremental.py from the
-     prepared delta (epoch-second ``tss``, bucketed by the build's epoch
-     chain) and the profile's bounds. Spark aggregates the delta to 5m
-     partials and collects them as Arrow: its last job. On the driver the
-     1h/1d partials are folded from them, the dense tiers' new empty
-     buckets are seeded from the bounds' growth, and each touched (tier,
-     source) merges its touched (source, block) files with pyarrow and
-     publishes them through ``checkpoint.publish_units``;
-  6. Gorilla/delta-of-delta blocks re-encoded, inside step 5, only for the
-     (source, block) pairs of the 5m files it rewrote, from the merged rows
-     it holds (``compression.encode_blocks_local``), and their directories
+  0. refusals that need no Spark job come first: a tree whose tier files
+     or blocks predate the (source, block) layout (migrating it would
+     rewrite the whole history), a first refresh without the corpus to
+     bootstrap its carry tail from, and, when the caller names the
+     delta's fingerprint (a stream micro-batch), a delta the manifest
+     marks as started or absorbed;
+  1. ONE MA-unbias pass over carry tail ∪ delta, z-scored under the
+     persisted params and cached. The first delta rows' trailing windows
+     span the seam, so each source's last w−1 historical rows (the "carry
+     tail") run through the identical window and are dropped after it —
+     residuals equal a full-corpus recompute exactly. The FIRST refresh
+     bootstraps the tail from the original corpus (--input) with a max-ts
+     + widening-margin scan, the only O(corpus) touch, paid once. The
+     window's (ts, doc_id) order also flags each source's last w−1 rows
+     (its row number against a whole-partition count: the next carry
+     tail) and each delta row whose successor is a carry row (the seam
+     flag: a row that sorts before the series edge);
+  2. Spark job 1: the prepared delta rows (epoch-second ``tss``) are
+     written to a staging dir (``_prepared_staging``), which no reader of
+     ``prepared/`` lists;
+  3. Spark job 2, the last: ONE ``toArrow`` collect of the cached pass —
+     the delta's 5m partials (the tier lanes plus each bucket's row count,
+     exact min/max ``tss`` and seam flag) next to the carry rows and the
+     next carry tail's rows;
+  4. on the driver, from that collect: the per-source profile (rows and
+     time bounds), the double-apply fingerprint and every refusal — late
+     data, a stale carry tail, a null ts — before the
+     ``refresh_delta_started`` mark. A refusal removes the staging dir and
+     leaves every file of the tree as it was;
+  5. the mark; the staged files move into ``prepared/``, and the next
+     carry tail is written with pyarrow and swapped in;
+  6. every tier refreshed in place via rollup/incremental.py from the
+     collected 5m partials and the profile's bounds: the 1h/1d partials
+     are folded from them, the dense tiers' new empty buckets seeded from
+     the bounds' growth, and each touched (tier, source) merges its
+     touched (source, block) files with pyarrow and publishes them through
+     ``checkpoint.publish_units``. The Gorilla/delta-of-delta blocks of
+     the 5m files it rewrote are re-encoded from the merged rows it holds
+     (``compression.encode_blocks_local``) and their directories
      replaced. An executor encode would start a Python worker, whose cold
-     start costs seconds where the encode costs milliseconds, so no step of
-     a refresh starts a Python worker. A tree whose tier files or blocks
-     predate the (source, block) layout is refused up front, before any
-     mark: migrating it would rewrite the whole history;
+     start costs seconds where the encode costs milliseconds, so no step
+     of a refresh starts a Python worker;
   7. lineage rows appended to the same manifest.
 
 The job reads its own datasets (carry tail, tier partitions) with their
-schema pinned, and runs with AQE off and shuffles sized from the profile:
-a refresh moves O(delta) rows, so schema-inference jobs and AQE's
-per-exchange re-planning jobs would be most of its Spark jobs.
+schema pinned, and runs with AQE off and its one shuffle sized before any
+job from what the driver holds: a refresh moves O(delta) rows, so
+schema-inference jobs and AQE's per-exchange re-planning jobs would be
+most of its Spark jobs.
 
 Append-only seam contract: the MA continuation is only exact when every
-delta row lands at-or-after its source's previous max event time (order-
-dependent operators cannot absorb interior late data incrementally — a
+delta row sorts after its source's previous last row in (ts, doc_id)
+order (order-dependent operators cannot absorb interior late data — a
 late row changes the residuals of rows AFTER it, which are already
 written). The job validates this per source and refuses otherwise; the
 tier refresh itself (order-free algebra) has no such constraint and is
@@ -72,13 +85,34 @@ import shutil
 import sys
 import time
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from preprocessor_spark.plans.rollup_job import MA_WINDOW, TAIL_NAME
 from preprocessor_spark.rollup.tiers import epoch_seconds
 
 TAIL_COLS = ["source", "ts", "doc_id", "n_tok"]
+# the build's input (synth.token_sequences), and so a delta's
+INPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("tokens", T.ArrayType(T.IntegerType())),
+        T.StructField("n_tok", T.IntegerType()),
+        T.StructField("source", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+    ]
+)
+# where the prepared delta waits for the refusals: a dir that no reader of
+# prepared/ lists, and that Spark's readers skip (a leading "_")
+STAGING = "_prepared_staging"
+# the prepare's shuffle: one task per this many bytes of delta, as its plan
+# estimates them
+BYTES_PER_TASK = 128 << 20
 
 
 def top_rows(
@@ -138,26 +172,57 @@ def source_tails(
     )
 
 
-def delta_profile(delta: DataFrame, tail: DataFrame | None) -> list[tuple]:
-    """Per source, sorted by source (nulls first): (source, delta rows,
-    delta min ts, delta max ts, tail max ts), times in epoch seconds — one
-    aggregate over delta ∪ tail. A source only in the tail has 0 rows and
-    null delta times; one only in the delta has a null tail time."""
-    carry = F.col("__carry")
-    rows = delta.select("source", "ts", F.lit(False).alias("__carry"))
-    if tail is not None:
-        rows = rows.unionByName(tail.select("source", "ts", F.lit(True).alias("__carry")))
+def read_delta(spark, path: str) -> DataFrame:
+    """The delta at ``path`` under :data:`INPUT_SCHEMA`, without a
+    schema-inference job. The footer of its first data file, read on the
+    driver, must hold every column of the contract as the type Spark
+    reads it as, or the delta is refused: a pinned schema would read a
+    missing column as nulls. A column may instead be a hive partition
+    directory (``source=<s>/``), whose value Spark reads as the pinned
+    type."""
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    prof = rows.groupBy("source").agg(
-        F.count(F.when(~carry, F.lit(1))).alias("n"),
-        epoch_seconds(F.min(F.when(~carry, F.col("ts")))).alias("t0"),
-        epoch_seconds(F.max(F.when(~carry, F.col("ts")))).alias("t1"),
-        epoch_seconds(F.max(F.when(carry, F.col("ts")))).alias("tail_t1"),
-    )
-    return sorted(
-        (tuple(r) for r in prof.collect()),
-        key=lambda r: (r[0] is not None, r[0]),
-    )
+    if "://" in path:
+        fs, base = pafs.FileSystem.from_uri(path)
+    else:
+        fs, base = pafs.LocalFileSystem(), os.path.abspath(path)
+    first, dirs = base, []
+    if fs.get_file_info(base).type != pafs.FileType.File:
+        found = fs.get_file_info(pafs.FileSelector(base, recursive=True))
+        # each file as its path's parts under base; Spark's reader skips
+        # every part that starts with "_" or "."
+        files = [
+            os.path.relpath(i.path, base).split("/")
+            for i in found
+            if i.type == pafs.FileType.File
+        ]
+        data = sorted(f for f in files if not any(p.startswith(("_", ".")) for p in f))
+        if not data:
+            raise FileNotFoundError(f"no data file in the delta at {path}")
+        first, dirs = "/".join([base, *data[0]]), data[0][:-1]
+    footer = pq.read_schema(first, filesystem=fs)
+    partitions = {d.split("=", 1)[0] for d in dirs if "=" in d}
+    problems = []
+    for field in INPUT_SCHEMA:
+        if field.name in partitions:
+            continue
+        if field.name not in footer.names:
+            problems.append(f"no column {field.name}")
+            continue
+        arrow_type = footer.field(field.name).type
+        try:
+            got = from_arrow_type(arrow_type).simpleString()
+        except TypeError:
+            got = str(arrow_type)
+        if got != field.dataType.simpleString():
+            problems.append(f"{field.name} is {got}")
+    if problems:
+        contract = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in INPUT_SCHEMA)
+        raise ValueError(
+            f"the delta at {path} does not match the refresh's input "
+            f"({contract}): {'; '.join(problems)} (in {first})"
+        )
+    return spark.read.schema(INPUT_SCHEMA).parquet(path)
 
 
 def main(argv: list[str] | None = None) -> dict:
@@ -180,7 +245,7 @@ def main(argv: list[str] | None = None) -> dict:
     result = absorb(
         spark,
         args.output,
-        spark.read.parquet(args.delta_input),
+        read_delta(spark, args.delta_input),
         corpus=args.input,
     )
     print(json.dumps(result))
@@ -202,6 +267,7 @@ def absorb(
     refresh of ``out`` to bootstrap the carry tail. ``fingerprint`` names
     the delta in the manifest's double-apply guard; by default it is the
     delta's content extent (rows and per-source time bounds)."""
+    from preprocessor_spark.rollup.checkpoint import Manifest
     from preprocessor_spark.rollup.incremental import load_bounds
     from preprocessor_spark.session import scoped_conf
 
@@ -219,97 +285,56 @@ def absorb(
                 f"refresh requires the original run's {what} at {path} — "
                 "run plans/rollup_job.py first"
             )
+    # -- refusals that need no Spark job: a refused replay costs none -----
+    manifest = Manifest(os.path.join(out, "manifest.jsonl"))
+    if fingerprint is not None:
+        _refuse_applied(manifest, fingerprint)
+    _refuse_old_layout(out)
+    tail_path = os.path.join(out, TAIL_NAME)
+    if not corpus and not os.path.exists(tail_path):
+        raise FileNotFoundError(
+            "first refresh: pass the original corpus (--input, or a "
+            "stream's corpus=) to bootstrap "
+            f"the unbias carry tail (persisted afterwards at {tail_path})"
+        )
+    old_bounds = load_bounds(bounds_path)
+    # One rule sizes the prepare's shuffle, before any job, from what the
+    # driver holds: a task per BYTES_PER_TASK of delta as its plan
+    # estimates them, and no more tasks than cores or than the series the
+    # carry tail holds (one per stored series bound): every shuffle is
+    # keyed by source. A daily delta is one task, and one prepared file.
+    plan = delta_df.select(*TAIL_COLS)._jdf.queryExecution().optimizedPlan()
+    tasks = -(-int(plan.stats().sizeInBytes()) // BYTES_PER_TASK)
+    parts = max(1, min(spark.sparkContext.defaultParallelism, len(old_bounds), tasks))
     # a refresh moves O(delta) rows: AQE's re-planning would add a job per
-    # exchange to an op whose cost is fixed cost. Shuffles are sized by
-    # hand instead — one partition for the profile (one row per source),
-    # then from what it reports (see _refresh)
+    # exchange to an op whose cost is fixed cost
     with scoped_conf(
         spark,
         {
             "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": 1,
+            "spark.sql.shuffle.partitions": parts,
             # INT64 times, as the build and the refresh's pyarrow writes store
             "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
         },
     ):
         return _refresh(
-            spark,
-            out,
-            delta_df,
-            corpus,
-            fingerprint,
-            load_bounds(bounds_path),
-            t_start,
+            spark, out, delta_df, corpus, fingerprint, manifest, old_bounds, t_start
         )
 
 
-def _refresh(
-    spark,
-    out: str,
-    delta: DataFrame,
-    corpus: str | None,
-    fingerprint: str | None,
-    old_bounds: list[tuple],
-    t_start: float,
-) -> dict:
-    from preprocessor_spark.operators import Normalizer, TemporalSplitter, Unbiaser
-    from preprocessor_spark.params import load_params
-    from preprocessor_spark.rollup.checkpoint import ROWS_PER_WRITE_TASK, Manifest
-    from preprocessor_spark.rollup.incremental import IncrementalRollup
-    from preprocessor_spark.rollup.tiers import DEFAULT_TIERS, RollupTree
-    from preprocessor_spark.session import class_archive
-
-    manifest = Manifest(os.path.join(out, "manifest.jsonl"))
-    boundaries = load_params(os.path.join(out, "split_params.json")).params["boundaries"]
-    nparams = load_params(os.path.join(out, "norm_params.json"))
-
-    tail_path = os.path.join(out, TAIL_NAME)
-    tail_bootstrap = not os.path.exists(tail_path)
-    if not tail_bootstrap:
-        # the tail holds earlier deltas' rows: the delta's schema is its own
-        tail_raw = spark.read.schema(delta.select(*TAIL_COLS).schema).parquet(tail_path)
-    elif corpus:
-        tail_raw = source_tails(
-            spark.read.parquet(corpus).select(*TAIL_COLS),
-            ["source"],
-            "ts",
-            ["doc_id"],
-            k=MA_WINDOW - 1,
-        )
-    else:
-        tail_raw = None
-
-    profile = delta_profile(delta, tail_raw)
-    extent = [r[:4] for r in profile if r[1] > 0]
-    delta_rows = sum(r[1] for r in extent)
-    if delta_rows == 0:
-        return {
-            "job": "refresh_job",
-            "delta_rows": 0,
-            "total_seconds": 0.0,
-            "class_archive": class_archive(spark),
-        }
-
-    # Double-apply guard: the prepared append and the tier merge are both
-    # non-idempotent, so applying the same delta twice would double-count
-    # every touched bucket. The delta is fingerprinted by content-extent
-    # (rows + per-source time bounds) unless the caller names it; a
-    # `started` mark lands in the manifest before the first write and a
-    # `refresh_delta` completion mark after the last — so a rerun is
-    # refused BOTH after full success and after a mid-job crash
-    # (started-without-completed means partially applied, and unlike the
-    # tier jobs there is no per-partition unit to resume idempotently;
-    # recovery is restoring the output dir, or rebuilding via rollup_job).
-    # At deployment the whole refresh is one Iceberg transaction and this
-    # guard becomes the commit's snapshot check. The streaming refresh
-    # names each micro-batch by (checkpoint, epoch id) and passes through
-    # this same guard.
-    if fingerprint is None:
-        fingerprint = hashlib.sha256(
-            json.dumps(
-                [[r[0], int(r[1]), int(r[2]), int(r[3])] for r in extent]
-            ).encode()
-        ).hexdigest()[:16]
+def _refuse_applied(manifest, fingerprint: str) -> None:
+    """Double-apply guard: the prepared append and the tier merge are both
+    non-idempotent, so applying the same delta twice would double-count
+    every touched bucket. A ``refresh_delta_started`` mark lands in the
+    manifest before the first write and a ``refresh_delta`` completion
+    mark after the last — so a rerun is refused BOTH after full success
+    and after a mid-job crash (started-without-completed means partially
+    applied, and unlike the tier jobs there is no per-partition unit to
+    resume idempotently; recovery is restoring the output dir, or
+    rebuilding via rollup_job). At deployment the whole refresh is one
+    Iceberg transaction and this guard becomes the commit's snapshot
+    check. The streaming refresh names each micro-batch by (checkpoint,
+    epoch id) and passes through this same guard."""
     if fingerprint in manifest.completed("refresh_delta"):
         raise ValueError(
             f"the delta (fingerprint {fingerprint}) was already absorbed "
@@ -325,55 +350,14 @@ def _refresh(
             "run (or rebuild with rollup_job) before retrying"
         )
 
-    # -- append-only seam validation (see module docstring) ---------------
-    old_max = {tuple(r[:-2]): int(r[-1]) for r in old_bounds}
-    stale = {
-        (s,): (t0, old_max[(s,)])
-        for s, _n, t0, _t1 in extent
-        if (s,) in old_max and t0 < old_max[(s,)]
-    }
-    if stale:
-        raise ValueError(
-            "delta contains rows BEFORE the existing series edge for "
-            f"{sorted(stale)} (delta min vs stored max epoch: {stale}); the "
-            "MA-unbias continuation is order-dependent and cannot absorb "
-            "interior late data — re-run rollup_job over the affected range "
-            "instead (the tier merge itself would be fine; the prepared "
-            "series would not)"
-        )
-    if tail_raw is None:
-        raise FileNotFoundError(
-            "first refresh: pass the original corpus (--input, or a "
-            "stream's corpus=) to bootstrap "
-            f"the unbias carry tail (persisted afterwards at {tail_path})"
-        )
-    # Tail-at-edge validation: the carry rows MUST be the last rows of the
-    # absorbed series, i.e. per-source max(ts) == the stored bounds edge.
-    # Catches a tail left stale by a fresh rollup_job rebuild into the same
-    # output dir, and a bootstrap from an --input that predates already
-    # absorbed deltas (e.g. after a crashed swap destroyed the tail) —
-    # either would silently seed the MA seam with wrong predecessors.
-    tail_edge = {r[0]: r[4] for r in profile if r[4] is not None}
-    edge_mismatch = {
-        r[0]: (tail_edge.get(r[0]), int(r[-1]))
-        for r in old_bounds
-        if tail_edge.get(r[0]) != int(r[-1])
-    }
-    if edge_mismatch:
-        raise ValueError(
-            "unbias carry tail does not sit at the stored series edge for "
-            f"{sorted(edge_mismatch)} (tail max vs series_bounds.json max "
-            f"epoch: {dict(sorted(edge_mismatch.items()))}); the tail is "
-            "stale (fresh rebuild into this output dir?) or bootstrapped "
-            "from a corpus that predates absorbed deltas — rebuild with "
-            "rollup_job, or restore the matching unbias tail, before "
-            "refreshing"
-        )
 
-    # Block layout: tier files and blocks written before the (source,
-    # block) layout sit directly under source=<s>/. Moving them into it
-    # would be the refresh's only O(history) step, and the two layouts side
-    # by side do not read back.
+def _refuse_old_layout(out: str) -> None:
+    """Block layout: tier files and blocks written before the (source,
+    block) layout sit directly under source=<s>/. Moving them into it would
+    be the refresh's only O(history) step, and the two layouts side by
+    side do not read back."""
+    from preprocessor_spark.rollup.tiers import DEFAULT_TIERS
+
     for dataset in ["blocks_" + DEFAULT_TIERS[0].name, *(f"tier_{t.name}" for t in DEFAULT_TIERS)]:
         path = os.path.join(out, dataset)
         old_layout = sorted(glob.glob(os.path.join(path, "source=*", "*.parquet")))
@@ -384,36 +368,54 @@ def _refresh(
                 "blocks and cannot migrate them — rebuild with rollup_job"
             )
 
-    # every later shuffle is keyed by source, the tier partials' included:
-    # no wider than the delta's sources, and one task per ROWS_PER_WRITE_TASK
-    # rows — a daily delta is one task, and writes one file per dataset
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        max(
-            1,
-            min(
-                spark.sparkContext.defaultParallelism,
-                len(extent),
-                -(-delta_rows // ROWS_PER_WRITE_TASK),
-            ),
-        ),
+
+def _refresh(
+    spark,
+    out: str,
+    delta: DataFrame,
+    corpus: str | None,
+    fingerprint: str | None,
+    manifest,
+    old_bounds: list[tuple],
+    t_start: float,
+) -> dict:
+    from preprocessor_spark.arrowops import group_by
+    from preprocessor_spark.operators import Normalizer, Unbiaser
+    from preprocessor_spark.params import load_params
+    from preprocessor_spark.rollup.incremental import IncrementalRollup
+    from preprocessor_spark.rollup.tiers import (
+        DEFAULT_TIERS,
+        RollupTree,
+        algebraic_aggs,
+        duration_seconds,
+        epoch_floor,
     )
+    from preprocessor_spark.session import class_archive
 
-    # -- split + normalize under persisted decisions -----------------------
-    labeled = TemporalSplitter.split_by_time_boundaries(delta, "ts", boundaries)
-    with_z = labeled.withColumn("n_tok_z", F.col("n_tok").cast("double"))
-    norm = Normalizer(method="zscore", columns=["n_tok_z"])
-    normed = norm.transform(with_z, nparams)
+    nparams = load_params(os.path.join(out, "norm_params.json"))
+    tail_path = os.path.join(out, TAIL_NAME)
+    tail_bootstrap = not os.path.exists(tail_path)
+    if tail_bootstrap:
+        tail = source_tails(
+            spark.read.parquet(corpus).select(*TAIL_COLS),
+            ["source"],
+            "ts",
+            ["doc_id"],
+            k=MA_WINDOW - 1,
+        )
+    else:
+        # the tail holds earlier deltas' rows: the delta's schema is its own
+        tail = spark.read.schema(delta.select(*TAIL_COLS).schema).parquet(tail_path)
 
-    # -- MA-unbias continuation across the seam ----------------------------
-    t0 = time.perf_counter()
-    # tails are raw rows: renormalizing them with the SAME params yields
-    # exactly the values the original prepared store holds for them
-    tail_z = norm.transform(
-        tail_raw.withColumn("n_tok_z", F.col("n_tok").cast("double")), nparams
-    ).select("source", "ts", "doc_id", "n_tok_z", F.lit(True).alias("__carry"))
-    delta_z = normed.select(
-        "source", "ts", "doc_id", "n_tok_z", F.lit(False).alias("__carry")
+    # -- one MA-unbias pass over carry tail ∪ delta -----------------------
+    # tails are raw rows: z-scoring them with the SAME params yields exactly
+    # the values the original prepared store holds for them
+    carry = F.col("__carry")
+    rows = tail.select(*TAIL_COLS, F.lit(True).alias("__carry")).unionByName(
+        delta.select(*TAIL_COLS, F.lit(False).alias("__carry"))
+    )
+    normed = Normalizer(method="zscore", columns=["n_tok_z"]).transform(
+        rows.withColumn("n_tok_z", F.col("n_tok").cast("double")), nparams
     )
     unb = Unbiaser(
         method="ma",
@@ -422,62 +424,171 @@ def _refresh(
         value_cols=["n_tok_z"],
         tiebreak_cols=["doc_id"],
     )
-    prepared_delta = (
-        unb.transform(tail_z.unionByName(delta_z))
-        .filter(~F.col("__carry"))
+    # the order the unbias window sorts by: the flags share its sort
+    order = Window.partitionBy("source").orderBy("ts", "doc_id")
+    whole = order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    marked = (
+        unb.transform(normed)
         .select(
-            epoch_seconds("ts").alias("tss"),
-            "source",
+            *TAIL_COLS,
             "n_tok_z",
+            "__carry",
+            epoch_seconds("ts").alias("tss"),
+            # the seam flag: a delta row followed by a carry row sorts
+            # before the series' last absorbed row
+            (~carry & F.coalesce(F.lead(carry).over(order), F.lit(False))).alias("__late"),
+            # each source's last w−1 rows: the next carry tail
+            (
+                F.row_number().over(order)
+                > F.count(F.lit(1)).over(whole) - (MA_WINDOW - 1)
+            ).alias("__next"),
         )
-        .cache()  # consumed twice: the prepared append AND the tier refresh
+        .cache()  # read by both jobs: the staged write and the collect
     )
-    prepared_path = os.path.join(out, "prepared")
-    # first mutation of the output dir — the crash-detection mark goes in
-    # immediately before it (see the double-apply guard above)
-    manifest.mark("refresh_delta_started", fingerprint, rows=delta_rows)
-    prepared_delta.sortWithinPartitions("source", "tss").write.mode(
-        "append"
-    ).parquet(prepared_path)
-    prepare_seconds = round(time.perf_counter() - t0, 3)
-
-    # next refresh's carry tail: last w−1 raw rows per source across
-    # (old tail ∪ delta)
-    new_tail = top_rows(
-        tail_raw.select(*TAIL_COLS).unionByName(delta.select(*TAIL_COLS)),
-        ["source"],
-        "ts",
-        ["doc_id"],
-        k=MA_WINDOW - 1,
+    step0 = duration_seconds(DEFAULT_TIERS[0].duration)
+    facts = marked.filter(~carry)
+    partials = facts.groupBy(
+        "source", epoch_floor(F.col("tss"), step0).alias("bucket_epoch")
+    ).agg(
+        *algebraic_aggs(F.col("n_tok_z")),
+        F.count(F.lit(1)).alias("rows"),
+        F.min("tss").alias("t_lo"),
+        F.max("tss").alias("t_hi"),
+        F.max("__late").alias("late"),
     )
-    # NOTE: only MATERIALIZE the new tail here (the .tmp write) — the swap
-    # of tail_path itself must wait until after the tier refresh below:
-    # prepared_delta's lineage reads tail_path, and a cache-block loss
-    # during the tier refresh would recompute the unbias plan from
-    # whatever tail_path then holds. Swapping early would silently seed
-    # that recompute with the NEW tail (wrong MA predecessors).
-    tmp_tail = tail_path + ".tmp"
-    bak_tail = tail_path + ".bak"
-    new_tail.coalesce(1).write.mode("overwrite").parquet(tmp_tail)
+    tail_rows = marked.filter(carry | F.col("__next")).select(*TAIL_COLS, "__carry", "__next")
 
-    # -- tier refresh: the prepared delta, bucketed as the build buckets, --
-    # merged on the driver with the touched blocks and their compression
-    t0 = time.perf_counter()
-    tree = RollupTree(series_cols=["source"], value_col="n_tok_z", tiers=DEFAULT_TIERS)
-    bounds = [(s, t0_, t1_) for s, _n, t0_, t1_ in extent]
-    tier_metrics = IncrementalRollup(tree, out).refresh(prepared_delta, bounds)
-    refresh_seconds = round(time.perf_counter() - t0, 3)
+    staging = os.path.join(out, STAGING)
+    try:
+        t0 = time.perf_counter()
+        # the window leaves each partition sorted by (source, ts), and so
+        # by (source, tss)
+        facts.select("tss", "source", "n_tok_z").write.mode("overwrite").parquet(staging)
+        prepare_seconds = round(time.perf_counter() - t0, 3)
+        got = (
+            partials.withColumn("__tail", F.lit(False))
+            .unionByName(tail_rows.withColumn("__tail", F.lit(True)), allowMissingColumns=True)
+            .toArrow()
+        )
+        part = got.filter(pc.invert(got["__tail"]))
+        tails = got.filter(got["__tail"])
 
-    prepared_delta.unpersist()
-    # swap the carry tail into place now that nothing can re-read the old
-    # one: two atomic renames, never an unlink of the only copy — a crash
-    # in the window between them leaves the old tail intact at .bak (the
-    # previous rmtree-then-replace destroyed it before the new one landed)
+        # -- the profile: per source, sorted by source (nulls first), the
+        # delta's rows, its min/max tss and whether a row is behind the seam
+        prof = group_by(
+            part, ["source"], [("rows", "sum"), ("t_lo", "min"), ("t_hi", "max"), ("late", "any")]
+        )
+        profile = sorted(
+            zip(*(prof[c].to_pylist() for c in prof.column_names)),
+            key=lambda r: (r[0] is not None, r[0]),
+        )
+        delta_rows = sum(r[1] for r in profile)
+        if delta_rows == 0:
+            return {
+                "job": "refresh_job",
+                "delta_rows": 0,
+                "total_seconds": 0.0,
+                "class_archive": class_archive(spark),
+            }
+        no_ts = pc.sum(part.filter(pc.is_null(part["bucket_epoch"]))["rows"]).as_py()
+        if no_ts:
+            raise ValueError(
+                f"the delta has {no_ts} rows with a null ts: a row without a "
+                "time has no bucket and no place in its series' order"
+            )
+        extent = [r[:4] for r in profile]
+        if fingerprint is None:
+            fingerprint = hashlib.sha256(
+                json.dumps([[s, int(n), int(lo), int(hi)] for s, n, lo, hi in extent]).encode()
+            ).hexdigest()[:16]
+            _refuse_applied(manifest, fingerprint)
+
+        # -- append-only seam validation (see module docstring) ----------
+        old_max = {r[0]: int(r[-1]) for r in old_bounds}
+        stale = {
+            s: (lo, old_max[s])
+            for s, _n, lo, _hi, late in profile
+            if s in old_max and (late or lo < old_max[s])
+        }
+        if stale:
+            raise ValueError(
+                "delta contains rows that sort BEFORE the existing series "
+                f"edge in (ts, doc_id) order for {sorted(stale)} (delta min vs "
+                f"stored max epoch: {stale}); the MA-unbias continuation is "
+                "order-dependent and cannot absorb interior late data — re-run "
+                "rollup_job over the affected range instead (the tier merge "
+                "itself would be fine; the prepared series would not)"
+            )
+        # Tail-at-edge validation: the carry rows MUST be the last rows of
+        # the absorbed series, i.e. per-source max(ts) == the stored bounds
+        # edge. Catches a tail left stale by a fresh rollup_job rebuild into
+        # the same output dir, and a bootstrap from an --input that
+        # predates already absorbed deltas (e.g. after a crashed swap
+        # destroyed the tail) — either would silently seed the MA seam with
+        # wrong predecessors.
+        carried = tails.filter(tails["__carry"])
+        edge = group_by(
+            pa.table({"source": carried["source"], "us": carried["ts"].cast(pa.int64())}),
+            ["source"],
+            [("us", "max")],
+        )
+        tail_edge = {
+            s: us // 1_000_000
+            for s, us in zip(edge["source"].to_pylist(), edge["us_max"].to_pylist())
+        }
+        edge_mismatch = {
+            r[0]: (tail_edge.get(r[0]), int(r[-1]))
+            for r in old_bounds
+            if tail_edge.get(r[0]) != int(r[-1])
+        }
+        if edge_mismatch:
+            raise ValueError(
+                "unbias carry tail does not sit at the stored series edge for "
+                f"{sorted(edge_mismatch)} (tail max vs series_bounds.json max "
+                f"epoch: {dict(sorted(edge_mismatch.items()))}); the tail is "
+                "stale (fresh rebuild into this output dir?) or bootstrapped "
+                "from a corpus that predates absorbed deltas — rebuild with "
+                "rollup_job, or restore the matching unbias tail, before "
+                "refreshing"
+            )
+
+        # first mutation of the output dir — the crash-detection mark goes
+        # in immediately before it (see _refuse_applied)
+        manifest.mark("refresh_delta_started", fingerprint, rows=delta_rows)
+        prepared_path = os.path.join(out, "prepared")
+        os.makedirs(prepared_path, exist_ok=True)
+        for name in sorted(os.listdir(staging)):
+            if name.startswith(("part-", ".part-")):
+                os.replace(os.path.join(staging, name), os.path.join(prepared_path, name))
+    finally:
+        marked.unpersist()
+        shutil.rmtree(staging, ignore_errors=True)
+
+    # next refresh's carry tail: the last w−1 raw rows per source across
+    # (old tail ∪ delta), swapped in with two atomic renames, never an
+    # unlink of the only copy — a crash between them leaves the old tail
+    # intact at .bak
+    new_tail = tails.filter(tails["__next"]).select(TAIL_COLS)
+    tmp_tail, bak_tail = tail_path + ".tmp", tail_path + ".bak"
+    shutil.rmtree(tmp_tail, ignore_errors=True)
+    os.makedirs(tmp_tail)
+    pq.write_table(
+        new_tail.sort_by([(c, "ascending") for c in ("source", "ts", "doc_id")]),
+        os.path.join(tmp_tail, "part-00000.parquet"),
+    )
     shutil.rmtree(bak_tail, ignore_errors=True)
     if os.path.exists(tail_path):
         os.replace(tail_path, bak_tail)
     os.replace(tmp_tail, tail_path)
     shutil.rmtree(bak_tail, ignore_errors=True)
+
+    # -- tier refresh: the collected 5m partials, merged on the driver ---
+    # with the touched blocks and their compression
+    t0 = time.perf_counter()
+    tree = RollupTree(series_cols=["source"], value_col="n_tok_z", tiers=DEFAULT_TIERS)
+    bounds = [(s, lo, hi) for s, _n, lo, hi in extent]
+    tier_metrics = IncrementalRollup(tree, out).refresh(part, bounds)
+    refresh_seconds = round(time.perf_counter() - t0, 3)
     manifest.mark("refresh_delta", fingerprint, rows=delta_rows)
     total = round(time.perf_counter() - t_start, 3)
     return {

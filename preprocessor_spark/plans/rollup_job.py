@@ -5,10 +5,11 @@
 
 Pipeline (the north-rule composition):
   1. scan the pre-tokenized corpus (doc_id, tokens, n_tok, source, ts);
-  2. six-way temporal split labels (persisted time boundaries → on resume the
-     labels come from pure partition-prunable predicates, no global sort),
-     fitted from the profile plus ONE edge pass over the few buckets that
-     hold split edges;
+  2. six-way temporal split boundaries, fitted from the profile plus ONE
+     edge pass over the few buckets that hold split edges, and persisted
+     (a reader labels rows from them with pure partition-prunable
+     predicates, ``TemporalSplitter.split_by_time_boundaries``; the
+     prepared series carries no label);
   3. z-score normalize n_tok fit ONLY on d1+d2, from the moments of n_tok
      that the same edge pass sums up to each split edge
      (``Normalizer.fit_moments``: no aggregate of its own); both params are
@@ -171,7 +172,7 @@ def _clear_previous_build(out: str) -> None:
 
 
 def _build(spark, args, out: str, manifest) -> dict:
-    from preprocessor_spark.operators import Normalizer, TemporalSplitter, Unbiaser
+    from preprocessor_spark.operators import Normalizer, Unbiaser
     from preprocessor_spark.operators.positions import time_profile
     from preprocessor_spark.params import load_params, save_params
 
@@ -262,13 +263,10 @@ def _build(spark, args, out: str, manifest) -> dict:
     # dense tier needs to seed ONLY its new buckets on an incremental
     # refresh (rollup/incremental.py)
     save_bounds(os.path.join(out, "series_bounds.json"), bounds_rows, ["source"])
-    boundaries = split_params.params["boundaries"]
-    # labels from boundaries = the sort-free scale path (pure predicates)
-    labeled = TemporalSplitter.split_by_time_boundaries(corpus, "ts", boundaries)
 
     # -- normalize: train-only fit, transform all -------------------------
     # raw n_tok stays for the rollup; n_tok_z is the z-scored series
-    with_z = labeled.withColumn("n_tok_z", F.col("n_tok").cast("double"))
+    with_z = corpus.withColumn("n_tok_z", F.col("n_tok").cast("double"))
     normed = Normalizer().transform(with_z, nparams)
 
     # -- unbias (MA residual of the z-scored series per source) ----------

@@ -10,7 +10,7 @@ statistic of (old ∪ delta) is a fold of the old row's statistics with the
 delta partial's, per (series, bucket). So a refresh is
 
     delta facts ──Spark epoch aggregate──▶ finest-tier partials      (O(|delta|))
-        one Arrow collect: the refresh's last Spark job
+        one Arrow collect, by the caller (plans/refresh_job; epoch_partials)
     partials ∪ extension seeds ──floor + fold──▶ every tier's partials (driver)
     per touched (tier, series): its touched block files ──fold──▶ merged
         blocks ──pyarrow──▶ temp dir ──checkpoint.publish_units──▶ tree
@@ -18,22 +18,23 @@ delta partial's, per (series, bucket). So a refresh is
 and never reads or rewrites a block the delta does not land in. Every tier
 file holds one block of its series (``tiers.block_of``: BLOCK_BUCKETS
 buckets of the tier's period), so the touched files follow from the
-partials' bucket keys on the driver. The delta arrives in the prepared
-shape plans/rollup_job.py writes (series, ``tss`` epoch seconds, value),
-and its partials come from the build's own epoch chain (every bucket key
-the floor of ``tss`` to the tier's period), so every tier refreshes from
-ONE scan of the delta facts into the buckets a rebuild would give.
+partials' bucket keys on the driver. The partials are the finest-tier
+aggregate of delta facts in the prepared shape plans/rollup_job.py writes
+(series, ``tss`` epoch seconds, value), bucketed by the build's epoch
+chain (every bucket key the floor of ``tss`` to the tier's period), so
+every tier refreshes from ONE aggregate of the delta facts into the
+buckets a rebuild would give.
 
-After the collect the refresh runs no Spark job and starts no Python
-worker: its work is bounded by the delta and a few blocks per touched
-series, which cost milliseconds on the driver where a cold Spark stage
-costs seconds. It takes one (tier, series) unit at a time, so the driver
-holds the partials plus one unit's touched blocks (at most a few × 4096
-rows). The finest tier's compression blocks (``blocks_<tier>``) are
-re-encoded from the merged rows of that unit. The merged rows and the
-blocks are written by :func:`write_tier_blocks` and
-:func:`write_series_blocks`, the writers the build's driver pass uses
-(plans/rollup_job.py), so a refreshed tree is laid out as a rebuilt one.
+The refresh itself runs no Spark job and starts no Python worker: its
+work is bounded by the delta and a few blocks per touched series, which
+cost milliseconds on the driver where a cold Spark stage costs seconds. It
+takes one (tier, series) unit at a time, so the driver holds the partials
+plus one unit's touched blocks (at most a few × 4096 rows). The finest
+tier's compression blocks (``blocks_<tier>``) are re-encoded from the
+merged rows of that unit. The merged rows and the blocks are written by
+:func:`write_tier_blocks` and :func:`write_series_blocks`, the writers the
+build's driver pass uses (plans/rollup_job.py), so a refreshed tree is
+laid out as a rebuilt one.
 
 Reference parity: the reference recomputes its per-column statistics from
 scratch on every run (app/core/normalization_handler.py:155-174 — whole-
@@ -318,22 +319,29 @@ def write_series_blocks(unit_dir: str, rows: pa.Table, step: int) -> tuple[list[
     return ks, int(pc.sum(blocks["n"]).as_py() or 0)
 
 
+def partial_rows(rows: pa.Table, series_cols: list[str]) -> pa.Table:
+    """``rows``' series columns, nullable, and :data:`EPOCH_ROWS`, cast to
+    their types: the shape of a tier's partials on the driver. Other
+    columns of ``rows`` are dropped."""
+    schema = pa.schema(
+        [*(rows.schema.field(c).with_nullable(True) for c in series_cols), *EPOCH_ROWS]
+    )
+    return rows.select(schema.names).cast(schema)
+
+
 def epoch_partials(tree: RollupTree, facts: DataFrame, step: int) -> pa.Table:
     """The tree's finest-tier aggregate of ``facts`` (the prepared shape:
     series columns, ``tss`` epoch seconds, the value column) at period
     ``step``, without gap rows, collected with ``toArrow``: series_cols +
     :data:`EPOCH_ROWS`, one row per non-empty (series, bucket). The build
-    and the refresh run it as their last Spark job."""
+    runs it as its last Spark job."""
     series = tree.series_cols
     rows = (
         tree.base_aggregate_with_spine_epoch(facts, step)
         .select(*series, F.unix_timestamp("bucket_start").alias("bucket_epoch"), *ALGEBRAIC)
         .toArrow()
     )
-    schema = pa.schema(
-        [*(rows.schema.field(c).with_nullable(True) for c in series), *EPOCH_ROWS]
-    )
-    return rows.cast(schema)
+    return partial_rows(rows, series)
 
 
 def gap_seeds(intervals: list[tuple], schema: pa.Schema, step: int) -> pa.Table:
@@ -409,19 +417,19 @@ class IncrementalRollup:
     def tier_path(self, tier: TierSpec) -> str:
         return os.path.join(self.root, f"tier_{tier.name}")
 
-    def delta_partials(self, delta_df: DataFrame, seeds: list[tuple]) -> dict[str, pa.Table]:
+    def delta_partials(self, partials: pa.Table, seeds: list[tuple]) -> dict[str, pa.Table]:
         """Algebraic partials of the delta at every tier, as Arrow tables of
-        series_cols + :data:`EPOCH_ROWS`. Spark aggregates the facts to the
-        finest tier with the build's epoch chain, and :func:`epoch_partials`
-        collects that: the refresh's last Spark job. ``seeds`` ((*series,
-        t0, t1) intervals on the finest lattice, from
-        :func:`extension_intervals`) join it as :func:`gap_seeds`. Each tier
-        is then that table with its bucket keys floored to the tier's
-        period, folded."""
+        series_cols + :data:`EPOCH_ROWS`, from ``partials``: the delta's
+        finest-tier aggregate, one row per non-empty (series, bucket), in
+        series_cols + :data:`EPOCH_ROWS` (other columns are ignored; see
+        :meth:`refresh`). ``seeds`` ((*series, t0, t1) intervals on the
+        finest lattice, from :func:`extension_intervals`) join it as
+        :func:`gap_seeds`. Each tier is that table with its bucket keys
+        floored to the tier's period, folded."""
         tree = self.tree
         series = tree.series_cols
         steps = [duration_seconds(t.duration) for t in tree.tiers]
-        base = epoch_partials(tree, delta_df, steps[0])
+        base = partial_rows(partials, series)
         base = pa.concat_tables([base, gap_seeds(seeds, base.schema, steps[0])])
         out = {}
         epochs = base["bucket_epoch"].to_numpy()
@@ -434,11 +442,15 @@ class IncrementalRollup:
             out[tier.name] = fold_partials(floored, [*series, "bucket_epoch"])
         return out
 
-    def refresh(self, delta_df: DataFrame, bounds: list[tuple]) -> dict:
-        """Refresh every tier from one delta of NEW facts in the prepared
-        shape: series columns, ``tss`` (epoch seconds) and the value column.
-        ``bounds`` is the delta's per-series (*series, t0, t1) extent in
-        epoch seconds (plans/refresh_job gets it from its delta profile).
+    def refresh(self, partials: pa.Table, bounds: list[tuple]) -> dict:
+        """Refresh every tier from one delta of NEW facts, given as
+        ``partials``: their finest-tier aggregate collected as Arrow, one
+        row per non-empty (series, bucket) with series_cols and
+        :data:`EPOCH_ROWS` (plans/refresh_job collects it with its
+        profile's lanes beside it; :func:`epoch_partials` gives it for any
+        facts in the prepared shape). ``bounds`` is the delta's per-series
+        (*series, t0, t1) extent in epoch seconds (plans/refresh_job gets
+        it from the same collect).
 
         The bounds sidecar is extended by ``bounds``, and the tier-0
         buckets the extension adds become seed rows of every tier's
@@ -471,8 +483,8 @@ class IncrementalRollup:
         old_bounds = load_bounds(self.bounds_path)
         new_bounds = merge_bounds(old_bounds, bounds)
         step0 = duration_seconds(tree.tiers[0].duration)
-        partials = self.delta_partials(
-            delta_df, extension_intervals(old_bounds, new_bounds, step0)
+        by_tier = self.delta_partials(
+            partials, extension_intervals(old_bounds, new_bounds, step0)
         )
 
         t0 = time.perf_counter()
@@ -482,7 +494,7 @@ class IncrementalRollup:
         units, block_dirs, encode_s = [], [], 0.0
         for tier in tree.tiers:
             step = duration_seconds(tier.duration)
-            part = partials[tier.name]
+            part = by_tier[tier.name]
             schema = pa.schema(
                 [
                     *(part.schema.field(c) for c in series),

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from preprocessor_spark.rollup.incremental import (
     IncrementalRollup,
+    epoch_partials,
     extension_intervals,
     merge_bounds,
     merge_partials,
@@ -109,10 +110,12 @@ def _write_base_tree(tree, base, root):
 
 
 def _refresh(spark, tree, root, delta):
-    """Refresh ``root`` with the delta in the prepared shape (epoch-second
-    ``tss``) under its exact per-source bounds."""
+    """Refresh ``root`` with the finest-tier partials of the delta in the
+    prepared shape (epoch-second ``tss``) under its exact per-source
+    bounds."""
     prepared = delta.select(F.unix_timestamp("ts").alias("tss"), "source", "n_tok")
-    return IncrementalRollup(tree, root).refresh(prepared, _epoch_bounds(delta))
+    partials = epoch_partials(tree, prepared, duration_seconds(tree.tiers[0].duration))
+    return IncrementalRollup(tree, root).refresh(partials, _epoch_bounds(delta))
 
 
 def _assert_refreshed(spark, tree, root, facts):

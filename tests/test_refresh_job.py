@@ -152,12 +152,21 @@ def test_refresh_metrics_and_lineage(spark, setup):
         assert marked == {p: on_disk[p] for p in marked}, t.name
 
 
+def _assert_refused_unchanged(tree, before):
+    """A refused refresh leaves every file of ``tree`` (prepared series,
+    carry tail, manifest, tiers, blocks) as it was, and no staging dir."""
+    assert _block_files(tree) == before
+    assert not os.path.exists(os.path.join(tree, refresh_job.STAGING))
+
+
 def test_double_apply_is_refused(spark, setup):
     """Re-running the job with an already-absorbed delta must be refused
     (prepared append + tier merge are non-idempotent)."""
     paths, out, _, _ = setup
+    before = _block_files(out)
     with pytest.raises(ValueError, match="already absorbed"):
         refresh_job.main(["--output", out, "--delta-input", paths["delta2"]])
+    _assert_refused_unchanged(out, before)
 
 
 def test_interior_late_data_is_refused(spark, setup, tmp_path):
@@ -165,8 +174,31 @@ def test_interior_late_data_is_refused(spark, setup, tmp_path):
     late = str(tmp_path / "late")
     # rows from BEFORE the current series edge
     spark.read.parquet(paths["delta1"]).limit(50).write.parquet(late)
+    before = _block_files(out)
     with pytest.raises(ValueError, match="order-dependent"):
         refresh_job.main(["--output", out, "--delta-input", late])
+    _assert_refused_unchanged(out, before)
+
+
+def test_null_ts_is_refused(spark, setup, tmp_path):
+    """A delta row without a time has no bucket and no place in the MA
+    order: refused before anything is written."""
+    paths, out, _, _ = setup
+    tree = str(tmp_path / "tree")
+    shutil.copytree(out, tree)
+    delta = str(tmp_path / "delta")
+    rows = spark.read.parquet(paths["delta2"])
+    (first,) = rows.agg(F.min("doc_id")).first()
+    rows.withColumn(
+        "ts",
+        F.when(F.col("doc_id") == first, F.lit(None)).otherwise(
+            F.col("ts") + F.expr("INTERVAL 1 DAY")
+        ),
+    ).write.parquet(delta)
+    before = _block_files(tree)
+    with pytest.raises(ValueError, match="1 rows with a null ts"):
+        refresh_job.main(["--output", tree, "--delta-input", delta])
+    _assert_refused_unchanged(tree, before)
 
 
 def test_refresh_requires_prior_run_state(spark, setup, tmp_path):
@@ -216,16 +248,102 @@ def test_tail_off_series_edge_is_refused(spark, setup, tmp_path):
     spark.read.parquet(paths["delta2"]).withColumn(
         "ts", F.col("ts") + F.expr("INTERVAL 1 DAY")
     ).write.parquet(delta3)
+    before = _block_files(broken)
     with pytest.raises(ValueError, match="series edge"):
         refresh_job.main(["--output", broken, "--delta-input", delta3])
+    _assert_refused_unchanged(broken, before)
+
+
+def test_carry_tail_is_the_last_rows_of_old_tail_and_delta(spark, setup, tmp_path):
+    """The carry tail a refresh writes is ``top_rows`` over the old tail ∪
+    the delta: also for a source with fewer than w−1 delta rows (s1 keeps
+    two old rows), for a source absent from the delta (s2 keeps its old
+    tail), and from a tail that Spark wrote with INT96 times, which pyarrow
+    reads as timestamp[ns]."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import Window
+
+    paths, out, _, _ = setup
+    tree = str(tmp_path / "tree")
+    shutil.copytree(out, tree)
+    tail = os.path.join(tree, refresh_job.TAIL_NAME)
+    with scoped_conf(spark, {"spark.sql.parquet.outputTimestampType": "INT96"}):
+        spark.read.parquet(tail).coalesce(1).write.parquet(tail + ".int96")
+    shutil.rmtree(tail)
+    os.replace(tail + ".int96", tail)
+    (written,) = glob.glob(os.path.join(tail, "part-*.parquet"))
+    assert pq.read_schema(written).field("ts").type == pa.timestamp("ns")
+
+    order = Window.partitionBy("source").orderBy("ts", "doc_id")
+    delta = str(tmp_path / "delta")
+    (
+        spark.read.parquet(paths["delta2"])
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 DAY"))
+        .withColumn("rn", F.row_number().over(order))
+        .filter((F.col("source") != "s2") & ((F.col("source") != "s1") | (F.col("rn") <= 2)))
+        .drop("rn")
+        .write.parquet(delta)
+    )
+    counts = dict(spark.read.parquet(delta).groupBy("source").count().collect())
+    assert "s2" not in counts and counts["s1"] == 2
+    cols = refresh_job.TAIL_COLS
+
+    def frame(df):
+        return df.select(cols).toPandas().sort_values(cols).reset_index(drop=True)
+
+    want = frame(
+        refresh_job.top_rows(
+            spark.read.parquet(tail).select(cols).unionByName(
+                spark.read.parquet(delta).select(cols)
+            ),
+            ["source"],
+            "ts",
+            ["doc_id"],
+            k=rollup_job.MA_WINDOW - 1,
+        )
+    )
+    old_s2 = frame(spark.read.parquet(tail).filter(F.col("source") == "s2"))
+    refresh_job.main(["--output", tree, "--delta-input", delta])
+    got = frame(spark.read.parquet(tail))
+    pd.testing.assert_frame_equal(got, want)
+    pd.testing.assert_frame_equal(
+        got[got["source"] == "s2"].reset_index(drop=True), old_s2
+    )
+    assert len(got[got["source"] == "s1"]) == rollup_job.MA_WINDOW - 1
+
+
+def test_delta_input_contract(spark, setup, tmp_path):
+    """main reads the delta under the build's input schema, with no
+    inference job: a source-partitioned delta reads whole, and a delta
+    whose footer lacks a column or holds another type is refused by
+    name."""
+    paths, out, _, _ = setup
+    rows = spark.read.parquet(paths["delta2"])
+    parted = str(tmp_path / "parted")
+    rows.write.partitionBy("source").parquet(parted)
+    got = refresh_job.read_delta(spark, parted)
+    assert got.count() == rows.count()
+    assert got.exceptAll(rows.select(got.columns)).count() == 0
+    for name, bad, problem in (
+        ("wide", rows.withColumn("n_tok", F.col("n_tok").cast("long")), "n_tok is bigint"),
+        ("narrow", rows.drop("tokens"), "no column tokens"),
+    ):
+        path = str(tmp_path / name)
+        bad.write.parquet(path)
+        with pytest.raises(ValueError, match=f"input .*{problem}"):
+            refresh_job.main(["--output", out, "--delta-input", path])
 
 
 # A refresh of the setup's output costs exactly this many Spark jobs: the
-# delta's schema inference, the delta profile, the prepared append, the
-# carry-tail write and the Arrow collect of the delta's 5m partials. The
-# tier merge, its writes and the block encode run on the driver after
+# staged write of the prepared delta, and ONE Arrow collect of the same
+# cached unbias pass that carries the delta's 5m partials, the profile's
+# lanes, the seam flags and the carry-tail rows. The delta is read under
+# a pinned schema (no inference job); the refusals, the carry-tail write,
+# the tier merge, its writes and the block encode run on the driver after
 # that collect, and start no Spark job.
-REFRESH_SPARK_JOBS = 5
+REFRESH_SPARK_JOBS = 2
 
 
 def _block_files(root):
@@ -464,7 +582,7 @@ def test_refresh_refuses_source_only_block_layout(spark, setup, tmp_path):
     before = _block_files(tree)
     with pytest.raises(ValueError, match="rebuild with rollup_job"):
         refresh_job.main(["--output", tree, "--delta-input", delta])
-    assert _block_files(tree) == before
+    _assert_refused_unchanged(tree, before)
 
 
 def test_refresh_refuses_source_only_tier_layout(spark, setup, tmp_path):
@@ -485,7 +603,7 @@ def test_refresh_refuses_source_only_tier_layout(spark, setup, tmp_path):
     before = _block_files(tree)
     with pytest.raises(ValueError, match="rebuild with rollup_job"):
         refresh_job.main(["--output", tree, "--delta-input", delta])
-    assert _block_files(tree) == before
+    _assert_refused_unchanged(tree, before)
 
 
 # 1969-12-29 00:00:00 less half a second: every row of the corpus sits 0.5 s
@@ -583,6 +701,45 @@ def test_sub_second_times_before_1970_bucket_by_their_floor(spark, tmp_path):
         ["--output", out, "--delta-input", paths["delta"], "--input", paths["base"]]
     )
     _assert_tiers_match_reference(spark, out, _reference_tiers(spark, paths["full"], params))
+
+
+def test_late_row_inside_the_edge_second_is_refused(spark, tmp_path):
+    """The seam check orders rows by (ts, doc_id), not by epoch second: a
+    delta row 0.3 s before a source's last row, in the same second, is
+    refused before anything is written, and one 0.3 s after it is
+    absorbed into the tiers an independent pandas rebuild gives."""
+    half = F.timestamp_micros(F.unix_micros("ts") + F.lit(500_000))
+    base = str(tmp_path / "base")
+    token_sequences(spark, 16_000).withColumn("ts", half).filter(
+        F.col("ts") < CUT1
+    ).write.parquet(base)
+    out = str(tmp_path / "out")
+    rollup_job.main(["--input", base, "--output", out])
+    edge = (
+        spark.read.parquet(base)
+        .filter(F.col("source") == "s0")
+        .orderBy(F.col("ts").desc(), F.col("doc_id").desc())
+        .limit(1)
+    )
+    deltas = {}
+    for name, shift_us in (("late", -300_000), ("after", 300_000)):
+        deltas[name] = str(tmp_path / name)
+        edge.withColumn(
+            "ts", F.timestamp_micros(F.unix_micros("ts") + F.lit(shift_us))
+        ).withColumn("doc_id", F.lit(f"doc-{name}")).write.parquet(deltas[name])
+    before = _block_files(out)
+    with pytest.raises(ValueError, match="order-dependent"):
+        refresh_job.main(
+            ["--output", out, "--delta-input", deltas["late"], "--input", base]
+        )
+    _assert_refused_unchanged(out, before)
+    refresh_job.main(["--output", out, "--delta-input", deltas["after"], "--input", base])
+    facts = str(tmp_path / "facts")
+    spark.read.parquet(base).unionByName(spark.read.parquet(deltas["after"])).write.parquet(
+        facts
+    )
+    params = os.path.join(out, "norm_params.json")
+    _assert_tiers_match_reference(spark, out, _reference_tiers(spark, facts, params))
 
 
 def _refresh_marks(tree):
@@ -686,9 +843,23 @@ def test_stream_late_micro_batch_is_refused(spark, setup, streamed):
     assert _block_files(tree) == before
 
 
+def _jobs_of(spark, group, fn):
+    """The ids of the Spark jobs ``fn`` starts, run under job group
+    ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_stream_epoch_started_but_not_completed_is_refused(spark, setup, tmp_path):
     """An epoch whose refresh started and never completed may be partly in
-    the tree: its replay raises through the job's own guard."""
+    the tree: its replay raises through the job's own guard, before any
+    Spark job."""
     paths, out, _, _ = setup
     tree = str(tmp_path / "tree")
     shutil.copytree(out, tree)
@@ -697,9 +868,31 @@ def test_stream_epoch_started_but_not_completed_is_refused(spark, setup, tmp_pat
     delta = _shifted_delta(spark, paths["delta2"], str(tmp_path / "delta"), "1 DAY")
     before = _block_files(tree)
     batch = rollup_stream.make_refresh_batch(tree, "run")
-    with pytest.raises(ValueError, match="started but did not complete"):
-        batch(spark.read.parquet(delta), 3)
-    assert _block_files(tree) == before
+    rows = spark.read.parquet(delta)
+
+    def replay():
+        with pytest.raises(ValueError, match="started but did not complete"):
+            batch(rows, 3)
+
+    assert _jobs_of(spark, "started_replay", replay) == []
+    _assert_refused_unchanged(tree, before)
+
+
+def test_named_absorbed_delta_is_refused_before_any_spark_job(spark, setup, streamed):
+    """A delta whose named fingerprint the manifest marks absorbed is
+    refused before any Spark job: a refused replay costs none."""
+    paths, _, _, _ = setup
+    tree, checkpoint = streamed
+    key = rollup_stream._checkpoint_key(checkpoint)
+    before = _block_files(tree)
+    rows = spark.read.parquet(paths["delta2"])
+
+    def replay():
+        with pytest.raises(ValueError, match="already absorbed"):
+            refresh_job.absorb(spark, tree, rows, fingerprint=f"{key}:1")
+
+    assert _jobs_of(spark, "absorbed_replay", replay) == []
+    _assert_refused_unchanged(tree, before)
 
 
 def test_stream_micro_batch_starts_no_python_worker(spark, setup, tmp_path):
