@@ -13,7 +13,7 @@ once per micro-batch.
 Continues every stage of plans/rollup_job.py on the delta ONLY, under the
 original run's persisted decisions (the production contract: params are
 fitted once and versioned — a param re-fit is a rebuild event, not a
-refresh). A refresh with a carry tail runs two Spark jobs:
+refresh). A refresh with a carry tail runs ONE Spark job:
 
   0. refusals that need no Spark job come first: a tree whose tier files
      or blocks predate the (source, block) layout (migrating it would
@@ -22,9 +22,9 @@ refresh). A refresh with a carry tail runs two Spark jobs:
      delta's fingerprint (a stream micro-batch), a delta the manifest
      marks as started or absorbed;
   1. ONE MA-unbias pass over carry tail ∪ delta, z-scored under the
-     persisted params and cached. The first delta rows' trailing windows
-     span the seam, so each source's last w−1 historical rows (the "carry
-     tail") run through the identical window and are dropped after it —
+     persisted params. The first delta rows' trailing windows span the
+     seam, so each source's last w−1 historical rows (the "carry tail")
+     run through the identical window and are dropped after it —
      residuals equal a full-corpus recompute exactly. The FIRST refresh
      bootstraps the tail from the original corpus (--input) with a max-ts
      + widening-margin scan, the only O(corpus) touch, paid once. The
@@ -32,25 +32,27 @@ refresh). A refresh with a carry tail runs two Spark jobs:
      (its row number against a whole-partition count: the next carry
      tail) and each delta row whose successor is a carry row (the seam
      flag: a row that sorts before the series edge);
-  2. Spark job 1: the prepared delta rows (epoch-second ``tss``) are
-     written to a staging dir (``_prepared_staging``), which no reader of
-     ``prepared/`` lists;
-  3. Spark job 2, the last: ONE ``toArrow`` collect of the cached pass —
-     the delta's 5m partials (the tier lanes plus each bucket's row count,
-     exact min/max ``tss`` and seam flag) next to the carry rows and the
-     next carry tail's rows;
-  4. on the driver, from that collect: the per-source profile (rows and
-     time bounds), the double-apply fingerprint and every refusal — late
-     data, a stale carry tail, a null ts — before the
-     ``refresh_delta_started`` mark. A refusal removes the staging dir and
-     leaves every file of the tree as it was;
-  5. the mark; the staged files move into ``prepared/``, and the next
-     carry tail is written with pyarrow and swapped in;
-  6. every tier refreshed in place via rollup/incremental.py from the
-     collected 5m partials and the profile's bounds: the 1h/1d partials
-     are folded from them, the dense tiers' new empty buckets seeded from
-     the bounds' growth, and each touched (tier, source) merges its
-     touched (source, block) files with pyarrow and publishes them through
+  2. the Spark job: ONE ``toArrow`` collect of that pass. Every row
+     carries ``source``, epoch-second ``tss``, ``n_tok_z`` and the carry,
+     seam and next-tail flags; ``ts``, ``doc_id`` and ``n_tok`` are kept
+     only on the carry and next-tail rows, and are null on the others;
+  3. on the driver, from the delta's rows of that collect: the
+     per-source profile (rows and time bounds, one Arrow group-by), the
+     double-apply fingerprint and every refusal — late data, a stale
+     carry tail, a null ts — before the ``refresh_delta_started`` mark. A
+     refusal leaves every file of the tree as it was;
+  4. the mark; the prepared delta rows ``(tss, source, n_tok_z)`` are
+     written into ``prepared/`` as one ``part-<uuid>.parquet``, under a
+     name Spark's readers skip and then renamed, and the next carry tail
+     is written with pyarrow and swapped in;
+  5. the delta's 5m partials folded from its rows on the driver
+     (``incremental.fact_partials``: per (source, bucket) the non-null
+     count, the sum, the sum of squares, the min and the max);
+  6. every tier refreshed in place via rollup/incremental.py from those
+     partials and the profile's bounds: the 1h/1d partials are folded
+     from them, the dense tiers' new empty buckets seeded from the
+     bounds' growth, and each touched (tier, source) merges its touched
+     (source, block) files with pyarrow and publishes them through
      ``checkpoint.publish_units``. The Gorilla/delta-of-delta blocks of
      the 5m files it rewrote are re-encoded from the merged rows it holds
      (``compression.encode_blocks_local``) and their directories
@@ -58,6 +60,13 @@ refresh). A refresh with a carry tail runs two Spark jobs:
      start costs seconds where the encode costs milliseconds, so no step
      of a refresh starts a Python worker;
   7. lineage rows appended to the same manifest.
+
+Every row of the delta passes through the driver: the collect is bounded
+by ``spark.driver.maxResultSize`` (Spark's default is 1g, which
+session.py leaves as it is), and a backfill beyond that bound is a
+rebuild (plans/rollup_job.py), not a refresh. The collect holds about 40
+bytes of Arrow per delta row (README, "The daily refresh merges on the
+driver").
 
 The job reads its own datasets (carry tail, tier partitions) with their
 schema pinned, and runs with AQE off and its one shuffle sized before any
@@ -84,6 +93,7 @@ import os
 import shutil
 import sys
 import time
+import uuid
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -107,9 +117,6 @@ INPUT_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType()),
     ]
 )
-# where the prepared delta waits for the refusals: a dir that no reader of
-# prepared/ lists, and that Spark's readers skip (a leading "_")
-STAGING = "_prepared_staging"
 # the prepare's shuffle: one task per this many bytes of delta, as its plan
 # estimates them
 BYTES_PER_TASK = 128 << 20
@@ -309,13 +316,7 @@ def absorb(
     # a refresh moves O(delta) rows: AQE's re-planning would add a job per
     # exchange to an op whose cost is fixed cost
     with scoped_conf(
-        spark,
-        {
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": parts,
-            # INT64 times, as the build and the refresh's pyarrow writes store
-            "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
-        },
+        spark, {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": parts}
     ):
         return _refresh(
             spark, out, delta_df, corpus, fingerprint, manifest, old_bounds, t_start
@@ -382,14 +383,8 @@ def _refresh(
     from preprocessor_spark.arrowops import group_by
     from preprocessor_spark.operators import Normalizer, Unbiaser
     from preprocessor_spark.params import load_params
-    from preprocessor_spark.rollup.incremental import IncrementalRollup
-    from preprocessor_spark.rollup.tiers import (
-        DEFAULT_TIERS,
-        RollupTree,
-        algebraic_aggs,
-        duration_seconds,
-        epoch_floor,
-    )
+    from preprocessor_spark.rollup.incremental import IncrementalRollup, fact_partials
+    from preprocessor_spark.rollup.tiers import DEFAULT_TIERS, RollupTree, duration_seconds
     from preprocessor_spark.session import class_archive
 
     nparams = load_params(os.path.join(out, "norm_params.json"))
@@ -410,7 +405,7 @@ def _refresh(
     # -- one MA-unbias pass over carry tail ∪ delta -----------------------
     # tails are raw rows: z-scoring them with the SAME params yields exactly
     # the values the original prepared store holds for them
-    carry = F.col("__carry")
+    carry, nxt = F.col("__carry"), F.col("__next")
     rows = tail.select(*TAIL_COLS, F.lit(True).alias("__carry")).unionByName(
         delta.select(*TAIL_COLS, F.lit(False).alias("__carry"))
     )
@@ -427,142 +422,130 @@ def _refresh(
     # the order the unbias window sorts by: the flags share its sort
     order = Window.partitionBy("source").orderBy("ts", "doc_id")
     whole = order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    marked = (
-        unb.transform(normed)
-        .select(
-            *TAIL_COLS,
-            "n_tok_z",
-            "__carry",
-            epoch_seconds("ts").alias("tss"),
-            # the seam flag: a delta row followed by a carry row sorts
-            # before the series' last absorbed row
-            (~carry & F.coalesce(F.lead(carry).over(order), F.lit(False))).alias("__late"),
-            # each source's last w−1 rows: the next carry tail
-            (
-                F.row_number().over(order)
-                > F.count(F.lit(1)).over(whole) - (MA_WINDOW - 1)
-            ).alias("__next"),
-        )
-        .cache()  # read by both jobs: the staged write and the collect
+    marked = unb.transform(normed).select(
+        *TAIL_COLS,
+        "n_tok_z",
+        "__carry",
+        epoch_seconds("ts").alias("tss"),
+        # the seam flag: a delta row followed by a carry row sorts
+        # before the series' last absorbed row
+        (~carry & F.coalesce(F.lead(carry).over(order), F.lit(False))).alias("__late"),
+        # each source's last w−1 rows: the next carry tail
+        (
+            F.row_number().over(order)
+            > F.count(F.lit(1)).over(whole) - (MA_WINDOW - 1)
+        ).alias("__next"),
     )
-    step0 = duration_seconds(DEFAULT_TIERS[0].duration)
-    facts = marked.filter(~carry)
-    partials = facts.groupBy(
-        "source", epoch_floor(F.col("tss"), step0).alias("bucket_epoch")
-    ).agg(
-        *algebraic_aggs(F.col("n_tok_z")),
-        F.count(F.lit(1)).alias("rows"),
-        F.min("tss").alias("t_lo"),
-        F.max("tss").alias("t_hi"),
-        F.max("__late").alias("late"),
+    # the refresh's one Spark job: every row of the pass, its raw columns
+    # kept only where a carry tail needs them
+    t0 = time.perf_counter()
+    got = marked.select(
+        "source",
+        "tss",
+        "n_tok_z",
+        "__carry",
+        "__late",
+        "__next",
+        *(F.when(carry | nxt, F.col(c)).alias(c) for c in ("ts", "doc_id", "n_tok")),
+    ).toArrow()
+    prepare_seconds = round(time.perf_counter() - t0, 3)
+    facts = got.filter(pc.invert(got["__carry"]))
+    tails = got.filter(pc.or_(got["__carry"], got["__next"]))
+
+    # -- the profile: per source, sorted by source (nulls first), the
+    # delta's rows (__late is never null: its count is the rows), its
+    # min/max tss and whether a row is behind the seam
+    prof = group_by(
+        facts, ["source"], [("__late", "count"), ("tss", "min"), ("tss", "max"), ("__late", "any")]
     )
-    tail_rows = marked.filter(carry | F.col("__next")).select(*TAIL_COLS, "__carry", "__next")
-
-    staging = os.path.join(out, STAGING)
-    try:
-        t0 = time.perf_counter()
-        # the window leaves each partition sorted by (source, ts), and so
-        # by (source, tss)
-        facts.select("tss", "source", "n_tok_z").write.mode("overwrite").parquet(staging)
-        prepare_seconds = round(time.perf_counter() - t0, 3)
-        got = (
-            partials.withColumn("__tail", F.lit(False))
-            .unionByName(tail_rows.withColumn("__tail", F.lit(True)), allowMissingColumns=True)
-            .toArrow()
-        )
-        part = got.filter(pc.invert(got["__tail"]))
-        tails = got.filter(got["__tail"])
-
-        # -- the profile: per source, sorted by source (nulls first), the
-        # delta's rows, its min/max tss and whether a row is behind the seam
-        prof = group_by(
-            part, ["source"], [("rows", "sum"), ("t_lo", "min"), ("t_hi", "max"), ("late", "any")]
-        )
-        profile = sorted(
-            zip(*(prof[c].to_pylist() for c in prof.column_names)),
-            key=lambda r: (r[0] is not None, r[0]),
-        )
-        delta_rows = sum(r[1] for r in profile)
-        if delta_rows == 0:
-            return {
-                "job": "refresh_job",
-                "delta_rows": 0,
-                "total_seconds": 0.0,
-                "class_archive": class_archive(spark),
-            }
-        no_ts = pc.sum(part.filter(pc.is_null(part["bucket_epoch"]))["rows"]).as_py()
-        if no_ts:
-            raise ValueError(
-                f"the delta has {no_ts} rows with a null ts: a row without a "
-                "time has no bucket and no place in its series' order"
-            )
-        extent = [r[:4] for r in profile]
-        if fingerprint is None:
-            fingerprint = hashlib.sha256(
-                json.dumps([[s, int(n), int(lo), int(hi)] for s, n, lo, hi in extent]).encode()
-            ).hexdigest()[:16]
-            _refuse_applied(manifest, fingerprint)
-
-        # -- append-only seam validation (see module docstring) ----------
-        old_max = {r[0]: int(r[-1]) for r in old_bounds}
-        stale = {
-            s: (lo, old_max[s])
-            for s, _n, lo, _hi, late in profile
-            if s in old_max and (late or lo < old_max[s])
+    profile = sorted(
+        zip(*(prof[c].to_pylist() for c in prof.column_names)),
+        key=lambda r: (r[0] is not None, r[0]),
+    )
+    delta_rows = facts.num_rows
+    if delta_rows == 0:
+        return {
+            "job": "refresh_job",
+            "delta_rows": 0,
+            "total_seconds": 0.0,
+            "class_archive": class_archive(spark),
         }
-        if stale:
-            raise ValueError(
-                "delta contains rows that sort BEFORE the existing series "
-                f"edge in (ts, doc_id) order for {sorted(stale)} (delta min vs "
-                f"stored max epoch: {stale}); the MA-unbias continuation is "
-                "order-dependent and cannot absorb interior late data — re-run "
-                "rollup_job over the affected range instead (the tier merge "
-                "itself would be fine; the prepared series would not)"
-            )
-        # Tail-at-edge validation: the carry rows MUST be the last rows of
-        # the absorbed series, i.e. per-source max(ts) == the stored bounds
-        # edge. Catches a tail left stale by a fresh rollup_job rebuild into
-        # the same output dir, and a bootstrap from an --input that
-        # predates already absorbed deltas (e.g. after a crashed swap
-        # destroyed the tail) — either would silently seed the MA seam with
-        # wrong predecessors.
-        carried = tails.filter(tails["__carry"])
-        edge = group_by(
-            pa.table({"source": carried["source"], "us": carried["ts"].cast(pa.int64())}),
-            ["source"],
-            [("us", "max")],
+    no_ts = facts["tss"].null_count
+    if no_ts:
+        raise ValueError(
+            f"the delta has {no_ts} rows with a null ts: a row without a "
+            "time has no bucket and no place in its series' order"
         )
-        tail_edge = {
-            s: us // 1_000_000
-            for s, us in zip(edge["source"].to_pylist(), edge["us_max"].to_pylist())
-        }
-        edge_mismatch = {
-            r[0]: (tail_edge.get(r[0]), int(r[-1]))
-            for r in old_bounds
-            if tail_edge.get(r[0]) != int(r[-1])
-        }
-        if edge_mismatch:
-            raise ValueError(
-                "unbias carry tail does not sit at the stored series edge for "
-                f"{sorted(edge_mismatch)} (tail max vs series_bounds.json max "
-                f"epoch: {dict(sorted(edge_mismatch.items()))}); the tail is "
-                "stale (fresh rebuild into this output dir?) or bootstrapped "
-                "from a corpus that predates absorbed deltas — rebuild with "
-                "rollup_job, or restore the matching unbias tail, before "
-                "refreshing"
-            )
+    extent = [r[:4] for r in profile]
+    if fingerprint is None:
+        fingerprint = hashlib.sha256(
+            json.dumps([[s, int(n), int(lo), int(hi)] for s, n, lo, hi in extent]).encode()
+        ).hexdigest()[:16]
+        _refuse_applied(manifest, fingerprint)
 
-        # first mutation of the output dir — the crash-detection mark goes
-        # in immediately before it (see _refuse_applied)
-        manifest.mark("refresh_delta_started", fingerprint, rows=delta_rows)
-        prepared_path = os.path.join(out, "prepared")
-        os.makedirs(prepared_path, exist_ok=True)
-        for name in sorted(os.listdir(staging)):
-            if name.startswith(("part-", ".part-")):
-                os.replace(os.path.join(staging, name), os.path.join(prepared_path, name))
-    finally:
-        marked.unpersist()
-        shutil.rmtree(staging, ignore_errors=True)
+    # -- append-only seam validation (see module docstring) --------------
+    old_max = {r[0]: int(r[-1]) for r in old_bounds}
+    stale = {
+        s: (lo, old_max[s])
+        for s, _n, lo, _hi, late in profile
+        if s in old_max and (late or lo < old_max[s])
+    }
+    if stale:
+        raise ValueError(
+            "delta contains rows that sort BEFORE the existing series "
+            f"edge in (ts, doc_id) order for {sorted(stale)} (delta min vs "
+            f"stored max epoch: {stale}); the MA-unbias continuation is "
+            "order-dependent and cannot absorb interior late data — re-run "
+            "rollup_job over the affected range instead (the tier merge "
+            "itself would be fine; the prepared series would not)"
+        )
+    # Tail-at-edge validation: the carry rows MUST be the last rows of the
+    # absorbed series, i.e. per-source max(ts) == the stored bounds edge.
+    # Catches a tail left stale by a fresh rollup_job rebuild into the same
+    # output dir, and a bootstrap from an --input that predates already
+    # absorbed deltas (e.g. after a crashed swap destroyed the tail) —
+    # either would silently seed the MA seam with wrong predecessors.
+    carried = tails.filter(tails["__carry"])
+    edge = group_by(
+        pa.table({"source": carried["source"], "us": carried["ts"].cast(pa.int64())}),
+        ["source"],
+        [("us", "max")],
+    )
+    tail_edge = {
+        s: us // 1_000_000
+        for s, us in zip(edge["source"].to_pylist(), edge["us_max"].to_pylist())
+    }
+    edge_mismatch = {
+        r[0]: (tail_edge.get(r[0]), int(r[-1]))
+        for r in old_bounds
+        if tail_edge.get(r[0]) != int(r[-1])
+    }
+    if edge_mismatch:
+        raise ValueError(
+            "unbias carry tail does not sit at the stored series edge for "
+            f"{sorted(edge_mismatch)} (tail max vs series_bounds.json max "
+            f"epoch: {dict(sorted(edge_mismatch.items()))}); the tail is "
+            "stale (fresh rebuild into this output dir?) or bootstrapped "
+            "from a corpus that predates absorbed deltas — rebuild with "
+            "rollup_job, or restore the matching unbias tail, before "
+            "refreshing"
+        )
+
+    # first mutation of the output dir — the crash-detection mark goes in
+    # immediately before it (see _refuse_applied)
+    manifest.mark("refresh_delta_started", fingerprint, rows=delta_rows)
+    # the prepared delta: one file, written under a name that Spark's
+    # readers skip ("."), then renamed into place. The window left each
+    # source's rows contiguous and sorted by (ts, doc_id), and so by tss.
+    prepared_path = os.path.join(out, "prepared")
+    os.makedirs(prepared_path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    pq.write_table(
+        facts.select(["tss", "source", "n_tok_z"]),
+        os.path.join(prepared_path, "." + name),
+        store_schema=False,
+    )
+    os.replace(os.path.join(prepared_path, "." + name), os.path.join(prepared_path, name))
 
     # next refresh's carry tail: the last w−1 raw rows per source across
     # (old tail ∪ delta), swapped in with two atomic renames, never an
@@ -587,7 +570,9 @@ def _refresh(
     t0 = time.perf_counter()
     tree = RollupTree(series_cols=["source"], value_col="n_tok_z", tiers=DEFAULT_TIERS)
     bounds = [(s, lo, hi) for s, _n, lo, hi in extent]
-    tier_metrics = IncrementalRollup(tree, out).refresh(part, bounds)
+    step0 = duration_seconds(DEFAULT_TIERS[0].duration)
+    partials = fact_partials(facts, ["source"], step0)
+    tier_metrics = IncrementalRollup(tree, out).refresh(partials, bounds)
     refresh_seconds = round(time.perf_counter() - t0, 3)
     manifest.mark("refresh_delta", fingerprint, rows=delta_rows)
     total = round(time.perf_counter() - t_start, 3)

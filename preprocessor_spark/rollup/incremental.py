@@ -9,8 +9,8 @@ rollup/tiers.py) is closed under MERGE for insert-only deltas: every
 statistic of (old ∪ delta) is a fold of the old row's statistics with the
 delta partial's, per (series, bucket). So a refresh is
 
-    delta facts ──Spark epoch aggregate──▶ finest-tier partials      (O(|delta|))
-        one Arrow collect, by the caller (plans/refresh_job; epoch_partials)
+    delta facts ──fold on the driver──▶ finest-tier partials         (O(|delta|))
+        the caller's one Arrow collect (plans/refresh_job), fact_partials
     partials ∪ extension seeds ──floor + fold──▶ every tier's partials (driver)
     per touched (tier, series): its touched block files ──fold──▶ merged
         blocks ──pyarrow──▶ temp dir ──checkpoint.publish_units──▶ tree
@@ -329,6 +329,34 @@ def partial_rows(rows: pa.Table, series_cols: list[str]) -> pa.Table:
     return rows.select(schema.names).cast(schema)
 
 
+def fact_partials(rows: pa.Table, series_cols: list[str], step: int) -> pa.Table:
+    """:func:`epoch_partials` on the driver: ``rows`` in the prepared shape
+    plans/rollup_job.py writes (series columns, ``tss`` epoch seconds,
+    ``n_tok_z``) folded per (series, bucket of period ``step``) into
+    series_cols + :data:`EPOCH_ROWS`, one row per (series, bucket) that
+    holds a row. n_points counts the non-null values and the sums, min
+    and max skip nulls, as ``tiers.algebraic_aggs`` does; the bucket key
+    is the floor of the epoch (``tiers.epoch_floor``), before 1970 as
+    after, and a null epoch or series key forms a group of its own, as in
+    a Spark aggregate."""
+    epoch = rows["tss"]
+    e = pc.fill_null(epoch, 0).to_numpy()
+    v = rows["n_tok_z"].cast(pa.float64())
+    table = pa.table(
+        {
+            **{c: rows[c] for c in series_cols},
+            "bucket_epoch": pa.array(e - e % int(step), mask=pc.is_null(epoch).to_numpy()),
+            "__v": v,
+            "__sq": pc.multiply(v, v),
+        }
+    )
+    aggs = [("__v", "count"), ("__v", "sum"), ("__sq", "sum"), ("__v", "min"), ("__v", "max")]
+    keys = [*series_cols, "bucket_epoch"]
+    out = group_by(table, keys, aggs)
+    stats = {name: out[f"{c}_{fn}"] for name, (c, fn) in zip(ALGEBRAIC, aggs)}
+    return partial_rows(pa.table({**{k: out[k] for k in keys}, **stats}), series_cols)
+
+
 def epoch_partials(tree: RollupTree, facts: DataFrame, step: int) -> pa.Table:
     """The tree's finest-tier aggregate of ``facts`` (the prepared shape:
     series columns, ``tss`` epoch seconds, the value column) at period
@@ -446,11 +474,11 @@ class IncrementalRollup:
         """Refresh every tier from one delta of NEW facts, given as
         ``partials``: their finest-tier aggregate collected as Arrow, one
         row per non-empty (series, bucket) with series_cols and
-        :data:`EPOCH_ROWS` (plans/refresh_job collects it with its
-        profile's lanes beside it; :func:`epoch_partials` gives it for any
-        facts in the prepared shape). ``bounds`` is the delta's per-series
+        :data:`EPOCH_ROWS` (plans/refresh_job folds it from its collected
+        delta rows with :func:`fact_partials`; :func:`epoch_partials` is
+        the same aggregate in Spark). ``bounds`` is the delta's per-series
         (*series, t0, t1) extent in epoch seconds (plans/refresh_job gets
-        it from the same collect).
+        it from the same rows).
 
         The bounds sidecar is extended by ``bounds``, and the tier-0
         buckets the extension adds become seed rows of every tier's

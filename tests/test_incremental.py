@@ -8,6 +8,9 @@ delta extends a series' time range."""
 import os
 
 import pytest
+from conftest import SHIFT_1969_S
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from preprocessor_spark.rollup.incremental import (
@@ -355,3 +358,75 @@ def test_read_touched_partitions_uri_store_reads_existing_partitions(
     _assert_tier_equal(
         got.sort_values(["source", "bucket_start"]).reset_index(drop=True), _tiers_pdf(want)
     )
+
+
+_FACTS_BASE = dict(seed=0, rows=2_000, sources=3, null_frac=0.3, null_source=True,
+                   shift_s=SHIFT_1969_S, sub_second=True)
+_facts_cases = st.fixed_dictionaries(
+    {
+        "seed": st.integers(0, 2**16),
+        "rows": st.integers(1, 3_000),
+        "sources": st.integers(1, 4),
+        "null_frac": st.sampled_from([0.0, 0.3, 1.0]),
+        "null_source": st.booleans(),
+        "shift_s": st.sampled_from([0, SHIFT_1969_S]),
+        "sub_second": st.booleans(),
+    }
+)
+
+
+@settings(max_examples=4, derandomize=True, deadline=None)
+@given(case=_facts_cases)
+@example(case=_FACTS_BASE)
+@example(case={**_FACTS_BASE, "shift_s": 0, "null_source": False, "null_frac": 0.0})
+def test_fact_partials_equals_spark_aggregate(spark, case):
+    """The driver's fold of prepared rows (``fact_partials``) gives the 5m
+    partials Spark's aggregate gives (``algebraic_aggs`` through
+    ``base_aggregate_with_spine_epoch`` and ``partial_rows``): the same
+    keys, n_points and null places, the float statistics within 1e-12.
+    The facts hold null values, a bucket whose values are all null, a
+    null source and sub-second times before 1970, each ``tss`` the floor
+    of its micros as the refresh stores it."""
+    import numpy as np
+    import pyarrow as pa
+
+    from preprocessor_spark.rollup.incremental import fact_partials
+    from preprocessor_spark.rollup.tiers import epoch_seconds
+
+    rng = np.random.default_rng(case["seed"])
+    n = case["rows"]
+    us = 1_577_836_800_000_000 - case["shift_s"] * 1_000_000 + rng.integers(0, 86_400, n) * (
+        1_000_000
+    )
+    if case["sub_second"]:
+        us = us + rng.integers(0, 1_000_000, n)
+    names = [f"s{i}" for i in range(case["sources"])]
+    source = [names[k] for k in rng.integers(0, len(names), n)]
+    if case["null_source"]:
+        source = [None if rng.random() < 0.1 else s for s in source]
+    v = [None if rng.random() < case["null_frac"] else float(x) for x in rng.normal(0, 2, n)]
+    # a bucket of s0 a day before the rest, with null values only
+    lone = int(us.min()) - 86_400_000_000
+    rows = list(zip(source, us.tolist(), v)) + [("s0", lone + k, None) for k in (0, 7, 999_999)]
+    df = spark.createDataFrame(rows, "source string, us long, n_tok_z double").select(
+        "source", epoch_seconds(F.timestamp_micros("us")).alias("tss"), "n_tok_z"
+    )
+    step = duration_seconds("5 minutes")
+    tree = RollupTree(series_cols=["source"], value_col="n_tok_z")
+    want = epoch_partials(tree, df, step)
+    got = fact_partials(df.toArrow(), ["source"], step)
+    assert got.schema == want.schema
+
+    def ordered(t):
+        return t.sort_by([("source", "ascending"), ("bucket_epoch", "ascending")]).to_pydict()
+
+    g, w = ordered(got), ordered(want)
+    for c in ("source", "bucket_epoch", "n_points"):
+        assert g[c] == w[c], c
+    assert (lone // 1_000_000 // step * step, 0) in zip(g["bucket_epoch"], g["n_points"])
+    for c in ALGEBRAIC[1:]:
+        a = np.array(g[c], dtype=float)
+        b = np.array(w[c], dtype=float)
+        assert (np.isnan(a) == np.isnan(b)).all(), c
+        m = ~np.isnan(b)
+        assert (np.abs(a[m] - b[m]) <= 1e-12 * np.maximum(1.0, np.abs(b[m]))).all(), c

@@ -129,6 +129,34 @@ def test_prepared_series_carries_ma_seam_exactly(spark, setup):
     _assert_prepared_equal(spark, out, truth)
 
 
+def test_resume_reads_the_refreshed_prepared_series(spark, setup, tmp_path):
+    """``prepared/`` after two refreshes holds the build's Spark files and
+    one pyarrow file per refresh. ``rollup_job --resume`` reads it under
+    the build's pinned prepared schema (``tss`` long, ``source``,
+    ``n_tok_z`` double) and, with its tier marks rotated away, rebuilds
+    from it the tiers and blocks of a full-corpus run."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    paths, out, truth, _ = setup
+    tree = str(tmp_path / "tree")
+    shutil.copytree(out, tree)
+    written = [
+        p for p in glob.glob(os.path.join(tree, "prepared", "part-*.parquet"))
+        if "-c000" not in p  # Spark's writer names its files part-<n>-<uuid>-c000
+    ]
+    assert len(written) == 2
+    for p in written:
+        schema = pq.read_schema(p)
+        assert schema.names == ["tss", "source", "n_tok_z"]
+        assert schema.types == [pa.int64(), pa.string(), pa.float64()]
+    os.replace(os.path.join(tree, "manifest.jsonl"), os.path.join(tree, "manifest.old"))
+    res = rollup_job.main(["--input", paths["full"], "--output", tree, "--resume"])
+    assert res["prepare_seconds"] is None  # the prepared series was read, not rebuilt
+    _assert_tiers_equal(spark, tree, truth)
+    _assert_rows_equal(_decoded_blocks(spark, tree), _decoded_blocks(spark, truth), "blocks_5m")
+
+
 def test_refresh_metrics_and_lineage(spark, setup):
     _, out, _, (_, r1, r2) = setup
     assert r1["tail_bootstrap"] is True
@@ -154,9 +182,13 @@ def test_refresh_metrics_and_lineage(spark, setup):
 
 def _assert_refused_unchanged(tree, before):
     """A refused refresh leaves every file of ``tree`` (prepared series,
-    carry tail, manifest, tiers, blocks) as it was, and no staging dir."""
-    assert _block_files(tree) == before
-    assert not os.path.exists(os.path.join(tree, refresh_job.STAGING))
+    carry tail, manifest, tiers, blocks) as it was: ``prepared/`` byte for
+    byte, with no temp file of a prepared write in it."""
+    after = _block_files(tree)
+    # the same names, bytes and times: no part file and no temp file of a
+    # prepared write was added
+    assert _in("prepared", after) == _in("prepared", before)
+    assert after == before
 
 
 def test_double_apply_is_refused(spark, setup):
@@ -336,14 +368,14 @@ def test_delta_input_contract(spark, setup, tmp_path):
             refresh_job.main(["--output", out, "--delta-input", path])
 
 
-# A refresh of the setup's output costs exactly this many Spark jobs: the
-# staged write of the prepared delta, and ONE Arrow collect of the same
-# cached unbias pass that carries the delta's 5m partials, the profile's
-# lanes, the seam flags and the carry-tail rows. The delta is read under
-# a pinned schema (no inference job); the refusals, the carry-tail write,
-# the tier merge, its writes and the block encode run on the driver after
-# that collect, and start no Spark job.
-REFRESH_SPARK_JOBS = 2
+# A refresh of the setup's output costs exactly this many Spark jobs: ONE
+# Arrow collect of the unbias pass over carry tail ∪ delta, whose rows
+# carry the seam and next-tail flags. The delta is read under a pinned
+# schema (no inference job); the 5m partials, the profile, the refusals,
+# the prepared write, the carry-tail write, the tier merge, its writes and
+# the block encode run on the driver after that collect, and start no
+# Spark job.
+REFRESH_SPARK_JOBS = 1
 
 
 def _block_files(root):
