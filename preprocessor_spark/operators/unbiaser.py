@@ -7,7 +7,9 @@ Reference semantics (app/plugins/plugin_unbiaser.py):
     here it is one native window expression
     ``avg(c) OVER (PARTITION BY series ORDER BY t ROWS BETWEEN w-1 PRECEDING
     AND CURRENT ROW)`` — exact match including partial leading windows,
-    fully codegen'd, no Python.
+    fully codegen'd, no Python. ``Unbiaser.ma_local`` is the same window
+    over an Arrow table on the driver, bit for bit: the incremental refresh
+    (plans/refresh_job.py) runs it over a delta and its carry rows.
   * EMA (``:112-129``): ``out = x − x.ewm(alpha=α, adjust=True).mean()``.
     The adjust=True recurrence has no native Spark expression, and partial
     finite-window approximations are not bit-exact — so the EMA runs pandas'
@@ -28,11 +30,27 @@ from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 if TYPE_CHECKING:
     from preprocessor_spark.operators.positions import TimeProfile
+
+
+def series_starts(table: pa.Table, series_cols: list[str]) -> np.ndarray:
+    """Whether each row of ``table``, sorted by ``series_cols``, is the
+    first of its series; a null key is one series, as in a Spark window."""
+    n = table.num_rows
+    starts = np.zeros(n, bool)
+    starts[:1] = True
+    for c in series_cols:
+        prev, cur = table[c][:-1], table[c][1:]
+        same = pc.fill_null(pc.equal(prev, cur), False)
+        same = pc.or_(same, pc.and_(pc.is_null(prev), pc.is_null(cur)))
+        starts[1:] |= ~same.to_numpy(zero_copy_only=False)
+    return starts
 
 
 def ewm_carry_sums(x, mask, beta, cin_num, cin_den):
@@ -145,6 +163,45 @@ class Unbiaser:
         for c in self._values(df):
             out = out.withColumn(c, F.col(c) - F.avg(c).over(w))
         return out
+
+    def ma_local(self, table: pa.Table) -> pa.Table:
+        """:meth:`_ma` on the driver, over an Arrow table: its rows sorted
+        in the window's order, (series, time, tiebreaks) ascending with
+        nulls first as Spark sorts them, each of ``value_cols`` (which must
+        be named) replaced by its residual as float64.
+
+        Bit-identical to Spark's window: Spark's sliding ``avg`` frame sums
+        its rows oldest first from 0.0, a null adding 0.0, and divides by
+        the non-null count (null when there is none), and so does this; a
+        row's window holds at most the last ``window_size`` rows of its
+        series."""
+        keys = [*self.series_cols, self.time_col, *self.tiebreak_cols]
+        table = table.take(
+            pc.sort_indices(
+                table, [(k, "ascending") for k in keys], null_placement="at_start"
+            )
+        )
+        n = table.num_rows
+        at = np.arange(n)
+        starts = series_starts(table, self.series_cols)
+        first = np.maximum.accumulate(np.where(starts, at, 0))
+        for c in self.value_cols:
+            v = table[c].cast(pa.float64())
+            valid = pc.is_valid(v).to_numpy(zero_copy_only=False)
+            x = pc.fill_null(v, 0.0).to_numpy(zero_copy_only=False)
+            total, count = np.zeros(n), np.zeros(n, np.int64)
+            for back in range(self.window_size - 1, -1, -1):
+                j = at - back
+                take = (j >= first) & valid[np.maximum(j, 0)]
+                total = total + np.where(take, x[np.maximum(j, 0)], 0.0)
+                count += take
+            resid = x - total / np.maximum(count, 1)
+            table = table.set_column(
+                table.schema.get_field_index(c),
+                pa.field(c, pa.float64()),
+                pa.array(resid, mask=~valid),
+            )
+        return table
 
     def _ma_chunked(
         self, df: DataFrame, profile: TimeProfile | None = None

@@ -4,48 +4,47 @@ existing rollup_job output, touching O(|delta|) data.
     spark-submit --py-files engine.zip preprocessor_spark/plans/refresh_job.py \
         --output /path/out --delta-input /path/new_sequences [--input /path/corpus]
 
-``absorb`` runs the steps below on a delta DataFrame. ``main`` is its
-command line: it reads the delta under the build's input contract
-(:data:`INPUT_SCHEMA`, checked against one parquet footer on the driver),
-so no job infers its schema. streaming/rollup_stream.py calls ``absorb``
-once per micro-batch.
+``absorb`` runs the steps below on a delta, an Arrow table of its
+:data:`TAIL_COLS` (a stream micro-batch, a DataFrame, is collected into
+one). ``main`` is its command line: it checks the delta against the
+build's input contract (:data:`INPUT_SCHEMA`, one parquet footer) and
+reads it with pyarrow on the driver. streaming/rollup_stream.py calls
+``absorb`` once per micro-batch.
 
 Continues every stage of plans/rollup_job.py on the delta ONLY, under the
 original run's persisted decisions (the production contract: params are
 fitted once and versioned — a param re-fit is a rebuild event, not a
-refresh). A refresh with a carry tail runs ONE Spark job:
+refresh). A refresh with a carry tail runs NO Spark job:
 
-  0. refusals that need no Spark job come first: a tree whose tier files
-     or blocks predate the (source, block) layout (migrating it would
+  0. refusals that need no data come first: a tree whose tier files or
+     blocks predate the (source, block) layout (migrating it would
      rewrite the whole history), a first refresh without the corpus to
      bootstrap its carry tail from, and, when the caller names the
      delta's fingerprint (a stream micro-batch), a delta the manifest
-     marks as started or absorbed;
-  1. ONE MA-unbias pass over carry tail ∪ delta, z-scored under the
-     persisted params. The first delta rows' trailing windows span the
-     seam, so each source's last w−1 historical rows (the "carry tail")
-     run through the identical window and are dropped after it —
-     residuals equal a full-corpus recompute exactly. The FIRST refresh
-     bootstraps the tail from the original corpus (--input) with a max-ts
-     + widening-margin scan, the only O(corpus) touch, paid once. The
-     window's (ts, doc_id) order also flags each source's last w−1 rows
-     (its row number against a whole-partition count: the next carry
-     tail) and each delta row whose successor is a carry row (the seam
+     marks as started or absorbed. A micro-batch is collected after them;
+  1. the carry tail read with pyarrow: each source's last w−1 historical
+     rows. The FIRST refresh bootstraps it from the original corpus
+     (--input) with a max-ts + widening-margin scan in Spark
+     (:func:`source_tails`), the only O(corpus) touch, paid once;
+  2. ONE MA-unbias pass over carry tail ∪ delta on the driver
+     (``Unbiaser.ma_local``, the twin of the Spark window the build
+     runs), z-scored under the persisted params. The first delta rows'
+     trailing windows span the seam, so the carry rows run through the
+     identical window and are dropped after it: residuals equal a
+     full-corpus recompute bit for bit. The pass's (source, ts, doc_id)
+     order also flags each source's last w−1 rows (the next carry tail)
+     and each delta row followed by a carry row of its source (the seam
      flag: a row that sorts before the series edge);
-  2. the Spark job: ONE ``toArrow`` collect of that pass. Every row
-     carries ``source``, epoch-second ``tss``, ``n_tok_z`` and the carry,
-     seam and next-tail flags; ``ts``, ``doc_id`` and ``n_tok`` are kept
-     only on the carry and next-tail rows, and are null on the others;
-  3. on the driver, from the delta's rows of that collect: the
-     per-source profile (rows and time bounds, one Arrow group-by), the
-     double-apply fingerprint and every refusal — late data, a stale
-     carry tail, a null ts — before the ``refresh_delta_started`` mark. A
-     refusal leaves every file of the tree as it was;
+  3. from the delta's rows: the per-source profile (rows and time bounds,
+     one Arrow group-by), the double-apply fingerprint and every refusal
+     — late data, a stale carry tail, a null ts — before the
+     ``refresh_delta_started`` mark. A refusal leaves every file of the
+     tree as it was;
   4. the mark; the prepared delta rows ``(tss, source, n_tok_z)`` are
      written into ``prepared/`` as one ``part-<uuid>.parquet``, under a
      name Spark's readers skip and then renamed, and the next carry tail
      is written with pyarrow and swapped in;
-  5. the delta's 5m partials folded from its rows on the driver
+  5. the delta's 5m partials folded from its rows
      (``incremental.fact_partials``: per (source, bucket) the non-null
      count, the sum, the sum of squares, the min and the max);
   6. every tier refreshed in place via rollup/incremental.py from those
@@ -61,18 +60,13 @@ refresh). A refresh with a carry tail runs ONE Spark job:
      of a refresh starts a Python worker;
   7. lineage rows appended to the same manifest.
 
-Every row of the delta passes through the driver: the collect is bounded
-by ``spark.driver.maxResultSize`` (Spark's default is 1g, which
-session.py leaves as it is), and a backfill beyond that bound is a
-rebuild (plans/rollup_job.py), not a refresh. The collect holds about 40
-bytes of Arrow per delta row (README, "The daily refresh merges on the
-driver").
-
-The job reads its own datasets (carry tail, tier partitions) with their
-schema pinned, and runs with AQE off and its one shuffle sized before any
-job from what the driver holds: a refresh moves O(delta) rows, so
-schema-inference jobs and AQE's per-exchange re-planning jobs would be
-most of its Spark jobs.
+Every row of the delta passes through the driver. Before it reads any
+row, ``read_delta`` sums the uncompressed bytes of the read columns from
+the delta's parquet footers and refuses a delta above
+``spark.driver.maxResultSize`` (Spark's default is 1g, which session.py
+leaves as it is), the bound a collect of it would hit: a backfill beyond
+it is a rebuild (plans/rollup_job.py), not a refresh. A micro-batch's
+collect is bounded by the same setting.
 
 Append-only seam contract: the MA continuation is only exact when every
 delta row sorts after its source's previous last row in (ts, doc_id)
@@ -95,8 +89,10 @@ import sys
 import time
 import uuid
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
@@ -104,7 +100,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from preprocessor_spark.plans.rollup_job import MA_WINDOW, TAIL_NAME
-from preprocessor_spark.rollup.tiers import epoch_seconds
 
 TAIL_COLS = ["source", "ts", "doc_id", "n_tok"]
 # the build's input (synth.token_sequences), and so a delta's
@@ -117,9 +112,22 @@ INPUT_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType()),
     ]
 )
-# the prepare's shuffle: one task per this many bytes of delta, as its plan
-# estimates them
-BYTES_PER_TASK = 128 << 20
+# the carry tail and the delta's read columns on the driver, as Spark's
+# toArrow gives them in the session's UTC
+TAIL_SCHEMA = pa.schema(
+    [
+        pa.field("source", pa.string()),
+        pa.field("ts", pa.timestamp("us", "UTC")),
+        pa.field("doc_id", pa.string()),
+        pa.field("n_tok", pa.int32()),
+    ]
+)
+# Spark's default spark.sql.execution.arrow.maxRecordsPerBatch
+ARROW_BATCH_ROWS = 10_000
+# INT96 times (Spark's legacy timestamp type) read as µs, not pyarrow's ns
+PARQUET = ds.ParquetFileFormat(
+    read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+)
 
 
 def top_rows(
@@ -179,34 +187,40 @@ def source_tails(
     )
 
 
-def read_delta(spark, path: str) -> DataFrame:
-    """The delta at ``path`` under :data:`INPUT_SCHEMA`, without a
-    schema-inference job. The footer of its first data file, read on the
-    driver, must hold every column of the contract as the type Spark
-    reads it as, or the delta is refused: a pinned schema would read a
-    missing column as nulls. A column may instead be a hive partition
-    directory (``source=<s>/``), whose value Spark reads as the pinned
-    type."""
+def read_delta(spark, path: str) -> pa.Table:
+    """The :data:`TAIL_COLS` of the delta at ``path`` as an Arrow table in
+    :data:`TAIL_SCHEMA`, read with pyarrow on the driver, equal to what
+    ``spark.read.schema(INPUT_SCHEMA).parquet(path)`` reads.
+
+    The footer of its first data file must hold every column of the
+    contract as the type Spark reads it as, or the delta is refused: a
+    pinned schema would read a missing column as nulls. A column may
+    instead be a hive partition directory (``source=<s>/``), read as Spark
+    reads it: URI-decoded, ``__HIVE_DEFAULT_PARTITION__`` as null. Before
+    any row is read, the uncompressed bytes of the read columns, summed
+    from every footer, must fit ``spark.driver.maxResultSize``: every row
+    of a refresh passes through the driver."""
     from pyspark.sql.pandas.types import from_arrow_type
 
     if "://" in path:
         fs, base = pafs.FileSystem.from_uri(path)
     else:
         fs, base = pafs.LocalFileSystem(), os.path.abspath(path)
-    first, dirs = base, []
+    files, dirs = [base], []
     if fs.get_file_info(base).type != pafs.FileType.File:
         found = fs.get_file_info(pafs.FileSelector(base, recursive=True))
         # each file as its path's parts under base; Spark's reader skips
         # every part that starts with "_" or "."
-        files = [
+        parts = [
             os.path.relpath(i.path, base).split("/")
             for i in found
             if i.type == pafs.FileType.File
         ]
-        data = sorted(f for f in files if not any(p.startswith(("_", ".")) for p in f))
+        data = sorted(f for f in parts if not any(p.startswith(("_", ".")) for p in f))
         if not data:
             raise FileNotFoundError(f"no data file in the delta at {path}")
-        first, dirs = "/".join([base, *data[0]]), data[0][:-1]
+        files, dirs = ["/".join([base, *f]) for f in data], data[0][:-1]
+    first = files[0]
     footer = pq.read_schema(first, filesystem=fs)
     partitions = {d.split("=", 1)[0] for d in dirs if "=" in d}
     problems = []
@@ -229,7 +243,36 @@ def read_delta(spark, path: str) -> DataFrame:
             f"the delta at {path} does not match the refresh's input "
             f"({contract}): {'; '.join(problems)} (in {first})"
         )
-    return spark.read.schema(INPUT_SCHEMA).parquet(path)
+    hive = [f for f in TAIL_SCHEMA if f.name in partitions]
+    delta = ds.dataset(
+        files,
+        schema=TAIL_SCHEMA,
+        format=PARQUET,
+        filesystem=fs,
+        partitioning=ds.partitioning(pa.schema(hive), flavor="hive") if hive else None,
+        partition_base_dir=base,
+    )
+    size = 0
+    for frag in delta.get_fragments():
+        for i in range(frag.metadata.num_row_groups):
+            group = frag.metadata.row_group(i)
+            columns = (group.column(j) for j in range(group.num_columns))
+            size += sum(c.total_uncompressed_size for c in columns if c.path_in_schema in TAIL_COLS)
+    limit = _result_limit(spark)
+    if limit and size > limit:
+        raise ValueError(
+            f"the delta at {path} holds {size} bytes in its columns "
+            f"{TAIL_COLS}, more than spark.driver.maxResultSize ({limit} "
+            "bytes): every row of a refresh passes through the driver, so "
+            "a backfill this large is a rebuild with rollup_job, not a refresh"
+        )
+    return delta.to_table(columns=TAIL_COLS)
+
+
+def _result_limit(spark) -> int:
+    """``spark.driver.maxResultSize`` of the session in bytes (0: none)."""
+    conf = spark.sparkContext._jsc.sc().conf()
+    return conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
 
 
 def main(argv: list[str] | None = None) -> dict:
@@ -250,10 +293,7 @@ def main(argv: list[str] | None = None) -> dict:
     spark = get_spark("refresh_job", master=args.master, batch_committer_v2=True)
     spark.sparkContext.setLogLevel("ERROR")
     result = absorb(
-        spark,
-        args.output,
-        read_delta(spark, args.delta_input),
-        corpus=args.input,
+        spark, args.output, read_delta(spark, args.delta_input), corpus=args.input
     )
     print(json.dumps(result))
     return result
@@ -262,13 +302,17 @@ def main(argv: list[str] | None = None) -> dict:
 def absorb(
     spark,
     out: str,
-    delta_df: DataFrame,
+    delta: pa.Table | DataFrame,
     *,
     corpus: str | None = None,
     fingerprint: str | None = None,
 ) -> dict:
-    """Absorb ``delta_df`` into the rollup_job output ``out``: steps 0–7 of
+    """Absorb ``delta`` into the rollup_job output ``out``: steps 0–7 of
     the module docstring. Returns the job's JSON record.
+
+    ``delta`` holds :data:`TAIL_COLS` as an Arrow table (:func:`read_delta`)
+    or a DataFrame (a stream micro-batch), which is collected once with
+    ``toArrow`` after the refusals that need no data.
 
     ``corpus`` is the original corpus's path, read only by the first
     refresh of ``out`` to bootstrap the carry tail. ``fingerprint`` names
@@ -276,7 +320,6 @@ def absorb(
     delta's content extent (rows and per-source time bounds)."""
     from preprocessor_spark.rollup.checkpoint import Manifest
     from preprocessor_spark.rollup.incremental import load_bounds
-    from preprocessor_spark.session import scoped_conf
 
     t_start = time.perf_counter()
     split_params_path = os.path.join(out, "split_params.json")
@@ -292,7 +335,7 @@ def absorb(
                 f"refresh requires the original run's {what} at {path} — "
                 "run plans/rollup_job.py first"
             )
-    # -- refusals that need no Spark job: a refused replay costs none -----
+    # -- refusals that need no data: a refused replay costs no Spark job --
     manifest = Manifest(os.path.join(out, "manifest.jsonl"))
     if fingerprint is not None:
         _refuse_applied(manifest, fingerprint)
@@ -305,22 +348,10 @@ def absorb(
             f"the unbias carry tail (persisted afterwards at {tail_path})"
         )
     old_bounds = load_bounds(bounds_path)
-    # One rule sizes the prepare's shuffle, before any job, from what the
-    # driver holds: a task per BYTES_PER_TASK of delta as its plan
-    # estimates them, and no more tasks than cores or than the series the
-    # carry tail holds (one per stored series bound): every shuffle is
-    # keyed by source. A daily delta is one task, and one prepared file.
-    plan = delta_df.select(*TAIL_COLS)._jdf.queryExecution().optimizedPlan()
-    tasks = -(-int(plan.stats().sizeInBytes()) // BYTES_PER_TASK)
-    parts = max(1, min(spark.sparkContext.defaultParallelism, len(old_bounds), tasks))
-    # a refresh moves O(delta) rows: AQE's re-planning would add a job per
-    # exchange to an op whose cost is fixed cost
-    with scoped_conf(
-        spark, {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": parts}
-    ):
-        return _refresh(
-            spark, out, delta_df, corpus, fingerprint, manifest, old_bounds, t_start
-        )
+    if isinstance(delta, DataFrame):
+        delta = delta.select(*TAIL_COLS).toArrow()
+    delta = delta.select(TAIL_COLS).cast(TAIL_SCHEMA)
+    return _refresh(spark, out, delta, corpus, fingerprint, manifest, old_bounds, t_start)
 
 
 def _refuse_applied(manifest, fingerprint: str) -> None:
@@ -373,7 +404,7 @@ def _refuse_old_layout(out: str) -> None:
 def _refresh(
     spark,
     out: str,
-    delta: DataFrame,
+    delta: pa.Table,
     corpus: str | None,
     fingerprint: str | None,
     manifest,
@@ -381,37 +412,42 @@ def _refresh(
     t_start: float,
 ) -> dict:
     from preprocessor_spark.arrowops import group_by
-    from preprocessor_spark.operators import Normalizer, Unbiaser
+    from preprocessor_spark.operators import Unbiaser
+    from preprocessor_spark.operators.unbiaser import series_starts
     from preprocessor_spark.params import load_params
     from preprocessor_spark.rollup.incremental import IncrementalRollup, fact_partials
     from preprocessor_spark.rollup.tiers import DEFAULT_TIERS, RollupTree, duration_seconds
-    from preprocessor_spark.session import class_archive
+    from preprocessor_spark.session import class_archive, scoped_conf
 
-    nparams = load_params(os.path.join(out, "norm_params.json"))
+    z_params = load_params(os.path.join(out, "norm_params.json")).params["per_column"]["n_tok_z"]
     tail_path = os.path.join(out, TAIL_NAME)
     tail_bootstrap = not os.path.exists(tail_path)
+    t0 = time.perf_counter()
     if tail_bootstrap:
-        tail = source_tails(
-            spark.read.parquet(corpus).select(*TAIL_COLS),
-            ["source"],
-            "ts",
-            ["doc_id"],
-            k=MA_WINDOW - 1,
-        )
+        # AQE's re-planning would add a job per exchange of the scan
+        with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+            tail = source_tails(
+                spark.read.parquet(corpus).select(*TAIL_COLS),
+                ["source"],
+                "ts",
+                ["doc_id"],
+                k=MA_WINDOW - 1,
+            ).toArrow()
     else:
-        # the tail holds earlier deltas' rows: the delta's schema is its own
-        tail = spark.read.schema(delta.select(*TAIL_COLS).schema).parquet(tail_path)
+        tail = pq.read_table(tail_path, columns=TAIL_COLS, coerce_int96_timestamp_unit="us")
+    tail = tail.select(TAIL_COLS).cast(TAIL_SCHEMA)
 
     # -- one MA-unbias pass over carry tail ∪ delta -----------------------
     # tails are raw rows: z-scoring them with the SAME params yields exactly
-    # the values the original prepared store holds for them
-    carry, nxt = F.col("__carry"), F.col("__next")
-    rows = tail.select(*TAIL_COLS, F.lit(True).alias("__carry")).unionByName(
-        delta.select(*TAIL_COLS, F.lit(False).alias("__carry"))
+    # the values the original prepared store holds for them (the build's
+    # Normalizer.transform: (double(n_tok) − mean) / std)
+    rows = pa.concat_tables(
+        [
+            t.append_column("__carry", pa.array(np.full(t.num_rows, carry)))
+            for t, carry in ((tail, True), (delta, False))
+        ]
     )
-    normed = Normalizer(method="zscore", columns=["n_tok_z"]).transform(
-        rows.withColumn("n_tok_z", F.col("n_tok").cast("double")), nparams
-    )
+    z = pc.divide(pc.subtract(rows["n_tok"].cast(pa.float64()), z_params["mean"]), z_params["std"])
     unb = Unbiaser(
         method="ma",
         window_size=MA_WINDOW,
@@ -419,38 +455,33 @@ def _refresh(
         value_cols=["n_tok_z"],
         tiebreak_cols=["doc_id"],
     )
-    # the order the unbias window sorts by: the flags share its sort
-    order = Window.partitionBy("source").orderBy("ts", "doc_id")
-    whole = order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    marked = unb.transform(normed).select(
-        *TAIL_COLS,
-        "n_tok_z",
-        "__carry",
-        epoch_seconds("ts").alias("tss"),
-        # the seam flag: a delta row followed by a carry row sorts
-        # before the series' last absorbed row
-        (~carry & F.coalesce(F.lead(carry).over(order), F.lit(False))).alias("__late"),
-        # each source's last w−1 rows: the next carry tail
-        (
-            F.row_number().over(order)
-            > F.count(F.lit(1)).over(whole) - (MA_WINDOW - 1)
-        ).alias("__next"),
+    got = unb.ma_local(rows.append_column("n_tok_z", z))
+    # Arrow's group-by emits its groups in an order that follows its
+    # input's chunks, and the 1h/1d partials are folded from the 5m
+    # partials in that order: the rows are cut as a toArrow collect cuts
+    # them, so the bits a refresh writes do not depend on how its delta was
+    # read (a pyarrow read, a stream micro-batch's collect)
+    got = pa.Table.from_batches(got.combine_chunks().to_batches(ARROW_BATCH_ROWS))
+    # the pass's order, (source, ts, doc_id), gives the flags: each source's
+    # last w−1 rows (the next carry tail), and the seam flag of a delta row
+    # followed by a carry row of its source (it sorts before the series'
+    # last absorbed row)
+    n = got.num_rows
+    carry = got["__carry"].to_numpy(zero_copy_only=False)
+    starts = series_starts(got, ["source"])
+    firsts = np.flatnonzero(starts)
+    sizes = np.diff(np.append(firsts, n))
+    nxt = np.repeat(firsts + sizes, sizes) - np.arange(n) < MA_WINDOW
+    late = ~carry & np.append(carry[1:] & ~starts[1:], False)
+    us = got["ts"].cast(pa.int64())
+    tss = pa.array(
+        pc.fill_null(us, 0).to_numpy() // 1_000_000,
+        mask=pc.is_null(us).to_numpy(zero_copy_only=False),
     )
-    # the refresh's one Spark job: every row of the pass, its raw columns
-    # kept only where a carry tail needs them
-    t0 = time.perf_counter()
-    got = marked.select(
-        "source",
-        "tss",
-        "n_tok_z",
-        "__carry",
-        "__late",
-        "__next",
-        *(F.when(carry | nxt, F.col(c)).alias(c) for c in ("ts", "doc_id", "n_tok")),
-    ).toArrow()
+    facts = pa.table(
+        {"source": got["source"], "tss": tss, "n_tok_z": got["n_tok_z"], "__late": late}
+    ).filter(pa.array(~carry))
     prepare_seconds = round(time.perf_counter() - t0, 3)
-    facts = got.filter(pc.invert(got["__carry"]))
-    tails = got.filter(pc.or_(got["__carry"], got["__next"]))
 
     # -- the profile: per source, sorted by source (nulls first), the
     # delta's rows (__late is never null: its count is the rows), its
@@ -505,9 +536,8 @@ def _refresh(
     # output dir, and a bootstrap from an --input that predates already
     # absorbed deltas (e.g. after a crashed swap destroyed the tail) —
     # either would silently seed the MA seam with wrong predecessors.
-    carried = tails.filter(tails["__carry"])
     edge = group_by(
-        pa.table({"source": carried["source"], "us": carried["ts"].cast(pa.int64())}),
+        pa.table({"source": tail["source"], "us": tail["ts"].cast(pa.int64())}),
         ["source"],
         [("us", "max")],
     )
@@ -535,8 +565,9 @@ def _refresh(
     # immediately before it (see _refuse_applied)
     manifest.mark("refresh_delta_started", fingerprint, rows=delta_rows)
     # the prepared delta: one file, written under a name that Spark's
-    # readers skip ("."), then renamed into place. The window left each
-    # source's rows contiguous and sorted by (ts, doc_id), and so by tss.
+    # readers skip ("."), then renamed into place. The unbias pass left
+    # each source's rows contiguous and sorted by (ts, doc_id), and so by
+    # tss.
     prepared_path = os.path.join(out, "prepared")
     os.makedirs(prepared_path, exist_ok=True)
     name = f"part-{uuid.uuid4().hex}.parquet"
@@ -551,7 +582,7 @@ def _refresh(
     # (old tail ∪ delta), swapped in with two atomic renames, never an
     # unlink of the only copy — a crash between them leaves the old tail
     # intact at .bak
-    new_tail = tails.filter(tails["__next"]).select(TAIL_COLS)
+    new_tail = got.filter(pa.array(nxt)).select(TAIL_COLS)
     tmp_tail, bak_tail = tail_path + ".tmp", tail_path + ".bak"
     shutil.rmtree(tmp_tail, ignore_errors=True)
     os.makedirs(tmp_tail)
@@ -565,8 +596,8 @@ def _refresh(
     os.replace(tmp_tail, tail_path)
     shutil.rmtree(bak_tail, ignore_errors=True)
 
-    # -- tier refresh: the collected 5m partials, merged on the driver ---
-    # with the touched blocks and their compression
+    # -- tier refresh: the delta's 5m partials, merged on the driver with
+    # the touched blocks and their compression
     t0 = time.perf_counter()
     tree = RollupTree(series_cols=["source"], value_col="n_tok_z", tiers=DEFAULT_TIERS)
     bounds = [(s, lo, hi) for s, _n, lo, hi in extent]

@@ -16,6 +16,8 @@ import time
 import numpy as np
 import pytest
 from conftest import SHIFT_1969_S, no_python_worker, shifted
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from preprocessor_spark.plans import refresh_job, rollup_job
@@ -135,9 +137,6 @@ def test_resume_reads_the_refreshed_prepared_series(spark, setup, tmp_path):
     the build's pinned prepared schema (``tss`` long, ``source``,
     ``n_tok_z`` double) and, with its tier marks rotated away, rebuilds
     from it the tiers and blocks of a full-corpus run."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     paths, out, truth, _ = setup
     tree = str(tmp_path / "tree")
     shutil.copytree(out, tree)
@@ -293,8 +292,6 @@ def test_carry_tail_is_the_last_rows_of_old_tail_and_delta(spark, setup, tmp_pat
     tail), and from a tail that Spark wrote with INT96 times, which pyarrow
     reads as timestamp[ns]."""
     import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
     from pyspark.sql import Window
 
     paths, out, _, _ = setup
@@ -346,18 +343,52 @@ def test_carry_tail_is_the_last_rows_of_old_tail_and_delta(spark, setup, tmp_pat
     assert len(got[got["source"] == "s1"]) == rollup_job.MA_WINDOW - 1
 
 
+def _sorted_rows(table):
+    """``table``'s :data:`refresh_job.TAIL_COLS` in their pinned Arrow types,
+    sorted by every column."""
+    cols = refresh_job.TAIL_COLS
+    rows = table.select(cols).cast(refresh_job.TAIL_SCHEMA)
+    return rows.sort_by([(c, "ascending") for c in cols])
+
+
 def test_delta_input_contract(spark, setup, tmp_path):
-    """main reads the delta under the build's input schema, with no
-    inference job: a source-partitioned delta reads whole, and a delta
-    whose footer lacks a column or holds another type is refused by
-    name."""
+    """main reads the delta with pyarrow under the build's input schema:
+    what it reads equals Spark's read of the pinned schema row for row,
+    for a flat delta, for a source-partitioned one whose keys are not safe
+    in a path or are null, and for a delta of INT96 and TIMESTAMP_MICROS
+    files. A delta whose footer lacks a column or holds another type is
+    refused by name."""
     paths, out, _, _ = setup
     rows = spark.read.parquet(paths["delta2"])
-    parted = str(tmp_path / "parted")
-    rows.write.partitionBy("source").parquet(parted)
-    got = refresh_job.read_delta(spark, parted)
-    assert got.count() == rows.count()
-    assert got.exceptAll(rows.select(got.columns)).count() == 0
+    source = F.col("source")
+    unsafe = rows.withColumn(
+        "source",
+        F.when(source == "s0", "a/b").when(source == "s1", "x%y").when(source == "s2", None)
+        .otherwise(source),
+    )
+    deltas = {"flat": rows, "parted": unsafe}
+    for name, df in deltas.items():
+        writer = df.write.partitionBy("source") if name == "parted" else df.write
+        writer.parquet(str(tmp_path / name))
+    times = str(tmp_path / "times")
+    for parity, kind in ((0, "INT96"), (1, "TIMESTAMP_MICROS")):
+        with scoped_conf(spark, {"spark.sql.parquet.outputTimestampType": kind}):
+            half = rows.filter(F.col("n_tok") % 2 == parity).coalesce(1)
+            half.write.mode("append").parquet(times)
+    files = glob.glob(os.path.join(times, "*.parquet"))
+    kinds = {pq.read_schema(p).field("ts").type for p in files}
+    assert kinds == {pa.timestamp("ns"), pa.timestamp("us", "UTC")}
+    parted = os.listdir(str(tmp_path / "parted"))
+    assert {"source=a%2Fb", "source=x%25y", "source=__HIVE_DEFAULT_PARTITION__"} <= set(parted)
+    for name in ("flat", "parted", "times"):
+        path = str(tmp_path / name)
+        got = refresh_job.read_delta(spark, path)
+        assert got.schema == refresh_job.TAIL_SCHEMA, name
+        want = spark.read.schema(refresh_job.INPUT_SCHEMA).parquet(path).toArrow()
+        assert got.num_rows == want.num_rows == rows.count(), name
+        assert _sorted_rows(got).equals(_sorted_rows(want)), name
+    keys = refresh_job.read_delta(spark, str(tmp_path / "parted"))["source"]
+    assert {"a/b", "x%y", None} <= set(keys.to_pylist())
     for name, bad, problem in (
         ("wide", rows.withColumn("n_tok", F.col("n_tok").cast("long")), "n_tok is bigint"),
         ("narrow", rows.drop("tokens"), "no column tokens"),
@@ -368,14 +399,31 @@ def test_delta_input_contract(spark, setup, tmp_path):
             refresh_job.main(["--output", out, "--delta-input", path])
 
 
-# A refresh of the setup's output costs exactly this many Spark jobs: ONE
-# Arrow collect of the unbias pass over carry tail ∪ delta, whose rows
-# carry the seam and next-tail flags. The delta is read under a pinned
-# schema (no inference job); the 5m partials, the profile, the refusals,
-# the prepared write, the carry-tail write, the tier merge, its writes and
-# the block encode run on the driver after that collect, and start no
-# Spark job.
-REFRESH_SPARK_JOBS = 1
+def test_delta_above_the_driver_bound_is_refused(spark, setup, tmp_path, monkeypatch):
+    """Every row of a refresh passes through the driver: a delta whose read
+    columns hold more uncompressed bytes than spark.driver.maxResultSize
+    (Spark's default, 1g, which the session leaves) is refused from its
+    footers, before any row is read, and the tree is left as it was."""
+    paths, out, _, _ = setup
+    assert refresh_job._result_limit(spark) == 1 << 30
+    tree = str(tmp_path / "tree")
+    shutil.copytree(out, tree)
+    delta = _shifted_delta(spark, paths["delta2"], str(tmp_path / "delta"), "1 DAY")
+    monkeypatch.setattr(refresh_job, "_result_limit", lambda spark: 1000)
+    before = _block_files(tree)
+    with pytest.raises(ValueError, match="maxResultSize .*rebuild with rollup_job"):
+        refresh_job.main(["--output", tree, "--delta-input", delta])
+    _assert_refused_unchanged(tree, before)
+
+
+# A refresh of the setup's output, a tree with a carry tail, starts no
+# Spark job: the delta is checked against one footer and read with
+# pyarrow, the carry tail is read with pyarrow, and the MA-unbias pass over
+# carry tail ∪ delta, the profile, the refusals, the prepared write, the
+# carry-tail write, the 5m partials, the tier merge, its writes and the
+# block encode all run on the driver. Only a first refresh runs Spark jobs,
+# to bootstrap its carry tail from the corpus.
+REFRESH_SPARK_JOBS = 0
 
 
 def _block_files(root):

@@ -4,6 +4,9 @@ app/plugins/plugin_unbiaser.py:89-129)."""
 
 import numpy as np
 import pandas as pd
+from conftest import SHIFT_1969_S
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 import pytest
 
@@ -270,3 +273,81 @@ def test_ema_chunked_keeps_null_series_keys(spark):
     np.testing.assert_allclose(
         chunked["v"].values, exact["v"].values, rtol=1e-10, atol=1e-12
     )
+
+
+_MA_BASE = dict(seed=0, rows=600, sources=3, null_frac=0.3, null_source=True,
+                shift_s=SHIFT_1969_S, sub_second=True, distinct_s=50, window=5)
+_ma_cases = st.fixed_dictionaries(
+    {
+        "seed": st.integers(0, 2**16),
+        "rows": st.integers(1, 1_000),
+        "sources": st.integers(1, 4),
+        "null_frac": st.sampled_from([0.0, 0.3, 1.0]),
+        "null_source": st.booleans(),
+        "shift_s": st.sampled_from([0, SHIFT_1969_S]),
+        "sub_second": st.booleans(),
+        # few distinct times: equal ts, told apart by doc_id
+        "distinct_s": st.sampled_from([3, 50, 86_400]),
+        "window": st.sampled_from([2, 5]),
+    }
+)
+
+
+@settings(max_examples=4, derandomize=True, deadline=None)
+@given(case=_ma_cases)
+@example(case=_MA_BASE)
+@example(case={**_MA_BASE, "shift_s": 0, "null_source": False, "null_frac": 0.0, "rows": 3})
+def test_ma_local_equals_spark_window_bit_for_bit(spark, case):
+    """The driver MA (``ma_local``) gives the residuals Spark's window
+    (``_ma``) gives through ``toArrow``: the same rows in the window's
+    order, the same float64 bits and nulls in the same places. The rows
+    hold null values, a null source, a series shorter than the window and
+    one of a single row, sub-second times before 1970 and equal times told
+    apart by doc_id."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rng = np.random.default_rng(case["seed"])
+    n = case["rows"]
+    us = 1_577_836_800_000_000 - case["shift_s"] * 1_000_000 + rng.integers(
+        0, case["distinct_s"], n
+    ) * 1_000_000
+    if case["sub_second"]:
+        us = us + rng.integers(0, 1_000_000, n)
+    names = [f"s{i}" for i in range(case["sources"])]
+    source = [names[k] for k in rng.integers(0, len(names), n)]
+    if case["null_source"]:
+        source = [None if rng.random() < 0.1 else s for s in source]
+    v = [None if rng.random() < case["null_frac"] else float(x) for x in rng.normal(0, 2, n)]
+    # a series shorter than the window, and one of a single row
+    extra = [("short", int(us[0]) + k, 1.5 * k) for k in range(case["window"] - 1)]
+    extra.append(("single", int(us[0]), -0.25))
+    rows = [
+        (s, int(t), f"d{i}", x)
+        for i, (s, t, x) in enumerate([*zip(source, us.tolist(), v), *extra])
+    ]
+    df = spark.createDataFrame(rows, "source string, us long, doc_id string, v double").select(
+        "source", F.timestamp_micros("us").alias("ts"), "doc_id", "v"
+    )
+    unb = Unbiaser(
+        method="ma",
+        window_size=case["window"],
+        series_cols=["source"],
+        value_cols=["v"],
+        tiebreak_cols=["doc_id"],
+    )
+    want = unb._ma(df).toArrow()
+    keys = [(c, "ascending") for c in ("source", "ts", "doc_id")]
+    want = want.take(pc.sort_indices(want, keys, null_placement="at_start"))
+    got = unb.ma_local(df.toArrow())
+    assert got.schema == want.schema
+    for c in ("source", "ts", "doc_id"):
+        assert got[c].equals(want[c]), c
+    assert pc.is_null(got["v"]).equals(pc.is_null(want["v"]))
+
+    def bits(col):
+        return pc.fill_null(col, 0.0).to_numpy().view(np.int64)
+
+    assert (bits(got["v"]) == bits(want["v"])).all()
+    assert got.num_rows == len(rows)
+    assert pa.types.is_float64(got.schema.field("v").type)
